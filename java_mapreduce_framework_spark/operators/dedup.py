@@ -5,7 +5,6 @@
 - ``dedup_minhash``        -- MinHash + LSH banding, Jaccard-verified.
 - ``dedup_simhash``        -- 64-bit SimHash + band blocking, Hamming-verified.
 - ``embedding_neardup_pairs`` -- cosine near-dup pairs, blocked on label.
-- ``connected_components``  -- pair graph -> cluster ids (min label).
 
 Design for 100 TB:
 - Signatures (minhash mins, simhash bit sums) are computed as *plain
@@ -15,11 +14,13 @@ Design for 100 TB:
   all-pairs work is within buckets, which LSH keeps tiny.
 - Verification (exact Jaccard / Hamming) runs only on candidates.
 - All hashing is seeded/deterministic (xxhash64 + fixed perm tables).
+
+Clusters from pairs come from ``graph.connected_components``; the graph
+analytics over pair graphs live in ``operators/graph.py``.
 """
 
 from __future__ import annotations
 
-import contextlib
 import random
 from functools import reduce as _reduce
 from operator import add as _add
@@ -28,53 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import grams_expr, tokens_col, words_exploded
-
-#: target state rows per shuffle partition inside iterative loops --
-#: small enough that a partition is always a few MB, large enough that
-#: a production-scale graph still fans out to every core
-_LOOP_ROWS_PER_PARTITION = 100_000
-
-
-@contextlib.contextmanager
-def _loop_shuffle_partitions(spark, n_state_rows: int):
-    """Scale-adaptive shuffle partitioning for ITERATIVE loops
-    (optimization guide §2: derive partitioning from input size, not a
-    constant tuned for either local mode or the cluster).
-
-    Every round of an iterative graph op runs joins/aggregates over a
-    state table of ~n_state_rows rows, and every exchange inherits the
-    session-wide ``spark.sql.shuffle.partitions`` -- sized for corpus
-    scans, not for the (usually far smaller) loop state. AQE coalesces
-    the post-shuffle READ side but each ``localCheckpoint`` still
-    materializes, schedules, and re-reads the full partition count
-    every round, so rounds pay task-scheduling cost proportional to
-    the constant, not the data (measured at sf0.1 / local[32]:
-    pagerank 9.5 s -> 6.0 s from this alone).
-
-    The partition count derives from the MEASURED state size
-    (ceil(rows / _LOOP_ROWS_PER_PARTITION), clamped to
-    [1, default_parallelism()]), so a 100 TB graph still uses every
-    core while a small one stops paying per-round scheduling for idle
-    partitions. The sizing probe is a single scalar the callers
-    already materialize (vertex/label counts). Conf is restored on
-    exit -- the loop's exchanges bind it at plan time."""
-    from ..session import default_parallelism
-
-    # size up from the state (ceil(rows / target)), but keep a floor
-    # of 8-way parallelism (or all cores when fewer) so each round's
-    # real join/aggregate work still runs multi-core at small state
-    # sizes -- the floor is what the measured 9.5 s -> 6.0 s pagerank
-    # win used; 1 partition re-serializes the per-round work
-    parts = min(
-        default_parallelism(),
-        max(8, -(-int(n_state_rows) // _LOOP_ROWS_PER_PARTITION)),
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+from .graph import connected_components
 
 # Modulus / bounds for the MinHash permutation family
 #   h' = (a*h + b) mod P  with h, a, b < 2^30 and P = 2^31 - 1,
@@ -658,87 +613,6 @@ def embedding_neardup_pairs(
     )
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
-    """Near-dup *clusters* from near-dup *pairs*: (doc_id, component_id)
-    with component_id = the smallest doc_id reachable through the pair
-    graph. This is the step that turns pairwise similarity output into
-    one-survivor-per-cluster dedup decisions.
-
-    Iterative min-label propagation: every round each node adopts the
-    minimum label among itself and its neighbors; rounds needed = the
-    component diameter (near-dup clusters are tight -- 2-4 rounds in
-    practice). Per round: one shuffle joining labels onto edges plus a
-    grouped MIN, and ``localCheckpoint`` truncates lineage so round
-    k's plan does not embed rounds 1..k-1 (unbounded plan growth is
-    what kills naive iterative DataFrame code). The driver loop
-    carries only a changed-row COUNT per round, never row data. Same
-    dataflow GraphX/GraphFrames runs; for billion-edge graphs swap in
-    the large-star/small-star variant -- the per-round shuffle shape
-    is identical.
-    """
-    # Materialize the (possibly expensive) pair computation ONCE before
-    # symmetrizing: a union whose two branches both contain the pairs
-    # subtree would evaluate it twice -- for sketch-derived pairs that
-    # is the whole signature pipeline and a second corpus scan.
-    p = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).localCheckpoint()
-    edges = p.union(p.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    labels = (
-        edges.select(F.col("src").alias("node")).distinct().withColumn("comp", F.col("node"))
-    ).localCheckpoint()
-
-    # Convergence probe: labels only ever decrease under min-propagation,
-    # so sum(comp) is strictly decreasing until the fixpoint -- an exact
-    # test from ONE tiny aggregate over the already-checkpointed frame,
-    # instead of a join of new-vs-old labels (half the per-round jobs).
-    # decimal(38,0) so the sum cannot overflow int64 at real id ranges.
-    def _label_probe(df: DataFrame):
-        # single-row scalar fetch, never row data -- the sanctioned
-        # driver interaction for iterative fixpoint algorithms; the
-        # node count rides in the same aggregate (r12: it sizes the
-        # loop's scale-adaptive shuffle width, guide §2)
-        row = df.agg(
-            F.sum(F.col("comp").cast("decimal(38,0)")), F.count("*")
-        ).first()
-        return row[0], row[1]
-
-    prev_sum, n_nodes = _label_probe(labels)
-    converged = False
-    with _loop_shuffle_partitions(labels.sparkSession, n_nodes):
-        for _ in range(max_iter):
-            nbr_min = (
-                edges.join(labels.withColumnRenamed("node", "dst"), "dst")
-                .groupBy("src")
-                .agg(F.min("comp").alias("nbr_comp"))
-                .withColumnRenamed("src", "node")
-            )
-            labels = (
-                labels.join(nbr_min, "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("comp"), F.coalesce("nbr_comp", "comp")
-                    ).alias("comp"),
-                )
-                .localCheckpoint()
-            )
-            cur_sum, _ = _label_probe(labels)
-            if cur_sum == prev_sum:
-                converged = True
-                break
-            prev_sum = cur_sum
-    if not converged:
-        # rounds needed = component diameter; a graph deeper than
-        # max_iter would silently get WRONG labels here -- fail loud
-        # and point at the log-rounds variant instead
-        raise RuntimeError(
-            f"label propagation did not converge in {max_iter} rounds "
-            "(component diameter exceeds the budget); raise max_iter or "
-            "use connected_components_star, whose rounds scale with "
-            "log(component size) instead of diameter"
-        )
-    return labels.select(F.col("node").alias("doc_id"), F.col("comp").alias("component_id"))
-
-
 def dedup_apply(documents: DataFrame) -> DataFrame:
     """Materialize the deduplicated corpus: keep exactly one document
     (lowest doc_id) per distinct text. The rank-window form keeps the
@@ -1114,99 +988,6 @@ def probe_minhash_index(
     )
 
 
-def connected_components_star(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
-    """Connected components via alternating LARGE-STAR / SMALL-STAR
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") --
-    the billion-edge alternative to ``connected_components``' label
-    propagation: rounds scale with log(component size), not component
-    DIAMETER, so a pathological million-node chain converges in ~20
-    rounds instead of a million.
-
-    Each star operation is ONE hash shuffle (a min window over the
-    neighbor list's partition -- no join, no collect_list):
-
-    - large-star: for every node u, attach each LARGER neighbor
-      directly to m = min(N(u) ∪ {u});
-    - small-star: orient edges canonically (big -> small), attach u
-      and each smaller neighbor except m itself to m.
-
-    Both strictly shrink a monotone potential (sum of edge endpoints),
-    so fixpoint detection is two tiny scalar aggregates per round --
-    same sanctioned driver probe as the label-propagation twin -- and
-    at the fixpoint the edge set IS the star (node -> component min).
-    ``localCheckpoint`` per round truncates lineage exactly as in
-    ``connected_components``. Output schema matches it, and the
-    equivalence is asserted across chain/clique/random graphs in
-    tests/test_dedup.py."""
-    from pyspark.sql import Window
-
-    e = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .localCheckpoint()
-    )
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    w = Window.partitionBy("u")
-
-    def large_star(edges: DataFrame) -> DataFrame:
-        sym = edges.union(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
-        m = F.least(F.col("u"), F.min("v").over(w))
-        return (
-            sym.withColumn("m", m)
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .distinct()
-        )
-
-    def small_star(edges: DataFrame) -> DataFrame:
-        canon = edges.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-        withm = canon.withColumn("m", F.min("v").over(w))
-        nbrs = (
-            withm.filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        selfs = withm.select("u", F.col("m").alias("v"))
-        return nbrs.union(selfs).distinct()
-
-    def _sig(edges: DataFrame):
-        r = edges.agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("u").cast("decimal(38,0)")).alias("su"),
-            F.sum(F.col("v").cast("decimal(38,0)")).alias("sv"),
-        ).first()
-        return (r["n"], r["su"], r["sv"])
-
-    sig = _sig(e)
-    # edge-count partition-sizing probe rides in the signature the
-    # loop already fetches (r12: scale-adaptive loop shuffle width)
-    with _loop_shuffle_partitions(e.sparkSession, sig[0]):
-        for _ in range(max_iter):
-            e = small_star(large_star(e)).localCheckpoint()
-            new_sig = _sig(e)
-            if new_sig == sig:
-                break
-            sig = new_sig
-    # at the fixpoint e is (node -> root); roots have no outgoing edge
-    roots = e.select(F.col("u").alias("node"), F.col("v").alias("comp"))
-    return (
-        nodes.join(roots, "node", "left")
-        .select(
-            F.col("node").alias("doc_id"),
-            F.coalesce("comp", "node").alias("component_id"),
-        )
-    )
-
-
 def dedup_incremental_apply(
     spark,
     new_docs: DataFrame,
@@ -1503,111 +1284,6 @@ def dedup_edit_distance(
     )
 
 
-def bfs_hops(pairs: DataFrame, max_hops: int = 8) -> DataFrame:
-    """BFS hop distance over an undirected pair graph from a
-    deterministic seed (the globally smallest node id) — the iterative
-    graph primitive beyond connected components: "how close is every
-    near-dup to this document", blast-radius analysis for
-    contamination tracing.
-
-    Classic frontier expansion: each round joins the frontier to the
-    edge list, anti-joins the visited set, and stamps the hop number;
-    ``localCheckpoint`` truncates lineage per round (the CC
-    discipline) and a scalar count is the only driver probe. Rounds
-    are bounded by ``max_hops``, so worst-case work is max_hops
-    keyed joins — each shuffle bounded by frontier x degree. Matches
-    a depth-bounded recursive-CTE BFS exactly (min hop per node).
-
-    Emits (doc_id, hop).
-    """
-    edges = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-        )
-        .localCheckpoint()  # materialize once: every hop re-joins this
-    )
-    seed = edges.agg(F.min("a").alias("doc_id")).select(
-        "doc_id", F.lit(0).alias("hop")
-    )
-    visited = seed.localCheckpoint()
-    frontier = visited
-    for h in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(edges, frontier["doc_id"] == edges["a"])
-            .select(F.col("b").alias("doc_id"))
-            .distinct()
-            .join(visited, "doc_id", "left_anti")
-            .withColumn("hop", F.lit(h))
-            .localCheckpoint()
-        )
-        if nxt.limit(1).count() == 0:  # scalar-only driver probe
-            break
-        visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-    return visited
-
-
-def label_propagation(
-    pairs: DataFrame, vertices: DataFrame, rounds: int = 3
-) -> DataFrame:
-    """Fixed-round synchronous label-propagation communities over the
-    undirected near-dup graph (Raghavan et al. '07) — the community
-    primitive beyond connected components: CC answers "reachable at
-    all", LPA's mode-of-neighbors rule splits a component into its
-    densely-linked cores (boilerplate families inside a loosely
-    chained component).
-
-    Determinism by construction: labels start as node ids, every
-    round updates ALL nodes simultaneously to the most frequent
-    neighbor label with ties broken by the SMALLEST label (count
-    desc, label asc rank window), isolated nodes keep their own id,
-    and the round count is fixed — no convergence probe, no
-    oscillation sensitivity, so the result is a pure function of the
-    edge set and both engines replay it exactly (the oracle unrolls
-    the same rounds as chained CTEs).
-
-    Per round: one keyed join (labels × edges) + one (node, label)
-    count + one per-node argmax window + the left-join back onto the
-    vertex set — all shuffles keyed on node id, per-node window
-    bounded by degree. ``localCheckpoint`` per round keeps plan depth
-    constant (the CC discipline). Emits (doc_id, community).
-    """
-    edges = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-        )
-        .localCheckpoint()
-    )
-    verts = vertices.select("doc_id").localCheckpoint()
-    labels = verts.select("doc_id", F.col("doc_id").alias("label"))
-    w = Window.partitionBy("doc_id").orderBy(F.desc("c"), "label")
-    # |V| partition-sizing probe over the materialized vertex state
-    # (r12: scale-adaptive loop shuffle width, guide §2)
-    with _loop_shuffle_partitions(verts.sparkSession, verts.count()):
-        for _ in range(rounds):
-            neigh = (
-                edges.join(labels, edges["b"] == labels["doc_id"])
-                .groupBy(F.col("a").alias("doc_id"), "label")
-                .agg(F.count("*").alias("c"))
-            )
-            best = (
-                neigh.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .select("doc_id", F.col("label").alias("new_label"))
-            )
-            labels = (
-                verts.join(best, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    F.coalesce("new_label", "doc_id").alias("label"),
-                )
-                .localCheckpoint()
-            )
-    return labels.select("doc_id", F.col("label").alias("community"))
-
-
 def containment_pairs(
     documents: DataFrame,
     n: int = 3,
@@ -1715,181 +1391,6 @@ def tfidf_cosine_pairs(
         .join(nb, "doc_b")
         .filter(cos >= threshold)
         .select("doc_a", "doc_b", F.round(cos, 4).alias("cosine"))
-    )
-
-
-def pagerank(
-    pairs: DataFrame,
-    vertices: DataFrame,
-    iters: int = 10,
-    damping: float = 0.85,
-) -> DataFrame:
-    """Fixed-iteration PageRank over the undirected near-dup graph —
-    the canonical iterative graph workload (Page et al. '99) beyond
-    the connected-components / BFS family already declared: rank mass
-    concentrates on documents central to a duplication cluster, the
-    "which doc is the canonical source" signal.
-
-    Per iteration: one keyed join (rank state × edges), one grouped
-    sum per destination, a 1-row dangling-mass aggregate broadcast
-    into the update (isolated docs redistribute everywhere), and one
-    update join back onto the static vertex table — the only
-    driver-side scalar is the |V| partition-sizing probe (r12:
-    ``_loop_shuffle_partitions`` derives the loop's shuffle width from
-    the measured state size); ``localCheckpoint`` truncates lineage periodically
-    (the CC discipline), so plan depth stays constant and worst-case
-    work is ``iters`` × (|E| shuffle + |V| agg). The STATIC per-vertex
-    structure (out-degree, dangling flag) is joined ONCE before the
-    loop and carried inside the rank state, so no iteration re-joins
-    degrees or re-derives the dangling set (the naive loop pays both
-    every round). All vertices (including isolated ones) participate
-    from a uniform 1/N start.
-
-    Emits (doc_id, pr) rounded to 6 — both engines accumulate in
-    float64 with different summation orders; 6 digits is far above
-    the ~1e-14 reorder noise and far below the ~1e-3 rank scale.
-    """
-    edges = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
-        .localCheckpoint()  # materialize once: every iteration re-joins
-    )
-    degs = edges.groupBy(F.col("a").alias("doc_id")).agg(
-        F.count("*").alias("deg")
-    )
-    n_row = vertices.agg(F.count("*").cast("double").alias("n")).localCheckpoint()
-    # static per-vertex structure, joined once and carried in-state
-    vstat = (
-        vertices.select("doc_id")
-        .join(degs, "doc_id", "left")
-        .localCheckpoint()
-    )
-    ranks = vstat.crossJoin(F.broadcast(n_row)).select(
-        "doc_id", (F.lit(1.0) / F.col("n")).alias("pr"), "deg"
-    ).localCheckpoint()
-    # partition-sizing probe: |V| is already materialized in n_row --
-    # the one scalar the loop's scale-adaptive partitioning needs
-    with _loop_shuffle_partitions(ranks.sparkSession, int(n_row.first()[0])):
-        for it in range(iters):
-            contrib = (
-                ranks.filter(F.col("deg").isNotNull())
-                .join(edges, F.col("doc_id") == F.col("a"))
-                .groupBy(F.col("b").alias("doc_id"))
-                .agg(F.sum(F.col("pr") / F.col("deg")).alias("s"))
-            )
-            dangling = ranks.filter(F.col("deg").isNull()).agg(
-                F.coalesce(F.sum("pr"), F.lit(0.0)).alias("m")
-            )
-            ranks = (
-                vstat.join(contrib, "doc_id", "left")
-                .crossJoin(F.broadcast(dangling))
-                .crossJoin(F.broadcast(n_row))
-                .select(
-                    "doc_id",
-                    (
-                        (1.0 - damping) / F.col("n")
-                        + damping
-                        * (F.coalesce(F.col("s"), F.lit(0.0)) + F.col("m") / F.col("n"))
-                    ).alias("pr"),
-                    "deg",
-                )
-            )
-            # lineage truncation every 3rd round: depth-3 plans stay
-            # cheap to re-derive while the per-round materialization
-            # job (the dominant fixed cost of iterative workloads on
-            # small graphs) amortizes 3x
-            if it % 3 == 2 or it == iters - 1:
-                ranks = ranks.localCheckpoint()
-    return ranks.select("doc_id", F.round("pr", 6).alias("pr"))
-
-
-def triangle_count(pairs: DataFrame) -> DataFrame:
-    """Per-document triangle participation count over the near-dup
-    graph — the clustering-structure primitive (a doc in many
-    triangles sits inside a dense duplication clique, not a chain).
-
-    Canonical distributed formulation: orient every edge small→large
-    (kills duplicate counting), join wedges (a<b<c with edges a-b,
-    b-c), close them against the oriented edge list (a-c), then
-    credit each of the three corners — three joins total, each keyed
-    on node ids, no node ever sees more than its degree² wedges. The
-    degree² wedge fan-out is the known hot spot at scale; the
-    standard mitigation (degree-ordered orientation, which this uses)
-    bounds it by the SMALLER endpoint's degree.
-
-    Emits (doc_id, n_triangles) for docs in at least one triangle.
-    """
-    e = pairs.select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    ).localCheckpoint()  # the edge subtree feeds all three join legs
-    # orient by id: doc_a < doc_b already holds for the pair stream
-    ab = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
-    bc = e.select(F.col("u").alias("b"), F.col("v").alias("c"))
-    ac = e.select(F.col("u").alias("a"), F.col("v").alias("c"))
-    tri = (
-        ab.join(bc, "b")
-        .join(ac, ["a", "c"])
-        .select("a", "b", "c")
-    )
-    corners = (
-        tri.select(F.col("a").alias("doc_id"))
-        .unionByName(tri.select(F.col("b").alias("doc_id")))
-        .unionByName(tri.select(F.col("c").alias("doc_id")))
-    )
-    return corners.groupBy("doc_id").agg(F.count("*").alias("n_triangles"))
-
-
-def clustering_coefficient(pairs: DataFrame) -> DataFrame:
-    """Per-node LOCAL clustering coefficient over an undirected pair
-    graph -- the density readout behind community detection: of all
-    pairs of v's neighbors, what fraction are themselves connected
-    (``2*tri(v) / (deg(v) * (deg(v)-1))``). Nodes embedded in cliques
-    score 1, stars score 0; the distribution separates organic
-    co-occurrence graphs from templated ones.
-
-    Composition, no new primitives: triangle credits come from
-    ``triangle_count`` (degree-ordered wedge join, fan-out bounded by
-    the smaller endpoint's degree), degrees from one count over the
-    symmetrized edge stream, and one keyed left join marries them
-    (triangle-free nodes coalesce to 0). Every exchange keys on node
-    id; the coefficient is one exact-integer division rounded once.
-
-    Emits (doc_id, deg, n_triangles, clustering_coeff) for nodes
-    with deg >= 2 (the coefficient is undefined below).
-
-    Reference licence: composition target -- chained-jobs model
-    (SURVEY.md §2A FIFO queue) over the WordCount substrate
-    (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
-    """
-    # eager checkpoint: degrees AND triangle_count both consume the
-    # pair stream -- without it the pair-generation subtree (a
-    # self-join for the co-purchase graph) executes twice
-    pairs = pairs.localCheckpoint()
-    edges = pairs.select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
-    )
-    degs = edges.groupBy(F.col("u").alias("doc_id")).agg(
-        F.count("*").alias("deg")
-    )
-    tri = triangle_count(pairs)
-    cc = (
-        F.lit(2.0)
-        * F.col("n_triangles")
-        / (F.col("deg") * (F.col("deg") - F.lit(1)))
-    )
-    return (
-        degs.filter(F.col("deg") >= 2)
-        .join(tri, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("deg").cast("bigint").alias("deg"),
-            F.coalesce("n_triangles", F.lit(0))
-            .cast("bigint")
-            .alias("n_triangles"),
-        )
-        .select("doc_id", "deg", "n_triangles", F.round(cc, 6).alias("clustering_coeff"))
     )
 
 
@@ -2296,134 +1797,6 @@ def index_append_verdict(
     )
 
 
-def common_neighbors(pairs: DataFrame) -> DataFrame:
-    """Common-neighbor link prediction over the near-dup graph -- the
-    classic "docs that share many near-dup neighbors are probably
-    near-dups the threshold missed" recovery pass (Liben-Nowell &
-    Kleinberg's common-neighbors / neighborhood-Jaccard scores). A
-    curation pipeline runs it after pair generation to surface
-    borderline duplicates for a second, cheaper verify round.
-
-    Scores every NON-adjacent pair with >= 1 common neighbor:
-    ``jaccard = |N(a) inter N(b)| / |N(a) union N(b)|``.
-
-    Plan: symmetrize edges once (checkpointed -- three consumers),
-    count wedges through each hub (fan-out bounded by deg(hub)^2,
-    the triangle_count bound), drop existing edges with a keyed
-    anti-join against the pair list, then two keyed degree joins.
-    Everything shuffles on node ids; no adjacency list ever
-    materializes as an array.
-
-    Emits (doc_a, doc_b, common_neighbors, jaccard) with doc_a <
-    doc_b.
-
-    Reference licence: composition target -- chained-jobs model
-    (SURVEY.md §2A FIFO queue) over the WordCount substrate
-    (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
-    """
-    # eager checkpoint: the pair stream feeds the symmetrized edges
-    # AND the existing-edge anti-join -- without it the (possibly
-    # expensive) pair-generation subtree executes twice
-    pairs = pairs.localCheckpoint()
-    e = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(
-            pairs.select(
-                F.col("doc_b").alias("a"), F.col("doc_a").alias("b")
-            )
-        )
-        .localCheckpoint()  # feeds wedge self-join + degree count
-    )
-    degs = e.groupBy(F.col("a").alias("doc_id")).agg(
-        F.count("*").alias("deg")
-    )
-    wedges = (
-        e.select(F.col("a").alias("hub"), F.col("b").alias("doc_a"))
-        .join(
-            e.select(F.col("a").alias("hub"), F.col("b").alias("doc_b")),
-            "hub",
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("common"))
-    )
-    cand = wedges.join(
-        pairs.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti"
-    )  # keyed anti-join; pair list scales with dup rate, so no broadcast
-    da = degs.select(F.col("doc_id").alias("doc_a"), F.col("deg").alias("deg_a"))
-    db = degs.select(F.col("doc_id").alias("doc_b"), F.col("deg").alias("deg_b"))
-    return (
-        cand.join(da, "doc_a")
-        .join(db, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("common").alias("common_neighbors"),
-            F.round(
-                F.col("common")
-                / (F.col("deg_a") + F.col("deg_b") - F.col("common")),
-                6,
-            ).alias("jaccard"),
-        )
-    )
-
-
-def kcore(pairs: DataFrame, k: int = 3, rounds: int = 10) -> DataFrame:
-    """Fixed-round k-core peel -- the density filter a graph pipeline
-    runs before community/influence analysis (nodes outside the
-    k-core are tree-like fringe; inside, every member keeps >= k
-    neighbors WITHIN the core).
-
-    Synchronous peel, ``rounds`` iterations: each round drops every
-    node whose CURRENT degree is < k, then restricts the edge list to
-    surviving endpoints. Fixed round count (the
-    ``graph_label_propagation`` contract) keeps the result a pure
-    function of (graph, k, rounds) with no convergence probe -- at
-    the test SF, 10 rounds converge (verified in tests); a deeper
-    graph peels further rounds by raising the knob.
-
-    Per round: one degree aggregate + two semi-joins, all keyed on
-    node ids; state is the (a, b) edge list, eagerly
-    ``localCheckpoint``'ed so round N+1 plans from materialized state
-    (pagerank lineage discipline) -- never more than one round deep.
-
-    Emits (node_id, core_deg): surviving nodes with their final
-    within-core degree.
-
-    Reference licence: composition target -- chained-jobs model
-    (SURVEY.md §2A FIFO queue) over the WordCount substrate
-    (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
-    """
-    edges = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(
-            pairs.select(
-                F.col("doc_b").alias("a"), F.col("doc_a").alias("b")
-            )
-        )
-        .localCheckpoint()
-    )
-    # edge-count partition-sizing probe over the materialized edge
-    # state (r12: scale-adaptive loop shuffle width, guide §2)
-    with _loop_shuffle_partitions(edges.sparkSession, edges.count()):
-        for _ in range(rounds):
-            keep = (
-                edges.groupBy("a")
-                .agg(F.count("*").alias("d"))
-                .filter(F.col("d") >= k)
-                .select("a")
-            )
-            edges = (
-                edges.join(keep, "a", "left_semi")
-                .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
-                .select("a", "b")
-                .localCheckpoint()
-            )
-    return edges.groupBy(F.col("a").alias("node_id")).agg(
-        F.count("*").alias("core_deg")
-    )
-
-
 def dedup_semdedup(
     embeddings: DataFrame,
     threshold: float = 0.35,
@@ -2557,433 +1930,6 @@ def dedup_semdedup(
     )
 
 
-def adamic_adar(pairs: DataFrame) -> DataFrame:
-    """Adamic-Adar link prediction over the near-dup / co-purchase
-    graph -- ``common_neighbors``' frequency-weighted upgrade (Adamic
-    & Adar 2003; the strongest of the classic local similarity
-    indices in Liben-Nowell & Kleinberg's study): a shared neighbor
-    is evidence in inverse proportion to how promiscuous it is,
-    AA(a,b) = sum over w in N(a) & N(b) of 1 / ln(deg(w)).
-
-    Exactness: each hub's credit is the integer micro-nat
-    round(1e6 / ln(deg)) -- the ULM/IM cost discipline: the one
-    transcendental is rounded to an exact integer BEFORE any
-    aggregation, so the per-pair sum is an order-free BIGINT fold on
-    both engines. deg(hub) >= 2 whenever a wedge exists, so ln is
-    never 0.
-
-    Plan: the common_neighbors kernel with the hub's degree joined
-    onto the symmetrized edge list before the wedge self-join (a
-    node-keyed join, no adjacency arrays); wedge fan-out bounded by
-    deg(hub)^2; existing edges dropped by keyed anti-join.
-
-    Emits (doc_a, doc_b, common_neighbors, aa_mnat) for non-adjacent
-    pairs, doc_a < doc_b.
-
-    Reference licence: composition target -- chained-jobs model
-    (SURVEY.md §2A FIFO queue) over the WordCount substrate
-    (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
-    """
-    pairs = pairs.localCheckpoint()
-    e = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-        )
-        .localCheckpoint()
-    )
-    # deg-1 hubs cannot host a wedge AND would divide by ln(1) = 0:
-    # filter them before the credit expression (also prunes their
-    # edges out of the wedge self-join)
-    degs = (
-        e.groupBy(F.col("a").alias("hub"))
-        .agg(F.count("*").alias("deg"))
-        .filter(F.col("deg") >= 2)
-    )
-    credit = F.round(F.lit(1e6) / F.log(F.col("deg").cast("double"))).cast(
-        "long"
-    )
-    eh = e.select(F.col("a").alias("hub"), "b").join(
-        degs.select("hub", credit.alias("mnat")), "hub"
-    )
-    wedges = (
-        eh.select("hub", F.col("b").alias("doc_a"), "mnat")
-        .join(eh.select("hub", F.col("b").alias("doc_b")), "hub")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count("*").alias("common_neighbors"),
-            F.sum("mnat").alias("aa_mnat"),
-        )
-    )
-    return wedges.join(
-        pairs.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti"
-    ).select("doc_a", "doc_b", "common_neighbors", "aa_mnat")
-
-
-def degree_histogram(pairs: DataFrame) -> DataFrame:
-    """Degree distribution of the pair graph -- the first structural
-    sanity check on any generated edge set (a dedup pair graph that
-    suddenly grows a fat-degree tail means a hot shingle slipped past
-    its cap; a co-purchase graph's tail is the hub catalog): how many
-    nodes carry each degree, and what fraction of the graph that is.
-
-    One symmetrized-edge count (the common_neighbors substrate), one
-    alphabet-sized (distinct-degree) rollup, a 1-row total broadcast;
-    frac = n_nodes/total is the single rounded division from exact
-    integers.
-
-    Emits (deg, n_nodes, frac) -- at most max-degree rows.
-    """
-    e = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")).unionByName(
-        pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-    )
-    degs = e.groupBy("a").agg(F.count("*").alias("deg"))
-    hist = degs.groupBy("deg").agg(F.count("*").alias("n_nodes"))
-    tot = hist.agg(F.sum("n_nodes").alias("tot"))
-    return hist.join(F.broadcast(tot)).select(
-        F.col("deg").cast("bigint").alias("deg"),
-        "n_nodes",
-        F.round(F.col("n_nodes") / F.col("tot").cast("double"), 6).alias(
-            "frac"
-        ),
-    )
-
-
-def degree_assortativity(pairs: DataFrame) -> DataFrame:
-    """Degree assortativity of the pair graph (Newman 2002): the
-    Pearson correlation of endpoint degrees over the directed edge
-    list -- do hubs link to hubs (r > 0, social-network shape) or to
-    leaves (r < 0, hub-and-spoke catalogs / star-shaped dup
-    families)? The single scalar that summarizes what
-    ``degree_histogram`` shows as a curve.
-
-    Exactness: degrees are integers, so all five sufficient sums
-    over the 2|E| directed edges (M, sum x, sum xy, sum x^2 --
-    symmetry makes y-sums equal x-sums) are exact BIGINTs; the
-    Pearson combination runs once in double, identically ordered on
-    both engines, rounded 4.
-
-    Plan: symmetrize, one degree count, two keyed joins to stamp
-    endpoint degrees, ONE global aggregate. No wedges, no pair
-    fan-out -- linear in |E|.
-
-    Emits ONE row (m_edges, assortativity).
-    """
-    e = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")).unionByName(
-        pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-    ).localCheckpoint()  # feeds the degree count and both stamp joins
-    degs = e.groupBy(F.col("a").alias("node")).agg(
-        F.count("*").alias("deg")
-    )
-    stamped = (
-        e.join(degs.select(F.col("node").alias("a"), F.col("deg").alias("x")), "a")
-        .join(degs.select(F.col("node").alias("b"), F.col("deg").alias("y")), "b")
-    )
-    agg = stamped.agg(
-        F.count("*").alias("m"),
-        F.sum("x").alias("sx"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    m = F.col("m").cast("double")
-    num = m * F.col("sxy") - F.col("sx").cast("double") * F.col("sx")
-    den = m * F.col("sxx") - F.col("sx").cast("double") * F.col("sx")
-    # a regular graph (all degrees equal) has zero degree variance:
-    # assortativity is undefined, not a division error
-    return agg.select(
-        F.col("m").alias("m_edges"),
-        F.when(den != 0.0, F.round(num / den, 4)).alias("assortativity"),
-    )
-
-
-def preferential_attachment(pairs: DataFrame) -> DataFrame:
-    """Preferential-attachment link prediction over the near-dup /
-    co-purchase graph: score every NON-adjacent candidate pair (>= 1
-    common neighbor) by deg(a) * deg(b) -- Liben-Nowell & Kleinberg's
-    rich-get-richer baseline that common_neighbors / adamic_adar are
-    benchmarked against; together the four complete the classical
-    link-prediction panel.
-
-    Same plan skeleton as ``common_neighbors`` (symmetrize once,
-    wedge-join bounded by deg(hub)^2, keyed anti-join against
-    existing edges, two keyed degree joins); the score is a pure
-    INTEGER product -- the one link predictor with a zero-double
-    oracle.
-
-    Emits (doc_a, doc_b, deg_a, deg_b, pa_score) with doc_a < doc_b.
-    """
-    pairs = pairs.localCheckpoint()  # feeds edges + the anti-join
-    e = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(
-            pairs.select(
-                F.col("doc_b").alias("a"), F.col("doc_a").alias("b")
-            )
-        )
-        .localCheckpoint()  # feeds wedge self-join + degree count
-    )
-    degs = e.groupBy(F.col("a").alias("doc_id")).agg(
-        F.count("*").alias("deg")
-    )
-    wedges = (
-        e.select(F.col("a").alias("hub"), F.col("b").alias("doc_a"))
-        .join(
-            e.select(F.col("a").alias("hub"), F.col("b").alias("doc_b")),
-            "hub",
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    cand = wedges.join(
-        pairs.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti"
-    )
-    da = degs.select(F.col("doc_id").alias("doc_a"), F.col("deg").alias("deg_a"))
-    db = degs.select(F.col("doc_id").alias("doc_b"), F.col("deg").alias("deg_b"))
-    return (
-        cand.join(da, "doc_a")
-        .join(db, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("deg_a").cast("long").alias("deg_a"),
-            F.col("deg_b").cast("long").alias("deg_b"),
-            (F.col("deg_a") * F.col("deg_b")).cast("long").alias("pa_score"),
-        )
-    )
-
-
-def degree_gini(pairs: DataFrame) -> DataFrame:
-    """Gini coefficient of the degree distribution over the near-dup /
-    co-purchase graph -- the one-number skew readout behind
-    graph_degree_histogram: 0 = every node equally connected, ->1 =
-    a few hubs own the graph (and those hubs are where wedge-join
-    fan-out, LSH hot buckets, and skew salting all concentrate).
-
-    gini = (2 * sum_i i*d_(i) - (n+1) * sum d) / (n * sum d) over
-    degrees sorted ascending with (deg, doc_id) tie order -- every
-    term an exact integer, ONE double at the end. The rank window
-    runs over the node table (dimension-sized: nodes are catalog
-    entries, not events).
-
-    Emits ONE row (n_nodes, n_edges_directed, gini).
-    """
-    # eager checkpoint: both symmetrized-union halves consume the pair
-    # stream, which for the co-purchase graph is itself a self-join
-    # that must not execute twice (r13)
-    pairs = pairs.select("doc_a", "doc_b").localCheckpoint()
-    e = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")).unionByName(
-        pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-    )
-    degs = e.groupBy(F.col("a").alias("doc_id")).agg(
-        F.count("*").alias("deg")
-    )
-    w = Window.orderBy("deg", "doc_id")
-    ranked = degs.select(
-        "deg", (F.row_number().over(w)).alias("i")
-    )
-    agg = ranked.agg(
-        F.count("*").alias("n"),
-        F.sum("deg").alias("sd"),
-        F.sum(F.col("i") * F.col("deg")).alias("sid"),
-    )
-    return agg.select(
-        F.col("n").cast("long").alias("n_nodes"),
-        F.col("sd").cast("long").alias("n_edges_directed"),
-        F.round(
-            (
-                F.lit(2) * F.col("sid") - (F.col("n") + 1) * F.col("sd")
-            ).cast("double")
-            / (F.col("n") * F.col("sd")).cast("double"),
-            6,
-        ).alias("gini"),
-    )
-
-
-def resource_allocation(pairs: DataFrame) -> DataFrame:
-    """Resource-allocation link prediction over the near-dup /
-    co-purchase graph: AA's harder-decaying sibling (Zhou, Lu &
-    Zhang 2009), RA(a,b) = sum over shared neighbors w of
-    1 / deg(w) -- each hub splits one unit of "resource" among its
-    neighbors, so promiscuous hubs are discounted linearly instead of
-    logarithmically (empirically the best of the local indices on
-    dense graphs). Completes the panel: CN / Jaccard / AA / PA / RA.
-
-    Exactness: the hub credit is the integer micro-unit
-    round(1e6 / deg) -- rounded BEFORE the per-pair fold (the
-    adamic_adar discipline), so the sum is an order-free BIGINT fold
-    on both engines. Same plan skeleton: degree joined onto the
-    symmetrized edges, wedge self-join bounded by deg(hub)^2, keyed
-    anti-join against existing edges.
-
-    Emits (doc_a, doc_b, common_neighbors, ra_micro) for non-adjacent
-    pairs, doc_a < doc_b.
-    """
-    pairs = pairs.localCheckpoint()
-    e = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-        )
-        .localCheckpoint()
-    )
-    # wedge hubs always carry deg >= 2 (edges to both endpoints); the
-    # filter just prunes leaf edges out of the self-join early
-    degs = (
-        e.groupBy(F.col("a").alias("hub"))
-        .agg(F.count("*").alias("deg"))
-        .filter(F.col("deg") >= 2)
-    )
-    credit = F.round(F.lit(1e6) / F.col("deg").cast("double")).cast("long")
-    eh = e.select(F.col("a").alias("hub"), "b").join(
-        degs.select("hub", credit.alias("micro")), "hub"
-    )
-    wedges = (
-        eh.select("hub", F.col("b").alias("doc_a"), "micro")
-        .join(eh.select("hub", F.col("b").alias("doc_b")), "hub")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count("*").alias("common_neighbors"),
-            F.sum("micro").alias("ra_micro"),
-        )
-    )
-    return wedges.join(
-        pairs.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti"
-    ).select("doc_a", "doc_b", "common_neighbors", "ra_micro")
-
-
-def global_transitivity(pairs: DataFrame) -> DataFrame:
-    """Global transitivity (wedge closure rate) of the near-dup /
-    co-purchase graph: 3 * triangles / wedges -- the ONE-number
-    companion to the per-node ``clustering_coefficient`` (a graph can
-    hold high local coefficients yet low transitivity when hubs stay
-    open; this is the hub-weighted truth).
-
-    Wedges = sum over nodes of deg*(deg-1)/2 (exact integers off the
-    degree table); closed wedges counted by joining each wedge's
-    endpoints against the edge set (the triangle_count bound:
-    fan-out deg(hub)^2, one keyed semi-join). The ratio is ONE
-    double.
-
-    Emits ONE row (n_nodes, n_wedges, n_closed_wedges, transitivity).
-    """
-    pairs = pairs.localCheckpoint()
-    e = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-        )
-        .localCheckpoint()
-    )
-    degs = e.groupBy(F.col("a").alias("doc_id")).agg(
-        F.count("*").alias("deg")
-    )
-    wedge_total = degs.agg(
-        F.count("*").alias("n_nodes"),
-        F.sum(F.col("deg") * (F.col("deg") - 1) / 2)
-        .cast("long")
-        .alias("n_wedges"),
-    )
-    w1 = e.select(F.col("a").alias("hub"), F.col("b").alias("x"))
-    w2 = e.select(F.col("a").alias("hub"), F.col("b").alias("y"))
-    open_wedges = (
-        w1.join(w2, "hub").filter(F.col("x") < F.col("y"))
-    )
-    closed = open_wedges.join(
-        pairs.select(
-            F.col("doc_a").alias("x"), F.col("doc_b").alias("y")
-        ),
-        ["x", "y"],
-        "left_semi",
-    ).agg(F.count("*").alias("n_closed"))
-    return wedge_total.join(F.broadcast(closed)).select(
-        F.col("n_nodes").cast("long").alias("n_nodes"),
-        "n_wedges",
-        F.col("n_closed").cast("long").alias("n_closed_wedges"),
-        F.round(
-            F.when(
-                F.col("n_wedges") > 0,
-                F.col("n_closed").cast("double")
-                / F.col("n_wedges").cast("double"),
-            ),
-            6,
-        ).alias("transitivity"),
-    )
-
-
-def rich_club(pairs: DataFrame, k_grid: tuple[int, ...] = (1, 2, 3, 4, 6, 8, 12, 16)) -> DataFrame:
-    """Rich-club coefficient profile over the near-dup / co-purchase
-    graph: for each degree threshold k, the density of the subgraph
-    induced by nodes of degree > k -- phi(k) = 2*E_k / (N_k*(N_k-1)).
-    A rising phi(k) says the hubs preferentially interconnect (the
-    "rich club" of catalog staples bought together); flat-or-falling
-    says hub links are incidental. Completes the degree-structure
-    panel next to ``graph_degree_gini`` / ``graph_assortativity``.
-
-    Plan: symmetrized degree count (node-bounded), one keyed join to
-    tag each edge with min(deg_a, deg_b), then BOTH sides reduce to
-    bounded histograms (nodes per degree, edges per min-degree)
-    before the constant |k_grid|-row cross -- the grid join touches
-    histogram rows, never data rows, so the whole profile costs two
-    keyed aggregates at any scale. phi is ONE double division off
-    exact integer counts.
-
-    Emits (k, n_nodes, n_edges, phi) -- one row per threshold with
-    N_k >= 2.
-    """
-    # eager checkpoint: the pair stream feeds THREE consumers (both
-    # symmetrized-union halves for degrees, plus the edge stamp join)
-    # -- for the co-purchase graph the pair generation is itself a
-    # self-join that must not execute per consumer (r13; the
-    # edge_triangle_support discipline)
-    pairs = pairs.select("doc_a", "doc_b").localCheckpoint()
-    e = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")).unionByName(
-        pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-    )
-    degs = e.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("deg"))
-    deg_hist = degs.groupBy("deg").agg(F.count("*").alias("n_nodes"))
-    da = degs.select(F.col("node").alias("doc_a"), F.col("deg").alias("deg_a"))
-    db = degs.select(F.col("node").alias("doc_b"), F.col("deg").alias("deg_b"))
-    edge_hist = (
-        pairs.join(da, "doc_a")
-        .join(db, "doc_b")
-        .select(F.least("deg_a", "deg_b").alias("min_deg"))
-        .groupBy("min_deg")
-        .agg(F.count("*").alias("n_edges"))
-    )
-    spark = pairs.sparkSession
-    grid = F.broadcast(
-        spark.createDataFrame([(int(k),) for k in k_grid], "k int")
-    )
-    nodes_k = (
-        deg_hist.join(grid, deg_hist.deg > F.col("k"))
-        .groupBy("k")
-        .agg(F.sum("n_nodes").alias("n_nodes"))
-    )
-    edges_k = (
-        edge_hist.join(grid, edge_hist.min_deg > F.col("k"))
-        .groupBy("k")
-        .agg(F.sum("n_edges").alias("n_edges"))
-    )
-    return (
-        nodes_k.join(edges_k, "k", "left")
-        .filter(F.col("n_nodes") >= 2)
-        .select(
-            "k",
-            F.col("n_nodes").cast("long").alias("n_nodes"),
-            F.coalesce(F.col("n_edges"), F.lit(0)).cast("long").alias("n_edges"),
-            F.round(
-                F.lit(2.0)
-                * F.coalesce(F.col("n_edges"), F.lit(0)).cast("double")
-                / (F.col("n_nodes") * (F.col("n_nodes") - 1)).cast("double"),
-                6,
-            ).alias("phi"),
-        )
-    )
-
-
 def staged_table(spark, name: str, source_fp: str, build):
     """Fingerprint-staged warehouse table: materialize ``build()``
     once per fixture generation and read it back on every later run
@@ -2996,127 +1942,6 @@ def staged_table(spark, name: str, source_fp: str, build):
     from ..sources.staging import ensure_staged_table
 
     return ensure_staged_table(spark, name, build, source_fp)
-
-
-def eigenvector_centrality(
-    pairs: DataFrame, vertices: DataFrame, iters: int = 8
-) -> DataFrame:
-    """Fixed-iteration eigenvector centrality over the undirected
-    near-dup graph -- power iteration with per-round max-normalization
-    (the Bonacich score; on an undirected graph this is also what
-    HITS' hub/authority pair collapses to). PageRank answers "where
-    does a random surfer land"; eigenvector centrality answers "who
-    is connected to the well-connected" without the teleport smoothing
-    -- the canonical-document signal inside a dense duplication
-    cluster.
-
-    The iteration matrix is A + I (each vertex keeps its own score in
-    the neighbor sum) -- the standard shift that makes power
-    iteration converge on BIPARTITE components too, where plain A
-    oscillates with period 2 forever (its dominant eigenvalue pair is
-    +/-lambda; adding I breaks the symmetry). Eigenvectors are
-    unchanged.
-
-    Per iteration: ONE keyed join (score state x edges), one grouped
-    sum per destination, and a 1-row max broadcast for the
-    normalization -- zero driver probes, ``localCheckpoint`` every
-    3rd round (the pagerank lineage discipline). Worst-case work is
-    ``iters`` x (|E| shuffle + |V| agg). Isolated vertices decay
-    geometrically toward 0 (they keep only their own shrinking share
-    of the growing max).
-
-    Emits (doc_id, centrality) rounded to 6 -- both engines
-    accumulate in float64 with different summation orders; 6 digits
-    is far above the ~1e-14 reorder noise.
-    """
-    edges = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-        )
-        .localCheckpoint()  # materialize once: every iteration re-joins
-    )
-    x = vertices.select("doc_id").select(
-        "doc_id", F.lit(1.0).alias("x")
-    ).localCheckpoint()
-    # |V| partition-sizing probe over the materialized state (r12:
-    # loop shuffle width derives from state size, guide §2)
-    with _loop_shuffle_partitions(x.sparkSession, x.count()):
-        for it in range(iters):
-            s = (
-                x.join(edges, F.col("doc_id") == F.col("a"))
-                .groupBy(F.col("b").alias("doc_id"))
-                .agg(F.sum("x").alias("s"))
-            )
-            t = x.join(s, "doc_id", "left").select(
-                "doc_id",
-                (F.col("x") + F.coalesce(F.col("s"), F.lit(0.0))).alias("t"),
-            )
-            m = t.agg(F.max("t").alias("m"))
-            x = t.crossJoin(F.broadcast(m)).select(
-                "doc_id", (F.col("t") / F.col("m")).alias("x")
-            )
-            if it % 3 == 2 or it == iters - 1:
-                x = x.localCheckpoint()
-    return x.select("doc_id", F.round("x", 6).alias("centrality"))
-
-
-def edge_triangle_support(pairs: DataFrame) -> DataFrame:
-    """Per-EDGE triangle support over an undirected pair graph: for
-    each edge (a, b), the count of common neighbors |N(a) n N(b)| --
-    the k-truss building block and the edge-level answer to
-    ``clustering_coefficient``'s node view. High-support edges sit
-    inside dense duplication communities (safe to contract); zero-
-    support edges are bridges whose removal splits clusters -- the
-    signal a dedup pipeline reads before transitively merging on a
-    borderline pair.
-
-    Plan: ONE wedge join keyed on the shared neighbor (symmetrized
-    edges joined to themselves on the center vertex, fan-out bounded
-    by that vertex's degree), then a semi-join against the canonical
-    edge set keeps only wedges whose endpoints are themselves
-    adjacent; one grouped count per edge. Edges in no triangle emit
-    support 0 via the closing left join. The pair stream is eagerly
-    checkpointed -- both the wedge join and the closing joins consume
-    it, and for the co-purchase graph the pair generation is itself
-    a self-join that must not execute twice.
-
-    Emits (doc_a, doc_b, support).
-
-    Reference licence: composition target -- chained-jobs model
-    (SURVEY.md §2A FIFO queue) over the WordCount substrate
-    (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
-    """
-    pairs = pairs.select("doc_a", "doc_b").localCheckpoint()
-    sym = pairs.unionByName(
-        pairs.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    )
-    # wedge (a - w - b), a < b: center w fans out to every neighbor
-    # pair once
-    l = sym.select(F.col("doc_b").alias("w"), F.col("doc_a").alias("a"))
-    r = sym.select(F.col("doc_a").alias("w"), F.col("doc_b").alias("b"))
-    wedges = l.join(r, "w").filter(F.col("a") < F.col("b"))
-    closed = wedges.join(
-        pairs.select(
-            F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-        ),
-        ["a", "b"],
-        "left_semi",
-    )
-    support = closed.groupBy("a", "b").agg(
-        F.count("*").alias("support")
-    )
-    return (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .join(support, ["a", "b"], "left")
-        .select(
-            F.col("a").alias("doc_a"),
-            F.col("b").alias("doc_b"),
-            F.coalesce("support", F.lit(0)).cast("long").alias("support"),
-        )
-    )
 
 
 def dedup_prefix_exact(documents: DataFrame, prefix_len: int = 64) -> DataFrame:

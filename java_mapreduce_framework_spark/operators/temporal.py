@@ -1463,7 +1463,7 @@ def event_markov_stationary(events: DataFrame, rounds: int = 12) -> DataFrame:
     once; every iteration thereafter joins two ALPHABET-sized frames
     -- zero corpus passes inside the loop, state checkpointed every
     3rd round to truncate lineage (the pagerank discipline,
-    operators/dedup.py::graph_pagerank). Dangling states (appearing
+    operators/graph.py::pagerank). Dangling states (appearing
     only as next_type) RECEIVE mass each step and shed it at the next
     join -- so the emitted vector is the exact step-``rounds``
     distribution including mass that just arrived on dangling states;

@@ -2357,7 +2357,7 @@ def bpe_train(documents: DataFrame, n_merges: int = 6) -> DataFrame:
     never re-tokenized (merges rewrite the weighted vocabulary only —
     the ``vocab_coverage`` discipline). Each round is eagerly
     ``localCheckpoint``'ed so plan lineage stays one-round deep
-    (the pagerank discipline, operators/dedup.py::pagerank).
+    (the pagerank discipline, operators/graph.py::pagerank).
 
     The greedy LEFTMOST-non-overlapping merge — the sequential heart
     of canonical BPE — is expressed relationally so both engines
@@ -2412,7 +2412,7 @@ def _bpe_loop(documents: DataFrame, n_merges: int):
     # loop shuffle width from the measured (vocab-bounded) state size
     # -- the session-wide constant re-schedules idle partitions every
     # round (r12, guide §2; measured 4.0 s -> 3.0 s on bpe_train)
-    from .dedup import _loop_shuffle_partitions
+    from ..session import _loop_shuffle_partitions
 
     with _loop_shuffle_partitions(documents.sparkSession, sympos.count()):
         for step in range(1, n_merges + 1):
@@ -2655,7 +2655,7 @@ def _ulm_loop(
     cur = with_costs(chars.unionByName(multi)).localCheckpoint()
     # loop shuffle width from the measured (vocab-bounded) state size
     # (r12, guide §2 -- same discipline as the bpe merge loop)
-    from .dedup import _loop_shuffle_partitions
+    from ..session import _loop_shuffle_partitions
 
     with _loop_shuffle_partitions(documents.sparkSession, subs.count()):
         for _ in range(em_rounds):

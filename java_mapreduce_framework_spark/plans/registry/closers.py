@@ -442,135 +442,6 @@ def _ulm_encode(spark, sf):
 
 
 @_register(
-    "graph_common_neighbors",
-    """
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    cooc AS (
-      SELECT a.l_partkey AS doc_a, b.l_partkey AS doc_b
-      FROM op a
-      JOIN op b ON a.l_orderkey = b.l_orderkey
-                AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-      HAVING count(*) >= 2),
-    edges AS (SELECT doc_a AS a, doc_b AS b FROM cooc
-              UNION ALL SELECT doc_b, doc_a FROM cooc),
-    degs AS (SELECT a AS doc_id, count(*) AS deg FROM edges GROUP BY a),
-    wedge AS (
-      SELECT e1.b AS doc_a, e2.b AS doc_b, count(*) AS common
-      FROM edges e1 JOIN edges e2 ON e1.a = e2.a AND e1.b < e2.b
-      GROUP BY 1, 2),
-    cand AS (
-      SELECT w.* FROM wedge w
-      LEFT JOIN cooc p ON p.doc_a = w.doc_a AND p.doc_b = w.doc_b
-      WHERE p.doc_a IS NULL)
-    SELECT c.doc_a AS part_a, c.doc_b AS part_b,
-           CAST(c.common AS BIGINT) AS common_neighbors,
-           round(c.common * 1.0 / (da.deg + db.deg - c.common), 6)
-             AS jaccard
-    FROM cand c
-    JOIN degs da ON da.doc_id = c.doc_a
-    JOIN degs db ON db.doc_id = c.doc_b
-    """,
-    note="common-neighbor link prediction (Liben-Nowell--Kleinberg) "
-    "over the co-purchase graph (parts sharing >= 2 orders): "
-    "neighborhood-Jaccard scores for non-adjacent part pairs -- the "
-    "recommender candidate generator; the near-dup doc graph is a "
-    "union of cliques (zero open wedges) so the basket graph is the "
-    "non-degenerate target; wedge fan-out bounded by deg(hub)^2, "
-    "keyed anti-join drops existing edges, no adjacency arrays",
-)
-def _graph_common_neighbors(spark, sf):
-    return dedup.common_neighbors(_copurchase_pairs(spark, sf)).select(
-        F.col("doc_a").alias("part_a"),
-        F.col("doc_b").alias("part_b"),
-        "common_neighbors",
-        "jaccard",
-    )
-
-
-def _copurchase_pairs(spark, sf):
-    """(doc_a, doc_b) part pairs co-occurring in >= 2 orders -- the
-    shared edge substrate for the basket-graph family
-    (graph_common_neighbors, graph_kcore). NOT a registered query --
-    the @_register decorator must never land here (it once did,
-    silently replacing graph_common_neighbors' output with the bare
-    edge list; tests/test_oracle_parity.py now pins the real query)."""
-    from ...sources.tables import spread_scan
-
-    li = _t(spark, sf, "lineitem")
-    # r13 (guide §2.5): the fixture scan is single-split, so distinct's
-    # map-side partial aggregation serialized on one core; spreading on
-    # the join key also pre-partitions both self-join legs (measured
-    # 1.22 s -> 0.85 s min-of-6 on the bare pair stream, shared by the
-    # ~14 basket-graph consumers)
-    op = spread_scan(
-        li.select("l_orderkey", "l_partkey"), "l_orderkey"
-    ).distinct()
-    return (
-        op.alias("a")
-        .join(
-            op.alias("b"),
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("doc_a"),
-            F.col("b.l_partkey").alias("doc_b"),
-        )
-        .agg(F.count("*").alias("n_orders"))
-        .filter(F.col("n_orders") >= 2)
-        .select("doc_a", "doc_b")
-    )
-
-
-@_register(
-    "graph_clustering_coeff",
-    """
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    cooc AS (
-      SELECT a.l_partkey AS doc_a, b.l_partkey AS doc_b
-      FROM op a
-      JOIN op b ON a.l_orderkey = b.l_orderkey
-                AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-      HAVING count(*) >= 2),
-    edges AS (SELECT doc_a AS a, doc_b AS b FROM cooc
-              UNION ALL SELECT doc_b, doc_a FROM cooc),
-    degs AS (SELECT a AS doc_id, count(*) AS deg FROM edges GROUP BY a),
-    tri AS (
-      SELECT ab.a, ab.b, bc.c
-      FROM (SELECT doc_a AS a, doc_b AS b FROM cooc) ab
-      JOIN (SELECT doc_a AS b, doc_b AS c FROM cooc) bc USING (b)
-      JOIN (SELECT doc_a AS a, doc_b AS c FROM cooc) ac USING (a, c)),
-    corners AS (
-      SELECT a AS doc_id FROM tri
-      UNION ALL SELECT b FROM tri
-      UNION ALL SELECT c FROM tri),
-    ntri AS (SELECT doc_id, count(*) AS n_triangles
-             FROM corners GROUP BY doc_id)
-    SELECT d.doc_id AS part_id,
-           CAST(d.deg AS BIGINT) AS deg,
-           CAST(coalesce(t.n_triangles, 0) AS BIGINT) AS n_triangles,
-           round(2.0e0 * coalesce(t.n_triangles, 0)
-                 / (d.deg * (d.deg - 1)), 6) AS clustering_coeff
-    FROM degs d LEFT JOIN ntri t USING (doc_id)
-    WHERE d.deg >= 2
-    """,
-    note="per-node local clustering coefficient over the co-purchase "
-    "graph: triangle credits from the degree-ordered wedge join "
-    "(triangle_count kernel), degrees from one symmetrized-edge "
-    "count, one keyed left join; exact-integer division rounded once",
-)
-def _graph_clustering_coeff(spark, sf):
-    return dedup.clustering_coefficient(_copurchase_pairs(spark, sf)).select(
-        F.col("doc_id").alias("part_id"),
-        "deg",
-        "n_triangles",
-        "clustering_coeff",
-    )
-
-
-@_register(
     "interval_gaps",
     """
     WITH base AS (
@@ -778,54 +649,6 @@ _RAKE_STOPS = "('" + "','".join(
 )
 def _text_rake_keyphrases(spark, sf):
     return text.rake_keyphrases(_t(spark, sf, "documents"))
-
-
-def _kcore_oracle_sql(k: int = 3, rounds: int = 10) -> str:
-    """Unrolled fixed-round synchronous k-core peel over the
-    co-purchase graph (the graph_label_propagation oracle pattern):
-    per round one degree aggregate + an endpoint-restriction CTE."""
-    head = """
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    cooc AS (
-      SELECT a.l_partkey AS pa, b.l_partkey AS pb
-      FROM op a
-      JOIN op b ON a.l_orderkey = b.l_orderkey
-                AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-      HAVING count(*) >= 2),
-    e0 AS MATERIALIZED (SELECT pa AS a, pb AS b FROM cooc
-           UNION ALL SELECT pb, pa FROM cooc)"""
-    blocks = []
-    for r in range(1, rounds + 1):
-        blocks.append(f""",
-    keep{r} AS MATERIALIZED (SELECT a FROM e{r - 1} GROUP BY a
-                HAVING count(*) >= {k}),
-    e{r} AS MATERIALIZED (
-      SELECT e.a, e.b FROM e{r - 1} e
-      JOIN keep{r} ka ON ka.a = e.a
-      JOIN keep{r} kb ON kb.a = e.b)"""
-        )
-    return (
-        head
-        + "".join(blocks)
-        + f"""
-    SELECT a AS node_id, CAST(count(*) AS BIGINT) AS core_deg
-    FROM e{rounds} GROUP BY a
-    """
-    )
-
-
-@_register(
-    "graph_kcore",
-    _kcore_oracle_sql(3, 10),
-    note="fixed-round synchronous k-core peel (k=3, 10 rounds -- "
-    "converged at test SF, asserted in tests) over the co-purchase "
-    "graph: per round one keyed degree aggregate + two semi-joins, "
-    "edge-list state eagerly localCheckpoint'ed (pagerank lineage "
-    "discipline); oracle unrolls the rounds as chained CTEs",
-)
-def _graph_kcore(spark, sf):
-    return dedup.kcore(_copurchase_pairs(spark, sf), k=3, rounds=10)
 
 
 @_register(
@@ -1476,56 +1299,6 @@ def _attribution_position_based(spark, sf):
 
 
 @_register(
-    "graph_adamic_adar",
-    """
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    cooc AS (
-      SELECT a.l_partkey AS doc_a, b.l_partkey AS doc_b
-      FROM op a
-      JOIN op b ON a.l_orderkey = b.l_orderkey
-                AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-      HAVING count(*) >= 2),
-    edges AS (SELECT doc_a AS a, doc_b AS b FROM cooc
-              UNION ALL SELECT doc_b, doc_a FROM cooc),
-    degs AS (
-      SELECT a AS hub,
-             CAST(round(1e6 / ln(count(*))) AS BIGINT) AS mnat
-      FROM edges GROUP BY a
-      HAVING count(*) >= 2),
-    eh AS (SELECT e.a AS hub, e.b, d.mnat
-           FROM edges e JOIN degs d ON d.hub = e.a),
-    wedge AS (
-      SELECT e1.b AS doc_a, e2.b AS doc_b,
-             count(*) AS common, sum(e1.mnat) AS aa
-      FROM eh e1 JOIN eh e2 ON e1.hub = e2.hub AND e1.b < e2.b
-      GROUP BY 1, 2),
-    cand AS (
-      SELECT w.* FROM wedge w
-      LEFT JOIN cooc p ON p.doc_a = w.doc_a AND p.doc_b = w.doc_b
-      WHERE p.doc_a IS NULL)
-    SELECT doc_a AS part_a, doc_b AS part_b,
-           CAST(common AS BIGINT) AS common_neighbors,
-           CAST(aa AS BIGINT) AS aa_mnat
-    FROM cand
-    """,
-    note="Adamic-Adar link prediction over the co-purchase graph "
-    "(common_neighbors' frequency-weighted upgrade): hub credit is "
-    "the integer micro-nat round(1e6/ln(deg)) -- the one "
-    "transcendental rounded to an exact integer BEFORE the per-pair "
-    "fold, so the sum is order-free; wedge fan-out bounded by "
-    "deg(hub)^2, existing edges dropped by keyed anti-join",
-)
-def _graph_adamic_adar(spark, sf):
-    return dedup.adamic_adar(_copurchase_pairs(spark, sf)).select(
-        F.col("doc_a").alias("part_a"),
-        F.col("doc_b").alias("part_b"),
-        "common_neighbors",
-        "aa_mnat",
-    )
-
-
-@_register(
     "lm_kneser_ney_bigram",
     f"""
     WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
@@ -1991,39 +1764,6 @@ def _lang_id_margin(spark, sf):
 
 
 @_register(
-    "graph_degree_histogram",
-    """
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    cooc AS (
-      SELECT a.l_partkey AS doc_a, b.l_partkey AS doc_b
-      FROM op a
-      JOIN op b ON a.l_orderkey = b.l_orderkey
-                AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-      HAVING count(*) >= 2),
-    edges AS (SELECT doc_a AS a FROM cooc
-              UNION ALL SELECT doc_b FROM cooc),
-    degs AS (SELECT a, count(*) AS deg FROM edges GROUP BY a),
-    hist AS (SELECT deg, count(*) AS n_nodes FROM degs GROUP BY deg),
-    tot AS (SELECT sum(n_nodes) AS tot FROM hist)
-    SELECT CAST(deg AS BIGINT) AS deg, CAST(n_nodes AS BIGINT) AS n_nodes,
-           round(n_nodes / CAST(tot AS DOUBLE), 6) AS frac
-    FROM hist, tot
-    """,
-    note="degree distribution of the co-purchase graph (the "
-    "structural sanity check on any generated pair set -- a fat tail "
-    "means a hot key slipped a cap): one symmetrized-edge count, one "
-    "distinct-degree rollup, 1-row total broadcast",
-)
-def _graph_degree_histogram(spark, sf):
-    # eager checkpoint: the pair stream feeds both union halves of the
-    # symmetrized edge list (17 exchanges measured without it, 5 after)
-    return dedup.degree_histogram(
-        _copurchase_pairs(spark, sf).localCheckpoint()
-    )
-
-
-@_register(
     "stats_benford",
     """
     WITH c AS (
@@ -2214,48 +1954,6 @@ def _multimodal_image_sharpness(spark, sf):
 )
 def _stats_cohens_d(spark, sf):
     return analytics.cohens_d(_t(spark, sf, "events"))
-
-
-@_register(
-    "graph_assortativity",
-    """
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    cooc AS (
-      SELECT a.l_partkey AS doc_a, b.l_partkey AS doc_b
-      FROM op a
-      JOIN op b ON a.l_orderkey = b.l_orderkey
-                AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-      HAVING count(*) >= 2),
-    edges AS (SELECT doc_a AS a, doc_b AS b FROM cooc
-              UNION ALL SELECT doc_b, doc_a FROM cooc),
-    degs AS (SELECT a AS node, count(*) AS deg FROM edges GROUP BY a),
-    st AS (
-      SELECT e.a, e.b, da.deg AS x, db.deg AS y
-      FROM edges e
-      JOIN degs da ON da.node = e.a
-      JOIN degs db ON db.node = e.b),
-    agg AS (
-      SELECT count(*) AS m, sum(x) AS sx, sum(x * y) AS sxy,
-             sum(x * x) AS sxx
-      FROM st)
-    SELECT CAST(m AS BIGINT) AS m_edges,
-           CASE WHEN CAST(m AS DOUBLE) * sxx
-                     - CAST(sx AS DOUBLE) * sx <> 0.0 THEN
-             round((CAST(m AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sx)
-                   / (CAST(m AS DOUBLE) * sxx
-                      - CAST(sx AS DOUBLE) * sx), 4)
-           END AS assortativity
-    FROM agg
-    """,
-    note="Newman degree assortativity of the co-purchase graph (do "
-    "hubs link to hubs?): endpoint degrees stamped by two keyed "
-    "joins, five exact BIGINT sums over 2|E| directed edges "
-    "(symmetry makes y-sums equal x-sums), one rounded double "
-    "combination; linear in |E|, no wedge fan-out",
-)
-def _graph_assortativity(spark, sf):
-    return dedup.degree_assortativity(_copurchase_pairs(spark, sf))
 
 
 @_register(

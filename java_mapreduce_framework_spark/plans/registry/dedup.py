@@ -9,6 +9,7 @@ from pyspark.sql import functions as F  # noqa: F401
 from ...operators import (  # noqa: F401
     analytics,
     dedup,
+    graph,
     ml,
     multimodal,
     relational,
@@ -188,7 +189,7 @@ def _dedup_ngram_jaccard_capped(spark, sf):
 )
 def _dedup_cluster_components(spark, sf):
     pairs = dedup.ngram_jaccard_pairs(_t(spark, sf, "documents"))
-    return dedup.connected_components(pairs)
+    return graph.connected_components(pairs)
 
 
 @_register(
@@ -198,7 +199,7 @@ def _dedup_cluster_components(spark, sf):
 )
 def _dedup_minhash_clusters(spark, sf):
     pairs = dedup.dedup_minhash(_t(spark, sf, "documents"))
-    return dedup.connected_components(pairs)
+    return graph.connected_components(pairs)
 
 
 @_register(
@@ -210,7 +211,7 @@ def _dedup_minhash_clusters(spark, sf):
 )
 def _dedup_cluster_components_star(spark, sf):
     pairs = dedup.ngram_jaccard_pairs(_t(spark, sf, "documents"))
-    return dedup.connected_components_star(pairs)
+    return graph.connected_components_star(pairs)
 
 
 @_register(

@@ -1389,48 +1389,6 @@ def _audience_overlap_kmv(spark, sf):
 
 
 @_register(
-    "graph_bfs_hops",
-    f"""
-    WITH RECURSIVE toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, len(t) - 1),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-      FROM toks WHERE len(t) >= 3),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    com AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-      FROM sh a JOIN sh b USING (shingle)
-      WHERE a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id),
-    pairs AS (
-      SELECT doc_a, doc_b
-      FROM com
-      JOIN sizes na ON com.doc_a = na.doc_id
-      JOIN sizes nb ON com.doc_b = nb.doc_id
-      WHERE c * 1.0 / (na.n + nb.n - c) >= 0.8),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM pairs
-      UNION ALL SELECT doc_b, doc_a FROM pairs),
-    walk(node, hop) AS (
-      SELECT (SELECT min(a) FROM edges), 0
-      UNION
-      SELECT e.b, w.hop + 1
-      FROM walk w JOIN edges e ON e.a = w.node
-      WHERE w.hop < 8)
-    SELECT node AS doc_id, CAST(min(hop) AS INT) AS hop
-    FROM walk GROUP BY node
-    """,
-    note="depth-bounded BFS from the smallest node of the near-dup "
-    "graph; frontier-expansion joins + localCheckpoint == "
-    "recursive-CTE min-hop (blast-radius / contamination tracing)",
-)
-def _graph_bfs_hops(spark, sf):
-    pairs = dedup.ngram_jaccard_pairs(_t(spark, sf, "documents"))
-    return dedup.bfs_hops(pairs)
-
-
-@_register(
     "split_leakage_audit",
     f"""
     WITH s AS (
@@ -2330,157 +2288,6 @@ def _stats_fdr_bh(spark, sf):
 )
 def _train_shuffle_shard(spark, sf):
     return text.train_shuffle_shard(_t(spark, sf, "documents"))
-
-
-#: Near-dup pair graph CTE (threshold 0.8), shared by the graph ops'
-#: oracles — identical to the dedup_ngram_jaccard pair derivation.
-_PAIRS_CTE = f"""
-    toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, len(t) - 1),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-      FROM toks WHERE len(t) >= 3),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    com AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-      FROM sh a JOIN sh b USING (shingle)
-      WHERE a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id),
-    pairs AS (
-      SELECT doc_a, doc_b
-      FROM com
-      JOIN sizes na ON com.doc_a = na.doc_id
-      JOIN sizes nb ON com.doc_b = nb.doc_id
-      WHERE c * 1.0 / (na.n + nb.n - c) >= 0.8)
-"""
-
-
-def _pagerank_oracle(iters: int = 10, damping: float = 0.85) -> str:
-    """Unrolled fixed-iteration PageRank: one CTE per iteration — no
-    recursive aggregation needed, and DuckDB evaluates the chain
-    bottom-up exactly like the Spark loop."""
-    head = f"""
-    WITH {_PAIRS_CTE},
-    vertices AS (SELECT doc_id FROM documents),
-    edges AS MATERIALIZED (SELECT doc_a AS a, doc_b AS b FROM pairs
-              UNION ALL SELECT doc_b, doc_a FROM pairs),
-    degs AS MATERIALIZED (SELECT a AS doc_id, count(*) AS deg FROM edges GROUP BY a),
-    nn AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS n FROM vertices),
-    pr0 AS MATERIALIZED (SELECT doc_id, 1.0 / n AS pr FROM vertices CROSS JOIN nn)"""
-    blocks = []
-    for k in range(1, iters + 1):
-        blocks.append(f""",
-    pr{k} AS MATERIALIZED (
-      SELECT v.doc_id,
-             (1 - {damping}) / nn.n
-             + {damping} * (coalesce(nb.s, 0) + dang.m / nn.n) AS pr
-      FROM vertices v
-      CROSS JOIN nn
-      CROSS JOIN (SELECT coalesce(sum(p.pr), 0) AS m
-                  FROM pr{k - 1} p LEFT JOIN degs d USING (doc_id)
-                  WHERE d.deg IS NULL) dang
-      LEFT JOIN (SELECT e.b AS doc_id, sum(p.pr / d.deg) AS s
-                 FROM edges e
-                 JOIN pr{k - 1} p ON p.doc_id = e.a
-                 JOIN degs d ON d.doc_id = e.a
-                 GROUP BY e.b) nb ON nb.doc_id = v.doc_id
-    )""")
-    return head + "".join(blocks) + f"""
-    SELECT doc_id, round(pr, 6) AS pr FROM pr{iters}
-    """
-
-
-@_register(
-    "graph_pagerank",
-    _pagerank_oracle(),
-    note="fixed-iteration PageRank over the near-dup graph: per round "
-    "one keyed join + grouped sum + 1-row dangling broadcast, "
-    "localCheckpoint lineage truncation, zero driver probes; oracle "
-    "unrolls the 10 iterations as chained CTEs",
-)
-def _graph_pagerank(spark, sf):
-    docs = _t(spark, sf, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs)
-    return dedup.pagerank(pairs, docs)
-
-
-def _lpa_oracle(rounds: int = 3) -> str:
-    """Unrolled fixed-round synchronous label propagation: one
-    (neighbor-count -> argmax -> relabel) CTE triple per round,
-    mirroring the Spark loop; ties break to the smallest label."""
-    parts = [
-        f"WITH {_PAIRS_CTE},",
-        "edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs"
-        " UNION ALL SELECT doc_b, doc_a FROM pairs),",
-        "l0 AS (SELECT doc_id, doc_id AS label FROM documents)",
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(
-            f""",
-    n{r} AS (
-      SELECT e.a AS doc_id, l.label, count(*) AS c
-      FROM edges e JOIN l{r - 1} l ON l.doc_id = e.b
-      GROUP BY 1, 2),
-    a{r} AS (
-      SELECT doc_id, label FROM (
-        SELECT doc_id, label,
-               row_number() OVER (PARTITION BY doc_id
-                                  ORDER BY c DESC, label) AS rn
-        FROM n{r}) WHERE rn = 1),
-    l{r} AS (
-      SELECT v.doc_id, COALESCE(a.label, v.doc_id) AS label
-      FROM (SELECT doc_id FROM documents) v
-      LEFT JOIN a{r} a USING (doc_id))"""
-        )
-    parts.append(
-        f"\n    SELECT doc_id, label AS community FROM l{rounds}"
-    )
-    return "".join(parts)
-
-
-@_register(
-    "graph_label_propagation",
-    _lpa_oracle(),
-    note="fixed-round synchronous label-propagation communities over "
-    "the near-dup graph: mode-of-neighbor-labels with smallest-label "
-    "ties, isolated nodes keep their own id -- deterministic by "
-    "construction (no convergence probe); oracle unrolls the rounds "
-    "as chained CTEs",
-)
-def _graph_label_propagation(spark, sf):
-    docs = _t(spark, sf, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs)
-    return dedup.label_propagation(pairs, docs)
-
-
-@_register(
-    "graph_triangle_count",
-    f"""
-    WITH {_PAIRS_CTE},
-    tri AS (
-      SELECT ab.doc_a AS a, ab.doc_b AS b, bc.doc_b AS c
-      FROM pairs ab
-      JOIN pairs bc ON ab.doc_b = bc.doc_a
-      JOIN pairs ac ON ac.doc_a = ab.doc_a AND ac.doc_b = bc.doc_b
-    ),
-    corners AS (
-      SELECT a AS doc_id FROM tri
-      UNION ALL SELECT b FROM tri
-      UNION ALL SELECT c FROM tri
-    )
-    SELECT doc_id, CAST(count(*) AS BIGINT) AS n_triangles
-    FROM corners GROUP BY doc_id
-    """,
-    note="per-doc triangle participation via degree-ordered wedge "
-    "join (orient small->large, close wedges against oriented "
-    "edges): duplicate-free by construction, wedge fan-out bounded "
-    "by the smaller endpoint's degree",
-)
-def _graph_triangle_count(spark, sf):
-    return dedup.triangle_count(
-        dedup.ngram_jaccard_pairs(_t(spark, sf, "documents"))
-    )
 
 
 @_register(

@@ -4,8 +4,7 @@ Ansari-Bradley nonparametric dispersion test (completing the
 rank-test panel next to Mann-Whitney's location test), volume-
 weighted VWAP bands over the daily candle stream, corpus-common
 trigram coverage (boilerplate detector), a perplexity-bucket corpus
-histogram, the rich-club coefficient profile over the co-purchase
-graph, a border-vs-interior luminance readout over the REAL BMP
+histogram, a border-vs-interior luminance readout over the REAL BMP
 decode path, and two SQL-intake shapes (brand leaders within part
 type, monthly priority mix).
 
@@ -42,7 +41,6 @@ from .core import (  # noqa: F401
     _t,
 )
 from .multimodal import _PAYLOAD_CTE  # noqa: F401
-from .round9 import _COPURCHASE_CTE  # noqa: F401
 from .round9b import _CANDLE_VOL_CTE  # noqa: F401
 
 # ------------------------------------------------------------ events
@@ -343,50 +341,6 @@ def _text_common_trigram_coverage(spark, sf):
 )
 def _lm_perplexity_bucket(spark, sf):
     return text.lm_perplexity_bucket(_t(spark, sf, "documents"))
-
-
-# ------------------------------------------------------------- graph
-
-
-@_register(
-    "graph_rich_club",
-    f"""
-    WITH {_COPURCHASE_CTE},
-    deg_hist AS (SELECT deg, count(*) AS n_nodes FROM degs GROUP BY deg),
-    eh AS (
-      SELECT least(da.deg, db.deg) AS min_deg, count(*) AS n_edges
-      FROM cooc c
-      JOIN degs da ON da.doc_id = c.doc_a
-      JOIN degs db ON db.doc_id = c.doc_b
-      GROUP BY 1),
-    grid AS (SELECT k FROM (VALUES (1), (2), (3), (4), (6), (8), (12),
-                            (16)) AS g(k)),
-    nk AS (
-      SELECT grid.k, sum(deg_hist.n_nodes) AS n_nodes
-      FROM deg_hist JOIN grid ON deg_hist.deg > grid.k
-      GROUP BY grid.k),
-    ek AS (
-      SELECT grid.k, sum(eh.n_edges) AS n_edges
-      FROM eh JOIN grid ON eh.min_deg > grid.k
-      GROUP BY grid.k)
-    SELECT nk.k,
-           CAST(nk.n_nodes AS BIGINT) AS n_nodes,
-           CAST(coalesce(ek.n_edges, 0) AS BIGINT) AS n_edges,
-           round(2.0 * CAST(coalesce(ek.n_edges, 0) AS DOUBLE)
-                 / CAST(nk.n_nodes * (nk.n_nodes - 1) AS DOUBLE), 6)
-             AS phi
-    FROM nk LEFT JOIN ek ON ek.k = nk.k
-    WHERE nk.n_nodes >= 2
-    """,
-    note="rich-club coefficient profile phi(k) over the co-purchase "
-    "graph: both sides reduce to bounded histograms (nodes per "
-    "degree, edges per min-degree) before the constant k-grid cross; "
-    "phi one double division off exact integer counts",
-)
-def _graph_rich_club(spark, sf):
-    from .closers import _copurchase_pairs
-
-    return dedup.rich_club(_copurchase_pairs(spark, sf))
 
 
 # -------------------------------------------------------- multimodal

@@ -4,9 +4,8 @@ stream (Williams %R, Aroon, Vortex, Chande momentum, Elder force
 index), engagement/concentration readouts (DAU/MAU stickiness,
 calendar heatmap, Lorenz curve), ML evaluation kernels (rank-formula
 ROC-AUC, precision/recall curve, two-feature ridge fit), the
-Mann-Kendall trend test and odds-ratio panel, eigenvector centrality
-over the near-dup graph, skip-gram PMI, and an Allen-relation profile
-over per-user daily activity intervals.
+Mann-Kendall trend test and odds-ratio panel, skip-gram PMI, and an
+Allen-relation profile over per-user daily activity intervals.
 
 Every query is hash-oracled (DuckDB SQL over the same parquet) unless
 noted. Cross-engine exactness follows the registry's house rules:
@@ -548,57 +547,7 @@ def _ml_pr_curve(spark, sf):
     return ml.pr_curve_lang_length(_t(spark, sf, "documents"))
 
 
-# ------------------------------------------------- graph / text / ml
-
-from .mixed import _PAIRS_CTE  # noqa: E402,F401
-
-
-def _eigencentrality_oracle(iters: int = 8) -> str:
-    """Unrolled (A + I) power iteration with per-round
-    max-normalization: one (neighbor-sum, shifted-score, max) CTE
-    triple per round -- DuckDB evaluates the chain bottom-up exactly
-    like the Spark loop (the pagerank oracle discipline). The +I
-    shift keeps bipartite components from oscillating; eigenvectors
-    are unchanged."""
-    head = f"""
-    WITH {_PAIRS_CTE},
-    vertices AS (SELECT doc_id FROM documents),
-    edges AS MATERIALIZED (SELECT doc_a AS a, doc_b AS b FROM pairs
-              UNION ALL SELECT doc_b, doc_a FROM pairs),
-    x0 AS MATERIALIZED (SELECT doc_id, 1.0 AS x FROM vertices)"""
-    blocks = []
-    for k in range(1, iters + 1):
-        blocks.append(f""",
-    s{k} AS MATERIALIZED (
-      SELECT e.b AS doc_id, sum(p.x) AS s
-      FROM edges e JOIN x{k - 1} p ON p.doc_id = e.a
-      GROUP BY e.b),
-    t{k} AS MATERIALIZED (
-      SELECT p.doc_id, p.x + coalesce(nb.s, 0) AS t
-      FROM x{k - 1} p LEFT JOIN s{k} nb USING (doc_id)),
-    x{k} AS MATERIALIZED (
-      SELECT doc_id, t / mx.m AS x
-      FROM t{k} CROSS JOIN (SELECT max(t) AS m FROM t{k}) mx
-    )""")
-    return head + "".join(blocks) + f"""
-    SELECT doc_id, round(x, 6) AS centrality FROM x{iters}
-    """
-
-
-@_register(
-    "graph_eigenvector_centrality",
-    _eigencentrality_oracle(),
-    note="fixed-iteration eigenvector centrality ((A + I) power "
-    "iteration -- bipartite-safe -- with per-round 1-row "
-    "max-normalization broadcast) over the near-dup "
-    "graph: per round one keyed join + grouped sum, localCheckpoint "
-    "lineage truncation, zero driver probes; oracle unrolls the 8 "
-    "rounds as chained MATERIALIZED CTEs (pagerank discipline)",
-)
-def _graph_eigenvector_centrality(spark, sf):
-    docs = _t(spark, sf, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs)
-    return dedup.eigenvector_centrality(pairs, docs)
+# ------------------------------------------------------- text / ml
 
 
 @_register(

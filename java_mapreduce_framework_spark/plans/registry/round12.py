@@ -2,7 +2,7 @@
 completions (Elder-Ray, CMF, Coppock), effect-size / whole-CDF /
 ordered-trend stats (Cliff's delta, Cramer-von Mises, Jonckheere-
 Terpstra), cohort economics (retention half-life, Gini trend, LTV
-curve), edge-level graph support, prefix dedup, Sobel edge density,
+curve), prefix dedup, Sobel edge density,
 and two SQL-intake shapes. Every entry keeps the round-11 envelope
 discipline: SURVEY §2B row (sync-tested), hash oracle, plan notes,
 tests in tests/test_round12.py."""
@@ -384,47 +384,6 @@ def _events_gini_trend(spark, sf):
 )
 def _orders_cohort_ltv_curve(spark, sf):
     return analytics.cohort_ltv_curve(_t(spark, sf, "orders"))
-
-
-# ------------------------------------------------------------- graph
-
-
-@_register(
-    "graph_edge_triangle_support",
-    """
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    cooc AS (
-      SELECT a.l_partkey AS doc_a, b.l_partkey AS doc_b
-      FROM op a
-      JOIN op b ON a.l_orderkey = b.l_orderkey
-                AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-      HAVING count(*) >= 2),
-    sym AS (SELECT doc_a, doc_b FROM cooc
-            UNION ALL SELECT doc_b, doc_a FROM cooc),
-    wedges AS (
-      SELECT l.doc_a AS a, r.doc_b AS b
-      FROM (SELECT doc_b AS w, doc_a FROM sym) l
-      JOIN (SELECT doc_a AS w, doc_b FROM sym) r ON l.w = r.w
-      WHERE l.doc_a < r.doc_b),
-    closed AS (
-      SELECT w.a, w.b FROM wedges w
-      JOIN cooc c ON c.doc_a = w.a AND c.doc_b = w.b),
-    sup AS (SELECT a, b, count(*) AS support FROM closed GROUP BY a, b)
-    SELECT c.doc_a, c.doc_b,
-           CAST(coalesce(s.support, 0) AS BIGINT) AS support
-    FROM cooc c LEFT JOIN sup s
-      ON s.a = c.doc_a AND s.b = c.doc_b
-    """,
-    note="per-edge triangle support over the co-purchase graph (the "
-    "k-truss building block; clustering_coefficient's edge-level "
-    "view): one center-keyed wedge join + a semi-join against the "
-    "canonical edge set, pair stream eagerly checkpointed",
-)
-def _graph_edge_triangle_support(spark, sf):
-    from .closers import _copurchase_pairs
-
-    return dedup.edge_triangle_support(_copurchase_pairs(spark, sf))
 
 
 # ------------------------------------------------------------- dedup

@@ -4,8 +4,7 @@ Theil-Sen, Grubbs, Wilcoxon signed-rank, Ljung-Box), product
 analytics (bounce rate, power-user curve, churn hazard, binary
 changepoint), technical-indicator windows (MACD, stochastic
 oscillator, ATR), text/LM closers (hapax profile, sentence stats,
-sentence dedup, Good-Turing counts), graph edge scoring and
-component stats, per-dimension embedding profile, two SQL-intake
+sentence dedup, Good-Turing counts), per-dimension embedding profile, two SQL-intake
 queries, and two multimodal codec ops (dHash, clipping report).
 
 Every query is hash-oracled (DuckDB SQL on the same parquet); the
@@ -95,23 +94,6 @@ _SENTS = (
     "list_filter(list_transform(string_split_regex(text, '[.!?]+'),"
     " s -> trim(s)), s -> s <> '')"
 )
-
-#: co-purchase graph (parts sharing >= 2 orders) with degrees --
-#: the basket-graph family's shared substrate.
-_COPURCHASE_CTE = """
-    op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    cooc AS (
-      SELECT a.l_partkey AS doc_a, b.l_partkey AS doc_b
-      FROM op a
-      JOIN op b ON a.l_orderkey = b.l_orderkey
-                AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-      HAVING count(*) >= 2),
-    edges AS (SELECT doc_a AS a, doc_b AS b FROM cooc
-              UNION ALL SELECT doc_b, doc_a FROM cooc),
-    degs AS (SELECT a AS doc_id, count(*) AS deg FROM edges GROUP BY a)
-"""
-
 
 # -------------------------------------------------- classical statistics
 
@@ -695,166 +677,6 @@ def _dedup_sentence_exact(spark, sf):
 )
 def _lm_good_turing_counts(spark, sf):
     return text.good_turing_counts(_t(spark, sf, "documents"))
-
-
-# --------------------------------------------------------------- graph
-
-
-@_register(
-    "graph_edge_jaccard",
-    f"""
-    WITH {_COPURCHASE_CTE},
-    wedge AS (
-      SELECT e1.b AS doc_a, e2.b AS doc_b, count(*) AS common
-      FROM edges e1 JOIN edges e2 ON e1.a = e2.a AND e1.b < e2.b
-      GROUP BY 1, 2)
-    SELECT c.doc_a AS part_a, c.doc_b AS part_b,
-           CAST(coalesce(w.common, 0) AS BIGINT) AS common_neighbors,
-           round(coalesce(w.common, 0) * 1.0
-                 / (da.deg + db.deg - coalesce(w.common, 0)), 6)
-             AS edge_jaccard
-    FROM cooc c
-    LEFT JOIN wedge w ON w.doc_a = c.doc_a AND w.doc_b = c.doc_b
-    JOIN degs da ON da.doc_id = c.doc_a
-    JOIN degs db ON db.doc_id = c.doc_b
-    """,
-    note="neighborhood Jaccard for EXISTING co-purchase edges (edge "
-    "strength / cluster-merge signal -- graph_common_neighbors "
-    "scores the non-adjacent complement): wedge join bounded by "
-    "deg(hub)^2, left join keeps zero-overlap edges",
-)
-def _graph_edge_jaccard(spark, sf):
-    from .closers import _copurchase_pairs
-
-    # eager checkpoint: cooc feeds FOUR consumers (both union halves,
-    # the left join, and -- via edges -- degrees and both wedge
-    # sides); without it the co-purchase pair aggregation re-executes
-    # per consumer (34 exchanges measured, 7 after)
-    cooc = _copurchase_pairs(spark, sf).localCheckpoint()
-    edges = cooc.unionByName(
-        cooc.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    )
-    degs = edges.groupBy(F.col("doc_a").alias("doc_id")).agg(
-        F.count("*").alias("deg")
-    )
-    e1 = edges.select(F.col("doc_a").alias("hub"), F.col("doc_b").alias("a"))
-    e2 = edges.select(F.col("doc_a").alias("hub"), F.col("doc_b").alias("b"))
-    wedge = (
-        e1.join(e2, "hub")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
-        .agg(F.count("*").alias("common"))
-    )
-    common = F.coalesce(F.col("common"), F.lit(0))
-    return (
-        cooc.join(wedge, ["doc_a", "doc_b"], "left")
-        .join(
-            degs.select(
-                F.col("doc_id").alias("doc_a"), F.col("deg").alias("deg_a")
-            ),
-            "doc_a",
-        )
-        .join(
-            degs.select(
-                F.col("doc_id").alias("doc_b"), F.col("deg").alias("deg_b")
-            ),
-            "doc_b",
-        )
-        .select(
-            F.col("doc_a").alias("part_a"),
-            F.col("doc_b").alias("part_b"),
-            common.cast("long").alias("common_neighbors"),
-            F.round(
-                common / (F.col("deg_a") + F.col("deg_b") - common), 6
-            ).alias("edge_jaccard"),
-        )
-    )
-
-
-@_register(
-    "graph_component_stats",
-    f"""
-    WITH RECURSIVE toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, len(t) - 1),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-      FROM toks WHERE len(t) >= 3),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    com AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-      FROM sh a JOIN sh b USING (shingle)
-      WHERE a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id),
-    pairs AS (
-      SELECT doc_a, doc_b
-      FROM com
-      JOIN sizes na ON com.doc_a = na.doc_id
-      JOIN sizes nb ON com.doc_b = nb.doc_id
-      WHERE c * 1.0 / (na.n + nb.n - c) >= 0.8),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM pairs
-      UNION ALL SELECT doc_b, doc_a FROM pairs),
-    reach(node, root) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT e.b, r.root FROM reach r JOIN edges e ON e.a = r.node),
-    labels AS (
-      SELECT node AS doc_id, min(root) AS component_id
-      FROM reach GROUP BY node),
-    nodes AS (
-      SELECT component_id, count(*) AS n_nodes
-      FROM labels GROUP BY component_id),
-    ecount AS (
-      SELECT l.component_id, count(*) AS n_edges
-      FROM pairs p JOIN labels l ON l.doc_id = p.doc_a
-      GROUP BY l.component_id)
-    SELECT n.component_id, CAST(n.n_nodes AS BIGINT) AS n_nodes,
-           CAST(e.n_edges AS BIGINT) AS n_edges,
-           round(2.0 * e.n_edges
-                 / (n.n_nodes * CAST(n.n_nodes - 1 AS DOUBLE)), 4)
-             AS density
-    FROM nodes n JOIN ecount e USING (component_id)
-    """,
-    note="per-component size/edge/density stats of the exact "
-    "Jaccard>=0.8 near-dup graph: log-rounds CC labels (recursive-"
-    "CTE reachability oracle) + two keyed rollups -- the cluster "
-    "triage report before dedup_cluster_keep_best picks survivors",
-)
-def _graph_component_stats(spark, sf):
-    # eager checkpoint: the pair pipeline (inverted-index self-join)
-    # feeds BOTH connected_components and the ecount join below --
-    # un-checkpointed, the whole shingle self-join executed twice (r13)
-    pairs = dedup.ngram_jaccard_pairs(
-        _t(spark, sf, "documents")
-    ).localCheckpoint()
-    labels = dedup.connected_components(pairs)
-    nodes = labels.groupBy("component_id").agg(
-        F.count("*").alias("n_nodes")
-    )
-    ecount = (
-        pairs.join(
-            labels.select(
-                F.col("doc_id").alias("doc_a"), "component_id"
-            ),
-            "doc_a",
-        )
-        .groupBy("component_id")
-        .agg(F.count("*").alias("n_edges"))
-    )
-    return nodes.join(ecount, "component_id").select(
-        "component_id",
-        F.col("n_nodes").cast("long").alias("n_nodes"),
-        F.col("n_edges").cast("long").alias("n_edges"),
-        F.round(
-            2.0
-            * F.col("n_edges")
-            / (F.col("n_nodes") * (F.col("n_nodes") - 1).cast("double")),
-            4,
-        ).alias("density"),
-    )
 
 
 # ---------------------------------------------------------- embeddings

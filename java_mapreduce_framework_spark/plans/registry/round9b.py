@@ -4,12 +4,10 @@ Cohen's kappa, Cronbach's alpha), serial-correlation diagnostics
 (Durbin-Watson, PACF), mutual information, product growth accounting
 (new/retained/resurrected/churned, activation latency, peak session
 concurrency, active-days histogram), volume/risk technical
-indicators (OBV, Donchian, MFI, Keltner, Ulcer index), graph link
-prediction and degree skew (preferential attachment, degree Gini),
-text/LM source diagnostics (character JS divergence, Simpson
-diversity, word burstiness, cross entropy), two multimodal codec
-readouts (RMS contrast, crest factor), and a nation trade-balance
-SQL intake query.
+indicators (OBV, Donchian, MFI, Keltner, Ulcer index), text/LM
+source diagnostics (character JS divergence, Simpson diversity, word
+burstiness, cross entropy), two multimodal codec readouts (RMS
+contrast, crest factor), and a nation trade-balance SQL intake query.
 
 Every query is hash-oracled (DuckDB SQL over the same parquet); the
 cross-engine exactness rules are the registry's usual ones: integer
@@ -588,55 +586,6 @@ def _window_keltner(spark, sf):
     return temporal.window_keltner(_t(spark, sf, "events"))
 
 
-# ------------------------------------------------------------- graph
-
-
-@_register(
-    "graph_preferential_attachment",
-    """
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    cooc AS (
-      SELECT a.l_partkey AS doc_a, b.l_partkey AS doc_b
-      FROM op a
-      JOIN op b ON a.l_orderkey = b.l_orderkey
-                AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-      HAVING count(*) >= 2),
-    edges AS (SELECT doc_a AS a, doc_b AS b FROM cooc
-              UNION ALL SELECT doc_b, doc_a FROM cooc),
-    degs AS (SELECT a AS doc_id, count(*) AS deg FROM edges GROUP BY a),
-    wedge AS (
-      SELECT DISTINCT e1.b AS doc_a, e2.b AS doc_b
-      FROM edges e1 JOIN edges e2 ON e1.a = e2.a AND e1.b < e2.b),
-    cand AS (
-      SELECT w.doc_a, w.doc_b FROM wedge w
-      ANTI JOIN cooc c ON c.doc_a = w.doc_a AND c.doc_b = w.doc_b)
-    SELECT cand.doc_a, cand.doc_b,
-           CAST(da.deg AS BIGINT) AS deg_a,
-           CAST(db.deg AS BIGINT) AS deg_b,
-           CAST(da.deg * db.deg AS BIGINT) AS pa_score
-    FROM cand
-    JOIN degs da ON da.doc_id = cand.doc_a
-    JOIN degs db ON db.doc_id = cand.doc_b
-    """,
-    note="preferential-attachment link prediction over the "
-    "co-purchase graph (completes the classical panel with "
-    "common_neighbors / adamic_adar / edge_jaccard): wedge join "
-    "bounded by deg(hub)^2, keyed anti-join, pure INTEGER scores -- "
-    "the one link predictor with a zero-double oracle",
-)
-def _graph_preferential_attachment(spark, sf):
-    from .closers import _copurchase_pairs
-
-    return dedup.preferential_attachment(_copurchase_pairs(spark, sf)).select(
-        F.col("doc_a").alias("doc_a"),
-        F.col("doc_b").alias("doc_b"),
-        "deg_a",
-        "deg_b",
-        "pa_score",
-    )
-
-
 # ------------------------------------------------------------- text
 
 
@@ -730,7 +679,6 @@ _attach_sql_oracles()
 from ...operators import multimodal  # noqa: E402,F401
 from .core import _TOKS, _EN, _ES, _DE  # noqa: E402,F401
 from .multimodal import _PAYLOAD_CTE  # noqa: E402,F401
-from .round9 import _COPURCHASE_CTE  # noqa: E402,F401
 
 #: lang_id prediction CTE chain (verbatim from the lang_id oracle).
 _LANG_PRED_CTE = f"""
@@ -965,32 +913,6 @@ def _text_word_burstiness(spark, sf):
 )
 def _lm_source_cross_entropy(spark, sf):
     return text.source_cross_entropy(_t(spark, sf, "documents"))
-
-
-@_register(
-    "graph_degree_gini",
-    f"""
-    WITH {_COPURCHASE_CTE},
-    rk AS (SELECT deg, row_number() OVER (ORDER BY deg, doc_id) AS i
-           FROM degs),
-    a AS (SELECT count(*) AS n, sum(deg) AS sd, sum(i * deg) AS sid
-          FROM rk)
-    SELECT CAST(n AS BIGINT) AS n_nodes,
-           CAST(sd AS BIGINT) AS n_edges_directed,
-           round(CAST(2 * sid - (n + 1) * sd AS DOUBLE)
-                 / CAST(n * sd AS DOUBLE), 6) AS gini
-    FROM a
-    """,
-    note="Gini coefficient of the co-purchase degree distribution "
-    "(the one-number hub-skew readout behind graph_degree_histogram "
-    "-- where wedge fan-out and LSH hot buckets concentrate): sorted "
-    "integer rank sums, one double; rank window over the "
-    "dimension-sized node table",
-)
-def _graph_degree_gini(spark, sf):
-    from .closers import _copurchase_pairs
-
-    return dedup.degree_gini(_copurchase_pairs(spark, sf))
 
 
 @_register(
@@ -1250,57 +1172,6 @@ def _text_yule_k(spark, sf):
 )
 def _text_heaps_fit(spark, sf):
     return text.heaps_fit(_t(spark, sf, "documents"))
-
-
-@_register(
-    "graph_resource_allocation",
-    """
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    cooc AS (
-      SELECT a.l_partkey AS doc_a, b.l_partkey AS doc_b
-      FROM op a
-      JOIN op b ON a.l_orderkey = b.l_orderkey
-                AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-      HAVING count(*) >= 2),
-    edges AS (SELECT doc_a AS a, doc_b AS b FROM cooc
-              UNION ALL SELECT doc_b, doc_a FROM cooc),
-    degs AS (
-      SELECT a AS hub,
-             CAST(round(1e6 / count(*)) AS BIGINT) AS micro
-      FROM edges GROUP BY a
-      HAVING count(*) >= 2),
-    eh AS (SELECT e.a AS hub, e.b, d.micro
-           FROM edges e JOIN degs d ON d.hub = e.a),
-    wedge AS (
-      SELECT e1.b AS doc_a, e2.b AS doc_b,
-             count(*) AS common, sum(e1.micro) AS ra
-      FROM eh e1 JOIN eh e2 ON e1.hub = e2.hub AND e1.b < e2.b
-      GROUP BY 1, 2),
-    cand AS (
-      SELECT w.* FROM wedge w
-      LEFT JOIN cooc p ON p.doc_a = w.doc_a AND p.doc_b = w.doc_b
-      WHERE p.doc_a IS NULL)
-    SELECT doc_a AS part_a, doc_b AS part_b,
-           CAST(common AS BIGINT) AS common_neighbors,
-           CAST(ra AS BIGINT) AS ra_micro
-    FROM cand
-    """,
-    note="resource-allocation link prediction (Zhou-Lu-Zhang; AA's "
-    "linearly-decaying sibling, completing the CN/Jaccard/AA/PA/RA "
-    "panel): hub credit = integer micro-unit round(1e6/deg) rounded "
-    "BEFORE the order-free per-pair fold; wedge fan-out bounded by "
-    "deg(hub)^2",
-)
-def _graph_resource_allocation(spark, sf):
-    from .closers import _copurchase_pairs
-
-    return dedup.resource_allocation(_copurchase_pairs(spark, sf)).select(
-        F.col("doc_a").alias("part_a"),
-        F.col("doc_b").alias("part_b"),
-        "common_neighbors",
-        "ra_micro",
-    )
 
 
 @_register(
@@ -1602,40 +1473,6 @@ def _orders_supplier_leadtime(spark, sf):
     return analytics.supplier_leadtime(
         _t(spark, sf, "lineitem"), _t(spark, sf, "orders")
     )
-
-
-@_register(
-    "graph_transitivity",
-    f"""
-    WITH {_COPURCHASE_CTE},
-    wt AS (
-      SELECT count(*) AS n_nodes,
-             CAST(sum(deg * (deg - 1) / 2) AS BIGINT) AS n_wedges
-      FROM degs),
-    ow AS (
-      SELECT w1.b AS x, w2.b AS y
-      FROM edges w1 JOIN edges w2
-        ON w1.a = w2.a AND w1.b < w2.b),
-    cw AS (
-      SELECT count(*) AS n_closed
-      FROM ow SEMI JOIN cooc ON cooc.doc_a = ow.x AND cooc.doc_b = ow.y)
-    SELECT CAST(n_nodes AS BIGINT) AS n_nodes, n_wedges,
-           CAST(n_closed AS BIGINT) AS n_closed_wedges,
-           round(CASE WHEN n_wedges > 0 THEN
-                   CAST(n_closed AS DOUBLE) / CAST(n_wedges AS DOUBLE)
-                 END, 6) AS transitivity
-    FROM wt, cw
-    """,
-    note="global transitivity (3*triangles/wedges) of the "
-    "co-purchase graph -- the hub-weighted one-number companion to "
-    "the per-node clustering coefficient: integer wedge counts off "
-    "the degree table, closed wedges via one keyed semi-join, ratio "
-    "one double",
-)
-def _graph_transitivity(spark, sf):
-    from .closers import _copurchase_pairs
-
-    return dedup.global_transitivity(_copurchase_pairs(spark, sf))
 
 
 @_register(

@@ -81,6 +81,35 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFram
     return tuple(load_table(spark, sf_dir, n) for n in names)
 
 
+#: optimized-plan node classes a leaf scan may contain: projections
+#: and filters over a source relation -- none of them adds an exchange
+_LEAF_SCAN_NODES = frozenset(
+    {
+        "Project",
+        "Filter",
+        "LogicalRelation",
+        "DataSourceV2Relation",
+        "DataSourceV2ScanRelation",
+        "LocalRelation",
+        "LogicalRDD",
+    }
+)
+
+
+def _is_leaf_scan(df: DataFrame) -> bool:
+    """True iff every node of ``df``'s optimized logical plan is a
+    projection, a filter or a source relation (walks node classes;
+    plan-string matching misreads aliases and literals)."""
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() not in _LEAF_SCAN_NODES:
+            return False
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return True
+
+
 def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:
     """Input-skew guard for operators with heavy PRE-SHUFFLE work
     (optimization guide §2.5: "one huge unsplittable file ...
@@ -112,13 +141,12 @@ def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:
     # contains exchanges that means EXECUTING the upstream shuffle
     # stages as real jobs during what looks like plan inspection. So
     # the probe only runs on LEAF SCANS (projections/filters over a
-    # file source, where .rdd just builds the physical RDD chain,
-    # ~50 ms, no job); any input that already has an exchange-bearing
-    # operator above the scan established its own parallelism there
+    # source relation, where .rdd just builds the physical RDD chain,
+    # ~50 ms, no job); any other input (a join, aggregate, sort,
+    # window, repartition, limit ...) established its own parallelism
     # and passes through unchanged -- the same no-op contract as a
     # production multi-split layout.
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    if any(k in plan for k in ("Join", "Aggregate", "Repartition", "Window")):
+    if not _is_leaf_scan(df):
         return df
     if df.rdd.getNumPartitions() >= n:
         return df

@@ -878,32 +878,15 @@ def stream_session_timeout(
     gap_s: int = 1800,
     delay: str = "30 minutes",
 ) -> DataFrame:
-    """Timer-driven session closure -- a user's session must close
-    even if the user NEVER sends another event, which no data-driven
-    operator can do; only a timer fired by the advancing watermark
-    (natively, the ``session_window`` state machine's window-close).
+    """Gap-based sessions per user (the ``sessionize`` contract) with
+    the emission rule of a timer-driven session close: a trailing
+    session emits only once the final watermark (max event time -
+    ``delay``) has passed its timeout at last_event + gap; earlier
+    sessions, closed by a later event of the same user, always emit.
 
-    Per user, gap-based sessions (the ``sessionize`` contract):
-    sessions already closed by a later in-stream event emit from the
-    update function itself (closed_by = 'gap'); the trailing OPEN
-    session parks in state with an event-time timer at
-    last_event + gap, and emits when the watermark passes the timer
-    (closed_by = 'timeout'), its state dropped. Trailing sessions the
-    final watermark (max event time - delay) never reaches stay
-    withheld, exactly as on a live stream -- the declared oracle
-    encodes that cutoff, making the bounded drain == batch sessions
-    minus the withheld tail.
-
-    r13 (guide §4): the per-user gap/timer bookkeeping above is
-    word-for-word what the NATIVE ``session_window`` state machine
-    already does inside the JVM, so the Python state boundary
-    (FlatMapGroupsInPandasWithState: one Arrow round-trip per user
-    group per microbatch, plus the arbitrary-state store machinery
-    that measurably degrades the whole session) bought generality
-    this operator does not use. The rewrite drains the native session
-    aggregation (the ``stream_sessionize`` plan) and applies the
-    DECLARED emission rule as a batch post-pass over the tiny session
-    table:
+    How it runs: a complete-mode drain of the native ``session_window``
+    aggregation (the ``stream_sessionize`` plan) into an in-memory
+    table, then a batch post-pass over that small session table:
 
     - session boundaries: native ``session_window`` merges an event
       into the open session when ``t - last <= gap`` (inclusive --
@@ -912,16 +895,18 @@ def stream_session_timeout(
       starts a new session);
     - ``closed_by``: a session later followed by another in-stream
       event of the same user was closed by that event ('gap'); only
-      each user's chronologically LAST session can park in state and
-      time out;
-    - emission: 'gap' sessions always emit (the update function
-      emitted them in-stream); the trailing session emits iff the
-      final watermark (max event time - delay, ms granularity)
-      passed its timer at last_event + gap -- the exact integer
-      arithmetic of the declared oracle.
+      each user's chronologically LAST session can time out;
+    - emission: 'gap' sessions always emit; the trailing session
+      emits iff max event time - delay (ms granularity) passed
+      last_event + gap -- the exact integer arithmetic of the
+      declared oracle, so the bounded drain == batch sessions minus
+      the withheld tail.
 
-    Result-identical to the applyInPandasWithState form (oracle
-    re-verified); the plan drops the Python boundary entirely.
+    What it does not do: the stream sets no watermark and fires no
+    timer. Complete mode keeps every session in state, so state grows
+    without bound on an unbounded stream, and no session is closed
+    mid-stream; the timeout labels are decided after the drain. No
+    registered query exercises timer-driven mid-stream closure.
     """
     m = re.fullmatch(r"(\d+)\s+(second|minute|hour)s?", delay.strip())
     if not m:

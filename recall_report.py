@@ -34,7 +34,7 @@ def main(sf_dir: str) -> dict:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    from java_mapreduce_framework_spark.operators import dedup, relational, similarity, temporal
+    from java_mapreduce_framework_spark.operators import dedup, graph, relational, similarity, temporal
     from java_mapreduce_framework_spark.session import tune_session
     from java_mapreduce_framework_spark.sources.tables import load_table, source_fingerprint
 
@@ -118,9 +118,9 @@ def main(sf_dir: str) -> dict:
             by_c[r["component_id"]].append(r["doc_id"])
         return {(a, b) for ds in by_c.values() for a in ds for b in ds if a < b}
 
-    exact_cc = cluster_pairs(dedup.connected_components(
+    exact_cc = cluster_pairs(graph.connected_components(
         dedup.ngram_jaccard_pairs(docs, threshold=0.8)).collect())
-    lsh_cc = cluster_pairs(dedup.connected_components(dedup.dedup_minhash(docs)).collect())
+    lsh_cc = cluster_pairs(graph.connected_components(dedup.dedup_minhash(docs)).collect())
     rec("dedup_minhash_clusters", "same_cluster_pair_recall", _recall(exact_cc, lsh_cc), 0.9, ">=",
         f"transitive-closure pair agreement; {len(exact_cc)} exact same-cluster pairs")
 

@@ -1,6 +1,6 @@
 from pyspark.sql import Row
 
-from java_mapreduce_framework_spark.operators import dedup
+from java_mapreduce_framework_spark.operators import dedup, graph
 
 BASE = "the quick brown fox jumps over the lazy dog and runs far away today"
 NEAR = BASE.replace("today", "tonight")  # one-token edit => high jaccard
@@ -69,14 +69,14 @@ def test_connected_components_chain_and_islands(spark):
     )
     got = {
         (r["doc_id"], r["component_id"])
-        for r in dedup.connected_components(pairs).collect()
+        for r in graph.connected_components(pairs).collect()
     }
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (7, 7), (8, 7), (5, 5), (9, 5)}
 
 
 def test_connected_components_empty_pairs(spark):
     pairs = spark.createDataFrame([], "doc_a bigint, doc_b bigint")
-    assert dedup.connected_components(pairs).count() == 0
+    assert graph.connected_components(pairs).count() == 0
 
 
 def test_minhash_clusters_equal_exact_clusters(spark, sf_small):
@@ -87,11 +87,11 @@ def test_minhash_clusters_equal_exact_clusters(spark, sf_small):
     docs = load_table(spark, sf_small, "documents")
     exact = {
         (r["doc_id"], r["component_id"])
-        for r in dedup.connected_components(dedup.ngram_jaccard_pairs(docs)).collect()
+        for r in graph.connected_components(dedup.ngram_jaccard_pairs(docs)).collect()
     }
     sketch = {
         (r["doc_id"], r["component_id"])
-        for r in dedup.connected_components(dedup.dedup_minhash(docs)).collect()
+        for r in graph.connected_components(dedup.dedup_minhash(docs)).collect()
     }
     assert sketch == exact
 
@@ -308,8 +308,6 @@ def test_star_cc_equals_label_propagation_on_graph_shapes(spark):
     graph."""
     import random
 
-    from java_mapreduce_framework_spark.operators import dedup
-
     def union_find(pairs):
         parent = {}
 
@@ -341,9 +339,9 @@ def test_star_cc_equals_label_propagation_on_graph_shapes(spark):
         truth = union_find(pairs)
         df = spark.createDataFrame(pairs, ["doc_a", "doc_b"])
         a = {(r["doc_id"], r["component_id"])
-             for r in dedup.connected_components(df, max_iter=40).collect()}
+             for r in graph.connected_components(df, max_iter=40).collect()}
         b = {(r["doc_id"], r["component_id"])
-             for r in dedup.connected_components_star(df).collect()}
+             for r in graph.connected_components_star(df).collect()}
         assert a == truth, f"{name}: label propagation wrong vs union-find"
         assert b == truth, f"{name}: star CC wrong vs union-find"
 
@@ -353,11 +351,9 @@ def test_label_propagation_raises_on_diameter_overflow(spark):
     silently-wrong labels (the pre-round-5 behavior)."""
     import pytest as _pytest
 
-    from java_mapreduce_framework_spark.operators import dedup
-
     chain = spark.createDataFrame([(i, i + 1) for i in range(12)], ["doc_a", "doc_b"])
     with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(chain, max_iter=3)
+        graph.connected_components(chain, max_iter=3)
 
 
 def test_incremental_apply_drops_exactly_matched_docs(spark, sf_small):
@@ -463,7 +459,7 @@ def test_bfs_hops_chain_and_cutoff(spark):
     pairs = spark.createDataFrame(
         [Row(doc_a=a, doc_b=b) for a, b in chain + island]
     )
-    got = {r["doc_id"]: r["hop"] for r in dedup.bfs_hops(pairs, max_hops=8).collect()}
+    got = {r["doc_id"]: r["hop"] for r in graph.bfs_hops(pairs, max_hops=8).collect()}
     assert got == {i: i for i in range(9)}            # hops 0..8
     assert 9 not in got and 10 not in got             # beyond cutoff
     assert 50 not in got and 51 not in got            # other component
@@ -509,7 +505,6 @@ def test_tfidf_cosine_credits_repeated_rare_terms(spark):
 def test_pagerank_mass_conserved_and_hub_ranked(spark):
     """Rank mass sums to 1; the hub of a star outranks its leaves;
     isolated nodes keep the dangling-redistributed baseline."""
-    from java_mapreduce_framework_spark.operators import dedup as dd
 
     pairs = spark.createDataFrame(
         [(1, 2), (1, 3), (1, 4)], "doc_a long, doc_b long"
@@ -517,7 +512,7 @@ def test_pagerank_mass_conserved_and_hub_ranked(spark):
     verts = spark.createDataFrame(
         [(i,) for i in range(1, 7)], "doc_id long"
     )  # 5, 6 isolated
-    out = {r["doc_id"]: r["pr"] for r in dd.pagerank(pairs, verts).collect()}
+    out = {r["doc_id"]: r["pr"] for r in graph.pagerank(pairs, verts).collect()}
     assert abs(sum(out.values()) - 1.0) < 1e-4
     assert out[1] > out[2] > 0
     assert out[2] == out[3] == out[4]
@@ -527,12 +522,11 @@ def test_pagerank_mass_conserved_and_hub_ranked(spark):
 def test_triangle_count_closed_vs_open(spark):
     """A closed triangle credits all three corners once; an open
     wedge credits nobody."""
-    from java_mapreduce_framework_spark.operators import dedup as dd
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)], "doc_a long, doc_b long"
     )
-    out = {r["doc_id"]: r["n_triangles"] for r in dd.triangle_count(pairs).collect()}
+    out = {r["doc_id"]: r["n_triangles"] for r in graph.triangle_count(pairs).collect()}
     assert out == {1: 1, 2: 1, 3: 1}
 
 
@@ -707,7 +701,7 @@ def test_common_neighbors_square_graph(spark):
     """4-cycle a-b-c-d-a: the two diagonals are the only non-edges,
     each sharing BOTH neighbors -> common=2, jaccard = 2/(2+2-2) = 1;
     existing edges must not appear."""
-    from java_mapreduce_framework_spark.operators.dedup import common_neighbors
+    from java_mapreduce_framework_spark.operators.graph import common_neighbors
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (1, 4)], "doc_a long, doc_b long"
@@ -723,7 +717,7 @@ def test_common_neighbors_path_graph(spark):
     """Path 1-2-3: single candidate (1,3) through hub 2 with
     jaccard 1/(1+1-1)=1; triangle 5-6-7 is closed -> contributes
     nothing."""
-    from java_mapreduce_framework_spark.operators.dedup import common_neighbors
+    from java_mapreduce_framework_spark.operators.graph import common_neighbors
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (6, 7), (5, 7)],
@@ -740,7 +734,7 @@ def test_kcore_peels_tail_keeps_triangle(spark):
     """Triangle 1-2-3 with a pendant chain 3-4-5: the 2-core is the
     triangle alone (4 and 5 peel in cascading rounds); the 3-core is
     empty."""
-    from java_mapreduce_framework_spark.operators.dedup import kcore
+    from java_mapreduce_framework_spark.operators.graph import kcore
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)],
@@ -761,7 +755,7 @@ def test_kcore_converged_at_fixture_rounds(spark, sf_medium):
     from java_mapreduce_framework_spark.plans.registry import (
         _copurchase_pairs,
     )
-    from java_mapreduce_framework_spark.operators.dedup import kcore
+    from java_mapreduce_framework_spark.operators.graph import kcore
 
     pairs = _copurchase_pairs(spark, sf_medium)
     c10 = kcore(pairs, k=3, rounds=10)
@@ -774,7 +768,6 @@ def test_kcore_converged_at_fixture_rounds(spark, sf_medium):
 def test_clustering_coefficient_triangle_plus_star(spark):
     """A triangle node scores 1.0; a star hub with no closed wedges
     scores 0.0; degree-1 leaves are excluded."""
-    from java_mapreduce_framework_spark.operators import dedup
 
     pairs = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3),          # triangle 1-2-3
@@ -782,7 +775,7 @@ def test_clustering_coefficient_triangle_plus_star(spark):
         "doc_a long, doc_b long",
     )
     out = {r["doc_id"]: r
-           for r in dedup.clustering_coefficient(pairs).collect()}
+           for r in graph.clustering_coefficient(pairs).collect()}
     for n in (1, 2, 3):
         assert out[n]["deg"] == 2 and out[n]["n_triangles"] == 1
         assert out[n]["clustering_coeff"] == 1.0
@@ -845,7 +838,7 @@ def test_adamic_adar_hand_graph(spark):
     deg-1 leaves host no wedges."""
     import math
 
-    from java_mapreduce_framework_spark.operators.dedup import adamic_adar
+    from java_mapreduce_framework_spark.operators.graph import adamic_adar
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (2, 4)], ["doc_a", "doc_b"]
@@ -862,9 +855,7 @@ def test_adamic_adar_hand_graph(spark):
 def test_degree_histogram_star_graph(spark):
     """Star 1-(2,3,4): hub degree 3 (one node), leaves degree 1
     (three nodes), fractions exact quarters."""
-    from java_mapreduce_framework_spark.operators.dedup import (
-        degree_histogram,
-    )
+    from java_mapreduce_framework_spark.operators.graph import degree_histogram
 
     pairs = spark.createDataFrame(
         [(1, 2), (1, 3), (1, 4)], ["doc_a", "doc_b"]
@@ -877,9 +868,7 @@ def test_degree_histogram_star_graph(spark):
 def test_assortativity_star_is_negative(spark):
     """A star graph is maximally disassortative (hub deg 3 links only
     to leaves deg 1): r = -1."""
-    from java_mapreduce_framework_spark.operators.dedup import (
-        degree_assortativity,
-    )
+    from java_mapreduce_framework_spark.operators.graph import degree_assortativity
 
     pairs = spark.createDataFrame(
         [(1, 2), (1, 3), (1, 4)], ["doc_a", "doc_b"]
@@ -892,9 +881,7 @@ def test_assortativity_star_is_negative(spark):
 def test_assortativity_regular_graph_null(spark):
     """A triangle is 2-regular: zero degree variance, assortativity
     undefined -> NULL, not a division error."""
-    from java_mapreduce_framework_spark.operators.dedup import (
-        degree_assortativity,
-    )
+    from java_mapreduce_framework_spark.operators.graph import degree_assortativity
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3)], ["doc_a", "doc_b"]

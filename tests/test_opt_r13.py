@@ -44,6 +44,26 @@ def test_spread_scan_non_leaf_passthrough(spark, sf_small):
     assert spread_scan(joined, "doc_id") is joined
 
 
+def test_spread_scan_sorted_input_launches_no_job(spark, sf_small):
+    """A Sort-topped input (orderBy) is not a leaf scan either: it must
+    come back AS-IS without a single Spark job -- probing .rdd would
+    run the range partitioner's sampling job during plan inspection.
+    A leaf scan whose column alias merely contains an operator name
+    is still spread."""
+    sc = spark.sparkContext
+    docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
+    ordered = docs.orderBy("doc_id")
+    sc.setJobGroup("spread_scan_sorted", "spread_scan_sorted")
+    try:
+        assert spread_scan(ordered, "doc_id") is ordered
+        assert sc.statusTracker().getJobIdsForGroup("spread_scan_sorted") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    named = docs.select("doc_id", F.col("text").alias("Join_Aggregate_text"))
+    spread = spread_scan(named, "doc_id")
+    assert spread.rdd.getNumPartitions() == default_parallelism()
+
+
 def test_session_timeout_merges_exact_gap_boundary(spark, tmp_path):
     """Declared contract: a new session starts only when the gap is
     STRICTLY greater than gap_s -- two events exactly gap_s apart

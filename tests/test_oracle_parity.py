@@ -43,6 +43,25 @@ FAMILIES = [
     "dedup_sentence_exact",  # sentence-keyed first-occurrence window
     "orders_ship_delay_profile",  # integer-1e-6-scale share rounding
     "multimodal_image_dhash",  # nearest-neighbor downsample pixel replay
+    # the whole graph family (operators/graph.py on one pair-graph substrate)
+    "graph_adamic_adar",
+    "graph_assortativity",
+    "graph_bfs_hops",
+    "graph_clustering_coeff",
+    "graph_component_stats",
+    "graph_degree_gini",
+    "graph_degree_histogram",
+    "graph_edge_jaccard",
+    "graph_edge_triangle_support",
+    "graph_eigenvector_centrality",
+    "graph_kcore",
+    "graph_label_propagation",
+    "graph_pagerank",
+    "graph_preferential_attachment",
+    "graph_resource_allocation",
+    "graph_rich_club",
+    "graph_transitivity",
+    "graph_triangle_count",
 ]
 
 

@@ -6,6 +6,7 @@ broadcast, aggregates running partial-then-final, and no driver-side
 collect in any engine path.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from java_mapreduce_framework_spark.operators import relational
@@ -1108,20 +1109,47 @@ def test_round12_value_alphabet_stats_compress_first(spark, sf_small):
         assert plan.count("events.parquet") == 1, fn.__name__
 
 
-def test_edge_triangle_support_checkpoints_pair_stream(spark, sf_small):
-    """The wedge join and the closing joins must consume a
-    CHECKPOINTED pair stream -- for the co-purchase graph the pair
-    generation is itself a self-join that must not execute twice
-    (zero source-parquet scans in the final plan: everything reads
-    the checkpoint)."""
-    from java_mapreduce_framework_spark.operators import dedup as D
+#: every operator in operators/graph.py that takes only a pair stream
+#: (the vertex-taking loops -- pagerank, label propagation,
+#: eigenvector centrality -- also read a vertex table)
+PAIR_GRAPH_OPS = [
+    "connected_components",
+    "connected_components_star",
+    "component_stats",
+    "bfs_hops",
+    "kcore",
+    "triangle_count",
+    "clustering_coefficient",
+    "edge_triangle_support",
+    "global_transitivity",
+    "common_neighbors",
+    "adamic_adar",
+    "resource_allocation",
+    "preferential_attachment",
+    "edge_jaccard",
+    "degree_histogram",
+    "degree_assortativity",
+    "degree_gini",
+    "rich_club",
+]
+
+
+@pytest.mark.parametrize("op", PAIR_GRAPH_OPS)
+def test_pair_graph_operator_checkpoints_pair_stream(spark, sf_small, op):
+    """Every consumer of the pair stream (symmetrized edges, degree
+    counts, wedge joins, closing joins) must read a CHECKPOINTED pair
+    stream -- for the co-purchase graph the pair generation is itself
+    a self-join that must not execute once per consumer (zero
+    source-parquet scans in the final plan: everything reads the
+    checkpoint)."""
+    from java_mapreduce_framework_spark.operators import graph
 
     li = load_table(spark, sf_small, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
+    op_ = li.select("l_orderkey", "l_partkey").distinct()
     pairs = (
-        op.alias("a")
+        op_.alias("a")
         .join(
-            op.alias("b"),
+            op_.alias("b"),
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
             & (F.col("a.l_partkey") < F.col("b.l_partkey")),
         )
@@ -1133,6 +1161,6 @@ def test_edge_triangle_support_checkpoints_pair_stream(spark, sf_small):
         .filter(F.col("count") >= 2)
         .drop("count")
     )
-    plan = _formatted(D.edge_triangle_support(pairs))
+    plan = _formatted(getattr(graph, op)(pairs))
     assert "lineitem.parquet" not in plan
     assert "Scan ExistingRDD" in plan or "LocalTableScan" in plan

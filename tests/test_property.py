@@ -104,7 +104,7 @@ edges_strategy = st.lists(
 @settings(max_examples=8, deadline=None)
 @given(edges_strategy)
 def test_connected_components_matches_union_find(edges):
-    from java_mapreduce_framework_spark.operators.dedup import connected_components
+    from java_mapreduce_framework_spark.operators.graph import connected_components
 
     spark = _spark
     pairs = spark.createDataFrame(
@@ -1283,7 +1283,7 @@ def test_link_prediction_panel_invariants(edges):
     spark = _spark
     uniq = sorted({(min(a, b), max(a, b)) for a, b in edges})
     pairs = spark.createDataFrame(uniq, "doc_a long, doc_b long")
-    from java_mapreduce_framework_spark.operators.dedup import (
+    from java_mapreduce_framework_spark.operators.graph import (
         degree_gini,
         preferential_attachment,
         resource_allocation,

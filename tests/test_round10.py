@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from java_mapreduce_framework_spark.operators import (
     analytics,
-    dedup,
+    graph,
     multimodal,
     similarity,
     temporal,
@@ -202,7 +202,7 @@ def test_rich_club_complete_core_plus_pendant(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (1, 4)], "doc_a long, doc_b long"
     )
-    out = {r["k"]: r for r in dedup.rich_club(pairs, k_grid=(0, 1, 2)).collect()}
+    out = {r["k"]: r for r in graph.rich_club(pairs, k_grid=(0, 1, 2)).collect()}
     assert out[0]["n_nodes"] == 4 and out[0]["n_edges"] == 4
     assert out[1]["n_nodes"] == 3 and out[1]["n_edges"] == 3
     assert out[1]["phi"] == 1.0

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from java_mapreduce_framework_spark.operators import (
     analytics,
-    dedup,
+    graph,
     ml,
     temporal,
     text,
@@ -293,7 +293,7 @@ def test_eigenvector_centrality_path_graph(spark):
     )
     verts = spark.createDataFrame([(1,), (2,), (3,), (4,)], "doc_id long")
     out = {r["doc_id"]: r["centrality"]
-           for r in dedup.eigenvector_centrality(pairs, verts).collect()}
+           for r in graph.eigenvector_centrality(pairs, verts).collect()}
     a = np.array([
         [1, 1, 0, 0],
         [1, 1, 1, 0],

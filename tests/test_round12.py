@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from java_mapreduce_framework_spark.operators import (
     analytics,
     dedup,
+    graph,
     multimodal,
     temporal,
 )
@@ -278,7 +279,7 @@ def test_edge_support_clique_and_bridge(spark):
     )
     out = {
         (r["doc_a"], r["doc_b"]): r["support"]
-        for r in dedup.edge_triangle_support(pairs).collect()
+        for r in graph.edge_triangle_support(pairs).collect()
     }
     assert out[(1, 2)] == 1 and out[(1, 3)] == 1 and out[(2, 3)] == 1
     assert out[(3, 4)] == 0

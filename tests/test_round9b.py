@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from java_mapreduce_framework_spark.operators import (
     analytics,
-    dedup,
+    graph,
     temporal,
     text,
 )
@@ -306,7 +306,7 @@ def test_preferential_attachment_path_graph(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3)], "doc_a long, doc_b long"
     )
-    out = dedup.preferential_attachment(pairs).collect()
+    out = graph.preferential_attachment(pairs).collect()
     assert len(out) == 1
     r = out[0]
     assert (r["doc_a"], r["doc_b"]) == (1, 3)
@@ -318,7 +318,7 @@ def test_preferential_attachment_star_scores(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (1, 3), (1, 4)], "doc_a long, doc_b long"
     )
-    out = dedup.preferential_attachment(pairs).collect()
+    out = graph.preferential_attachment(pairs).collect()
     assert len(out) == 3  # (2,3), (2,4), (3,4)
     assert all(r["pa_score"] == 1 for r in out)
 
@@ -500,14 +500,14 @@ def test_degree_gini_regular_vs_star(spark):
     tri = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3)], "doc_a long, doc_b long"
     )
-    out = dedup.degree_gini(tri).collect()[0]
+    out = graph.degree_gini(tri).collect()[0]
     assert out["n_nodes"] == 3 and out["gini"] == 0.0
     # star on 4 nodes: degs (1,1,1,3) -> gini = (2*(1+2+3+12) - 5*6)
     # / (4*6) = (36-30)/24 = 0.25
     star = spark.createDataFrame(
         [(1, 2), (1, 3), (1, 4)], "doc_a long, doc_b long"
     )
-    out2 = dedup.degree_gini(star).collect()[0]
+    out2 = graph.degree_gini(star).collect()[0]
     assert out2["gini"] == 0.25
 
 
@@ -608,7 +608,7 @@ def test_resource_allocation_star(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (1, 3), (1, 4)], "doc_a long, doc_b long"
     )
-    out = dedup.resource_allocation(pairs).collect()
+    out = graph.resource_allocation(pairs).collect()
     assert len(out) == 3
     assert all(r["ra_micro"] == round(1e6 / 3) for r in out)
     assert all(r["common_neighbors"] == 1 for r in out)
@@ -748,11 +748,11 @@ def test_transitivity_triangle_vs_path(spark):
     tri = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3)], "doc_a long, doc_b long"
     )
-    out = dedup.global_transitivity(tri).collect()[0]
+    out = graph.global_transitivity(tri).collect()[0]
     assert out["n_wedges"] == 3 and out["n_closed_wedges"] == 3
     assert out["transitivity"] == 1.0
     path = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
-    out2 = dedup.global_transitivity(path).collect()[0]
+    out2 = graph.global_transitivity(path).collect()[0]
     assert out2["n_wedges"] == 1 and out2["n_closed_wedges"] == 0
     assert out2["transitivity"] == 0.0
 
