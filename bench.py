@@ -62,10 +62,6 @@ def main() -> None:
     # warm-up: streaming machinery (state store, microbatch executor,
     # checkpoint IO) -- otherwise whichever streaming query happens to
     # run first pays ~6s of one-time init that isn't its own cost.
-    # Deliberately NOT warmed: the applyInPandasWithState path --
-    # running it measurably degrades subsequent heavy queries in the
-    # same session (~2x for several queries), so the one query using
-    # it (stream_dedup_state) is ordered last instead.
     (
         spark.readStream.format("rate")
         .option("rowsPerSecond", "1")
@@ -90,8 +86,9 @@ def main() -> None:
         timings[name] = round(min(timings.get(name, float("inf")), took), 3)
         print(f"# {rnd} {name}: {took:.3f}s", file=sys.stderr, flush=True)
 
-    # the arbitrary-state streaming queries degrade every later query
-    # in the session, so they run dead last (after the outlier pass)
+    # the two stateful streaming queries run dead last (after the
+    # outlier pass). Both are native stateful operators; whether this
+    # ordering still spares any later query is unmeasured.
     STATEFUL_LAST = ("stream_dedup_state", "stream_session_timeout")
     normal = [n for n in names if n not in STATEFUL_LAST]
     for name in normal:

@@ -16,26 +16,38 @@ the DataFrame-built equivalents' oracles.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.tables import TABLES, load_table
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:
-    """Register each fixture table as a temp view (idempotent;
-    re-registering points the view at the new sf_dir)."""
+    """Register each of ``tables`` as a temp view (idempotent;
+    re-registering points the view at the new sf_dir). Each view reads
+    through ``load_table``, so on a warm session registering it
+    launches no Spark job."""
     for name in tables:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    """Register views, then evaluate the query -- the whole SQL layer.
+    """Register the views the query names, then evaluate it -- the
+    whole SQL layer.
+
+    Views are selected by word match: every fixture table whose name
+    appears as a word of the SQL text is registered. A table the query
+    reads is always matched; over-matching (a column alias ``AS
+    nation``) costs one extra view. A table the query names that is not
+    a fixture still fails in ``spark.sql`` with ``AnalysisException``.
 
     The DataFrame is lazy as usual; Catalyst sees the full view
     definitions inline, so filters written over a view still push to
     the parquet scan (verified in tests/test_plan_shape.py).
     """
-    register_views(spark, sf_dir)
+    words = set(re.findall(r"\w+", sql.lower()))
+    register_views(spark, sf_dir, tuple(t for t in TABLES if t in words))
     return spark.sql(sql)
 
 

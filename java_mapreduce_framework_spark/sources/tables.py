@@ -15,8 +15,11 @@ engine's canonical fixture format:
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -31,10 +34,30 @@ TABLES = (
     "embeddings",
 )
 
+#: session -> {(parquet path, source_fingerprint): footer schema}; see
+#: ``load_table``. Weak keys: a stopped session's schemas go with it.
+_SCHEMAS: weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], StructType]] = (
+    weakref.WeakKeyDictionary()
+)
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table. Plain ``spark.read.parquet`` so Catalyst
-    retains pushdown/pruning; no caching here (operators decide).
+    """Load one fixture table through ``spark.read.schema(...)`` so no
+    call after the first pays a schema-inference job, and Catalyst
+    still gets pushdown and pruning. No data is cached here (operators
+    decide).
+
+    Schema cache: ``_SCHEMAS`` maps a live session to the footer
+    schemas it has inferred, keyed by ``(path,
+    source_fingerprint(sf_dir, name))``. The first load in a session
+    infers the footer once (one Spark job); later loads reuse the
+    ``StructType``. A new session infers again: inference depends on
+    session conf (``nanosAsLong`` below). The fingerprint (size +
+    mtime_ns) is in the key so a regenerated fixture is re-inferred
+    instead of being read under its old columns. Only the schema is
+    kept -- metadata, not a result: every scan still reads the current
+    file inside the caller's timed region, so this is not result
+    memoization.
 
     ``events.ts`` has shipped under two physical parquet types across
     fixture generations: TIMESTAMP(NANOS) (which Spark cannot
@@ -44,21 +67,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     identical instants under the engine's pinned UTC session). Both
     normalize to the same microsecond instants the DuckDB oracle sees
     via ``CAST(ts AS TIMESTAMP)``, so the choice is detected from the
-    loaded schema, not assumed.
+    cached schema, not assumed. ``nanosAsLong`` is set on every events
+    load: the scan needs it with an explicit ``LongType`` too.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        ts_type = df.schema["ts"].dataType.typeName()
+    schemas = _SCHEMAS.setdefault(spark, {})
+    key = (path, source_fingerprint(sf_dir, name))
+    if key not in schemas:
+        schemas[key] = spark.read.parquet(path).schema
+    schema = schemas[key]
+    df = spark.read.schema(schema).parquet(path)
+    if name == "events":
+        ts_type = schema["ts"].dataType.typeName()
         if ts_type == "long":  # TIMESTAMP(NANOS) read as raw nanos
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         if ts_type == "timestamp_ntz":
             return df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(path)
+    return df
 
 
 def source_fingerprint(sf_dir: str, *names: str) -> str:

@@ -135,7 +135,7 @@ def stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming flagship: same explode/groupBy/count plan as
     ``operators.text.wordcount``, driven by the file-source stream."""
     path = _stage_stream_dir(spark, sf_dir, "documents")
-    schema = spark.read.parquet(path).schema
+    schema = load_table(spark, sf_dir, "documents").schema
     docs = spark.readStream.schema(schema).parquet(path)
     counts = (
         docs.select(F.explode(tokens_col("text")).alias("word"))
@@ -194,7 +194,7 @@ def stream_sessionize(
     so closed sessions emit and their state is dropped; complete mode
     here keeps the bounded-equality contract."""
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = load_table(spark, sf_dir, "events").schema
     events = spark.readStream.schema(schema).parquet(path)
     agg = (
         events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
@@ -230,7 +230,7 @@ def stream_dedup_watermarked(
     the declared oracle. Short-delay eviction behavior is exercised
     in tests/test_streaming.py with a two-file forced batch order."""
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = load_table(spark, sf_dir, "events").schema
     events = spark.readStream.schema(schema).parquet(path)
     deduped = (
         events.select("user_id", "event_type", "ts")
@@ -276,7 +276,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = _stage_stream_dir(spark, sf_dir, "documents")
-    schema = spark.read.parquet(src).schema
+    schema = load_table(spark, sf_dir, "documents").schema
     root = _REPO_ROOT / ".tmp" / "stream" / f"{sf_name}_increment_sink"
     sink, ckpt = root / "sink", root / "ckpt"
     shutil.rmtree(root, ignore_errors=True)
@@ -326,7 +326,7 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     Result-identical (oracle re-verified); the plan drops the Python
     boundary entirely."""
     path = _stage_stream_dir(spark, sf_dir, "documents")
-    schema = spark.read.parquet(path).schema
+    schema = load_table(spark, sf_dir, "documents").schema
     docs = spark.readStream.schema(schema).parquet(path)
     out = (
         docs.select(F.md5("text").alias("content_hash"), "doc_id")
@@ -353,7 +353,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed/Delta table co-partitioned with the stream's shuffle.
     """
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = load_table(spark, sf_dir, "events").schema
     events = spark.readStream.schema(schema).parquet(path)
     customer = F.broadcast(
         load_table(spark, sf_dir, "customer").select(
@@ -405,7 +405,7 @@ def stream_tumbling_window_watermarked(
     deliberately withheld. The oracle applies the same cutoff.
     """
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = load_table(spark, sf_dir, "events").schema
     events = spark.readStream.schema(schema).parquet(path)
     agg = (
         events.withWatermark("ts", delay)
@@ -445,7 +445,7 @@ def stream_sliding_window(
     window state; complete mode keeps bounded-input equality with the
     batch operator."""
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = load_table(spark, sf_dir, "events").schema
     events = spark.readStream.schema(schema).parquet(path)
     agg = (
         events.groupBy(F.window("ts", size, slide).alias("w"), "event_type")
@@ -489,7 +489,7 @@ def stream_stream_join(
     bounded fixture.
     """
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = load_table(spark, sf_dir, "events").schema
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
@@ -558,7 +558,7 @@ def stream_stream_join_left(
     (state keyed on user_id, bounded by rate x (lookback + delay)).
     """
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = load_table(spark, sf_dir, "events").schema
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
@@ -589,7 +589,7 @@ def stream_session_window_watermarked(
     declared oracle's HAVING cutoff. Trailing open sessions are
     deliberately withheld, as on a live stream."""
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = load_table(spark, sf_dir, "events").schema
     events = spark.readStream.schema(schema).parquet(path).withWatermark("ts", delay)
     agg = (
         events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
@@ -638,7 +638,7 @@ def stream_foreachbatch_idempotent(
 
     sf_name = pathlib.Path(sf_dir).name
     src = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(src).schema
+    schema = load_table(spark, sf_dir, "events").schema
     root = _REPO_ROOT / ".tmp" / "stream" / f"{sf_name}_fbsink"
     sink, ckpt = root / "sink", root / "ckpt"
     shutil.rmtree(root, ignore_errors=True)
@@ -694,7 +694,7 @@ def stream_quality_filter(
     from ..operators.text import quality_score
 
     path = _stage_stream_dir(spark, sf_dir, "documents")
-    schema = spark.read.parquet(path).schema
+    schema = load_table(spark, sf_dir, "documents").schema
     docs = spark.readStream.schema(schema).parquet(path)
     kept = quality_score(docs).filter(F.col("quality") >= min_quality)
     return _drain_to_memory(kept, mode="append")
@@ -717,7 +717,7 @@ def stream_topk_windowed(
     Emits (window_start, event_type, n_events, rnk).
     """
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = load_table(spark, sf_dir, "events").schema
     events = spark.readStream.schema(schema).parquet(path)
     agg = (
         events.groupBy(F.window("ts", duration).alias("w"), "event_type")
@@ -872,6 +872,26 @@ def stream_index_ingest(
     return spark.read.parquet(verdict_path)
 
 
+#: milliseconds per unit of a ``"<n> <unit>[s]"`` delay string
+_DELAY_UNIT_MS = {
+    "millisecond": 1,
+    "second": 1_000,
+    "minute": 60_000,
+    "hour": 3_600_000,
+    "day": 86_400_000,
+}
+
+
+def _delay_ms(delay: str) -> int:
+    """Parse a watermark-style delay (``"30 minutes"``, ``"1 day"``,
+    ``"500 milliseconds"``) into integer milliseconds."""
+    units = "|".join(_DELAY_UNIT_MS)
+    m = re.fullmatch(rf"(\d+)\s+({units})s?", delay.strip())
+    if not m:
+        raise ValueError(f"unsupported delay {delay!r}")
+    return int(m.group(1)) * _DELAY_UNIT_MS[m.group(2)]
+
+
 def stream_session_timeout(
     spark: SparkSession,
     sf_dir: str,
@@ -908,14 +928,9 @@ def stream_session_timeout(
     mid-stream; the timeout labels are decided after the drain. No
     registered query exercises timer-driven mid-stream closure.
     """
-    m = re.fullmatch(r"(\d+)\s+(second|minute|hour)s?", delay.strip())
-    if not m:
-        raise ValueError(f"unsupported delay {delay!r}")
-    delay_ms = int(m.group(1)) * {"second": 1, "minute": 60, "hour": 3600}[
-        m.group(2)
-    ] * 1000
+    delay_ms = _delay_ms(delay)
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = load_table(spark, sf_dir, "events").schema
     events = (
         spark.readStream.schema(schema).parquet(path).select("user_id", "ts")
     )
@@ -1084,7 +1099,7 @@ def stream_daily_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch ``count(DISTINCT user_id)``.
     """
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = load_table(spark, sf_dir, "events").schema
     events = spark.readStream.schema(schema).parquet(path)
     pairs = (
         events.select(F.date_trunc("day", "ts").alias("day"), "user_id")
@@ -1109,7 +1124,7 @@ def stream_daily_active_users_setstate(
     result every trigger. The declared bounded-state form is
     ``stream_daily_active_users`` above."""
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = load_table(spark, sf_dir, "events").schema
     events = spark.readStream.schema(schema).parquet(path)
     agg = (
         events.groupBy(F.date_trunc("day", "ts").alias("day"))
@@ -1136,7 +1151,7 @@ def stream_hll_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     Emits (day, dau_approx).
     """
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = load_table(spark, sf_dir, "events").schema
     events = spark.readStream.schema(schema).parquet(path)
     agg = events.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
         F.approx_count_distinct("user_id", rsd=0.02)

@@ -153,6 +153,38 @@ def test_sql_promo_share_invariants(spark, sf_small):
     assert 0.0 < row["promo_revenue"] < row["total_revenue"]
 
 
+def test_run_sql_registers_only_named_tables(spark, sf_small):
+    """run_sql registers exactly the fixture views its SQL names, and on
+    a warm session building the query launches no Spark job."""
+    from java_mapreduce_framework_spark.plans.sql import REGIONAL_VOLUME, run_sql
+    from java_mapreduce_framework_spark.sources.tables import TABLES
+
+    run_sql(spark, sf_small, REGIONAL_VOLUME)  # warm the schema cache
+    for name in TABLES:
+        spark.catalog.dropTempView(name)
+    sc = spark.sparkContext
+    sc.setJobGroup("run_sql_warm", "run_sql_warm")
+    try:
+        run_sql(spark, sf_small, REGIONAL_VOLUME)
+        assert sc.statusTracker().getJobIdsForGroup("run_sql_warm") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    assert views & set(TABLES) == {
+        "customer", "orders", "lineitem", "supplier", "nation", "region"
+    }
+
+
+def test_run_sql_unknown_table_raises(spark, sf_small):
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from java_mapreduce_framework_spark.plans.sql import run_sql
+
+    with pytest.raises(AnalysisException):
+        run_sql(spark, sf_small, "SELECT count(*) FROM lineitems")
+
+
 def test_sketch_hll_merged_equals_direct_and_bounds_error(spark, sf_small):
     """Unioning per-group HLL sketches must give EXACTLY the estimate
     of sketching the whole column (HLL merge is lossless for a fixed

@@ -1,6 +1,6 @@
 from pyspark.sql import functions as F
 
-from java_mapreduce_framework_spark.sources.tables import load_table, read_kv_text_dir
+from java_mapreduce_framework_spark.sources.tables import TABLES, load_table, read_kv_text_dir
 
 
 def test_read_kv_text_dir(spark, tmp_path):
@@ -115,6 +115,44 @@ def test_load_table_events_timestamp_us(spark, sf_small):
     assert dict(events.dtypes)["ts"] == "timestamp"
     # microsecond floor of the nanos fixture: values must be non-null
     assert events.filter(F.col("ts").isNull()).count() == 0
+
+
+def test_load_table_warm_session_launches_no_job(spark, sf_small):
+    """Each fixture schema is inferred once per session: after one load
+    of every table, loading them all again runs no Spark job."""
+    for name in TABLES:
+        load_table(spark, sf_small, name)
+    sc = spark.sparkContext
+    sc.setJobGroup("load_table_warm", "load_table_warm")
+    try:
+        for name in TABLES:
+            load_table(spark, sf_small, name)
+        assert sc.statusTracker().getJobIdsForGroup("load_table_warm") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_load_table_reinfers_regenerated_fixture(spark, sf_small, tmp_path):
+    """The cached schema is keyed by the fixture's size + mtime: a
+    fixture rewritten with other columns is read under its new schema,
+    not the cached one."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    shutil.copy(f"{sf_small}/region.parquet", tmp_path / "region.parquet")
+    before = load_table(spark, str(tmp_path), "region")
+    assert "r_name" in before.columns
+    assert before.count() > 0
+
+    pq.write_table(
+        pa.table({"r_regionkey": [7, 8], "r_label": ["x", "y"]}),
+        tmp_path / "region.parquet",
+    )
+    after = load_table(spark, str(tmp_path), "region")
+    assert after.columns == ["r_regionkey", "r_label"]
+    assert sorted(tuple(r) for r in after.collect()) == [(7, "x"), (8, "y")]
 
 
 def test_load_table_pushdown_projection(spark, sf_small):

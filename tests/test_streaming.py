@@ -1,8 +1,46 @@
+import pytest
+
+from java_mapreduce_framework_spark.sources.tables import TABLES, load_table
 from java_mapreduce_framework_spark.streaming.jobs import (
+    _delay_ms,
+    _stage_stream_dir,
     stream_static_join,
     stream_tumbling_window,
     stream_wordcount,
 )
+
+
+@pytest.mark.parametrize("table", TABLES)
+def test_stream_dir_schema_equals_load_table(spark, sf_small, table):
+    """Stream sources take their schema from load_table's cache, so the
+    staged directory (a symlink, or events' rewritten microsecond copy)
+    must carry exactly that schema in its footer."""
+    path = _stage_stream_dir(spark, sf_small, table)
+    assert spark.read.parquet(path).schema == load_table(spark, sf_small, table).schema
+
+
+@pytest.mark.parametrize(
+    "delay, ms",
+    [
+        ("30 minutes", 1_800_000),
+        ("1 minute", 60_000),
+        ("45 seconds", 45_000),
+        ("2 hours", 7_200_000),
+        ("1 day", 86_400_000),
+        ("3 days", 259_200_000),
+        ("500 milliseconds", 500),
+        ("1 millisecond", 1),
+        (" 10  seconds ", 10_000),
+    ],
+)
+def test_session_timeout_delay_ms(delay, ms):
+    assert _delay_ms(delay) == ms
+
+
+@pytest.mark.parametrize("delay", ["30", "minutes", "1 week", "1.5 hours", "-1 second"])
+def test_session_timeout_delay_rejects_unknown(delay):
+    with pytest.raises(ValueError):
+        _delay_ms(delay)
 
 
 def test_stream_static_join_equals_batch(spark, sf_small):
