@@ -1930,20 +1930,6 @@ def dedup_semdedup(
     )
 
 
-def staged_table(spark, name: str, source_fp: str, build):
-    """Fingerprint-staged warehouse table: materialize ``build()``
-    once per fixture generation and read it back on every later run
-    (the ``_SOURCE_FP`` marker contract of ``build_minhash_index``) --
-    the general form of the lifecycle-state staging the index tables
-    already use, for DERIVED state like batch signatures or ingest
-    survivors whose recompute is deterministic given the fixture.
-    Fresh sessions adopt intact on-disk staging instead of rebuilding
-    (``sources.staging.ensure_staged_table``)."""
-    from ..sources.staging import ensure_staged_table
-
-    return ensure_staged_table(spark, name, build, source_fp)
-
-
 def dedup_prefix_exact(documents: DataFrame, prefix_len: int = 64) -> DataFrame:
     """Exact-PREFIX duplicate clusters: documents sharing their first
     ``prefix_len`` characters -- the crawl-boilerplate detector

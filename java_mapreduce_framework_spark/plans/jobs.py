@@ -211,6 +211,30 @@ def run_job(
     )
 
 
+def documents_kv_dir(spark, sf_dir: str) -> pathlib.Path:
+    """The documents fixture as the reference's input format: a
+    directory of ``doc_id\\ttext`` lines (fixture text contains no tabs
+    or newlines, so lines round-trip exactly), staged at
+    ``.tmp/jobapi/<sf>_documents_kv`` once per fixture generation by
+    ``sources.staging.stage_once``. Its ``_STAGED`` marker is invisible
+    to both kv readers (``_``-prefixed files are skipped)."""
+    from pyspark.sql import functions as F
+
+    from ..sources import staging
+    from ..sources.sinks import write_kv_text_dir
+    from ..sources.tables import load_table, source_fingerprint
+
+    def build(tmp: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select(
+            F.col("doc_id").cast("string").alias("key"), F.col("text").alias("value")
+        )
+        write_kv_text_dir(docs, tmp)
+
+    sf_name = pathlib.Path(sf_dir).name
+    stage = _REPO_ROOT / ".tmp" / "jobapi" / f"{sf_name}_documents_kv"
+    return staging.stage_once(stage, source_fingerprint(sf_dir, "documents"), build)
+
+
 def wordcount_job_e2e(spark, sf_dir: str) -> DataFrame:
     """The literal reference job lifecycle, disk-to-disk: a directory
     of ``key\\tvalue`` text lines (scan contract:
@@ -222,29 +246,17 @@ def wordcount_job_e2e(spark, sf_dir: str) -> DataFrame:
     exact path a reference user's job takes, with Spark supplying the
     shuffle/barrier the master/worker servlets implemented.
 
-    The kv input directory is staged once per fixture dir (documents
-    rendered as ``doc_id\\ttext``; fixture text contains no tabs or
-    newlines, so lines round-trip exactly). The sink directory is
-    unique per invocation, mirroring the reference's
-    wipe-output-before-run semantics (``worker/WorkerServlet.java:654-669``).
+    The kv input directory is ``documents_kv_dir`` (re-staged when the
+    documents fixture changes). The sink directory is unique per
+    invocation, mirroring the reference's wipe-output-before-run
+    semantics (``worker/WorkerServlet.java:654-669``).
     """
     from pyspark.sql import functions as F
 
     from ..sources.sinks import write_kv_text_dir
-    from ..sources.staging import stage_once
-    from ..sources.tables import load_table, read_kv_text_dir
+    from ..sources.tables import read_kv_text_dir
 
-    sf_name = pathlib.Path(sf_dir).name
-    in_dir = _REPO_ROOT / ".tmp" / "jobapi" / f"{sf_name}_documents_kv"
-
-    def _build(tmp: str) -> None:
-        docs = load_table(spark, sf_dir, "documents").select(
-            F.col("doc_id").cast("string").alias("key"), F.col("text").alias("value")
-        )
-        write_kv_text_dir(docs, tmp)
-
-    stage_once(in_dir, _build)
-
+    in_dir = documents_kv_dir(spark, sf_dir)
     out_dir = _REPO_ROOT / ".tmp" / "jobapi" / f"out_{uuid.uuid4().hex[:12]}"
     kv_in = read_kv_text_dir(spark, str(in_dir))
     write_kv_text_dir(run_job(WordCountJob, kv_in), str(out_dir))

@@ -188,6 +188,7 @@ def _bpe_train(spark, sf):
 def _dedup_index_append(spark, sf):
     import pathlib
 
+    from ...sources.staging import ensure_staged_table
     from ...sources.tables import source_fingerprint
 
     docs = _t(spark, sf, "documents")
@@ -204,11 +205,11 @@ def _dedup_index_append(spark, sf):
     # index itself (round-10: the per-run re-sketch + re-probe of
     # batch1 was ~2s of the query's fixed cost; the oracle-checked
     # content -- append + probe equivalence -- still computes live)
-    survivors = dedup.staged_table(
+    survivors = ensure_staged_table(
         spark,
         f"{name}_surv",
-        fp,
         lambda: dedup.dedup_incremental_apply(spark, batch1, name),
+        fp,
     )
     dedup.dedup_index_append(spark, survivors, name, append_fp=fp)
     # batch2 is sketched ONCE per fixture generation (staged for the
@@ -216,13 +217,13 @@ def _dedup_index_append(spark, sf):
     # same signature table -- the verdict compares index state, so
     # re-deriving identical signatures would only burn another
     # tokenize+minhash pass
-    sig2 = dedup.staged_table(
+    sig2 = ensure_staged_table(
         spark,
         f"{name}_sig2",
-        fp,
         lambda: dedup.minhash_signatures_rowlocal(batch2).select(
             "doc_id", "sig"
         ),
+        fp,
     )
     probe_app = dedup.probe_minhash_index(spark, sig2, name)
 
@@ -240,7 +241,7 @@ def _dedup_index_append(spark, sf):
         )
         return dedup.probe_minhash_index(spark, sig2, scratch)
 
-    probe_ref = dedup.staged_table(spark, f"{scratch}_probe", fp, _ref)
+    probe_ref = ensure_staged_table(spark, f"{scratch}_probe", _ref, fp)
     return dedup.index_append_verdict(batch2, probe_app, probe_ref)
 
 

@@ -102,28 +102,10 @@ def _source_csv_roundtrip(spark, sf):
     "content-exact roundtrip oracle over the original parquet",
 )
 def _source_kvtext_datasource(spark, sf):
-    import pathlib
-
     from ...sources.kvtext_datasource import register_kvtext
+    from ..jobs import documents_kv_dir
 
-    # reuse the Job-API e2e staging: documents rendered as
-    # doc_id\ttext once per fixture dir
-    from ..jobs import _REPO_ROOT
-    from ...sources.sinks import write_kv_text_dir
-    from ...sources.staging import stage_once
-    from ...sources.tables import load_table
-
-    sf_name = pathlib.Path(sf).name
-    in_dir = _REPO_ROOT / ".tmp" / "jobapi" / f"{sf_name}_documents_kv"
-
-    def _build(tmp: str) -> None:
-        docs = load_table(spark, sf, "documents").select(
-            F.col("doc_id").cast("string").alias("key"),
-            F.col("text").alias("value"),
-        )
-        write_kv_text_dir(docs, tmp)
-
-    stage_once(in_dir, _build)
+    in_dir = documents_kv_dir(spark, sf)
     register_kvtext(spark)
     kv = spark.read.format("kvtext").load(str(in_dir))
     return kv.select(

@@ -9,7 +9,8 @@ with an explicit schema, JSON-lines, and a partitioned parquet layout
 whose partition column prunes at the scan.
 
 Each staging function writes the fixture table into
-``.tmp/roundtrip/`` once per (sf, format) and returns the path; the
+``.tmp/roundtrip/`` once per (sf, format) and fixture generation
+(``sources.staging.stage_once``) and returns the path; the
 declared queries read the staged copy back and aggregate, so the
 oracle (the same aggregate over the original parquet) verifies the
 round-trip preserved content, not just row counts.
@@ -27,6 +28,7 @@ import pathlib
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import staging
 from .tables import load_table, source_fingerprint
 
 _REPO_ROOT = pathlib.Path(__file__).resolve().parents[2]
@@ -36,52 +38,31 @@ _REPO_ROOT = pathlib.Path(__file__).resolve().parents[2]
 DOCUMENTS_DDL = "doc_id long, text string, lang string, source string, n_chars long"
 
 
-def _needs_restage(stage: pathlib.Path, fp: str) -> bool:
-    """True when the stage is absent OR its ``_STAGED`` marker records
-    a different source fingerprint (fixture regenerated since staging).
-    Clears the stale stage so the caller rebuilds from scratch."""
-    import shutil
-
-    done = stage / "_STAGED"
-    if done.exists() and done.read_text() == fp:
-        return False
-    shutil.rmtree(stage, ignore_errors=True)
-    stage.mkdir(parents=True, exist_ok=True)
-    return True
-
-
 def _stage(spark: SparkSession, sf_dir: str, fmt: str) -> pathlib.Path:
     sf_name = pathlib.Path(sf_dir).name
     stage = _REPO_ROOT / ".tmp" / "roundtrip" / f"{sf_name}_{fmt}"
     src_table = "documents" if fmt.startswith("documents") else "events"
-    fp = source_fingerprint(sf_dir, src_table)
-    if _needs_restage(stage, fp):
+
+    def build(tmp: str) -> None:
+        data = f"{tmp}/data"
         if fmt == "documents_csv":
             (
                 load_table(spark, sf_dir, "documents")
                 .write.mode("overwrite")
                 .option("header", True)
                 .option("quoteAll", True)
-                .csv(str(stage / "data"))
+                .csv(data)
             )
         elif fmt == "documents_jsonl":
-            (
-                load_table(spark, sf_dir, "documents")
-                .write.mode("overwrite")
-                .json(str(stage / "data"))
-            )
+            load_table(spark, sf_dir, "documents").write.mode("overwrite").json(data)
         elif fmt == "documents_orc":
-            (
-                load_table(spark, sf_dir, "documents")
-                .write.mode("overwrite")
-                .orc(str(stage / "data"))
-            )
+            load_table(spark, sf_dir, "documents").write.mode("overwrite").orc(data)
         elif fmt == "events_partitioned":
             (
                 load_table(spark, sf_dir, "events")
                 .write.mode("overwrite")
                 .partitionBy("event_type")
-                .parquet(str(stage / "data"))
+                .parquet(data)
             )
         elif fmt == "documents_csv_malformed":
             from pyspark.sql import functions as F
@@ -102,12 +83,11 @@ def _stage(spark: SparkSession, sf_dir: str, fmt: str) -> pathlib.Path:
             # the deterministic corruption the oracle mirrors
             bad = F.concat(F.lit("X"), good)
             line = F.when(F.col("doc_id") % 10 == 0, bad).otherwise(good)
-            docs.select(line.alias("value")).write.mode("overwrite").text(
-                str(stage / "data")
-            )
+            docs.select(line.alias("value")).write.mode("overwrite").text(data)
         else:  # pragma: no cover - guarded by callers
             raise ValueError(f"unknown roundtrip format {fmt!r}")
-        (stage / "_STAGED").write_text(fp)
+
+    staging.stage_once(stage, source_fingerprint(sf_dir, src_table), build)
     return stage / "data"
 
 
@@ -159,15 +139,16 @@ def compacted_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sf_name = pathlib.Path(sf_dir).name
     stage = _REPO_ROOT / ".tmp" / "roundtrip" / f"{sf_name}_events_fragmented"
-    fp = source_fingerprint(sf_dir, "events")
-    if _needs_restage(stage, fp):
+
+    def fragment(tmp: str) -> None:
         (
             load_table(spark, sf_dir, "events")
             .repartition(64)
             .write.mode("overwrite")
-            .parquet(str(stage / "data"))
+            .parquet(f"{tmp}/data")
         )
-        (stage / "_STAGED").write_text(fp)
+
+    staging.stage_once(stage, source_fingerprint(sf_dir, "events"), fragment)
     return compact_parquet_dir(
         spark, str(stage / "data"), str(stage / "compacted")
     )
@@ -183,14 +164,15 @@ def read_events_schema_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
     table catalog instead of re-merging every read.)"""
     sf_name = pathlib.Path(sf_dir).name
     stage = _REPO_ROOT / ".tmp" / "roundtrip" / f"{sf_name}_events_evolved"
-    fp = source_fingerprint(sf_dir, "events")
-    if _needs_restage(stage, fp):
+
+    def split_batches(tmp: str) -> None:
         events = load_table(spark, sf_dir, "events")
         old = events.filter("event_id % 2 = 0").drop("props")
         new = events.filter("event_id % 2 = 1")
-        old.write.mode("overwrite").parquet(str(stage / "data" / "batch=1"))
-        new.write.mode("overwrite").parquet(str(stage / "data" / "batch=2"))
-        (stage / "_STAGED").write_text(fp)
+        old.write.mode("overwrite").parquet(f"{tmp}/data/batch=1")
+        new.write.mode("overwrite").parquet(f"{tmp}/data/batch=2")
+
+    staging.stage_once(stage, source_fingerprint(sf_dir, "events"), split_batches)
     return spark.read.option("mergeSchema", True).parquet(str(stage / "data"))
 
 
@@ -234,17 +216,16 @@ def dynamic_overwrite_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sf_name = pathlib.Path(sf_dir).name
     stage = _REPO_ROOT / ".tmp" / "roundtrip" / f"{sf_name}_events_dynpart"
-    fp = source_fingerprint(sf_dir, "events")
     events = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.to_date("ts")
     )
-    if _needs_restage(stage, fp):
-        (
-            events.write.mode("overwrite")
-            .partitionBy("event_date")
-            .parquet(str(stage / "data"))
+
+    def partition_by_day(tmp: str) -> None:
+        events.write.mode("overwrite").partitionBy("event_date").parquet(
+            f"{tmp}/data"
         )
-        (stage / "_STAGED").write_text(fp)
+
+    staging.stage_once(stage, source_fingerprint(sf_dir, "events"), partition_by_day)
     max_d = events.agg(F.max("event_date").alias("d")).collect()[0]["d"]  # bounded: 1 row
     updated = events.filter(F.col("event_date") == F.lit(max_d)).withColumn(
         "value", F.col("value") * 2

@@ -92,11 +92,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def source_fingerprint(sf_dir: str, *names: str) -> str:
     """Cheap content key for staged-artifact invalidation: size and
-    mtime of each source parquet file. Staging sites record this in
-    their ``_STAGED`` marker and re-stage when it changes, so a
-    regenerated fixture can never be silently shadowed by a stale
-    staged copy (the failure mode: queries read the stage, the DuckDB
-    oracle reads the fresh parquet)."""
+    mtime of each source parquet file. ``sources.staging`` records it
+    (``_STAGED`` in directory stages, ``_SOURCE_FP`` in warehouse
+    tables) and re-stages when it changes, so a regenerated fixture
+    can never be silently shadowed by a stale staged copy (the
+    failure mode: queries read the stage, the DuckDB oracle reads the
+    fresh parquet). ``load_table`` also keys its schema cache on it."""
     import pathlib
 
     parts = []

@@ -33,27 +33,27 @@ _REPO_ROOT = pathlib.Path(__file__).resolve().parents[2]
 
 def _stage_stream_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
     """The parquet file source requires a *directory*; fixtures are
-    single files. Stage each (sf, table) once under .tmp/stream/:
-    a symlink for plain tables (always tracks the live fixture), a
+    single files. Stage each (sf, table) under .tmp/stream/ with
+    ``sources.staging.stage_once``: a symlink for plain tables, a
     rewritten microsecond-timestamp copy for events (whose
     TIMESTAMP(NANOS) physical type Spark cannot scan -- see
-    sources.tables.load_table). The ``_STAGED`` marker records the
-    source parquet's fingerprint, so a regenerated fixture re-stages
-    instead of being shadowed by the stale copy."""
-    from ..sources.roundtrip import _needs_restage
+    sources.tables.load_table). Keyed by the source parquet's
+    fingerprint, so a regenerated fixture re-stages instead of being
+    shadowed by the stale copy."""
+    from ..sources import staging
     from ..sources.tables import source_fingerprint
+
+    def build(tmp: str) -> None:
+        if table == "events":
+            load_table(spark, sf_dir, table).write.mode("overwrite").parquet(
+                f"{tmp}/data"
+            )
+        else:
+            os.symlink(f"{sf_dir}/{table}.parquet", f"{tmp}/{table}.parquet")
 
     sf_name = pathlib.Path(sf_dir).name
     stage = _REPO_ROOT / ".tmp" / "stream" / f"{sf_name}_{table}"
-    fp = source_fingerprint(sf_dir, table)
-    if _needs_restage(stage, fp):
-        if table == "events":
-            load_table(spark, sf_dir, table).write.mode("overwrite").parquet(
-                str(stage / "data")
-            )
-        else:
-            os.symlink(f"{sf_dir}/{table}.parquet", stage / f"{table}.parquet")
-        (stage / "_STAGED").write_text(fp)
+    staging.stage_once(stage, source_fingerprint(sf_dir, table), build)
     return str(stage / "data") if table == "events" else str(stage)
 
 
@@ -152,25 +152,10 @@ def stream_kvtext_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     microbatches, sources/kvtext_datasource.py) into the flagship
     wordcount plan. Bounded drain of the staged directory equals the
     batch wordcount — the declared oracle."""
-    import pathlib
-
-    from ..plans.jobs import _REPO_ROOT
+    from ..plans.jobs import documents_kv_dir
     from ..sources.kvtext_datasource import register_kvtext
-    from ..sources.sinks import write_kv_text_dir
-    from ..sources.staging import stage_once
-    from ..sources.tables import load_table
 
-    sf_name = pathlib.Path(sf_dir).name
-    in_dir = _REPO_ROOT / ".tmp" / "jobapi" / f"{sf_name}_documents_kv"
-
-    def _build(tmp: str) -> None:
-        docs = load_table(spark, sf_dir, "documents").select(
-            F.col("doc_id").cast("string").alias("key"),
-            F.col("text").alias("value"),
-        )
-        write_kv_text_dir(docs, tmp)
-
-    stage_once(in_dir, _build)
+    in_dir = documents_kv_dir(spark, sf_dir)
     register_kvtext(spark)
     kv = spark.readStream.format("kvtext").load(str(in_dir))
     counts = (
@@ -999,13 +984,10 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import shutil
 
-    from ..sources.roundtrip import _needs_restage
+    from ..sources import staging
     from ..sources.tables import source_fingerprint
 
-    sf_name = pathlib.Path(sf_dir).name
-    stage = _REPO_ROOT / ".tmp" / "stream" / f"{sf_name}_cdc_upsert"
-    fp = source_fingerprint(sf_dir, "events")
-    if _needs_restage(stage, fp):
+    def build(tmp: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "user_id", "event_type", "value"
         )
@@ -1021,13 +1003,12 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(1).alias("version"),
             )
         )
-        shutil.rmtree(stage, ignore_errors=True)
-        base.repartition(3).write.mode("overwrite").parquet(
-            str(stage / "data")
-        )
-        upd.repartition(1).write.mode("append").parquet(str(stage / "data"))
-        (stage / "_STAGED").write_text(fp)
+        base.repartition(3).write.mode("overwrite").parquet(f"{tmp}/data")
+        upd.repartition(1).write.mode("append").parquet(f"{tmp}/data")
 
+    sf_name = pathlib.Path(sf_dir).name
+    stage = _REPO_ROOT / ".tmp" / "stream" / f"{sf_name}_cdc_upsert"
+    staging.stage_once(stage, source_fingerprint(sf_dir, "events"), build)
     src = str(stage / "data")
     schema = spark.read.parquet(src).schema
     sink = stage / "target"

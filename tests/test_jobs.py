@@ -131,6 +131,51 @@ def test_wordcount_e2e_disk_to_disk_matches_batch(spark, sf_small):
     assert e2e == batch
 
 
+def test_kv_stage_follows_regenerated_fixture(spark, sf_small, tmp_path):
+    """The staged documents kv dir is keyed by the documents
+    fingerprint: after the fixture is rewritten, the disk-to-disk job
+    and the kvtext data source both read the NEW text, never the stale
+    stage. Stage paths key on the fixture dir's basename, so the copy
+    gets a unique one."""
+    import shutil
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from java_mapreduce_framework_spark.plans.jobs import _REPO_ROOT
+    from java_mapreduce_framework_spark.plans.registry import registry
+
+    reg = registry()
+    sf = tmp_path / f"regen_{uuid.uuid4().hex[:8]}"
+    shutil.copytree(sf_small, sf)
+    stage = _REPO_ROOT / ".tmp" / "jobapi" / f"{sf.name}_documents_kv"
+
+    def rows(name):
+        return sorted(tuple(r) for r in reg[name].fn(spark, str(sf)).collect())
+
+    try:
+        before = rows("jobapi_wordcount_e2e")
+        docs = pq.read_table(sf / "documents.parquet")
+        text = pa.array(
+            [f"regenerated fixture doc {i}" for i in range(docs.num_rows)],
+            docs.schema.field("text").type,
+        )
+        docs = docs.set_column(docs.schema.get_field_index("text"), "text", text)
+        pq.write_table(docs, sf / "documents.parquet")
+
+        expect_kv = sorted(
+            (str(doc_id), len(t), t[:16])
+            for doc_id, t in zip(docs.column("doc_id").to_pylist(), text.to_pylist())
+        )
+        assert rows("source_kvtext_datasource") == expect_kv
+        after = rows("jobapi_wordcount_e2e")
+        assert after == rows("jobapi_wordcount")
+        assert after != before
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
 def test_combiner_result_equals_uncombined(spark, sf_small):
     """combine=True must be result-invariant for an associative job
     while pre-folding map output (the Hadoop combiner contract)."""

@@ -188,21 +188,39 @@ def test_staged_artifacts_refresh_on_fixture_change(spark, sf_small, tmp_path):
     """Fingerprint-keyed staging: a staged copy re-derives when the
     source parquet changes (size/mtime), instead of silently shadowing
     the regenerated fixture."""
-    import shutil
+    import pathlib
 
-    from java_mapreduce_framework_spark.sources.roundtrip import (
-        _needs_restage,
-        _stage,
-    )
+    import pytest
+
+    from java_mapreduce_framework_spark.sources.roundtrip import _stage
+    from java_mapreduce_framework_spark.sources.staging import stage_once
     from java_mapreduce_framework_spark.sources.tables import source_fingerprint
 
-    # _needs_restage contract directly
+    # stage_once contract directly
+    builds = []
+
+    def build(tmp):
+        builds.append(tmp)
+        (pathlib.Path(tmp) / "part").write_text(str(len(builds)))
+
     stage = tmp_path / "stage"
-    assert _needs_restage(stage, "fp1") is True  # absent -> stage
-    (stage / "_STAGED").write_text("fp1")
-    assert _needs_restage(stage, "fp1") is False  # fresh -> reuse
-    assert _needs_restage(stage, "fp2") is True  # changed -> cleared
-    assert not (stage / "_STAGED").exists()
+    assert stage_once(stage, "fp1", build) == stage  # absent -> build
+    assert len(builds) == 1 and (stage / "_STAGED").read_text() == "fp1"
+    stage_once(stage, "fp1", build)  # fresh -> reuse
+    assert len(builds) == 1
+    stage_once(stage, "fp2", build)  # changed -> rebuilt
+    assert len(builds) == 2 and (stage / "part").read_text() == "2"
+    assert (stage / "_STAGED").read_text() == "fp2"
+
+    def broken(tmp):
+        (pathlib.Path(tmp) / "part").write_text("half")
+        raise RuntimeError("build failed")
+
+    failed = tmp_path / "failed"
+    with pytest.raises(RuntimeError, match="build failed"):
+        stage_once(failed, "fp1", broken)
+    assert not failed.exists()
+    assert not list(tmp_path.glob(".build-*"))
 
     # end to end: stage, fake a regeneration by rewriting the marker,
     # and observe the staged data directory actually rebuild

@@ -243,46 +243,6 @@ def test_stream_stream_join_equals_batch_self_join(spark, sf_small):
     assert streamed == batch and len(streamed) > 0
 
 
-def test_stream_user_stats_state_gated_on_protobuf(spark, sf_small):
-    """The arbitrary-state v2 operator (transformWithStateInPandas)
-    needs google.protobuf in Python workers; in this container it must
-    raise the documented NotImplementedError -- where protobuf exists
-    it runs and must equal the batch aggregate."""
-    import pytest
-
-    from java_mapreduce_framework_spark.experimental.streaming_v2 import (
-        stream_user_stats_state,
-    )
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-
-    if not has_protobuf:
-        with pytest.raises(NotImplementedError):
-            stream_user_stats_state(spark, sf_small)
-    else:
-        from pyspark.sql import functions as F
-
-        from java_mapreduce_framework_spark.sources.tables import load_table
-
-        got = {
-            (r["user_id"], r["n_events"], r["total_value"])
-            for r in stream_user_stats_state(spark, sf_small).collect()
-        }
-        want = {
-            (r["user_id"], r["n_events"], r["total_value"])
-            for r in load_table(spark, sf_small, "events")
-            .groupBy("user_id")
-            .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
-            .collect()
-        }
-        assert got == want
-
-
 def test_foreachbatch_sink_is_idempotent_under_replay(spark, sf_small):
     """The exactly-once claim: wiped-checkpoint replays overwrite
     their own batch partitions (an append sink would have tripled the
