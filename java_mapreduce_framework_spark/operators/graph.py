@@ -24,9 +24,10 @@ link-prediction panel (``common_neighbors``, ``adamic_adar``,
 
 Every exchange keys on node ids; no adjacency list ever materializes
 as an array. Iterative operators truncate lineage with
-``localCheckpoint`` each round, size their shuffles from the measured
-state (``session._loop_shuffle_partitions``) and let only scalar
-probes reach the driver.
+``localCheckpoint`` each round or every few rounds, size their
+shuffles from the measured state (``session._loop_shuffle_partitions``)
+and let only scalar probes reach the driver -- except the fixed-round
+``label_propagation``, which stays one lazy plan.
 
 Reference licence: composition target -- chained-jobs model
 (SURVEY.md §2A FIFO queue) over the WordCount substrate
@@ -352,46 +353,56 @@ def label_propagation(
 
     Determinism by construction: labels start as node ids, every
     round updates ALL nodes simultaneously to the most frequent
-    neighbor label with ties broken by the SMALLEST label (count
-    desc, label asc rank window), isolated nodes keep their own id,
-    and the round count is fixed — no convergence probe, no
-    oscillation sensitivity, so the result is a pure function of the
-    edge set and both engines replay it exactly (the oracle unrolls
-    the same rounds as chained CTEs).
+    neighbor label with ties broken by the SMALLEST label, isolated
+    nodes keep their own id, and the round count is fixed — no
+    convergence probe, no oscillation sensitivity, so the result is a
+    pure function of the edge set and both engines replay it exactly
+    (the oracle unrolls the same rounds as chained CTEs).
 
-    Per round: one keyed join (labels × edges) + one (node, label)
-    count + one per-node argmax window + the left-join back onto the
-    vertex set — all shuffles keyed on node id, per-node window
-    bounded by degree. ``localCheckpoint`` per round keeps plan depth
-    constant (the CC discipline). Emits (doc_id, community).
+    One exchange per round. Only non-isolated nodes carry state:
+    round 1 needs no join (every neighbor's label is still its own
+    id, so the messages are the edges ``(a, label=b)``); later rounds
+    join the previous labels onto the edges on ``b``. The messages
+    are hash-partitioned on ``a`` once, and both the (node, label)
+    count and the per-node mode -- ``min(struct(-count, label))``,
+    i.e. count desc then smallest label -- run on that partitioning.
+    A single left join onto ``vertices`` at the end gives isolated
+    nodes their own id. Both joins take the labels as a
+    ``shuffle_hash`` build side: the labels are already partitioned
+    on the node id, so the join adds no exchange on their side and
+    the edges' exchange on ``b`` is reused by every round. Without
+    the hint AQE turns each small labels side into a broadcast at
+    run time, which costs one more stage per round.
+
+    No per-round checkpoint: the fixed rounds form a linear chain in
+    which each round's state is read exactly once, so one plan
+    computes every round once, launches no job while it is built
+    (beyond ``_undirected``'s pair checkpoint) and lets AQE coalesce
+    every exchange. Precondition: every pair endpoint is a vertex --
+    round 1 reads labels straight off the edges, so an endpoint
+    outside ``vertices`` would still vote. Emits (doc_id, community).
     """
     _, edges = _undirected(pairs)
-    verts = vertices.select("doc_id").localCheckpoint()
-    labels = verts.select("doc_id", F.col("doc_id").alias("label"))
-    w = Window.partitionBy("doc_id").orderBy(F.desc("c"), "label")
-    # |V| partition-sizing probe over the materialized vertex state
-    # (r12: scale-adaptive loop shuffle width, guide §2)
-    with _loop_shuffle_partitions(verts.sparkSession, verts.count()):
-        for _ in range(rounds):
-            neigh = (
-                edges.join(labels, edges["b"] == labels["doc_id"])
-                .groupBy(F.col("a").alias("doc_id"), "label")
-                .agg(F.count("*").alias("c"))
-            )
-            best = (
-                neigh.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .select("doc_id", F.col("label").alias("new_label"))
-            )
-            labels = (
-                verts.join(best, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    F.coalesce("new_label", "doc_id").alias("label"),
-                )
-                .localCheckpoint()
-            )
-    return labels.select("doc_id", F.col("label").alias("community"))
+    msgs = edges.select("a", F.col("b").alias("label"))
+    for r in range(rounds):
+        if r:
+            prev = labels.withColumnRenamed("a", "b").hint("shuffle_hash")
+            msgs = edges.join(prev, "b").select("a", "label")
+        labels = (
+            msgs.repartition("a")
+            .groupBy("a", "label")
+            .agg(F.count("*").alias("c"))
+            .groupBy("a")
+            .agg(F.min(F.struct(-F.col("c"), F.col("label"))).alias("m"))
+            .select("a", F.col("m.label").alias("label"))
+        )
+    if not rounds:
+        labels = msgs.limit(0)
+    return (
+        vertices.select("doc_id")
+        .join(labels.withColumnRenamed("a", "doc_id").hint("shuffle_hash"), "doc_id", "left")
+        .select("doc_id", F.coalesce("label", "doc_id").alias("community"))
+    )
 
 
 def pagerank(

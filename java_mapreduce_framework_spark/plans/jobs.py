@@ -39,7 +39,6 @@ from __future__ import annotations
 
 import importlib
 import pathlib
-import uuid
 from collections.abc import Iterable, Iterator
 from dataclasses import dataclass, field
 from typing import Protocol
@@ -247,9 +246,12 @@ def wordcount_job_e2e(spark, sf_dir: str) -> DataFrame:
     shuffle/barrier the master/worker servlets implemented.
 
     The kv input directory is ``documents_kv_dir`` (re-staged when the
-    documents fixture changes). The sink directory is unique per
-    invocation, mirroring the reference's wipe-output-before-run
-    semantics (``worker/WorkerServlet.java:654-669``).
+    documents fixture changes). The sink is one directory per fixture,
+    ``.tmp/jobapi/<sf>_wordcount_out``, which the overwrite-mode text
+    sink wipes before each run, as the reference wipes its output
+    directory (``worker/WorkerServlet.java:654-669``). A returned
+    DataFrame therefore reads its run's output only until the next
+    call on the same fixture.
     """
     from pyspark.sql import functions as F
 
@@ -257,7 +259,7 @@ def wordcount_job_e2e(spark, sf_dir: str) -> DataFrame:
     from ..sources.tables import read_kv_text_dir
 
     in_dir = documents_kv_dir(spark, sf_dir)
-    out_dir = _REPO_ROOT / ".tmp" / "jobapi" / f"out_{uuid.uuid4().hex[:12]}"
+    out_dir = _REPO_ROOT / ".tmp" / "jobapi" / f"{pathlib.Path(sf_dir).name}_wordcount_out"
     kv_in = read_kv_text_dir(spark, str(in_dir))
     write_kv_text_dir(run_job(WordCountJob, kv_in), str(out_dir))
     back = read_kv_text_dir(spark, str(out_dir))

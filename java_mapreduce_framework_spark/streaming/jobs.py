@@ -49,7 +49,8 @@ def _stage_stream_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
                 f"{tmp}/data"
             )
         else:
-            os.symlink(f"{sf_dir}/{table}.parquet", f"{tmp}/{table}.parquet")
+            src = os.path.abspath(f"{sf_dir}/{table}.parquet")
+            os.symlink(src, f"{tmp}/{table}.parquet")
 
     sf_name = pathlib.Path(sf_dir).name
     stage = _REPO_ROOT / ".tmp" / "stream" / f"{sf_name}_{table}"
@@ -961,18 +962,31 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MERGE INTO kernel as a stream: change batches arrive as
     files (base snapshot rows at version 0, amended rows at version
     1), and every microbatch upserts into a persisted parquet target
-    inside ``foreachBatch`` -- read target, union the batch, keep the
-    newest (version, ts) per key, overwrite. This is the streaming
-    form of ``cdc_latest_wins``'s batch kernel and the production
-    shape of a continuously-maintained mutable table on an immutable
-    store (Delta/Iceberg MERGE does exactly this per commit).
+    inside ``foreachBatch`` -- union the batch onto the current target,
+    keep the newest (version, ts) per key, write the next version.
+    This is the streaming form of ``cdc_latest_wins``'s batch kernel
+    and the production shape of a continuously-maintained mutable
+    table on an immutable store (Delta/Iceberg MERGE does exactly this
+    per commit).
+
+    Versioned copy-on-write: microbatch ``k`` writes ``target/v<k>``
+    from the newest complete version below ``k`` (one with
+    ``_SUCCESS``), so a merge never reads the directory it writes and
+    needs no eager materialization. The swap is crash-atomic: a
+    version counts only once its ``_SUCCESS`` exists, and older
+    versions are deleted only after that. A replayed batch whose
+    version is already complete is skipped, which keeps restarts
+    idempotent. After every batch the target is one deduplicated
+    table on disk.
 
     Latest-wins is associative and commutative over batches, so the
     final target is INDEPENDENT of how the file source slices
     microbatches (``maxFilesPerTrigger=2`` forces several) -- which
-    is what makes the bounded drain equal to the batch oracle, and
-    what makes the operator restart-safe in production: re-merging an
-    already-applied batch is a no-op.
+    is what makes the bounded drain equal to the batch oracle.
+
+    Schemas are known, never inferred: the source schema is the
+    analysed build DataFrame's, and the target and the result are
+    read with it.
 
     At 100 TB the full-target rewrite becomes partition-pruned
     (dynamic partition overwrite on the touched keys' partitions --
@@ -987,11 +1001,12 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import staging
     from ..sources.tables import source_fingerprint
 
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    base = ev.withColumn("version", F.lit(0))
+
     def build(tmp: str) -> None:
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "ts", "user_id", "event_type", "value"
-        )
-        base = ev.withColumn("version", F.lit(0))
         upd = (
             ev.filter(F.pmod("event_id", F.lit(10)) == 0)
             .select(
@@ -1010,28 +1025,33 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = _REPO_ROOT / ".tmp" / "stream" / f"{sf_name}_cdc_upsert"
     staging.stage_once(stage, source_fingerprint(sf_dir, "events"), build)
     src = str(stage / "data")
-    schema = spark.read.parquet(src).schema
+    schema = base.schema
     sink = stage / "target"
     ckpt = _ckpt_root() / f"cdc_upsert_{uuid.uuid4().hex[:12]}"
     shutil.rmtree(sink, ignore_errors=True)
 
+    def versions(below: int | None = None) -> list[pathlib.Path]:
+        """Complete target versions (those with ``_SUCCESS``), oldest first."""
+        ids = sorted(int(p.parent.name[1:]) for p in sink.glob("v*/_SUCCESS"))
+        return [sink / f"v{k}" for k in ids if below is None or k < below]
+
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        bs = batch_df.sparkSession
-        if (sink / "_SUCCESS").exists():
-            target = bs.read.parquet(str(sink))
+        out = sink / f"v{batch_id}"
+        if (out / "_SUCCESS").exists():
+            return  # replay of an applied batch
+        prev = versions(below=batch_id)
+        merged_in = batch_df
+        if prev:
+            target = batch_df.sparkSession.read.schema(schema).parquet(str(prev[-1]))
             merged_in = target.unionByName(batch_df)
-        else:
-            merged_in = batch_df
         w = Window.partitionBy("event_id").orderBy(
             F.col("version").desc(), F.col("ts").desc()
         )
-        merged = (
-            merged_in.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") == 1)
-            .drop("rnk")
-            .localCheckpoint()  # materialize BEFORE overwriting the input
-        )
-        merged.write.mode("overwrite").parquet(str(sink))
+        merged_in.withColumn("rnk", F.row_number().over(w)).filter(
+            F.col("rnk") == 1
+        ).drop("rnk").write.mode("overwrite").parquet(str(out))
+        for old in prev:
+            shutil.rmtree(old, ignore_errors=True)
 
     with _stream_conf(spark):
         q = (
@@ -1044,7 +1064,8 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    return spark.read.parquet(str(sink)).select(
+    shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.read.schema(schema).parquet(str(versions()[-1])).select(
         "event_id",
         "ts",
         "user_id",

@@ -356,6 +356,70 @@ def test_label_propagation_raises_on_diameter_overflow(spark):
         graph.connected_components(chain, max_iter=3)
 
 
+def _lpa_reference(pairs, vertices, rounds):
+    """Synchronous label propagation in pure Python: every node takes
+    the most frequent neighbor label (smallest label on ties) at once;
+    isolated nodes keep their own id."""
+    from collections import Counter
+
+    nbrs = {v: [] for v in vertices}
+    for a, b in pairs:
+        nbrs[a].append(b)
+        nbrs[b].append(a)
+    label = {v: v for v in vertices}
+    for _ in range(rounds):
+        new = {}
+        for v in vertices:
+            cnt = Counter(label[u] for u in nbrs[v])
+            new[v] = min(cnt, key=lambda x: (-cnt[x], x)) if cnt else v
+        label = new
+    return label
+
+
+def test_label_propagation_equals_python_reference(spark):
+    """label_propagation matches the pure-Python synchronous rounds on
+    hand-made shapes: a two-way tie (smallest label wins), isolated
+    vertices, two components, and a star whose leaves all adopt the
+    hub's label while the hub takes the smallest leaf."""
+    cases = {
+        "tie": ([(5, 7), (5, 9), (7, 8), (9, 10)], [5, 7, 8, 9, 10]),
+        "isolated": ([(1, 2), (2, 3)], [1, 2, 3, 40, 41, 42]),
+        "two_components": (
+            [(1, 2), (1, 3), (2, 3), (3, 4), (20, 21), (20, 22), (21, 22)],
+            [1, 2, 3, 4, 20, 21, 22],
+        ),
+        "star": ([(0, i) for i in range(1, 7)], list(range(8))),
+    }
+    for name, (pairs, verts) in cases.items():
+        df = spark.createDataFrame(pairs, ["doc_a", "doc_b"])
+        vdf = spark.createDataFrame([(v,) for v in verts], ["doc_id"])
+        for rounds in (1, 2, 3):
+            got = {
+                r["doc_id"]: r["community"]
+                for r in graph.label_propagation(df, vdf, rounds=rounds).collect()
+            }
+            assert got == _lpa_reference(pairs, verts, rounds), (name, rounds)
+
+
+def test_label_propagation_builds_without_jobs(spark):
+    """Building the label-propagation plan over already-materialized
+    pairs launches at most one job (``_undirected``'s pair
+    checkpoint): no vertex checkpoint, no |V| probe, no per-round
+    materialization."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(20)], ["doc_a", "doc_b"]
+    ).localCheckpoint()
+    verts = spark.createDataFrame([(i,) for i in range(25)], ["doc_id"])
+    sc = spark.sparkContext
+    sc.setJobGroup("lpa_build", "lpa_build")
+    try:
+        out = graph.label_propagation(pairs, verts)
+        assert len(sc.statusTracker().getJobIdsForGroup("lpa_build")) <= 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out.count() == 25
+
+
 def test_incremental_apply_drops_exactly_matched_docs(spark, sf_small):
     """Survivors = batch minus the probe's matched doc_a set, with
     full rows preserved."""

@@ -174,6 +174,27 @@ def test_kv_stage_follows_regenerated_fixture(spark, sf_small, tmp_path):
         assert after != before
     finally:
         shutil.rmtree(stage, ignore_errors=True)
+        shutil.rmtree(stage.parent / f"{sf.name}_wordcount_out", ignore_errors=True)
+
+
+def test_wordcount_e2e_reuses_one_sink(spark, sf_small):
+    """The disk-to-disk job writes one sink per fixture and overwrites
+    it on every run: two calls leave one sink directory, not two."""
+    import pathlib
+
+    from java_mapreduce_framework_spark.plans.jobs import _REPO_ROOT, wordcount_job_e2e
+
+    jobapi = _REPO_ROOT / ".tmp" / "jobapi"
+    sf = pathlib.Path(sf_small).name
+
+    def names():
+        return {p.name for p in jobapi.iterdir()} if jobapi.is_dir() else set()
+
+    before = names()
+    runs = [sorted(tuple(r) for r in wordcount_job_e2e(spark, sf_small).collect()) for _ in range(2)]
+    assert runs[0] == runs[1]
+    assert names() - before - {f"{sf}_documents_kv"} <= {f"{sf}_wordcount_out"}
+    assert (jobapi / f"{sf}_wordcount_out").is_dir()
 
 
 def test_combiner_result_equals_uncombined(spark, sf_small):

@@ -769,18 +769,26 @@ def test_dp_exponential_median_near_true(spark):
     assert out["dp_median"] in (1.0, 5.0, 9.0)
 
 
-def test_stream_cdc_upsert_batch_boundary_invariance(spark, sf_small):
+def test_stream_cdc_upsert_batch_boundary_invariance(
+    spark, sf_small, tmp_path, monkeypatch
+):
     """The drained streaming target must equal the batch latest-wins
     kernel row for row (associativity over microbatches), and
     re-running the drain (fresh checkpoint, already-staged files)
-    must be idempotent."""
+    must be idempotent. A call removes its stream checkpoint and
+    leaves exactly one target version on disk."""
+    import pathlib
+
     from java_mapreduce_framework_spark.operators.relational import (
         cdc_latest_wins,
     )
     from java_mapreduce_framework_spark.sources.tables import load_table
+    from java_mapreduce_framework_spark.streaming import jobs
     from java_mapreduce_framework_spark.streaming.jobs import (
         stream_cdc_upsert,
     )
+
+    monkeypatch.setattr(jobs, "_ckpt_root", lambda: tmp_path)
 
     got = {
         r["event_id"]: (r["value"], r["version"])
@@ -798,6 +806,12 @@ def test_stream_cdc_upsert_batch_boundary_invariance(spark, sf_small):
         for r in stream_cdc_upsert(spark, sf_small).collect()
     }
     assert again == got
+    assert not list(tmp_path.glob("cdc_upsert_*"))
+    target = (
+        jobs._REPO_ROOT / ".tmp" / "stream"
+        / f"{pathlib.Path(sf_small).name}_cdc_upsert" / "target"
+    )
+    assert len(list(target.glob("v*"))) == 1
 
 
 # ------------------------------------------------------ batch 7

@@ -19,6 +19,27 @@ def test_stream_dir_schema_equals_load_table(spark, sf_small, table):
     assert spark.read.parquet(path).schema == load_table(spark, sf_small, table).schema
 
 
+def test_stage_stream_dir_relative_fixture_dir(spark, sf_small, tmp_path, monkeypatch):
+    """A fixture dir given relative to the cwd stages a link that
+    resolves from the stage dir. Stage paths key on the fixture dir's
+    basename, so the copy gets a unique one."""
+    import os
+    import pathlib
+    import shutil
+    import uuid
+
+    rel = f"relsf_{uuid.uuid4().hex[:8]}"
+    (tmp_path / rel).mkdir()
+    shutil.copy(f"{sf_small}/region.parquet", tmp_path / rel)
+    monkeypatch.chdir(tmp_path)
+    stage = pathlib.Path(_stage_stream_dir(spark, rel, "region"))
+    try:
+        assert os.path.exists(stage / "region.parquet")
+        assert spark.read.parquet(str(stage)).count() == load_table(spark, sf_small, "region").count()
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
 @pytest.mark.parametrize(
     "delay, ms",
     [
