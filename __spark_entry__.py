@@ -2,9 +2,9 @@
 
 ``entry(spark)`` smoke-runs the flagship query; ``queries()`` /
 ``oracle_sql()`` expose the full declared operator registry
-(java_mapreduce_framework_spark/plans/registry.py -- one entry per
-operator in SURVEY.md section 2B) for the sf0.01 DuckDB correctness
-gate.
+(the ``java_mapreduce_framework_spark/plans/registry/`` package, one
+module per operator family; one entry per operator in SURVEY.md
+section 2B) for the sf0.01 DuckDB correctness gate.
 """
 
 from __future__ import annotations

@@ -1,8 +1,8 @@
 """Relational operators (SURVEY.md section 2B, MapReduce-core rows).
 
 Each function takes DataFrames and returns a DataFrame; the fixture
-wiring lives in ``plans/registry.py``. Every operator here is a pure
-declarative DataFrame plan -- Catalyst supplies pushdown, pruning,
+wiring lives in ``plans/registry/relational.py``. Every operator here
+is a pure declarative DataFrame plan -- Catalyst supplies pushdown, pruning,
 partial aggregation, and join selection (the reference has no
 optimizer at all, SURVEY.md section 4.1, so everything below is
 strictly better than its map/shuffle/sort/reduce encoding:

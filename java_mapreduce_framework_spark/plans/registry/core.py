@@ -24,18 +24,7 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ...operators import (
-    analytics,
-    dedup,
-    ml,
-    multimodal,
-    relational,
-    similarity,
-    temporal,
-    text,
-)
 from ...session import tune_session
 from ...sources.tables import load_table
 
@@ -59,9 +48,9 @@ _EVTS = (
     "FROM events) evts"
 )
 
+#: English stopwords: the quality measures below and text's lang_id
+#: oracles (beside its ``_ES`` / ``_DE`` sets).
 _EN = "('the','a','of','and','to','in','is')"
-_ES = "('el','la','de','y','es','un','que')"
-_DE = "('der','die','das','und','ist','ein','zu')"
 
 #: Quality-score formula + its measures CTE, shared verbatim by the
 #: quality_score / quality_stratify / curation_pipeline oracles so the
@@ -85,6 +74,79 @@ _QUALITY_MEASURES_CTE = f"""
 """
 
 
+#: 30-minute-gap sessionization of events, (user_id, event_id,
+#: session_id): the ``sessionize`` oracle, reused by the temporal and
+#: analytics queries that group by session.
+_SESSIONIZE_SQL = """
+  SELECT user_id, event_id,
+         CAST(sum(is_new) OVER (
+           PARTITION BY user_id ORDER BY ts, event_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+  FROM (
+    SELECT user_id, event_id, ts,
+           CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+                  OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                     > INTERVAL 30 MINUTE
+                THEN 1 ELSE 0 END AS is_new
+    FROM {_EVTS})
+""".replace("{_EVTS}", _EVTS)
+
+
+#: One row per 30-minute-gap session, (user_id, n_events,
+#: session_start, session_end): the batch session-window oracle and its
+#: streaming twins' oracle.
+_SESSION_WINDOW_SQL = """
+  WITH d AS (
+    SELECT user_id, event_id, ts,
+           CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+                  OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                     > INTERVAL 30 MINUTE
+                THEN 1 ELSE 0 END AS is_new
+    FROM {_EVTS}),
+  s AS (
+    SELECT user_id, ts,
+           sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+    FROM d)
+  SELECT user_id, count(*) AS n_events,
+         min(ts) AS session_start, max(ts) AS session_end
+  FROM s GROUP BY user_id, sid
+""".replace("{_EVTS}", _EVTS)
+
+
+#: Recursive-CTE reachability oracle for connected components over the
+#: 0.8 near-dup pair graph (min root label per node).
+_CC_ORACLE = f"""
+    WITH RECURSIVE toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+    sh AS (
+      SELECT DISTINCT doc_id,
+             unnest(list_transform(range(1, len(t) - 1),
+                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
+      FROM toks WHERE len(t) >= 3),
+    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+    com AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
+      FROM sh a JOIN sh b USING (shingle)
+      WHERE a.doc_id < b.doc_id
+      GROUP BY a.doc_id, b.doc_id),
+    pairs AS (
+      SELECT doc_a, doc_b
+      FROM com
+      JOIN sizes na ON com.doc_a = na.doc_id
+      JOIN sizes nb ON com.doc_b = nb.doc_id
+      WHERE c * 1.0 / (na.n + nb.n - c) >= 0.8),
+    edges AS (
+      SELECT doc_a AS a, doc_b AS b FROM pairs
+      UNION ALL SELECT doc_b, doc_a FROM pairs),
+    reach(node, root) AS (
+      SELECT a, a FROM edges
+      UNION
+      SELECT e.b, r.root FROM reach r JOIN edges e ON e.a = r.node)
+    SELECT node AS doc_id, min(root) AS component_id
+    FROM reach GROUP BY node
+    """
+
+
 @dataclass(frozen=True)
 class QuerySpec:
     name: str
@@ -96,20 +158,27 @@ class QuerySpec:
 _REGISTRY: dict[str, QuerySpec] = {}
 
 
-#: Registered names whose implementing function deliberately does not
-#: follow the `_<name>` convention (shared impls, historical names).
-_NAME_EXEMPT: set[str] = set()
+def _insert(spec: QuerySpec) -> None:
+    """Add ``spec`` to the registry. Re-registering a name would
+    silently replace its fn AND oracle together (the sweep keeps
+    passing because both swap at once), so a duplicate is a hard
+    error."""
+    if spec.name in _REGISTRY:
+        raise AssertionError(
+            f"duplicate registration of {spec.name!r} -- the name is "
+            "already declared by an earlier registry module"
+        )
+    _REGISTRY[spec.name] = spec
 
 
 def _register(name: str, oracle: str | None, note: str = ""):
     def deco(fn):
         # Decorator-placement guard: an edit that splices a new
         # registration between another query's decorator and its def
-        # silently rebinds that query to the WRONG function (it has
-        # happened twice: graph_common_neighbors round 6, then
-        # vocab_coverage). The `_<name>` convention makes the splice
-        # a hard import error instead of a silent wrong answer.
-        if name not in _NAME_EXEMPT and fn.__name__ != f"_{name}":
+        # silently rebinds that query to the WRONG function. The
+        # `_<name>` convention makes the splice a hard import error
+        # instead of a silent wrong answer.
+        if fn.__name__ != f"_{name}":
             raise AssertionError(
                 f"@_register({name!r}) decorates {fn.__name__}; expected "
                 f"_{name} -- a new registration was likely spliced between "
@@ -120,18 +189,7 @@ def _register(name: str, oracle: str | None, note: str = ""):
             tune_session(spark)
             return fn(spark, sf_dir)
 
-        # Collision guard (round 11): a later module re-registering an
-        # existing name SILENTLY replaced its fn AND oracle (it
-        # happened twice in one round: multimodal_image_entropy and
-        # embedding_quantize_int8 got duplicated under the same names
-        # with different semantics, and the sweep kept passing because
-        # fn and oracle were swapped TOGETHER). Hard-fail instead.
-        if name in _REGISTRY:
-            raise AssertionError(
-                f"duplicate registration of {name!r} -- the name is "
-                "already declared by an earlier registry module"
-            )
-        _REGISTRY[name] = QuerySpec(name, wrapped, oracle, note)
+        _insert(QuerySpec(name, wrapped, oracle, note))
         return fn
 
     return deco

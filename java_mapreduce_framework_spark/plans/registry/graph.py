@@ -1,6 +1,8 @@
 """Graph section of the declared query registry: the 19 ``graph_*``
-queries over the two pair graphs the fixtures carry, all built on
-``operators/graph.py``'s pair-graph substrate.
+queries over the two pair graphs the fixtures carry, plus
+``dedup_cluster_components``, ``dedup_cluster_components_star`` and
+``dedup_minhash_clusters``, which return connected-component labels;
+all are built on ``operators/graph.py``'s pair-graph substrate.
 
 - The near-dup document graph: exact n-gram Jaccard >= 0.8 pairs
   (``dedup.ngram_jaccard_pairs``; oracle CTE ``_PAIRS_CTE``).
@@ -12,15 +14,46 @@ queries over the two pair graphs the fixtures carry, all built on
 Loop queries (pagerank, label propagation, eigenvector centrality,
 k-core) carry oracles that unroll the fixed rounds as chained CTEs.
 """
+
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from ...operators import dedup, graph
 from ...sources.tables import spread_scan
-from .core import _TOKS, _register, _t
+from .core import _CC_ORACLE, _register, _t, _TOKS
 
-# ------------------------------------------------------- pair graphs
+
+@_register(
+    "dedup_cluster_components",
+    _CC_ORACLE,
+    note="min-label propagation CC == recursive-CTE reachability min (undirected graph)",
+)
+def _dedup_cluster_components(spark, sf):
+    pairs = dedup.ngram_jaccard_pairs(_t(spark, sf, "documents"))
+    return graph.connected_components(pairs)
+
+
+@_register(
+    "dedup_minhash_clusters",
+    None,
+    note="full sketch path: MinHash-LSH pairs -> CC cluster ids; recall probabilistic -> rows-only",
+)
+def _dedup_minhash_clusters(spark, sf):
+    pairs = dedup.dedup_minhash(_t(spark, sf, "documents"))
+    return graph.connected_components(pairs)
+
+
+@_register(
+    "dedup_cluster_components_star",
+    _CC_ORACLE,
+    note="same clusters via alternating large-star/small-star (log-rounds CC, "
+    "the billion-edge shape); identical recursive-CTE oracle as the "
+    "label-propagation twin",
+)
+def _dedup_cluster_components_star(spark, sf):
+    pairs = dedup.ngram_jaccard_pairs(_t(spark, sf, "documents"))
+    return graph.connected_components_star(pairs)
 
 
 #: co-purchase graph (parts sharing >= 2 orders) with degrees --
@@ -108,9 +141,6 @@ def _near_dup_graph(spark, sf):
 def _as_parts(df):
     """Name a (doc_a, doc_b, ...) co-purchase result's endpoints as parts."""
     return df.withColumnRenamed("doc_a", "part_a").withColumnRenamed("doc_b", "part_b")
-
-
-# ------------------------------------------------- near-dup doc graph
 
 
 @_register(
@@ -373,9 +403,6 @@ def _eigencentrality_oracle(iters: int = 8) -> str:
 )
 def _graph_eigenvector_centrality(spark, sf):
     return graph.eigenvector_centrality(*_near_dup_graph(spark, sf))
-
-
-# ---------------------------------------------- co-purchase part graph
 
 
 @_register(

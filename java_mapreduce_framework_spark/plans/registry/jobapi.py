@@ -1,30 +1,11 @@
-"""jobapi section of the declared query registry -- bodies verbatim
-from the monolithic plans/registry.py (round-8 maintainability split;
-identical registry() output, zero plan changes)."""
+"""Job-API section of the declared query registry: Mapper/Reducer jobs
+run through ``plans.jobs``, the reference's ``Job`` contract."""
+
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import functions as F
 
-from ...operators import (  # noqa: F401
-    analytics,
-    dedup,
-    ml,
-    multimodal,
-    relational,
-    similarity,
-    temporal,
-    text,
-)
-from ...sources.tables import load_table  # noqa: F401
-from .core import (  # noqa: F401
-    _WORDS_CTE,
-    _register,
-    _t,
-)
-
-
-# ------------------------------------------------------ Job API (M2)
+from .core import _register, _t, _WORDS_CTE
 
 
 def _kv_documents(spark, sf):
@@ -130,3 +111,50 @@ def _jobapi_wordcount_e2e(spark, sf):
     return wordcount_job_e2e(spark, sf)
 
 
+@_register(
+    "jobapi_grep",
+    """
+    SELECT CAST(doc_id AS VARCHAR) AS doc_id, text
+    FROM documents WHERE text LIKE '%dup%'
+    """,
+    note="Dean & Ghemawat's other canonical example through the Job "
+    "API: matching records pass through a multi-emit map and an "
+    "identity reduce untouched",
+)
+def _jobapi_grep(spark, sf):
+    from ..jobs import DistributedGrepJob, run_job
+
+    out = run_job(DistributedGrepJob, _kv_documents(spark, sf))
+    return out.select(F.col("key").alias("doc_id"), F.col("value").alias("text"))
+
+
+@_register(
+    "jobapi_reduce_side_join",
+    """
+    SELECT CAST(o_custkey AS VARCHAR) AS custkey,
+           c_name,
+           CAST(o_orderkey AS VARCHAR) AS orderkey
+    FROM orders JOIN customer ON o_custkey = c_custkey
+    """,
+    note="THE canonical hand-written MapReduce join through the Job "
+    "API: tagged inputs, identity map, secondary-sort reduce (the dim "
+    "record sorts first, fact side streams with O(1) state)",
+)
+def _jobapi_reduce_side_join(spark, sf):
+    from ..jobs import ReduceSideJoinJob, run_job
+
+    customers = _t(spark, sf, "customer").select(
+        F.col("c_custkey").cast("string").alias("key"),
+        F.concat(F.lit("C\t"), F.col("c_name")).alias("value"),
+    )
+    orders = _t(spark, sf, "orders").select(
+        F.col("o_custkey").cast("string").alias("key"),
+        F.concat(F.lit("O\t"), F.col("o_orderkey").cast("string")).alias("value"),
+    )
+    out = run_job(ReduceSideJoinJob, customers.unionByName(orders))
+    sp = F.split("value", "\t")
+    return out.select(
+        F.col("key").alias("custkey"),
+        sp.getItem(0).alias("c_name"),
+        sp.getItem(1).alias("orderkey"),
+    )

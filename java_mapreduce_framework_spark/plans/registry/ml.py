@@ -1,32 +1,12 @@
-"""ml section of the declared query registry -- bodies verbatim
-from the monolithic plans/registry.py (round-8 maintainability split;
-identical registry() output, zero plan changes)."""
+"""ML section of the declared query registry: model fitting and
+evaluation (naive Bayes, linear and logistic regression, k-means,
+ranking metrics), written over ``operators/ml.py``."""
+
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from ...operators import ml
+from .core import _register, _t
 
-from ...operators import (  # noqa: F401
-    analytics,
-    dedup,
-    ml,
-    multimodal,
-    relational,
-    similarity,
-    temporal,
-    text,
-)
-from ...sources.tables import load_table  # noqa: F401
-from .core import (  # noqa: F401
-    _QUALITY_EXPR,
-    _QUALITY_MEASURES_CTE,
-    _TOKS,
-    _register,
-    _t,
-)
-
-
-# ------------------------------------------------- ML-fit primitives
 
 #: Char-bigram occurrence stream + naive-Bayes model CTEs, shared
 #: verbatim by the ml_naive_bayes_train / ml_naive_bayes_confusion
@@ -192,131 +172,6 @@ def _ml_knn_link_prediction(spark, sf):
 )
 def _ml_knn_classify(spark, sf):
     return ml.knn_classify(_t(spark, sf, "embeddings"))
-
-
-@_register(
-    "text_readability",
-    f"""
-    WITH m AS (
-      SELECT doc_id,
-             CAST(len({_TOKS}) AS INTEGER) AS n_words,
-             CAST(greatest(1, len(regexp_extract_all(text, '[.!?]+')))
-               AS INTEGER) AS n_sentences,
-             CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
-               AS INTEGER) AS n_syllables
-      FROM documents
-      WHERE len({_TOKS}) > 0)
-    SELECT doc_id, n_words, n_sentences, n_syllables,
-           round(206.835 - 1.015 * (n_words * 1.0 / n_sentences)
-                 - 84.6 * (n_syllables * 1.0 / n_words), 4) AS flesch
-    FROM m
-    """,
-    note="Flesch reading-ease per doc: three row-local regexp counts "
-    "over the pruned (doc_id, text) scan, no shuffle; vowel-group "
-    "syllables counted corpus-wide (groups cannot span whitespace)",
-)
-def _text_readability(spark, sf):
-    return text.text_readability(_t(spark, sf, "documents"))
-
-
-@_register(
-    "multimodal_audio_spectrogram",
-    None,
-    note="rows-only by declared design (no FFT in the oracle engine): "
-    "real STFT over the RIFF/WAVE decode path, Hann window + rFFT "
-    "power per frame inside the Arrow kernel; pure-tone dominant-bin "
-    "physics pinned in tests/test_multimodal.py + RECALL.json",
-)
-def _multimodal_audio_spectrogram(spark, sf):
-    return multimodal.audio_spectrogram(
-        multimodal.attach_audio_payload(_t(spark, sf, "documents"))
-    )
-
-
-def _mmr_oracle(
-    n_queries: int = 3, k: int = 10, shortlist: int = 50, lam: float = 0.7
-) -> str:
-    """Unrolled greedy-MMR oracle: one (div, argmax-pick, selected)
-    CTE triple per rank -- the kmeans/PQ unrolled-iteration
-    discipline applied to a greedy selection. Cosines are the proven
-    ``similarity_topk`` cross-engine identity
-    (list_cosine_similarity over DOUBLE casts, rounded 6); scores
-    round to 6 BEFORE the argmax with nid as tie-break, exactly the
-    engine's comparison."""
-    mu = round(1.0 - lam, 10)
-    rounds = []
-    for r in range(2, k + 1):
-        rounds.append(f"""
-    div{r} AS (
-      SELECT c.qid, c.nid, c.rel, max(p.c) AS div
-      FROM sl c
-      JOIN sel{r - 1} s ON s.qid = c.qid
-      JOIN ps p ON p.qid = c.qid AND p.na = c.nid AND p.nb = s.nid
-      WHERE NOT EXISTS (SELECT 1 FROM sel{r - 1} x
-                        WHERE x.qid = c.qid AND x.nid = c.nid)
-      GROUP BY 1, 2, 3),
-    pick{r} AS MATERIALIZED (
-      SELECT qid, nid, rel, score, {r} AS rnk FROM (
-        SELECT qid, nid, rel,
-               round({lam} * rel - {mu} * div, 6) AS score,
-               row_number() OVER (PARTITION BY qid
-                 ORDER BY round({lam} * rel - {mu} * div, 6) DESC,
-                          nid) AS rn
-        FROM div{r}) WHERE rn = 1),
-    sel{r} AS MATERIALIZED (
-      SELECT * FROM sel{r - 1} UNION ALL SELECT * FROM pick{r})""")
-    chain = ",".join(rounds)
-    return f"""
-    WITH q AS (
-      SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qe
-      FROM embeddings WHERE vec_id < {n_queries}),
-    s AS (
-      SELECT qid, e.vec_id AS nid,
-             round(list_cosine_similarity(qe,
-                   CAST(e.embedding AS DOUBLE[])), 6) AS rel
-      FROM q CROSS JOIN embeddings e WHERE e.vec_id <> qid),
-    sl AS MATERIALIZED (
-      SELECT qid, nid, rel FROM (
-        SELECT qid, nid, rel,
-               row_number() OVER (PARTITION BY qid
-                                  ORDER BY rel DESC, nid) AS rnk
-        FROM s) WHERE rnk <= {shortlist}),
-    ps AS MATERIALIZED (
-      SELECT a.qid, a.nid AS na, b.nid AS nb,
-             round(list_cosine_similarity(
-                   CAST(ea.embedding AS DOUBLE[]),
-                   CAST(eb.embedding AS DOUBLE[])), 6) AS c
-      FROM sl a JOIN sl b ON a.qid = b.qid AND a.nid <> b.nid
-      JOIN embeddings ea ON ea.vec_id = a.nid
-      JOIN embeddings eb ON eb.vec_id = b.nid),
-    pick1 AS MATERIALIZED (
-      SELECT qid, nid, rel, score, 1 AS rnk FROM (
-        SELECT qid, nid, rel, round({lam} * rel, 6) AS score,
-               row_number() OVER (PARTITION BY qid
-                 ORDER BY round({lam} * rel, 6) DESC, nid) AS rn
-        FROM sl) WHERE rn = 1),
-    sel1 AS MATERIALIZED (SELECT * FROM pick1),{chain}
-    SELECT CAST(qid AS BIGINT) AS qid, CAST(rnk AS INT) AS rank,
-           CAST(nid AS BIGINT) AS nid,
-           round(rel, 4) AS relevance,
-           round(score, 4) AS mmr_score
-    FROM sel{k}
-    """
-
-
-@_register(
-    "similarity_mmr",
-    _mmr_oracle(),
-    note="greedy maximal-marginal-relevance rerank (k sequential "
-    "argmaxes) over the distributed exact shortlist; round-12 "
-    "promotion from rows-only: the oracle unrolls the greedy "
-    "selection as one (div, argmax, selected) CTE triple per rank "
-    "over the same 6-rounded cosine identity, so the full rerank "
-    "hash-verifies; numpy-replay parity stays in "
-    "tests/test_similarity.py, diversity gain in RECALL.json",
-)
-def _similarity_mmr(spark, sf):
-    return similarity.similarity_mmr(_t(spark, sf, "embeddings"))
 
 
 @_register(
@@ -633,350 +488,132 @@ def _ml_kmeans_lloyd(spark, sf):
 
 
 @_register(
-    "stats_gini",
+    "ml_roc_auc",
     """
-    WITH spend AS (
-      SELECT c_nationkey, c_custkey,
-             sum(CAST(o_totalprice AS DECIMAL(18,2))) AS x
-      FROM orders JOIN customer ON o_custkey = c_custkey
-      GROUP BY 1, 2),
+    WITH per_score AS (
+      SELECT n_chars AS score, count(*) AS t,
+             sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS pos
+      FROM documents GROUP BY n_chars),
     ranked AS (
-      SELECT c_nationkey, c_custkey, x,
-             row_number() OVER (PARTITION BY c_nationkey
-                                ORDER BY x, c_custkey) AS i
-      FROM spend),
+      SELECT t, pos,
+             coalesce(sum(t) OVER (ORDER BY score
+                        ROWS BETWEEN UNBOUNDED PRECEDING
+                        AND 1 PRECEDING), 0) AS below
+      FROM per_score),
     agg AS (
-      SELECT c_nationkey, count(*) AS n, sum(x) AS sx,
-             sum(CAST(i * x AS DECIMAL(28,2))) AS six
-      FROM ranked GROUP BY 1)
-    SELECT c_nationkey, CAST(n AS INT) AS n_customers,
-           round(CAST(sx AS DOUBLE), 2) AS total_spend,
-           round(2.0 * CAST(six AS DOUBLE) / (n * CAST(sx AS DOUBLE))
-                 - (n + 1.0) / n, 4) AS gini
-    FROM agg
+      SELECT sum(pos * (2 * below + t + 1)) AS sum_r2_pos,
+             sum(pos) AS n_pos, sum(t - pos) AS n_neg
+      FROM ranked)
+    SELECT CAST(n_pos AS BIGINT) AS n_pos,
+           CAST(n_neg AS BIGINT) AS n_neg,
+           CAST(sum_r2_pos AS BIGINT) AS sum_r2_pos,
+           CAST(CAST(round(CAST(sum_r2_pos - n_pos * (n_pos + 1)
+                                AS DOUBLE)
+                           / (2.0 * n_pos * n_neg) * 1e6) AS BIGINT)
+                AS DOUBLE) / 1e6 AS auc
+    FROM agg WHERE n_pos > 0 AND n_neg > 0
     """,
-    note="per-nation Gini of customer lifetime spend via the exact "
-    "rank formula: DECIMAL-exact sums, one customer agg + one "
-    "per-nation window -- tie rank-sums are order-invariant so the "
-    "coefficient is deterministic",
+    note="ROC-AUC of document length as an English detector via the "
+    "rank-sum (Mann-Whitney) identity -- no curve materialized; "
+    "doubled midranks keep ties exact integers, AUC one integer "
+    "ratio at 1e-6 scale; rank stage sees distinct score values, "
+    "not documents",
 )
-def _stats_gini(spark, sf):
-    return analytics.stats_gini(
-        _t(spark, sf, "orders"), _t(spark, sf, "customer")
-    )
+def _ml_roc_auc(spark, sf):
+    return ml.roc_auc_lang_length(_t(spark, sf, "documents"))
 
 
 @_register(
-    "dp_noisy_counts",
+    "ml_pr_curve",
     """
-    WITH g AS (
-      SELECT event_type,
-             strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
-             count(*) AS cnt
-      FROM events GROUP BY 1, 2),
-    n AS (
-      SELECT event_type, day, cnt,
-             md5('dp|' || event_type || '|' || day) AS h
-      FROM g),
-    u AS (
-      SELECT event_type, day, cnt,
-             ((  (strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096
-               + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256
-               + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16
-               + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1))
-              + 0.5) / 65536.0 - 0.5 AS uu
-      FROM n)
-    SELECT event_type, day,
-           round(cnt + (-1.0) * sign(uu) * ln(1 - 2 * abs(uu)), 4)
-             AS noisy_count
-    FROM u
-    """,
-    note="eps-DP-style noisy count release with key-derived "
-    "deterministic Laplace noise (md5 -> 4-hex-digit midpoint "
-    "uniform -> inverse CDF); true counts never emitted",
-)
-def _dp_noisy_counts(spark, sf):
-    return analytics.dp_noisy_counts(_t(spark, sf, "events"))
-
-
-@_register(
-    "basket_lift_topk",
-    """
-    WITH baskets AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    tot AS (SELECT count(DISTINCT l_orderkey) AS n_orders FROM baskets),
-    item AS (
-      SELECT l_partkey, count(*) AS supp FROM baskets
-      GROUP BY 1 HAVING count(*) >= 2),
-    freq AS (
-      SELECT b.l_orderkey, b.l_partkey
-      FROM baskets b JOIN item USING (l_partkey)),
-    pairs AS (
-      SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
-             count(*) AS support
-      FROM freq a JOIN freq b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING count(*) >= 2)
-    SELECT part_a, part_b, CAST(support AS BIGINT) AS support,
-           round(support * 1.0 / sa.supp, 4) AS confidence,
-           round((support * n_orders) * 1.0 / (sa.supp * sb.supp), 4)
-             AS lift
-    FROM pairs
-    JOIN item sa ON sa.l_partkey = part_a
-    JOIN item sb ON sb.l_partkey = part_b
-    CROSS JOIN tot
-    ORDER BY lift DESC, support DESC, part_a, part_b
-    LIMIT 20
-    """,
-    note="market-basket lift top-20 with the a-priori prune: "
-    "below-min-support items semi-joined out BEFORE the pair "
-    "self-join; 1-row total-orders broadcast scalar (allowlisted); "
-    "TakeOrderedAndProject top-k",
-)
-def _basket_lift_topk(spark, sf):
-    return analytics.basket_lift_topk(_t(spark, sf, "lineitem"))
-
-
-@_register(
-    "column_profile",
-    """
-    WITH wide AS (
-      SELECT count(*) AS n_rows,
-        count(l_quantity) AS q_n, count(DISTINCT l_quantity) AS q_d,
-        CAST(min(l_quantity) AS DOUBLE) AS q_min,
-        CAST(max(l_quantity) AS DOUBLE) AS q_max,
-        sum(CAST(l_quantity AS DECIMAL(28,4))) AS q_sum,
-        count(l_extendedprice) AS e_n,
-        count(DISTINCT l_extendedprice) AS e_d,
-        CAST(min(l_extendedprice) AS DOUBLE) AS e_min,
-        CAST(max(l_extendedprice) AS DOUBLE) AS e_max,
-        sum(CAST(l_extendedprice AS DECIMAL(28,4))) AS e_sum,
-        count(l_discount) AS d_n, count(DISTINCT l_discount) AS d_d,
-        CAST(min(l_discount) AS DOUBLE) AS d_min,
-        CAST(max(l_discount) AS DOUBLE) AS d_max,
-        sum(CAST(l_discount AS DECIMAL(28,4))) AS d_sum,
-        count(l_tax) AS t_n, count(DISTINCT l_tax) AS t_d,
-        CAST(min(l_tax) AS DOUBLE) AS t_min,
-        CAST(max(l_tax) AS DOUBLE) AS t_max,
-        sum(CAST(l_tax AS DECIMAL(28,4))) AS t_sum,
-        count(l_returnflag) AS r_n,
-        count(DISTINCT l_returnflag) AS r_d,
-        CAST(min(length(l_returnflag)) AS DOUBLE) AS r_min,
-        CAST(max(length(l_returnflag)) AS DOUBLE) AS r_max,
-        sum(CAST(length(l_returnflag) AS DECIMAL(28,4))) AS r_sum,
-        count(l_linestatus) AS s_n, count(DISTINCT l_linestatus) AS s_d,
-        CAST(min(length(l_linestatus)) AS DOUBLE) AS s_min,
-        CAST(max(length(l_linestatus)) AS DOUBLE) AS s_max,
-        sum(CAST(length(l_linestatus) AS DECIMAL(28,4))) AS s_sum,
-        count(l_linenumber) AS l_n, count(DISTINCT l_linenumber) AS l_d,
-        CAST(min(l_linenumber) AS DOUBLE) AS l_min,
-        CAST(max(l_linenumber) AS DOUBLE) AS l_max,
-        sum(CAST(l_linenumber AS DECIMAL(28,4))) AS l_sum
-      FROM lineitem),
-    long AS (
-      SELECT 'l_quantity' AS col_name, n_rows, q_n AS n_nonnull,
-             q_d AS n_distinct, q_min AS min_v, q_max AS max_v,
-             CAST(q_sum AS DOUBLE) AS sum_v FROM wide
-      UNION ALL SELECT 'l_extendedprice', n_rows, e_n, e_d, e_min,
-             e_max, CAST(e_sum AS DOUBLE) FROM wide
-      UNION ALL SELECT 'l_discount', n_rows, d_n, d_d, d_min, d_max,
-             CAST(d_sum AS DOUBLE) FROM wide
-      UNION ALL SELECT 'l_tax', n_rows, t_n, t_d, t_min, t_max,
-             CAST(t_sum AS DOUBLE) FROM wide
-      UNION ALL SELECT 'l_returnflag', n_rows, r_n, r_d, r_min, r_max,
-             CAST(r_sum AS DOUBLE) FROM wide
-      UNION ALL SELECT 'l_linestatus', n_rows, s_n, s_d, s_min, s_max,
-             CAST(s_sum AS DOUBLE) FROM wide
-      UNION ALL SELECT 'l_linenumber', n_rows, l_n, l_d, l_min, l_max,
-             CAST(l_sum AS DOUBLE) FROM wide)
-    SELECT col_name, CAST(n_rows AS BIGINT) AS n_rows,
-           CAST(n_nonnull AS BIGINT) AS n_nonnull,
-           round(n_nonnull * 1.0 / n_rows, 4) AS completeness,
-           CAST(n_distinct AS BIGINT) AS n_distinct,
-           min_v, max_v,
-           round(sum_v / n_nonnull, 4) AS mean_v
-    FROM long
-    """,
-    note="single-scan Deequ-style column profile (describe side of "
-    "quality_constraints): two-level (col,value) aggregate -- map-side "
-    "duplicate collapse, shuffle bounded by true cardinality, no "
-    "mixed-distinct Expand; strings profiled by length, keyed by "
-    "value; means fold DECIMAL then divide once in double",
-)
-def _column_profile(spark, sf):
-    return relational.column_profile(_t(spark, sf, "lineitem"))
-
-
-@_register(
-    "sql_udf_quality",
-    f"""
-    WITH {_QUALITY_MEASURES_CTE}
-    SELECT doc_id, {_QUALITY_EXPR} AS quality
-    FROM m
-    """,
-    note="registered-UDF surface: the quality formula as a named "
-    "spark.udf.register'd Arrow pandas_udf invoked from spark.sql -- "
-    "same bit-level formula as quality_score, so the shared "
-    "expression oracle applies verbatim",
-)
-def _sql_udf_quality(spark, sf):
-    return text.sql_udf_quality(spark, _t(spark, sf, "documents"))
-
-
-@_register(
-    "udtf_sentence_split",
-    """
-    WITH segs AS (
-      SELECT doc_id,
-             unnest(string_split_regex(text, '[.!?]+')) AS sentence,
-             generate_subscripts(string_split_regex(text, '[.!?]+'), 1) AS pos
-      FROM documents)
-    SELECT doc_id,
-           CAST(row_number() OVER (PARTITION BY doc_id ORDER BY pos) - 1
-                AS INTEGER) AS sent_idx,
-           sentence
-    FROM segs
-    WHERE sentence <> ''
-    """,
-    note="registered-UDTF surface: Python table function splitting "
-    "docs into sentences on [.!?]+ runs, invoked via SQL LATERAL -- "
-    "the reference's multi-emit Job.map as a SQL-facing extension "
-    "point; empty segments dropped, raw segment bytes kept",
-)
-def _udtf_sentence_split(spark, sf):
-    return text.udtf_sentence_split(spark, _t(spark, sf, "documents"))
-
-
-@_register(
-    "sql_udaf_median",
-    """
-    SELECT lang, source,
-           round(CAST(median(n_chars) AS DOUBLE), 1) AS median_chars,
-           count(*) AS n_docs
-    FROM documents GROUP BY lang, source
-    """,
-    note="registered-UDAF surface (completes the UDF/UDTF/UDAF "
-    "extension triad): grouped-aggregate pandas UDFs (numpy median + "
-    "count) invoked from spark.sql under GROUP BY -- np.median's "
-    "interpolated midpoint equals quantile_cont(0.5) bit-for-bit on "
-    "int-valued input",
-)
-def _sql_udaf_median(spark, sf):
-    return text.sql_udaf_median(spark, _t(spark, sf, "documents"))
-
-
-@_register(
-    "quality_gopher_flags",
-    f"""
-    WITH toks AS (
-      SELECT doc_id, text, {_TOKS} AS t,
-             string_split(text, chr(10)) AS lines
+    WITH ranked AS (
+      SELECT n_chars AS score,
+             CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos,
+             row_number() OVER (ORDER BY n_chars DESC, doc_id) AS rn
       FROM documents),
-    m AS (
-      SELECT doc_id,
-        CAST(len(t) AS INTEGER) AS n_words,
-        length(regexp_replace(lower(text),
-                              '[ ' || chr(9) || chr(10) || chr(11)
-                                   || chr(12) || chr(13) || ']',
-                              '', 'g')) AS tok_chars,
-        length(text) - length(replace(text, '#', '')) AS n_hash,
-        (length(text) - length(replace(text, '...', ''))) / 3
-          AS n_ellipsis,
-        greatest(len(lines), 1) AS n_lines,
-        len(list_filter(lines,
-            l -> ltrim(l) LIKE '-%' OR ltrim(l) LIKE '*%'))
-          AS bullet_lines,
-        len(list_filter(lines, l -> rtrim(l) LIKE '%...'))
-          AS ellipsis_lines,
-        len(list_filter(['the','a','of','and','to','in','is'],
-            s -> list_contains(t, s))) AS stop_hits
-      FROM toks)
-    SELECT doc_id, n_words,
-      round(tok_chars * 1.0 / greatest(n_words, 1), 4) AS mean_word_len,
-      CAST(n_words >= 50 AND n_words <= 100000 AS INT) AS f_word_count,
-      CAST(tok_chars * 1.0 / greatest(n_words, 1) >= 3.0
-           AND tok_chars * 1.0 / greatest(n_words, 1) <= 10.0 AS INT)
-        AS f_mean_word_len,
-      CAST((n_hash + n_ellipsis) * 1.0 / greatest(n_words, 1) < 0.1
-           AS INT) AS f_symbol_ratio,
-      CAST(bullet_lines * 1.0 / n_lines <= 0.9 AS INT) AS f_bullet_lines,
-      CAST(ellipsis_lines * 1.0 / n_lines <= 0.3 AS INT)
-        AS f_ellipsis_lines,
-      CAST(stop_hits >= 2 AS INT) AS f_stopwords,
-      CAST(CAST(n_words >= 50 AND n_words <= 100000 AS INT)
-         * CAST(tok_chars * 1.0 / greatest(n_words, 1) >= 3.0
-                AND tok_chars * 1.0 / greatest(n_words, 1) <= 10.0 AS INT)
-         * CAST((n_hash + n_ellipsis) * 1.0 / greatest(n_words, 1) < 0.1
-                AS INT)
-         * CAST(bullet_lines * 1.0 / n_lines <= 0.9 AS INT)
-         * CAST(ellipsis_lines * 1.0 / n_lines <= 0.3 AS INT)
-         * CAST(stop_hits >= 2 AS INT) AS INT) AS keep
-    FROM m
+    cum AS (
+      SELECT score, rn,
+             sum(pos) OVER (ORDER BY rn
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS cum_pos
+      FROM ranked),
+    tot AS (
+      SELECT count(*) AS n,
+             sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_pos
+      FROM documents),
+    cuts AS (
+      SELECT k, n_pos,
+             CAST(floor(n * k / 10.0) AS INTEGER) AS rank_cut
+      FROM range(1, 11) t(k), tot)
+    SELECT k * 10 AS cut_pct,
+           CAST(rank_cut AS BIGINT) AS rank_cut,
+           CAST(score AS BIGINT) AS score_cut,
+           CAST(cum_pos AS BIGINT) AS n_pos_at_cut,
+           CAST(CAST(round(cum_pos * 1e6 / CAST(rank_cut AS DOUBLE))
+                     AS BIGINT) AS DOUBLE) / 1e6 AS precision,
+           CAST(CAST(round(cum_pos * 1e6 / CAST(n_pos AS DOUBLE))
+                     AS BIGINT) AS DOUBLE) / 1e6 AS recall
+    FROM cum JOIN cuts ON rn = rank_cut
     """,
-    note="Gopher/Dolma-style rule-based quality gate: auditable "
-    "per-rule INT flags (word-count/mean-word-length bounds, "
-    "symbol-to-word ratio, bullet/ellipsis line fractions, distinct "
-    "stopword minimum) + conjunctive keep -- all row-local length "
-    "arithmetic and array filters, map-only at any scale",
+    note="precision/recall of the length-as-English detector at 10 "
+    "coverage cuts (roc_auc's operating-points companion): ranks "
+    "deterministic via the (score DESC, doc_id) unique-key order; "
+    "the rank space is compressed to distinct scores (roc_auc's "
+    "discipline), each floor(N*k/10) cut located in its score "
+    "bucket by a 10-row broadcast inequality join, in-bucket rank "
+    "windowed per cut; ratios at integer 1e-6 scale",
 )
-def _quality_gopher_flags(spark, sf):
-    return text.quality_gopher_flags(_t(spark, sf, "documents"))
+def _ml_pr_curve(spark, sf):
+    return ml.pr_curve_lang_length(_t(spark, sf, "documents"))
 
 
 @_register(
-    "corpus_token_budget",
-    f"""
-    WITH agg AS (
-      SELECT lang, CAST(sum(len({_TOKS})) AS BIGINT) AS n_tokens
-      FROM documents GROUP BY lang),
-    tot AS (SELECT sum(sqrt(CAST(n_tokens AS DOUBLE))) AS ptot FROM agg)
-    SELECT lang, n_tokens,
-           round(sqrt(CAST(n_tokens AS DOUBLE)) / ptot, 6) AS temp_share,
-           round(sqrt(CAST(n_tokens AS DOUBLE)) / ptot * 1000000.0, 2)
-             AS alloc_tokens,
-           round(sqrt(CAST(n_tokens AS DOUBLE)) / ptot * 1000000.0
-                 / n_tokens, 4) AS epochs
-    FROM agg CROSS JOIN tot
-    """,
-    note="token-budget planner: temperature (sqrt) shares over exact "
-    "per-language token sums allocate a fixed budget and report the "
-    "implied epoch/oversampling count per language; one token-sum "
-    "agg + a 1-row totals broadcast",
-)
-def _corpus_token_budget(spark, sf):
-    return text.corpus_token_budget(_t(spark, sf, "documents"))
-
-
-_SQL_PIVOT_QTY = """
-    SELECT l_returnflag,
-           CAST(COALESCE(o, 0) AS DOUBLE) AS qty_open,
-           CAST(COALESCE(f, 0) AS DOUBLE) AS qty_finished
-    FROM (SELECT l_returnflag, l_linestatus,
-                 CAST(l_quantity AS DECIMAL(18,2)) AS q FROM lineitem)
-    PIVOT (SUM(q) FOR l_linestatus IN ('O' AS o, 'F' AS f))
-"""
-
-
-@_register(
-    "sql_pivot_qty",
+    "ml_ridge_two_feature",
     """
-    SELECT l_returnflag,
-           CAST(COALESCE(sum(CASE WHEN l_linestatus = 'O'
-                 THEN CAST(l_quantity AS DECIMAL(18,2)) END), 0)
-                AS DOUBLE) AS qty_open,
-           CAST(COALESCE(sum(CASE WHEN l_linestatus = 'F'
-                 THEN CAST(l_quantity AS DECIMAL(18,2)) END), 0)
-                AS DOUBLE) AS qty_finished
-    FROM lineitem GROUP BY l_returnflag
+    WITH base AS (
+      SELECT CAST(l_quantity AS BIGINT) AS x1,
+             CAST(round(l_discount * 10000) AS BIGINT) AS x2,
+             CAST(round(l_extendedprice * 100) AS BIGINT) AS y
+      FROM lineitem),
+    agg AS (
+      SELECT count(*) AS n_i,
+             CAST(count(*) AS DOUBLE) AS n,
+             CAST(sum(x1) AS DOUBLE) AS s1,
+             CAST(sum(x2) AS DOUBLE) AS s2,
+             CAST(sum(y) AS DOUBLE) AS sy,
+             CAST(sum(x1 * x1) AS DOUBLE) AS s11,
+             CAST(sum(x2 * x2) AS DOUBLE) AS s22,
+             CAST(sum(x1 * x2) AS DOUBLE) AS s12,
+             CAST(sum(x1 * y) AS DOUBLE) AS s1y,
+             CAST(sum(x2 * y) AS DOUBLE) AS s2y
+      FROM base),
+    cen AS (
+      SELECT n_i, n, s1, s2, sy,
+             s11 - s1 * s1 / n AS c11,
+             s22 - s2 * s2 / n AS c22,
+             s12 - s1 * s2 / n AS c12,
+             s1y - s1 * sy / n AS c1y,
+             s2y - s2 * sy / n AS c2y
+      FROM agg),
+    fit AS (
+      SELECT n_i, n, s1, s2, sy, c1y, c2y, c12, c11, c22,
+             (c11 + 1000.0) * (c22 + 1000.0) - c12 * c12 AS det
+      FROM cen)
+    SELECT CAST(n_i AS BIGINT) AS n,
+           round((c1y * (c22 + 1000.0) - c2y * c12) / det, 6) AS beta_qty,
+           round(((c11 + 1000.0) * c2y - c12 * c1y) / det, 6) AS beta_disc,
+           round(sy / n
+                 - ((c1y * (c22 + 1000.0) - c2y * c12) / det) * (s1 / n)
+                 - (((c11 + 1000.0) * c2y - c12 * c1y) / det) * (s2 / n),
+                 4) AS intercept,
+           1000.0 AS lam
+    FROM fit WHERE n_i > 2
     """,
-    note="SQL PIVOT intake shape: Spark's native FROM ... PIVOT "
-    "(SUM FOR col IN (...)) syntax, which Catalyst lowers to the "
-    "same conditional-aggregate plan the oracle states explicitly "
-    "with CASE -- one scan, one grouped agg, DECIMAL-exact sums",
+    note="closed-form two-feature ridge fit of revenue cents on "
+    "(quantity, discount-percent): exact integer moments off ONE "
+    "scan, the 2x2 regularized normal equations solved as scalar "
+    "double expressions in the same operation order on both engines "
+    "(intercept unpenalized, centered parameterization)",
 )
-def _sql_pivot_qty(spark, sf):
-    from ..sql import run_sql
-
-    return run_sql(spark, sf, _SQL_PIVOT_QTY)
-
-
+def _ml_ridge_two_feature(spark, sf):
+    return ml.ridge_two_feature(_t(spark, sf, "lineitem"))

@@ -1,33 +1,17 @@
-"""streaming section of the declared query registry -- bodies verbatim
-from the monolithic plans/registry.py (round-8 maintainability split;
-identical registry() output, zero plan changes)."""
+"""Streaming section of the declared query registry: every ``stream_*``
+query, each a drained Structured Streaming job from
+``streaming/jobs.py`` whose oracle is its batch equivalent."""
+
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
-
-from ...operators import (  # noqa: F401
-    analytics,
-    dedup,
-    ml,
-    multimodal,
-    relational,
-    similarity,
-    temporal,
-    text,
-)
-from ...sources.tables import load_table  # noqa: F401
-from .core import (  # noqa: F401
+from .core import (
     _EVTS,
-    _TOKS,
-    _WORDS_CTE,
+    _QUALITY_EXPR,
+    _QUALITY_MEASURES_CTE,
     _register,
-    _t,
+    _SESSION_WINDOW_SQL,
+    _WORDS_CTE,
 )
-from .temporal import _SESSION_WINDOW_SQL  # noqa: F401
-
-
-# ----------------------------------------------------- streaming (M6)
 
 
 @_register(
@@ -210,32 +194,6 @@ def _stream_sliding_window(spark, sf):
 
 
 @_register(
-    "join_bucketed_colocated",
-    """
-    SELECT c_nationkey, count(*) AS n_orders,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
-    FROM orders JOIN customer ON o_custkey = c_custkey
-    GROUP BY c_nationkey
-    """,
-    note="bucketed-table sort-merge join, exchange-free on both sides "
-    "(plan asserted in tests); oracle is the plain equi-join",
-)
-def _join_bucketed_colocated(spark, sf):
-    import pathlib
-
-    from ...sources.tables import source_fingerprint
-
-    suffix = "_" + pathlib.Path(sf).name.replace(".", "_")
-    return relational.join_bucketed_colocated(
-        spark,
-        _t(spark, sf, "orders"),
-        _t(spark, sf, "customer"),
-        table_suffix=suffix,
-        source_fp=source_fingerprint(sf, "orders", "customer"),
-    )
-
-
-@_register(
     "stream_stream_join",
     """
     WITH e AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type
@@ -298,339 +256,176 @@ def _stream_foreachbatch_idempotent(spark, sf):
 
 
 @_register(
-    "lm_unigram_score",
+    "stream_session_window_watermarked",
     f"""
-    {_WORDS_CTE},
-    cnt AS (SELECT word, count(*) AS c FROM words GROUP BY word),
-    tot AS (SELECT count(*) * 1.0 AS t FROM words)
-    SELECT doc_id, count(*) AS n_tokens,
-           round(avg(ln(c / t)), 4) AS avg_logprob
-    FROM words JOIN cnt USING (word), tot
-    GROUP BY doc_id
+    SELECT * FROM ({_SESSION_WINDOW_SQL})
+    WHERE session_end <= (SELECT max(CAST(ts AS TIMESTAMP))
+                          - INTERVAL 60 MINUTE FROM events)
     """,
-    note="unigram-LM avg token log-probability (perplexity-filter family)",
+    note="unbounded sessionization posture: watermark + session_window "
+    "+ append mode; sink holds sessions the watermark closed "
+    "(last event <= max ts - delay - gap)",
 )
-def _lm_unigram_score(spark, sf):
-    return text.lm_unigram_score(_t(spark, sf, "documents"))
+def _stream_session_window_watermarked(spark, sf):
+    from ...streaming.jobs import stream_session_window_watermarked
+
+    return stream_session_window_watermarked(spark, sf)
 
 
 @_register(
-    "char_entropy",
-    """
-    WITH chars AS (
-      SELECT doc_id, length(text) AS n_chars,
-             unnest(list_transform(range(1, length(text) + 1),
-                    i -> substr(text, CAST(i AS INT), 1))) AS ch
-      FROM documents WHERE length(text) > 0),
-    hist AS (SELECT doc_id, n_chars, ch, count(*) AS c
-             FROM chars GROUP BY doc_id, n_chars, ch)
-    SELECT doc_id, max(n_chars) AS n_chars,
-           round(-sum((c * 1.0 / n_chars) * log2(c * 1.0 / n_chars)), 4)
-               AS char_entropy
-    FROM hist GROUP BY doc_id
-    """,
-    note="per-doc Shannon character entropy (garbage/boilerplate quality "
-    "signal); char split via sequence+substring so the RE2 oracle mirrors "
-    "it exactly; alphabet-bounded per-doc histograms",
-)
-def _char_entropy(spark, sf):
-    return text.char_entropy(_t(spark, sf, "documents"))
-
-
-@_register(
-    "bm25_score",
+    "stream_quality_filter",
     f"""
-    WITH toks AS (SELECT doc_id, {{toks}} AS t FROM documents),
-    dl AS (SELECT doc_id, len(t) AS dl FROM toks),
-    stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-    words AS (SELECT doc_id, unnest(t) AS word FROM toks),
-    qw AS (SELECT * FROM words
-           WHERE word IN ('data', 'model', 'training', 'quality')),
-    tf AS (SELECT doc_id, word, count(*) AS tf FROM qw GROUP BY doc_id, word),
-    df AS (SELECT word, count(DISTINCT doc_id) AS df FROM qw GROUP BY word)
-    SELECT doc_id, count(*) AS n_matched_terms,
-           round(sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5))
-                     * tf * 2.2
-                     / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))), 4) AS bm25
-    FROM tf JOIN df USING (word) JOIN dl USING (doc_id) CROSS JOIN stats
-    GROUP BY doc_id
-    """.replace("{toks}", _TOKS),
-    note="Okapi BM25 relevance vs a fixed query-term set; the explosion is "
-    "pre-filtered to query terms (work tracks query-term occurrences, not "
-    "vocabulary); corpus stats broadcast",
-)
-def _bm25_score(spark, sf):
-    return text.bm25_score(_t(spark, sf, "documents"))
-
-
-@_register(
-    "event_transition_matrix",
-    f"""
-    WITH t AS (
-      SELECT event_type AS cur_type,
-             lead(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS next_type
-      FROM {{evts}}),
-    m AS (SELECT cur_type, next_type, count(*) AS n_transitions
-          FROM t WHERE next_type IS NOT NULL GROUP BY cur_type, next_type)
-    SELECT cur_type, next_type, n_transitions,
-           round(n_transitions * 1.0
-                 / sum(n_transitions) OVER (PARTITION BY cur_type), 4) AS p_next
+    WITH {_QUALITY_MEASURES_CTE.lstrip().rstrip()}
+    SELECT doc_id, n_tokens,
+           round(n_punct * 1.0 / greatest(n_chars, 1), 4) AS punct_ratio,
+           round(stop_hits * 1.0 / greatest(n_tokens, 1), 4) AS stopword_ratio,
+           {_QUALITY_EXPR} AS quality
     FROM m
-    """.replace("{evts}", _EVTS),
-    note="first-order Markov transition matrix over per-user event "
-    "sequences (lead window -> alphabet-sized count matrix -> row-"
-    "normalized probabilities)",
+    WHERE {_QUALITY_EXPR} >= 0.5
+    """,
+    note="batch quality_score operator applied UNCHANGED to a stream "
+    "(map-only => stateless append mode, no state store/watermark); "
+    "bounded drain == the filtered batch result",
 )
-def _event_transition_matrix(spark, sf):
-    return temporal.event_transition_matrix(_t(spark, sf, "events"))
+def _stream_quality_filter(spark, sf):
+    from ...streaming.jobs import stream_quality_filter
+
+    return stream_quality_filter(spark, sf)
 
 
-def _markov_stationary_oracle_sql(rounds: int = 12) -> str:
-    """Unrolled chained-CTE mirror of
-    ``temporal.event_markov_stationary``: one MATERIALIZED CTE per
-    power-iteration round (MATERIALIZED keeps DuckDB from inlining
-    the chain exponentially -- the graph_kcore lesson), each folding
-    the per-target terms in SORTED source order via seedless
-    ``list_reduce`` (bit-equal to the engine's 0.0-seeded fold since
-    IEEE 0 + x == x for positive x)."""
-    parts = [
-        f"""
-    WITH t AS (
-      SELECT user_id, event_type AS cur_type,
-             lead(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS next_type
-      FROM {_EVTS}),
-    m AS MATERIALIZED (
-      SELECT cur_type, next_type,
-             count(*) * 1.0 / sum(count(*)) OVER (PARTITION BY cur_type)
-               AS mp
-      FROM t WHERE next_type IS NOT NULL GROUP BY cur_type, next_type),
-    v0 AS MATERIALIZED (
-      SELECT cur_type AS state, 1.0e0 / count(*) OVER () AS p
-      FROM (SELECT DISTINCT cur_type FROM m))"""
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(
-            f""",
-    v{r} AS MATERIALIZED (
-      SELECT m.next_type AS state,
-             list_reduce(list(v.p * m.mp ORDER BY v.state),
-                         (a, b) -> a + b) AS p
-      FROM v{r - 1} v JOIN m ON m.cur_type = v.state
-      GROUP BY m.next_type)"""
-        )
-    parts.append(
-        f"""
-    SELECT state, round(p, 6) AS pi FROM v{rounds}
-    """
+@_register(
+    "stream_topk_windowed",
+    f"""
+    WITH counts AS (
+      SELECT date_trunc('hour', ts) AS window_start, event_type,
+             CAST(count(*) AS BIGINT) AS n_events
+      FROM {_EVTS} GROUP BY 1, 2
     )
-    return "".join(parts)
-
-
-@_register(
-    "event_markov_stationary",
-    _markov_stationary_oracle_sql(12),
-    note="stationary distribution of the event-type Markov chain by "
-    "12-round power iteration: matrix checkpointed once, every round "
-    "joins two ALPHABET-sized frames with a sorted-source "
-    "deterministic fold (bit-identical double sums both engines); "
-    "unrolled MATERIALIZED chained-CTE oracle",
+    SELECT window_start, event_type, n_events,
+           CAST(row_number() OVER (PARTITION BY window_start
+                ORDER BY n_events DESC, event_type) AS INT) AS rnk
+    FROM counts
+    QUALIFY rnk <= 3
+    """,
+    note="streaming trending-now: unbounded tier maintains windowed "
+    "counts, rank tier is a bounded batch query over the drained "
+    "aggregate (windows x type-alphabet sized)",
 )
-def _event_markov_stationary(spark, sf):
-    return temporal.event_markov_stationary(_t(spark, sf, "events"))
+def _stream_topk_windowed(spark, sf):
+    from ...streaming.jobs import stream_topk_windowed
+
+    return stream_topk_windowed(spark, sf)
 
 
 @_register(
-    "sequence_likelihood",
+    "stream_session_timeout",
     f"""
-    WITH t AS (
-      SELECT user_id, event_type AS cur_type,
-             lead(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS next_type
-      FROM {{evts}}),
-    tr AS (SELECT * FROM t WHERE next_type IS NOT NULL),
-    m AS (SELECT cur_type, next_type,
-                 count(*) * 1.0
-                 / sum(count(*)) OVER (PARTITION BY cur_type) AS p
-          FROM tr GROUP BY cur_type, next_type)
-    SELECT user_id, count(*) AS n_transitions,
-           round(avg(log2(p)), 4) AS avg_log2p
-    FROM tr JOIN m USING (cur_type, next_type)
-    GROUP BY user_id
-    """.replace("{evts}", _EVTS),
-    note="per-user behavioral likelihood under the corpus transition matrix "
-    "(sequence-anomaly score, the behavioral lm_unigram_score); matrix is "
-    "alphabet^2 and broadcast",
-)
-def _sequence_likelihood(spark, sf):
-    return temporal.sequence_likelihood(_t(spark, sf, "events"))
-
-
-@_register(
-    "window_percent_rank",
-    """
-    SELECT o_orderkey, o_orderpriority, o_totalprice,
-           round(percent_rank() OVER w, 6) AS pct_rank,
-           round(cume_dist() OVER w, 6) AS cume
-    FROM orders
-    WINDOW w AS (PARTITION BY o_orderpriority
-                 ORDER BY o_totalprice, o_orderkey)
+    WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id
+               FROM events),
+    lg AS (
+      SELECT user_id, ts, event_id,
+             CASE WHEN lag(ts) OVER w IS NULL
+                    OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
+                       > 1800000000
+                  THEN 1 ELSE 0 END AS is_new
+      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+    s AS (
+      SELECT user_id, ts,
+             sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+      FROM lg),
+    sess AS (
+      SELECT user_id, sid, min(ts) AS session_start,
+             max(ts) AS session_end, CAST(count(*) AS BIGINT) AS n_events
+      FROM s GROUP BY 1, 2),
+    mx AS (SELECT max(epoch_us(ts)) AS mxus FROM e),
+    lastsess AS (SELECT user_id, max(sid) AS last_sid FROM sess GROUP BY 1)
+    SELECT user_id, session_start, session_end, n_events,
+           CASE WHEN sid <> last_sid THEN 'gap' ELSE 'timeout' END
+             AS closed_by
+    FROM sess JOIN lastsess USING (user_id), mx
+    WHERE sid <> last_sid
+       OR (epoch_us(session_end) + 1800000000) // 1000
+          < mxus // 1000 - 1800000
     """,
-    note="distribution-position window pair (percent_rank + cume_dist) per "
-    "priority class; one window pass",
+    note="timer-driven session closure (r13: native session_window "
+    "drain + the declared emission rule as a batch post-pass -- no "
+    "Python state boundary): in-stream-closed sessions emit 'gap', "
+    "the trailing open session emits 'timeout' iff the final "
+    "watermark (max - 30min, ms granularity) passes its timer at "
+    "last+gap; oracle = batch sessions minus the withheld tail",
 )
-def _window_percent_rank(spark, sf):
-    return relational.window_percent_rank(_t(spark, sf, "orders"))
+def _stream_session_timeout(spark, sf):
+    from ...streaming.jobs import stream_session_timeout
+
+    return stream_session_timeout(spark, sf)
 
 
 @_register(
-    "quality_constraints",
-    """
-    WITH agg AS (
-      SELECT count(*) AS n,
-             count(l_orderkey) * 1.0 / count(*) AS complete_orderkey,
-             count(DISTINCT (l_orderkey, l_linenumber)) * 1.0 / count(*) AS unique_pk,
-             sum(CASE WHEN l_quantity BETWEEN 1 AND 50 THEN 1 ELSE 0 END) * 1.0 / count(*) AS range_quantity,
-             sum(CASE WHEN l_discount BETWEEN 0.0 AND 0.1 THEN 1 ELSE 0 END) * 1.0 / count(*) AS range_discount,
-             sum(CASE WHEN l_tax BETWEEN 0.0 AND 0.08 THEN 1 ELSE 0 END) * 1.0 / count(*) AS range_tax,
-             sum(CASE WHEN l_extendedprice > 0 THEN 1 ELSE 0 END) * 1.0 / count(*) AS positive_price,
-             sum(CASE WHEN l_returnflag IN ('A','N','R') THEN 1 ELSE 0 END) * 1.0 / count(*) AS domain_returnflag,
-             sum(CASE WHEN l_linestatus IN ('O','F') THEN 1 ELSE 0 END) * 1.0 / count(*) AS domain_linestatus
-      FROM lineitem),
-    long AS (
-      SELECT 'complete_orderkey' AS "constraint", complete_orderkey AS m FROM agg
-      UNION ALL SELECT 'unique_pk', unique_pk FROM agg
-      UNION ALL SELECT 'range_quantity', range_quantity FROM agg
-      UNION ALL SELECT 'range_discount', range_discount FROM agg
-      UNION ALL SELECT 'range_tax', range_tax FROM agg
-      UNION ALL SELECT 'positive_price', positive_price FROM agg
-      UNION ALL SELECT 'domain_returnflag', domain_returnflag FROM agg
-      UNION ALL SELECT 'domain_linestatus', domain_linestatus FROM agg)
-    SELECT "constraint", round(m, 6) AS metric, m >= 1.0 AS passed
-    FROM long ORDER BY "constraint"
-    """,
-    note="Deequ-style data-quality suite: completeness / compound-key "
-    "uniqueness / ranges / domains in ONE aggregation pass (per-constraint "
-    "re-scans don't survive 100 TB); long-form report oracle",
-)
-def _quality_constraints(spark, sf):
-    return relational.quality_constraints(_t(spark, sf, "lineitem"))
-
-
-@_register(
-    "stats_correlation",
-    """
-    WITH m AS (
-      SELECT l_returnflag, count(*) AS n,
-             sum(l_quantity) AS sx, sum(l_extendedprice) AS sy,
-             sum(l_quantity * l_quantity) AS sxx,
-             sum(l_extendedprice * l_extendedprice) AS syy,
-             sum(l_quantity * l_extendedprice) AS sxy
-      FROM lineitem GROUP BY l_returnflag)
-    SELECT l_returnflag, n,
-           round((n * sxy - sx * sy)
-                 / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 4)
-               AS qty_price_corr
-    FROM m
-    """,
-    note="Pearson corr from explicit mergeable moments (one agg pass); "
-    "same closed form on both engines",
-)
-def _stats_correlation(spark, sf):
-    return relational.stats_correlation(_t(spark, sf, "lineitem"))
-
-
-@_register(
-    "window_ntile",
-    """
-    SELECT o_custkey, o_orderkey, o_totalprice,
-           CAST(ntile(4) OVER (PARTITION BY o_custkey
-                               ORDER BY o_totalprice DESC, o_orderkey) AS INT)
-               AS spend_quartile
-    FROM orders
-    """,
-    note="per-group equal-count buckets; global ntile deliberately "
-    "avoided (see quality_stratify)",
-)
-def _window_ntile(spark, sf):
-    return relational.window_ntile(_t(spark, sf, "orders"))
-
-
-@_register(
-    "join_full_outer",
-    """
-    WITH big AS (SELECT o_custkey, count(*) AS n_big FROM orders
-                 WHERE o_totalprice > 400000 GROUP BY o_custkey),
-    recent AS (SELECT o_custkey, count(*) AS n_recent FROM orders
-               WHERE o_orderdate >= '1999-06-01' GROUP BY o_custkey)
-    SELECT coalesce(big.o_custkey, recent.o_custkey) AS o_custkey,
-           coalesce(n_big, 0) AS n_big, coalesce(n_recent, 0) AS n_recent
-    FROM big FULL OUTER JOIN recent ON big.o_custkey = recent.o_custkey
-    """,
-    note="full outer join of two per-customer aggregates, keys coalesced",
-)
-def _join_full_outer(spark, sf):
-    return relational.join_full_outer(_t(spark, sf, "orders"))
-
-
-@_register(
-    "window_lead_delta",
+    "stream_cdc_upsert",
     f"""
-    SELECT user_id, event_id,
-           (epoch_us(lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))
-            - epoch_us(ts)) / 1000000.0 AS gap_s
-    FROM {_EVTS}
-    """,
-    note="per-user inter-arrival gaps via lead window; exact-micros arithmetic",
-)
-def _window_lead_delta(spark, sf):
-    return temporal.window_lead_delta(_t(spark, sf, "events"))
-
-
-@_register(
-    "ordered_event_sequences",
-    f"""
-    SELECT user_id, count(*) AS n_events,
-           array_to_string(list_slice(list(event_type ORDER BY ts, event_id),
-                                      1, 50), ',') AS action_seq
-    FROM {_EVTS}
-    GROUP BY user_id
-    """,
-    note="per-user ordered action sequence string (training-sequence build)",
-)
-def _ordered_event_sequences(spark, sf):
-    return temporal.ordered_event_sequences(_t(spark, sf, "events"))
-
-
-@_register(
-    "cdc_latest_wins",
-    f"""
-    WITH base AS (SELECT event_id, ts, user_id, event_type, value, 0 AS version
+    WITH base AS (SELECT event_id, ts, user_id, event_type, value,
+                         0 AS version
                   FROM {_EVTS}),
-    upd AS (SELECT event_id, ts + INTERVAL 1 HOUR AS ts, user_id, event_type,
-                   round(value * 2, 2) AS value, 1 AS version
+    upd AS (SELECT event_id, ts + INTERVAL 1 HOUR AS ts, user_id,
+                   event_type, round(value * 2, 2) AS value,
+                   1 AS version
             FROM {_EVTS} WHERE event_id % 10 = 0),
     u AS (SELECT * FROM base UNION ALL SELECT * FROM upd),
     r AS (SELECT *, row_number() OVER (PARTITION BY event_id
-                                       ORDER BY version DESC, ts DESC) AS rnk
+                                       ORDER BY version DESC, ts DESC)
+                      AS rnk
           FROM u)
-    SELECT event_id, ts, user_id, event_type, round(value, 2) AS value, version
+    SELECT event_id, ts, user_id, event_type,
+           round(value, 2) AS value, version
     FROM r WHERE rnk = 1
     """,
-    note="upsert/merge kernel: union + latest-version-wins rank window",
+    note="MERGE INTO as a stream: change-batch files upsert into a "
+    "persisted parquet target inside foreachBatch by versioned "
+    "copy-on-write (newest complete version + batch -> "
+    "latest-(version, ts)-wins -> target/v<batch_id>) -- "
+    "cdc_latest_wins' kernel made continuous. Latest-wins is "
+    "associative over batches, so the drained target equals the "
+    "batch oracle regardless of microbatch slicing "
+    "(maxFilesPerTrigger=2 forces several), and a replayed batch "
+    "whose version is already complete is skipped (restart safety)",
 )
-def _cdc_latest_wins(spark, sf):
-    return relational.cdc_latest_wins(_t(spark, sf, "events"))
+def _stream_cdc_upsert(spark, sf):
+    from ...streaming.jobs import stream_cdc_upsert
+
+    return stream_cdc_upsert(spark, sf)
 
 
 @_register(
-    "sketch_hll_mergeable",
-    None,
-    note="mergeable HLL cardinality sketches (approximate by design); "
-    "merged-vs-direct equality and error bound asserted in tests",
+    "stream_daily_active_users",
+    f"""
+    SELECT date_trunc('day', ts) AS day,
+           CAST(count(DISTINCT user_id) AS BIGINT) AS dau
+    FROM {_EVTS} GROUP BY 1
+    """,
+    note="streaming exact DAU: per-day distinct users as ONE stateful "
+    "collect_set aggregation (streaming rejects count_distinct; the "
+    "set state is the single-operator exact form, swapped for HLL or "
+    "the watermarked dropDuplicates->agg chain unbounded); complete "
+    "mode == batch distinct on the bounded fixture",
 )
-def _sketch_hll_mergeable(spark, sf):
-    return relational.sketch_hll_mergeable(_t(spark, sf, "events"))
+def _stream_daily_active_users(spark, sf):
+    from ...streaming.jobs import stream_daily_active_users
+
+    return stream_daily_active_users(spark, sf)
 
 
+@_register(
+    "stream_hll_dau",
+    None,
+    note="streaming approximate DAU via per-day approx_count_distinct "
+    "(ONE constant-size HLL sketch per day as streaming state -- the "
+    "bounded-at-any-cardinality scale path next to "
+    "stream_daily_active_users' exact watermarked-dedup form); "
+    "approximate by design -> rows-only, relative error bounded in "
+    "RECALL.json",
+)
+def _stream_hll_dau(spark, sf):
+    from ...streaming.jobs import stream_hll_dau
+
+    return stream_hll_dau(spark, sf)

@@ -389,7 +389,16 @@ def stream_tumbling_window_watermarked(
     holds exactly the windows whose end <= final watermark
     (max event time - delay); trailing windows stay in state and are
     deliberately withheld. The oracle applies the same cutoff.
+
+    One run directory per fixture, ``.tmp/stream/<sf>_wm_tumbling``
+    (sink ``out/``, checkpoint ``ckpt/``): it is wiped before each
+    run, so every drain starts from an empty sink and a fresh
+    checkpoint, and the checkpoint is removed once the drain ends. A
+    returned DataFrame therefore reads its run's output only until the
+    next call on the same fixture.
     """
+    import shutil
+
     path = _stage_stream_dir(spark, sf_dir, "events")
     schema = load_table(spark, sf_dir, "events").schema
     events = spark.readStream.schema(schema).parquet(path)
@@ -404,7 +413,8 @@ def stream_tumbling_window_watermarked(
             "total_value",
         )
     )
-    run = _REPO_ROOT / ".tmp" / "stream" / f"wm_{uuid.uuid4().hex[:12]}"
+    run = _REPO_ROOT / ".tmp" / "stream" / f"{pathlib.Path(sf_dir).name}_wm_tumbling"
+    shutil.rmtree(run, ignore_errors=True)
     with _stream_conf(spark):
         q = (
             agg.writeStream.outputMode("append")
@@ -415,6 +425,7 @@ def stream_tumbling_window_watermarked(
             .start()
         )
         q.awaitTermination()
+    shutil.rmtree(run / "ckpt", ignore_errors=True)
     # explicit schema: a zero-emission run leaves no data files to
     # infer from (cannot happen on the fixtures, but fail loud > flaky)
     return spark.read.schema(agg.schema).parquet(str(run / "out"))

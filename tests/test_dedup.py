@@ -816,9 +816,7 @@ def test_kcore_converged_at_fixture_rounds(spark, sf_medium):
     round changes nothing, and every surviving node keeps deg >= k."""
     from pyspark.sql import functions as F
 
-    from java_mapreduce_framework_spark.plans.registry import (
-        _copurchase_pairs,
-    )
+    from java_mapreduce_framework_spark.plans.registry.graph import _copurchase_pairs
     from java_mapreduce_framework_spark.operators.graph import kcore
 
     pairs = _copurchase_pairs(spark, sf_medium)

@@ -229,6 +229,35 @@ def test_watermarked_tumbling_window_emits_closed_windows(spark, sf_small):
     assert len(streamed) < total
 
 
+def test_watermarked_tumbling_window_reuses_one_run_dir(spark, sf_small):
+    """Two calls leave one run directory per fixture, and it holds no
+    checkpoint: the directory is wiped before each drain and the
+    checkpoint removed after it."""
+    import pathlib
+
+    from java_mapreduce_framework_spark.streaming.jobs import (
+        _REPO_ROOT,
+        stream_tumbling_window_watermarked,
+    )
+
+    stream = _REPO_ROOT / ".tmp" / "stream"
+    sf = pathlib.Path(sf_small).name
+    run = stream / f"{sf}_wm_tumbling"
+
+    def names():
+        return {p.name for p in stream.iterdir()} if stream.is_dir() else set()
+
+    before = names()
+    runs = [
+        sorted(tuple(r) for r in stream_tumbling_window_watermarked(spark, sf_small).collect())
+        for _ in range(2)
+    ]
+    assert runs[0] == runs[1]
+    assert names() - before - {f"{sf}_events"} <= {run.name}
+    assert run.is_dir()
+    assert not (run / "ckpt").exists()
+
+
 def test_stream_stream_join_equals_batch_self_join(spark, sf_small):
     """Watermarked stream-stream inner join on bounded input emits
     exactly the batch self-join's pairs (emission is match-driven;

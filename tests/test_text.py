@@ -1113,7 +1113,7 @@ def test_t_closeness_flags_planted_skew(spark):
 
 def test_ulm_oracle_horizon_covers_fixture_words(spark, sf_small, sf_medium):
     """The generated ULM oracle unrolls Viterbi positions only up to
-    ``registry._ULM_MAXLEN``; a fixture word longer than that would
+    ``registry.text._ULM_MAXLEN``; a fixture word longer than that would
     silently drop out of the ORACLE's best-path union (the engine
     handles any length) and surface only as an opaque sweep hash
     mismatch. Fail loudly here instead if a fixture regeneration ever
@@ -1121,7 +1121,7 @@ def test_ulm_oracle_horizon_covers_fixture_words(spark, sf_small, sf_medium):
     import pyspark.sql.functions as F
 
     from java_mapreduce_framework_spark.functions.text import words_exploded
-    from java_mapreduce_framework_spark.plans.registry import _ULM_MAXLEN
+    from java_mapreduce_framework_spark.plans.registry.text import _ULM_MAXLEN
     from java_mapreduce_framework_spark.sources.tables import load_table
 
     for sf in (sf_small, sf_medium):
