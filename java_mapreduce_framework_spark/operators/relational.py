@@ -580,28 +580,34 @@ def cdc_latest_wins(events: DataFrame, update_fraction_mod: int = 10) -> DataFra
     base = events.select(
         "event_id", "ts", "user_id", "event_type", "value", F.lit(0).alias("version")
     )
-    updates = (
-        events.filter(F.pmod("event_id", F.lit(update_fraction_mod)) == 0)
-        .select(
-            "event_id",
-            (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("ts"),
-            "user_id",
-            "event_type",
-            F.round(F.col("value") * 2, 2).alias("value"),
-            F.lit(1).alias("version"),
-        )
-    )
-    w = Window.partitionBy("event_id").orderBy(
-        F.col("version").desc(), F.col("ts").desc()
-    )
-    merged = (
-        base.unionByName(updates)
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") == 1)
-    )
+    merged = latest_wins(base.unionByName(cdc_update_batch(events, update_fraction_mod)))
     return merged.select(
         "event_id", "ts", "user_id", "event_type", F.round("value", 2).alias("value"), "version"
     )
+
+
+def cdc_update_batch(events: DataFrame, update_fraction_mod: int = 10) -> DataFrame:
+    """The synthetic change batch of ``cdc_latest_wins``: every
+    ``update_fraction_mod``-th event re-emitted 1 hour later with its
+    value doubled, at version 1."""
+    return events.filter(F.pmod("event_id", F.lit(update_fraction_mod)) == 0).select(
+        "event_id",
+        (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("ts"),
+        "user_id",
+        "event_type",
+        F.round(F.col("value") * 2, 2).alias("value"),
+        F.lit(1).alias("version"),
+    )
+
+
+def latest_wins(rows: DataFrame) -> DataFrame:
+    """Keep the newest (version, ts) row per event_id: one rank window
+    per key, a single hash shuffle. Associative over batches, so a
+    stream may apply it once per microbatch (``stream_cdc_upsert``)."""
+    w = Window.partitionBy("event_id").orderBy(
+        F.col("version").desc(), F.col("ts").desc()
+    )
+    return rows.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") == 1).drop("rnk")
 
 
 def sketch_hll_mergeable(events: DataFrame) -> DataFrame:

@@ -403,11 +403,11 @@ def _stream_cdc_upsert(spark, sf):
            CAST(count(DISTINCT user_id) AS BIGINT) AS dau
     FROM {_EVTS} GROUP BY 1
     """,
-    note="streaming exact DAU: per-day distinct users as ONE stateful "
-    "collect_set aggregation (streaming rejects count_distinct; the "
-    "set state is the single-operator exact form, swapped for HLL or "
-    "the watermarked dropDuplicates->agg chain unbounded); complete "
-    "mode == batch distinct on the bounded fixture",
+    note="streaming exact DAU, bounded state: a watermarked (1 day) "
+    "streaming dropDuplicates on (day, user_id) drained in append mode, "
+    "then a per-day count over the deduped pairs (streaming rejects "
+    "count_distinct; the watermark evicts closed days, so state is "
+    "~2 days of users); bounded drain == batch count(DISTINCT user_id)",
 )
 def _stream_daily_active_users(spark, sf):
     from ...streaming.jobs import stream_daily_active_users

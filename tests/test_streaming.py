@@ -596,3 +596,48 @@ def test_stream_session_timeout_crafted_timer_semantics(spark, tmp_path):
         (2, 1, "gap"),       # closed in-stream by event 5
         # user 2's trailing session: withheld (watermark never passes)
     ]
+
+
+def test_memory_drains_leave_no_view_and_equal_batch(spark, sf_small):
+    """A memory drain drops its ``mem_<uuid>`` sink view once the result
+    DataFrame holds the sink; the DataFrame still reads the drained
+    rows, which equal the batch twin's on every call."""
+    from java_mapreduce_framework_spark.operators.temporal import session_window_agg
+    from java_mapreduce_framework_spark.operators.text import wordcount
+    from java_mapreduce_framework_spark.streaming.jobs import stream_sessionize
+
+    def mem_views():
+        return {r.viewName for r in spark.sql("SHOW VIEWS").collect() if r.viewName.startswith("mem_")}
+
+    cases = [
+        (stream_wordcount, wordcount(load_table(spark, sf_small, "documents"))),
+        (stream_sessionize, session_window_agg(load_table(spark, sf_small, "events"))),
+    ]
+    before = mem_views()
+    for stream_fn, batch in cases:
+        want = sorted(map(tuple, batch.collect()))
+        for _ in range(2):
+            got = stream_fn(spark, sf_small)
+            assert mem_views() == before
+            assert sorted(map(tuple, got.collect())) == want
+
+
+def test_stream_hll_dau_within_recall_bound(spark, sf_small):
+    """stream_hll_dau is rows-only in the oracle sweep; RECALL.json bounds
+    each day's relative error against the exact per-day distinct count
+    at 0.06 (the 3-sigma ceiling for rsd 0.02)."""
+    from pyspark.sql import functions as F
+
+    from java_mapreduce_framework_spark.streaming.jobs import stream_hll_dau
+
+    exact = {
+        r["day"]: r["dau"]
+        for r in load_table(spark, sf_small, "events")
+        .groupBy(F.date_trunc("day", "ts").alias("day"))
+        .agg(F.count_distinct("user_id").alias("dau"))
+        .collect()
+    }
+    approx = {r["day"]: r["dau_approx"] for r in stream_hll_dau(spark, sf_small).collect()}
+    assert approx.keys() == exact.keys() and exact
+    for day, n in exact.items():
+        assert abs(approx[day] - n) / n <= 0.06, (day, approx[day], n)
