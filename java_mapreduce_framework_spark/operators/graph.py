@@ -23,11 +23,10 @@ link-prediction panel (``common_neighbors``, ``adamic_adar``,
 ``degree_assortativity``, ``degree_gini``, ``rich_club``).
 
 Every exchange keys on node ids; no adjacency list ever materializes
-as an array. Iterative operators truncate lineage with
-``localCheckpoint`` each round or every few rounds, size their
-shuffles from the measured state (``session._loop_shuffle_partitions``)
-and let only scalar probes reach the driver -- except the fixed-round
-``label_propagation``, which stays one lazy plan.
+as an array. Iterative operators write only their round body and run
+it through ``session.iterate``, whose docstring is the one statement
+of their checkpoint cadence, shuffle width and stop test -- except the
+fixed-round ``label_propagation``, which stays one lazy plan.
 
 Reference licence: composition target -- chained-jobs model
 (SURVEY.md §2A FIFO queue) over the WordCount substrate
@@ -39,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import _loop_shuffle_partitions
+from ..session import iterate
 
 # ------------------------------------------------------------ kernels
 
@@ -103,49 +102,25 @@ def _with_degrees(df: DataFrame, degs: DataFrame) -> DataFrame:
 def _components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """Min-label propagation over a symmetrized edge list (see
     ``connected_components``): (doc_id, component_id)."""
-    labels = (
-        edges.select(F.col("a").alias("node")).distinct().withColumn("comp", F.col("node"))
-    ).localCheckpoint()
+    labels = edges.select(F.col("a").alias("node")).distinct().withColumn("comp", F.col("node"))
 
-    # Convergence probe: labels only ever decrease under min-propagation,
-    # so sum(comp) is strictly decreasing until the fixpoint -- an exact
-    # test from ONE tiny aggregate over the already-checkpointed frame,
-    # instead of a join of new-vs-old labels (half the per-round jobs).
-    # decimal(38,0) so the sum cannot overflow int64 at real id ranges.
-    def _label_probe(df: DataFrame):
-        # single-row scalar fetch, never row data -- the sanctioned
-        # driver interaction for iterative fixpoint algorithms; the
-        # node count rides in the same aggregate (r12: it sizes the
-        # loop's scale-adaptive shuffle width, guide §2)
-        row = df.agg(
-            F.sum(F.col("comp").cast("decimal(38,0)")), F.count("*")
-        ).first()
-        return row[0], row[1]
+    def step(labels: DataFrame, _) -> DataFrame:
+        nbr_min = (
+            edges.join(labels.withColumnRenamed("node", "b"), "b")
+            .groupBy(F.col("a").alias("node"))
+            .agg(F.min("comp").alias("nbr_comp"))
+        )
+        return labels.join(nbr_min, "node", "left").select(
+            "node", F.least(F.col("comp"), F.coalesce("nbr_comp", "comp")).alias("comp")
+        )
 
-    prev_sum, n_nodes = _label_probe(labels)
-    converged = False
-    with _loop_shuffle_partitions(labels.sparkSession, n_nodes):
-        for _ in range(max_iter):
-            nbr_min = (
-                edges.join(labels.withColumnRenamed("node", "b"), "b")
-                .groupBy(F.col("a").alias("node"))
-                .agg(F.min("comp").alias("nbr_comp"))
-            )
-            labels = (
-                labels.join(nbr_min, "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("comp"), F.coalesce("nbr_comp", "comp")
-                    ).alias("comp"),
-                )
-                .localCheckpoint()
-            )
-            cur_sum, _ = _label_probe(labels)
-            if cur_sum == prev_sum:
-                converged = True
-                break
-            prev_sum = cur_sum
+    # labels only ever decrease under min-propagation, so sum(comp) is
+    # strictly decreasing until the fixpoint -- an exact stop test from
+    # one tiny aggregate instead of a join of new-vs-old labels;
+    # decimal(38,0) so the sum cannot overflow int64 at real id ranges
+    labels, converged = iterate(
+        labels, step, max_iter, probe=[F.sum(F.col("comp").cast("decimal(38,0)"))]
+    )
     if not converged:
         # rounds needed = component diameter; a graph deeper than
         # max_iter would silently get WRONG labels here -- fail loud
@@ -169,10 +144,10 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     minimum label among itself and its neighbors; rounds needed = the
     component diameter (near-dup clusters are tight -- 2-4 rounds in
     practice). Per round: one shuffle joining labels onto edges plus a
-    grouped MIN, and ``localCheckpoint`` truncates lineage so round
-    k's plan does not embed rounds 1..k-1 (unbounded plan growth is
-    what kills naive iterative DataFrame code). The driver loop
-    carries only a changed-row COUNT per round, never row data. Same
+    grouped MIN; the stop test is sum(label), which falls strictly
+    until the fixpoint, and a budget ``max_iter`` shorter than the
+    diameter raises instead of returning wrong labels. Checkpointing,
+    shuffle width and the stop test are ``session.iterate``'s. Same
     dataflow GraphX/GraphFrames runs; for billion-edge graphs swap in
     the large-star/small-star variant -- the per-round shuffle shape
     is identical.
@@ -197,13 +172,13 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 50) -> DataFrame
       and each smaller neighbor except m itself to m.
 
     Both strictly shrink a monotone potential (sum of edge endpoints),
-    so fixpoint detection is two tiny scalar aggregates per round --
-    same sanctioned driver probe as the label-propagation twin -- and
-    at the fixpoint the edge set IS the star (node -> component min).
-    ``localCheckpoint`` per round truncates lineage exactly as in
-    ``connected_components``. Output schema matches it, and the
-    equivalence is asserted across chain/clique/random graphs in
-    tests/test_dedup.py."""
+    so the stop test is one scalar aggregate per round (edge count and
+    endpoint sums) and at the fixpoint the edge set IS the star (node
+    -> component min). Checkpointing, shuffle width and the stop test
+    are ``session.iterate``'s, and a ``max_iter`` budget that runs out
+    raises, as in ``connected_components``. Output schema matches it,
+    and the equivalence is asserted across chain/clique/random graphs
+    in tests/test_dedup.py."""
     p, _ = _undirected(pairs)
     e = p.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).filter(
         F.col("u") != F.col("v")
@@ -241,24 +216,12 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 50) -> DataFrame
         selfs = withm.select("u", F.col("m").alias("v"))
         return nbrs.union(selfs).distinct()
 
-    def _sig(edges: DataFrame):
-        r = edges.agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("u").cast("decimal(38,0)")).alias("su"),
-            F.sum(F.col("v").cast("decimal(38,0)")).alias("sv"),
-        ).first()
-        return (r["n"], r["su"], r["sv"])
-
-    sig = _sig(e)
-    # edge-count partition-sizing probe rides in the signature the
-    # loop already fetches (r12: scale-adaptive loop shuffle width)
-    with _loop_shuffle_partitions(e.sparkSession, sig[0]):
-        for _ in range(max_iter):
-            e = small_star(large_star(e)).localCheckpoint()
-            new_sig = _sig(e)
-            if new_sig == sig:
-                break
-            sig = new_sig
+    sig = [F.count("*")] + [F.sum(F.col(c).cast("decimal(38,0)")) for c in ("u", "v")]
+    e, converged = iterate(e, lambda cur, _: small_star(large_star(cur)), max_iter, probe=sig)
+    if not converged:
+        raise RuntimeError(
+            f"large-star/small-star did not converge in {max_iter} rounds; raise max_iter"
+        )
     # at the fixpoint e is (node -> root); roots have no outgoing edge
     roots = e.select(F.col("u").alias("node"), F.col("v").alias("comp"))
     return (
@@ -309,35 +272,37 @@ def bfs_hops(pairs: DataFrame, max_hops: int = 8) -> DataFrame:
     near-dup to this document", blast-radius analysis for
     contamination tracing.
 
-    Classic frontier expansion: each round joins the frontier to the
-    edge list, anti-joins the visited set, and stamps the hop number;
-    ``localCheckpoint`` truncates lineage per round (the CC
-    discipline) and a scalar count is the only driver probe. Rounds
-    are bounded by ``max_hops``, so worst-case work is max_hops
-    keyed joins — each shuffle bounded by frontier x degree. Matches
-    a depth-bounded recursive-CTE BFS exactly (min hop per node).
+    Classic frontier expansion over one state, the visited set
+    ``(doc_id, hop)``: round h joins the hop-h frontier to the edge
+    list, anti-joins the visited set, and appends the new nodes at hop
+    h + 1. The stop test is the visited count (``session.iterate``
+    owns it, the checkpointing and the shuffle width): an unchanged
+    count means the component is exhausted. ``max_hops`` is a cutoff,
+    not an error -- worst-case work is max_hops keyed joins, each
+    shuffle bounded by frontier x degree. Matches a depth-bounded
+    recursive-CTE BFS exactly (min hop per node); an empty graph has
+    no seed and returns no rows.
 
     Emits (doc_id, hop).
     """
     _, edges = _undirected(pairs)
-    seed = edges.agg(F.min("a").alias("doc_id")).select(
-        "doc_id", F.lit(0).alias("hop")
+    seed = (
+        edges.agg(F.min("a").alias("doc_id"))
+        .filter(F.col("doc_id").isNotNull())
+        .select("doc_id", F.lit(0).alias("hop"))
     )
-    visited = seed.localCheckpoint()
-    frontier = visited
-    for h in range(1, max_hops + 1):
+
+    def step(visited: DataFrame, h: int) -> DataFrame:
         nxt = (
-            frontier.join(edges, frontier["doc_id"] == edges["a"])
+            visited.filter(F.col("hop") == h)
+            .join(edges, F.col("doc_id") == F.col("a"))
             .select(F.col("b").alias("doc_id"))
             .distinct()
             .join(visited, "doc_id", "left_anti")
-            .withColumn("hop", F.lit(h))
-            .localCheckpoint()
         )
-        if nxt.limit(1).count() == 0:  # scalar-only driver probe
-            break
-        visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt
+        return visited.unionByName(nxt.withColumn("hop", F.lit(h + 1)))
+
+    visited, _ = iterate(seed, step, max_hops, probe=[F.count("*")])
     return visited
 
 
@@ -420,12 +385,12 @@ def pagerank(
     Per iteration: one keyed join (rank state × edges), one grouped
     sum per destination, a 1-row dangling-mass aggregate broadcast
     into the update (isolated docs redistribute everywhere), and one
-    update join back onto the static vertex table — the only
-    driver-side scalar is the |V| partition-sizing probe (r12:
-    ``_loop_shuffle_partitions`` derives the loop's shuffle width from
-    the measured state size); ``localCheckpoint`` truncates lineage periodically
-    (the CC discipline), so plan depth stays constant and worst-case
-    work is ``iters`` × (|E| shuffle + |V| agg). The STATIC per-vertex
+    update join back onto the static vertex table; |V| is fetched once
+    and enters the rank expressions as a literal. The state is
+    checkpointed every 3rd round by ``session.iterate`` (whose
+    docstring states the cadence, shuffle width and stop-test
+    contract), so plan depth stays constant and worst-case work is
+    ``iters`` × (|E| shuffle + |V| agg). The STATIC per-vertex
     structure (out-degree, dangling flag) is joined ONCE before the
     loop and carried inside the rank state, so no iteration re-joins
     degrees or re-derives the dangling set (the naive loop pays both
@@ -437,49 +402,45 @@ def pagerank(
     the ~1e-14 reorder noise and far below the ~1e-3 rank scale.
     """
     _, edges = _undirected(pairs)
-    n_row = vertices.agg(F.count("*").cast("double").alias("n")).localCheckpoint()
     # static per-vertex structure, joined once and carried in-state
     vstat = (
         vertices.select("doc_id")
         .join(_degrees(edges), "doc_id", "left")
         .localCheckpoint()
     )
-    ranks = vstat.crossJoin(F.broadcast(n_row)).select(
-        "doc_id", (F.lit(1.0) / F.col("n")).alias("pr"), "deg"
-    ).localCheckpoint()
-    # partition-sizing probe: |V| is already materialized in n_row --
-    # the one scalar the loop's scale-adaptive partitioning needs
-    with _loop_shuffle_partitions(ranks.sparkSession, int(n_row.first()[0])):
-        for it in range(iters):
-            contrib = (
-                ranks.filter(F.col("deg").isNotNull())
-                .join(edges, F.col("doc_id") == F.col("a"))
-                .groupBy(F.col("b").alias("doc_id"))
-                .agg(F.sum(F.col("pr") / F.col("deg")).alias("s"))
+    # |V| as a double literal; an empty graph has no rows to divide, and
+    # a 0 divisor would fail ANSI constant folding, hence ``or 1``
+    n = F.lit(float(vstat.count() or 1))
+
+    def step(ranks: DataFrame, _) -> DataFrame:
+        contrib = (
+            ranks.filter(F.col("deg").isNotNull())
+            .join(edges, F.col("doc_id") == F.col("a"))
+            .groupBy(F.col("b").alias("doc_id"))
+            .agg(F.sum(F.col("pr") / F.col("deg")).alias("s"))
+        )
+        dangling = ranks.filter(F.col("deg").isNull()).agg(
+            F.coalesce(F.sum("pr"), F.lit(0.0)).alias("m")
+        )
+        return (
+            vstat.join(contrib, "doc_id", "left")
+            .crossJoin(F.broadcast(dangling))
+            .select(
+                "doc_id",
+                (
+                    (1.0 - damping) / n
+                    + damping * (F.coalesce(F.col("s"), F.lit(0.0)) + F.col("m") / n)
+                ).alias("pr"),
+                "deg",
             )
-            dangling = ranks.filter(F.col("deg").isNull()).agg(
-                F.coalesce(F.sum("pr"), F.lit(0.0)).alias("m")
-            )
-            ranks = (
-                vstat.join(contrib, "doc_id", "left")
-                .crossJoin(F.broadcast(dangling))
-                .crossJoin(F.broadcast(n_row))
-                .select(
-                    "doc_id",
-                    (
-                        (1.0 - damping) / F.col("n")
-                        + damping
-                        * (F.coalesce(F.col("s"), F.lit(0.0)) + F.col("m") / F.col("n"))
-                    ).alias("pr"),
-                    "deg",
-                )
-            )
-            # lineage truncation every 3rd round: depth-3 plans stay
-            # cheap to re-derive while the per-round materialization
-            # job (the dominant fixed cost of iterative workloads on
-            # small graphs) amortizes 3x
-            if it % 3 == 2 or it == iters - 1:
-                ranks = ranks.localCheckpoint()
+        )
+
+    # checkpoint every 3rd round: depth-3 plans stay cheap to re-derive
+    # while the per-round materialization job (the dominant fixed cost
+    # of iterative workloads on small graphs) amortizes 3x
+    ranks, _ = iterate(
+        vstat.select("doc_id", (F.lit(1.0) / n).alias("pr"), "deg"), step, iters, every=3
+    )
     return ranks.select("doc_id", F.round("pr", 6).alias("pr"))
 
 
@@ -504,9 +465,9 @@ def eigenvector_centrality(
 
     Per iteration: ONE keyed join (score state x edges), one grouped
     sum per destination, and a 1-row max broadcast for the
-    normalization -- zero driver probes, ``localCheckpoint`` every
-    3rd round (the pagerank lineage discipline). Worst-case work is
-    ``iters`` x (|E| shuffle + |V| agg). Isolated vertices decay
+    normalization -- no stop test; ``session.iterate`` checkpoints
+    every 3rd round (its docstring states the contract). Worst-case
+    work is ``iters`` x (|E| shuffle + |V| agg). Isolated vertices decay
     geometrically toward 0 (they keep only their own shrinking share
     of the growing max).
 
@@ -515,28 +476,21 @@ def eigenvector_centrality(
     is far above the ~1e-14 reorder noise.
     """
     _, edges = _undirected(pairs)
-    x = vertices.select("doc_id").select(
-        "doc_id", F.lit(1.0).alias("x")
-    ).localCheckpoint()
-    # |V| partition-sizing probe over the materialized state (r12:
-    # loop shuffle width derives from state size, guide §2)
-    with _loop_shuffle_partitions(x.sparkSession, x.count()):
-        for it in range(iters):
-            s = (
-                x.join(edges, F.col("doc_id") == F.col("a"))
-                .groupBy(F.col("b").alias("doc_id"))
-                .agg(F.sum("x").alias("s"))
-            )
-            t = x.join(s, "doc_id", "left").select(
-                "doc_id",
-                (F.col("x") + F.coalesce(F.col("s"), F.lit(0.0))).alias("t"),
-            )
-            m = t.agg(F.max("t").alias("m"))
-            x = t.crossJoin(F.broadcast(m)).select(
-                "doc_id", (F.col("t") / F.col("m")).alias("x")
-            )
-            if it % 3 == 2 or it == iters - 1:
-                x = x.localCheckpoint()
+
+    def step(x: DataFrame, _) -> DataFrame:
+        s = (
+            x.join(edges, F.col("doc_id") == F.col("a"))
+            .groupBy(F.col("b").alias("doc_id"))
+            .agg(F.sum("x").alias("s"))
+        )
+        t = x.join(s, "doc_id", "left").select(
+            "doc_id",
+            (F.col("x") + F.coalesce(F.col("s"), F.lit(0.0))).alias("t"),
+        )
+        m = t.agg(F.max("t").alias("m"))
+        return t.crossJoin(F.broadcast(m)).select("doc_id", (F.col("t") / F.col("m")).alias("x"))
+
+    x, _ = iterate(vertices.select("doc_id", F.lit(1.0).alias("x")), step, iters, every=3)
     return x.select("doc_id", F.round("x", 6).alias("centrality"))
 
 
@@ -555,25 +509,22 @@ def kcore(pairs: DataFrame, k: int = 3, rounds: int = 10) -> DataFrame:
     graph peels further rounds by raising the knob.
 
     Per round: one degree aggregate + two semi-joins, all keyed on
-    node ids; state is the (a, b) edge list, eagerly
-    ``localCheckpoint``'ed so round N+1 plans from materialized state
-    (pagerank lineage discipline) -- never more than one round deep.
+    node ids; state is the (a, b) edge list, checkpointed every round
+    by ``session.iterate`` (see its docstring) -- never more than one
+    round deep.
 
     Emits (node_id, core_deg): surviving nodes with their final
     within-core degree.
     """
-    _, edges = _undirected(pairs)
-    # edge-count partition-sizing probe over the materialized edge
-    # state (r12: scale-adaptive loop shuffle width, guide §2)
-    with _loop_shuffle_partitions(edges.sparkSession, edges.count()):
-        for _ in range(rounds):
-            keep = _degrees(edges).filter(F.col("deg") >= k).select("doc_id")
-            edges = (
-                edges.join(keep.withColumnRenamed("doc_id", "a"), "a", "left_semi")
-                .join(keep.withColumnRenamed("doc_id", "b"), "b", "left_semi")
-                .select("a", "b")
-                .localCheckpoint()
-            )
+    def step(edges: DataFrame, _) -> DataFrame:
+        keep = _degrees(edges).filter(F.col("deg") >= k).select("doc_id")
+        return (
+            edges.join(keep.withColumnRenamed("doc_id", "a"), "a", "left_semi")
+            .join(keep.withColumnRenamed("doc_id", "b"), "b", "left_semi")
+            .select("a", "b")
+        )
+
+    edges, _ = iterate(_undirected(pairs)[1], step, rounds)
     return _degrees(edges).select(
         F.col("doc_id").alias("node_id"), F.col("deg").alias("core_deg")
     )

@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import iterate
+
 
 def sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Gap-based sessions: a new session starts when the gap since the
@@ -1461,9 +1463,9 @@ def event_markov_stationary(events: DataFrame, rounds: int = 12) -> DataFrame:
     counts over ONE corpus-sized lead window -- the
     ``event_transition_matrix`` plan) is eagerly localCheckpoint'ed
     once; every iteration thereafter joins two ALPHABET-sized frames
-    -- zero corpus passes inside the loop, state checkpointed every
-    3rd round to truncate lineage (the pagerank discipline,
-    operators/graph.py::pagerank). Dangling states (appearing
+    -- zero corpus passes inside the loop; ``session.iterate``
+    checkpoints the state every 3rd round (its docstring states the
+    contract). Dangling states (appearing
     only as next_type) RECEIVE mass each step and shed it at the next
     join -- so the emitted vector is the exact step-``rounds``
     distribution including mass that just arrived on dangling states;
@@ -1477,8 +1479,6 @@ def event_markov_stationary(events: DataFrame, rounds: int = 12) -> DataFrame:
     (SURVEY.md §2A FIFO queue) over the WordCount substrate
     (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
     """
-    from pyspark.sql import Window
-
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     w_cur = Window.partitionBy("cur_type")
     matrix = (
@@ -1501,22 +1501,23 @@ def event_markov_stationary(events: DataFrame, rounds: int = 12) -> DataFrame:
     v = k.select(
         F.col("cur_type").alias("state"),
         (F.lit(1.0) / F.count("*").over(Window.partitionBy())).alias("p"),
-    ).localCheckpoint()
-    for r in range(rounds):
+    )
+
+    def step(v: DataFrame, _) -> DataFrame:
         terms = v.join(matrix, F.col("state") == F.col("cur_type")).select(
             "next_type",
             F.col("state").alias("src"),
             (F.col("p") * F.col("mp")).alias("term"),
         )
-        v = terms.groupBy("next_type").agg(
+        return terms.groupBy("next_type").agg(
             F.aggregate(
                 F.array_sort(F.collect_list(F.struct("src", "term"))),
                 F.lit(0.0),
                 lambda acc, x: acc + x["term"],
             ).alias("p")
         ).select(F.col("next_type").alias("state"), "p")
-        if r % 3 == 2:
-            v = v.localCheckpoint()
+
+    v, _ = iterate(v, step, rounds, every=3)
     return v.select("state", F.round("p", 6).alias("pi"))
 
 

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import grams_expr, tokens_col, words_exploded
+from ..session import iterate
 
 # Stopword lists for the n-gram/stopword language heuristic. Tiny and
 # deterministic on purpose: real language ID would ship fastText or a
@@ -2355,9 +2356,9 @@ def bpe_train(documents: DataFrame, n_merges: int = 6) -> DataFrame:
     sym) — one row per symbol of each DISTINCT word, weighted by word
     frequency; the corpus is scanned exactly once to build it and
     never re-tokenized (merges rewrite the weighted vocabulary only —
-    the ``vocab_coverage`` discipline). Each round is eagerly
-    ``localCheckpoint``'ed so plan lineage stays one-round deep
-    (the pagerank discipline, operators/graph.py::pagerank).
+    the ``vocab_coverage`` discipline). ``session.iterate`` runs the
+    rounds and checkpoints the state after each one, so plan lineage
+    stays one round deep (its docstring states the contract).
 
     The greedy LEFTMOST-non-overlapping merge — the sequential heart
     of canonical BPE — is expressed relationally so both engines
@@ -2400,81 +2401,61 @@ def _bpe_loop(documents: DataFrame, n_merges: int):
         "word",
         "word_freq",
         F.posexplode(F.split("word", "")).alias("pos0", "sym"),
-    ).select(
-        "word", "word_freq", (F.col("pos0") + 1).alias("pos"), "sym"
-    ).localCheckpoint()
+    ).select("word", "word_freq", (F.col("pos0") + 1).alias("pos"), "sym")
 
     w = Window.partitionBy("word").orderBy("pos")
     w_run = Window.partitionBy("word").orderBy("pos").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     merges = []
-    # loop shuffle width from the measured (vocab-bounded) state size
-    # -- the session-wide constant re-schedules idle partitions every
-    # round (r12, guide §2; measured 4.0 s -> 3.0 s on bpe_train)
-    from ..session import _loop_shuffle_partitions
 
-    with _loop_shuffle_partitions(documents.sparkSession, sympos.count()):
-        for step in range(1, n_merges + 1):
-            paired = sympos.withColumn("nxt", F.lead("sym").over(w))
-            counts = (
-                paired.filter(F.col("nxt").isNotNull())
-                .groupBy(F.col("sym").alias("a"), F.col("nxt").alias("b"))
-                .agg(F.sum("word_freq").alias("n_pair"))
+    def step(sympos: DataFrame, i: int) -> DataFrame:
+        paired = sympos.withColumn("nxt", F.lead("sym").over(w))
+        counts = (
+            paired.filter(F.col("nxt").isNotNull())
+            .groupBy(F.col("sym").alias("a"), F.col("nxt").alias("b"))
+            .agg(F.sum("word_freq").alias("n_pair"))
+        )
+        # checkpoint the 1-row winner ONCE: both consumers (the merge
+        # record and the broadcast into the rewrite) then read the
+        # materialized row instead of each re-running the pair-count
+        # aggregate -- the un-checkpointed form paid the counts agg
+        # twice per round (once for the merge-record checkpoint, once
+        # inside the next sympos checkpoint's broadcast subtree)
+        top1 = counts.orderBy(F.col("n_pair").desc(), "a", "b").limit(1).localCheckpoint()
+        merges.append(
+            top1.select(
+                F.lit(i + 1).alias("step"),
+                F.col("a").alias("sym_a"),
+                F.col("b").alias("sym_b"),
+                "n_pair",
+                F.concat("a", "b").alias("new_sym"),
             )
-            # checkpoint the 1-row winner ONCE: both consumers (the merge
-            # record and the broadcast into the rewrite) then read the
-            # materialized row instead of each re-running the pair-count
-            # aggregate -- the un-checkpointed form paid the counts agg
-            # twice per round (once for the merge-record checkpoint, once
-            # inside the next sympos checkpoint's broadcast subtree)
-            top1 = (
-                counts.orderBy(F.col("n_pair").desc(), "a", "b")
-                .limit(1)
-                .localCheckpoint()
-            )
-            merges.append(
-                top1.select(
-                    F.lit(step).alias("step"),
-                    F.col("a").alias("sym_a"),
-                    F.col("b").alias("sym_b"),
-                    "n_pair",
-                    F.concat("a", "b").alias("new_sym"),
-                )
-            )
-            m = paired.crossJoin(F.broadcast(top1)).withColumn(
-                "is_m", (F.col("sym") == F.col("a")) & (F.col("nxt") == F.col("b"))
-            )
-            # two projection steps: window calls cannot nest (either engine)
-            g = m.withColumn(
-                "run_start",
-                (
-                    F.col("is_m")
-                    & ~F.coalesce(F.lag("is_m").over(w), F.lit(False))
-                ).cast("int"),
-            ).withColumn("run_id", F.sum("run_start").over(w_run))
-            w_runid = Window.partitionBy("word", "run_id")
-            g = g.withColumn(
-                "run_min", F.min(F.when(F.col("is_m"), F.col("pos"))).over(w_runid)
-            ).withColumn(
-                "active",
-                F.col("is_m") & ((F.col("pos") - F.col("run_min")) % 2 == 0),
-            )
-            g = g.withColumn(
-                "dropped", F.coalesce(F.lag("active").over(w), F.lit(False))
-            )
-            sympos = (
-                g.filter(~F.col("dropped"))
-                .select(
-                    "word",
-                    "word_freq",
-                    F.row_number().over(w).alias("pos"),
-                    F.when(F.col("active"), F.concat("sym", "nxt"))
-                    .otherwise(F.col("sym"))
-                    .alias("sym"),
-                )
-                .localCheckpoint()
-            )
+        )
+        m = paired.crossJoin(F.broadcast(top1)).withColumn(
+            "is_m", (F.col("sym") == F.col("a")) & (F.col("nxt") == F.col("b"))
+        )
+        # two projection steps: window calls cannot nest (either engine)
+        g = m.withColumn(
+            "run_start",
+            (F.col("is_m") & ~F.coalesce(F.lag("is_m").over(w), F.lit(False))).cast("int"),
+        ).withColumn("run_id", F.sum("run_start").over(w_run))
+        w_runid = Window.partitionBy("word", "run_id")
+        g = g.withColumn(
+            "run_min", F.min(F.when(F.col("is_m"), F.col("pos"))).over(w_runid)
+        ).withColumn(
+            "active",
+            F.col("is_m") & ((F.col("pos") - F.col("run_min")) % 2 == 0),
+        )
+        g = g.withColumn("dropped", F.coalesce(F.lag("active").over(w), F.lit(False)))
+        return g.filter(~F.col("dropped")).select(
+            "word",
+            "word_freq",
+            F.row_number().over(w).alias("pos"),
+            F.when(F.col("active"), F.concat("sym", "nxt")).otherwise(F.col("sym")).alias("sym"),
+        )
+
+    sympos, _ = iterate(sympos, step, n_merges)
     return merges, sympos
 
 
@@ -2582,10 +2563,10 @@ def _ulm_loop(
     State is VOCAB-bounded everywhere: the corpus is scanned once for
     word frequencies; substrings, costs, usage counts, and the DP all
     live on the distinct-word table (the ``bpe_train`` discipline).
-    Each round's cost table is eagerly ``localCheckpoint``'ed so plan
-    lineage stays one-round deep (the pagerank discipline). The
-    per-round total rides as a 1-row broadcast -- zero driver
-    collects.
+    ``session.iterate`` runs the rounds and checkpoints each round's
+    cost table, so plan lineage stays one round deep (its docstring
+    states the contract). The per-round total rides as a 1-row
+    broadcast -- zero driver collects.
 
     Returns (wf, viterbi fn, final cost DataFrame): ``ulm_train``
     ships the cost table; ``ulm_encode`` runs one more Viterbi pass
@@ -2652,35 +2633,28 @@ def _ulm_loop(
             _ulm_viterbi_kernel, "word string, path array<string>"
         )
 
-    cur = with_costs(chars.unionByName(multi)).localCheckpoint()
-    # loop shuffle width from the measured (vocab-bounded) state size
-    # (r12, guide §2 -- same discipline as the bpe merge loop)
-    from ..session import _loop_shuffle_partitions
+    def step(cur: DataFrame, _) -> DataFrame:
+        usage = (
+            viterbi(cur)
+            .join(wf, "word")
+            .select("word_freq", F.explode("path").alias("piece"))
+            .groupBy("piece")
+            .agg(F.sum("word_freq").alias("usage"))
+        )
+        newv = (
+            cur.select("piece")
+            .join(usage, "piece", "left")
+            .select(
+                "piece",
+                F.when(F.length("piece") == 1, F.coalesce("usage", F.lit(0)) + 1)
+                .otherwise(F.coalesce("usage", F.lit(0)))
+                .alias("cnt"),
+            )
+            .filter(F.col("cnt") > 0)
+        )
+        return with_costs(newv)
 
-    with _loop_shuffle_partitions(documents.sparkSession, subs.count()):
-        for _ in range(em_rounds):
-            usage = (
-                viterbi(cur)
-                .join(wf, "word")
-                .select("word_freq", F.explode("path").alias("piece"))
-                .groupBy("piece")
-                .agg(F.sum("word_freq").alias("usage"))
-            )
-            newv = (
-                cur.select("piece")
-                .join(usage, "piece", "left")
-                .select(
-                    "piece",
-                    F.when(
-                        F.length("piece") == 1,
-                        F.coalesce("usage", F.lit(0)) + 1,
-                    )
-                    .otherwise(F.coalesce("usage", F.lit(0)))
-                    .alias("cnt"),
-                )
-                .filter(F.col("cnt") > 0)
-            )
-            cur = with_costs(newv).localCheckpoint()
+    cur, _ = iterate(with_costs(chars.unionByName(multi)), step, em_rounds)
     return wf, viterbi, cur
 
 

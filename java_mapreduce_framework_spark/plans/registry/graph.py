@@ -222,7 +222,7 @@ def _graph_component_stats(spark, sf):
       SELECT doc_a AS a, doc_b AS b FROM pairs
       UNION ALL SELECT doc_b, doc_a FROM pairs),
     walk(node, hop) AS (
-      SELECT (SELECT min(a) FROM edges), 0
+      SELECT min(a), 0 FROM edges HAVING min(a) IS NOT NULL
       UNION
       SELECT e.b, w.hop + 1
       FROM walk w JOIN edges e ON e.a = w.node

@@ -17,10 +17,11 @@ shape survives a real multi-executor cluster at 100 TB:
 
 from __future__ import annotations
 
-import contextlib
 import os
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def default_parallelism() -> int:
@@ -51,44 +52,75 @@ def default_parallelism() -> int:
 _LOOP_ROWS_PER_PARTITION = 100_000
 
 
-@contextlib.contextmanager
-def _loop_shuffle_partitions(spark, n_state_rows: int):
-    """Scale-adaptive shuffle partitioning for ITERATIVE loops
-    (optimization guide §2: derive partitioning from input size, not a
-    constant tuned for either local mode or the cluster).
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    rounds: int,
+    *,
+    probe: Sequence[Column] = (),
+    every: int = 1,
+) -> tuple[DataFrame, bool]:
+    """Run ``state = step(state, i)`` for ``i`` in ``range(rounds)``: the
+    one runner of every iterative DataFrame loop in the package (the
+    reference's chain of map/reduce jobs through its FIFO job queue,
+    SURVEY.md section 2A). Operators write the round body; this owns
+    the three decisions every loop makes about its state:
 
-    Every round of an iterative graph op runs joins/aggregates over a
-    state table of ~n_state_rows rows, and every exchange inherits the
-    session-wide ``spark.sql.shuffle.partitions`` -- sized for corpus
-    scans, not for the (usually far smaller) loop state. AQE coalesces
-    the post-shuffle READ side but each ``localCheckpoint`` still
-    materializes, schedules, and re-reads the full partition count
-    every round, so rounds pay task-scheduling cost proportional to
-    the constant, not the data (measured at sf0.1 / local[32]:
-    pagerank 9.5 s -> 6.0 s from this alone).
+    - **Lineage.** The initial state is checkpointed eagerly
+      (``localCheckpoint``), then the state again every ``every``
+      rounds and always after the last, so a round plans against at
+      most ``every`` rounds of lineage (unbounded plan growth is what
+      kills naive iterative DataFrame code) and the returned state is
+      materialized. ``localCheckpoint`` keeps the blocks on the
+      executors, unreplicated: losing an executor fails the query
+      instead of recomputing -- the same trade as
+      ``operators.graph._undirected``'s pair checkpoint.
+    - **Shuffle width.** Every exchange in a round inherits
+      ``spark.sql.shuffle.partitions``, sized for corpus scans, not for
+      the (usually far smaller) loop state; AQE coalesces only the read
+      side, so each checkpoint would schedule the full count every
+      round (measured at sf0.1 / local[32]: pagerank 9.5 s -> 6.0 s
+      from sizing alone). The width is derived from the initial
+      state's row count n: ``min(default_parallelism(), max(8,
+      ceil(n / _LOOP_ROWS_PER_PARTITION)))`` -- a floor of 8-way (or
+      all cores, when fewer) so small states still run multi-core,
+      and every core for a production-scale state. The conf is
+      restored in a ``finally``: the loop's exchanges bind it when
+      each checkpoint plans.
+    - **Stop test.** ``probe`` is a list of aggregate columns over the
+      state. With a probe the state is checkpointed every round
+      (``every`` is ignored) and the loop stops at the first round
+      whose probe row equals the previous round's -- a single-row
+      scalar fetch, never row data.
 
-    The partition count derives from the MEASURED state size
-    (ceil(rows / _LOOP_ROWS_PER_PARTITION), clamped to
-    [1, default_parallelism()]), so a 100 TB graph still uses every
-    core while a small one stops paying per-round scheduling for idle
-    partitions. The sizing probe is a single scalar the callers
-    already materialize (vertex/label counts). Conf is restored on
-    exit -- the loop's exchanges bind it at plan time."""
-    # size up from the state (ceil(rows / target)), but keep a floor
-    # of 8-way parallelism (or all cores when fewer) so each round's
-    # real join/aggregate work still runs multi-core at small state
-    # sizes -- the floor is what the measured 9.5 s -> 6.0 s pagerank
-    # win used; 1 partition re-serializes the per-round work
-    parts = min(
-        default_parallelism(),
-        max(8, -(-int(n_state_rows) // _LOOP_ROWS_PER_PARTITION)),
-    )
+    n and the probe ride in one aggregate per fetch. Returns ``(state,
+    converged)``: ``converged`` is True iff the probe reached a
+    fixpoint within ``rounds``, and always False without a probe
+    (fixed-round loops have no stop test)."""
+
+    def fetch(df: DataFrame) -> tuple:
+        row = df.agg(F.count("*"), *probe).first()
+        return row[0], tuple(row[1:])
+
+    state = state.localCheckpoint()
+    n, last = fetch(state)
+    spark = state.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
+    parts = min(default_parallelism(), max(8, -(-n // _LOOP_ROWS_PER_PARTITION)))
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     try:
-        yield
+        for i in range(rounds):
+            state = step(state, i)
+            if probe or (i + 1) % every == 0 or i == rounds - 1:
+                state = state.localCheckpoint()
+            if probe:
+                _, cur = fetch(state)
+                if cur == last:
+                    return state, True
+                last = cur
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return state, False
 
 
 def get_spark(app_name: str = "jmrf-spark", cpus: int | None = None) -> SparkSession:

@@ -356,6 +356,17 @@ def test_label_propagation_raises_on_diameter_overflow(spark):
         graph.connected_components(chain, max_iter=3)
 
 
+def test_star_cc_raises_on_round_budget(spark):
+    """The star variant fails loud too: a 13-node chain needs more than
+    one large/small-star round, and a budget that runs out must raise
+    instead of returning a partial (over-split) labeling."""
+    import pytest as _pytest
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(12)], ["doc_a", "doc_b"])
+    with _pytest.raises(RuntimeError, match="did not converge"):
+        graph.connected_components_star(chain, max_iter=1)
+
+
 def _lpa_reference(pairs, vertices, rounds):
     """Synchronous label propagation in pure Python: every node takes
     the most frequent neighbor label (smallest label on ties) at once;
@@ -527,6 +538,12 @@ def test_bfs_hops_chain_and_cutoff(spark):
     assert got == {i: i for i in range(9)}            # hops 0..8
     assert 9 not in got and 10 not in got             # beyond cutoff
     assert 50 not in got and 51 not in got            # other component
+
+
+def test_bfs_hops_empty_pairs(spark):
+    """No edges means no seed: the result is empty, not a NULL row."""
+    pairs = spark.createDataFrame([], "doc_a bigint, doc_b bigint")
+    assert graph.bfs_hops(pairs).collect() == []
 
 
 def test_containment_catches_embedded_doc_jaccard_misses(spark):

@@ -62,6 +62,15 @@ FAMILIES = [
     "graph_rich_club",
     "graph_transitivity",
     "graph_triangle_count",
+    # the other hash-oracled queries that run a session.iterate loop
+    "dedup_cluster_components",
+    "dedup_cluster_components_star",
+    "dedup_cluster_keep_best",
+    "split_by_cluster",
+    "dedup_cluster_size_histogram",
+    "bpe_encode",
+    "ulm_train",
+    "ulm_encode",
 ]
 
 
