@@ -6,7 +6,9 @@ factor and prints ONE JSON line:
 Env:
     SPARK_GRAFT_SF_DIR  fixture dir (default /root/testdata/sf0.1)
     SPARK_GRAFT_CPUS    local[] thread count (default 32)
-    BENCH_QUERIES       comma-separated subset (default: all)
+    BENCH_QUERIES       comma-separated subset (default: all); a subset
+                        run only prints, it writes neither
+                        BENCH_FULL.json nor BENCH_HISTORY.jsonl
 
 Each query is forced end-to-end with the noop sink (full computation,
 no collect-to-driver, no disk write), timed individually after a
@@ -127,28 +129,18 @@ def main() -> None:
         "sf": sf,
     }
     # Full per-query record: one JSON line on stdout plus a file copy
-    # (BENCH_FULL.json) for the judge. Subset runs (BENCH_QUERIES)
-    # never overwrite the full record — merge their timings instead.
+    # (BENCH_FULL.json) for the judge, and the same record APPENDED to
+    # BENCH_HISTORY.jsonl so per-query regression checks across rounds
+    # need no git archaeology. A subset run (BENCH_QUERIES) prints its
+    # record and writes neither file: both hold whole-suite runs of one
+    # tree only.
     print(json.dumps(full), flush=True)
-    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
-    if only and os.path.exists(full_path):
-        with open(full_path) as f:
-            prior = json.load(f)
-        prior["queries"].update(timings)
-        prior["value"] = round(sum(prior["queries"].values()), 3)
-        full = prior
-    with open(full_path, "w") as f:
-        json.dump(full, f, indent=1)
-        f.write("\n")
-    # Round-over-round history: BENCH_FULL.json is overwritten every
-    # run, so full (non-subset) runs also APPEND the complete record
-    # to BENCH_HISTORY.jsonl — per-query regression checks across
-    # rounds then need no git archaeology (VERDICT r09 item #6).
     if not only:
-        hist_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_HISTORY.jsonl"
-        )
-        with open(hist_path, "a") as f:
+        root = os.path.dirname(os.path.abspath(__file__))
+        with open(os.path.join(root, "BENCH_FULL.json"), "w") as f:
+            json.dump(full, f, indent=1)
+            f.write("\n")
+        with open(os.path.join(root, "BENCH_HISTORY.jsonl"), "a") as f:
             f.write(json.dumps(full) + "\n")
     # The driver records only the trailing ~2 KB of output and parses
     # the LAST JSON line; the full 461-query line overflows that window
@@ -198,7 +190,7 @@ def main() -> None:
         "queries": slowest,
         "sf": sf,
         "n_queries": len(timings),
-        "full": "BENCH_FULL.json",
+        "full": None if only else "BENCH_FULL.json",
         "queries_all_b64": base64.b64encode(
             zlib.compress(packed, 9)
         ).decode(),

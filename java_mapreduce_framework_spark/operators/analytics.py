@@ -1,12 +1,24 @@
-"""Event-analytics operators (SURVEY.md §2B, M4 temporal family
-extensions): the classic product-analytics shapes -- activity heatmap,
-count-anomaly detection, retention cohorts, conversion funnel -- each a
-pure declarative plan over the events table.
+"""Event-analytics and statistics operators (SURVEY.md §2B, M4
+temporal family extensions): the classic product-analytics shapes --
+activity heatmap, count-anomaly detection, retention cohorts,
+conversion funnel -- and the statistical-test family, each a pure
+declarative plan over the event and order tables.
 
-Reference licence: all four are multi-round grouped aggregations, the
-workload class the reference's map→shuffle→sort→reduce core exists to
-express (SURVEY.md §2A); on Spark each round is a hash aggregation or
-a co-partitioned join, with partial aggregation and AQE for free.
+Reference licence: each is a (key, value) count collapse followed by
+a fold -- the multi-round grouped aggregation the reference's
+map→shuffle→sort→reduce core exists to express (SURVEY.md §2A); on
+Spark each round is a hash aggregation or a co-partitioned join, with
+partial aggregation and AQE for free.
+
+The collapses several tests share are spelled once, as the kernels
+below the imports: ``_ab_arm`` (the md5 A/B user split),
+``_ab_value_counts`` (the per-type value alphabet with its A-arm
+counts), ``_ab_moments`` (per-arm n, mean and centred square sum),
+``_ab_conversions`` (the per-type >=10-emission conversion table),
+``_block_midranks`` (the dense user x type count grid with doubled
+within-user midranks), ``_midrank2`` (the doubled-midrank expression)
+and ``_daily_counts`` (the daily count / cent-sum series). Each
+kernel's docstring carries its exactness argument; callers point to it.
 
 100 TB posture per operator in its docstring; none collects, none
 crosses rows outside keyed shuffles.
@@ -14,8 +26,193 @@ crosses rows outside keyed shuffles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _ab_arm() -> Column:
+    """True for an event whose user is in arm A of the deterministic
+    A/B split: the first hex digit of md5(``'ab|' || user_id``) is below
+    '8'. A pure function of the user id, so the assignment survives
+    re-runs and engines (the ``_hash_keep`` discipline); the oracles
+    spell it as ``plans/registry/analytics.py``'s ``_AB_SPLIT``.
+
+    NULL contract: concat_ws skips NULL on both engines, so a NULL
+    user_id is hashed as md5('ab') -> arm A on both engines. Callers
+    that want the ``"A"``/``"B"`` label derive it with ``F.when``."""
+    return (
+        F.substring(
+            F.md5(
+                F.concat_ws("|", F.lit("ab"), F.col("user_id").cast("string"))
+            ),
+            1,
+            1,
+        )
+        < F.lit("8")
+    )
+
+
+def _midrank2(before: Column, cnt: str) -> Column:
+    """Doubled midrank of a run of ``cnt`` tied rows that follows
+    ``before`` rows (NULL before the first run): tied values take the
+    average rank ``before + (cnt + 1) / 2``, which lives on the
+    half-integer lattice, so ``2 * before + cnt + 1`` is an exact
+    integer. Every rank sum built from it is an exact bigint, and the
+    closing statistic is one double expression on identical inputs on
+    both engines (IEEE sqrt is correctly rounded)."""
+    return 2 * F.coalesce(before, F.lit(0)) + F.col(cnt) + 1
+
+
+def _ab_value_counts(events: DataFrame) -> DataFrame:
+    """(event_type, value, cnt, cnt_a, cnt_b): the per-type VALUE
+    alphabet of the rank-based two-sample tests, with each value's
+    count in both ``_ab_arm`` arms. One combinable (type, value)
+    aggregate, so a corpus shuffles only its distinct (type, value)
+    pairs and every window after it runs over the alphabet.
+
+    NULL values carry no rank information and drop BEFORE grouping.
+    That also pins the cross-engine rank order: Spark windows sort
+    NULLS FIRST while the DuckDB oracles' ORDER BY is NULLS LAST, so a
+    stray NULL would silently shift every later rank."""
+    return (
+        events.filter(F.col("value").isNotNull())
+        .select("event_type", _ab_arm().alias("is_a"), "value")
+        .groupBy("event_type", "value")
+        .agg(
+            F.count("*").alias("cnt"),
+            F.sum(F.col("is_a").cast("long")).alias("cnt_a"),
+        )
+        .withColumn("cnt_b", F.col("cnt") - F.col("cnt_a"))
+    )
+
+
+def _ab_moments(events: DataFrame) -> DataFrame:
+    """(event_type, n_a, n_b, mean_a, mean_b, css_a, css_b): per-arm
+    count, mean and centred sum of squares of ``value`` for each event
+    type, over the ``_ab_arm`` split.
+
+    The per-arm means are rounded to 6 places first (type x arm rows)
+    and broadcast back, so both engines centre on the SAME constant
+    (the ``stats_moments`` discipline); then ONE grouped pass sums the
+    centred squares. Types where an arm has fewer than 2 rows, or where
+    the pooled variance is zero, carry no test (and trip ANSI 0/0):
+    they drop here, on both engines."""
+    variant = F.when(_ab_arm(), "A").otherwise("B")
+    base = events.select("event_type", variant.alias("variant"), "value")
+    mu = base.groupBy("event_type", "variant").agg(
+        F.round(F.avg("value"), 6).alias("mu")
+    )
+    d = F.col("value") - F.col("mu")
+    cell = (
+        base.join(F.broadcast(mu), ["event_type", "variant"])
+        .groupBy("event_type", "variant")
+        .agg(
+            F.count("*").alias("n"),
+            F.max("mu").alias("mu"),
+            F.sum(d * d).alias("css"),
+        )
+    )
+    pick = lambda v, c: F.max(F.when(F.col("variant") == v, F.col(c)))  # noqa: E731
+    return cell.groupBy("event_type").agg(
+        pick("A", "n").alias("n_a"),
+        pick("B", "n").alias("n_b"),
+        pick("A", "mu").alias("mean_a"),
+        pick("B", "mu").alias("mean_b"),
+        pick("A", "css").alias("css_a"),
+        pick("B", "css").alias("css_b"),
+    ).filter(
+        (F.col("n_a") > 1)
+        & (F.col("n_b") > 1)
+        & (F.col("css_a") + F.col("css_b") > 0)
+    )
+
+
+def _ab_conversions(events: DataFrame) -> DataFrame:
+    """(event_type, conv_a, conv_b, n_a, n_b): per event type, the
+    users of each ``_ab_arm`` arm who converted -- emitted the type at
+    least 10 times (bare presence is degenerate on a dense fixture:
+    every user touches every type and the pooled rate pins to 1) --
+    beside the arm sizes. All cells are exact integers.
+
+    Per-user compression first (distinct (user, arm) and (user, type)
+    counts), then type-alphabet-sized aggregation. The arm sizes come
+    from the assignment table alone (1 broadcast row), so a type whose
+    conversions are all one-sided still sees BOTH denominators, and its
+    empty cell is 0, not NULL. A NULL event_type is one more type, as
+    in the oracles."""
+    variant = F.when(_ab_arm(), "A").otherwise("B")
+    users = events.select("user_id", variant.alias("variant")).distinct()
+    conv = (
+        events.groupBy("user_id", "event_type")
+        .agg(F.count("*").alias("n"))
+        .filter(F.col("n") >= 10)
+        .select("user_id", "event_type")
+    )
+    per_type = (
+        users.join(conv, "user_id")
+        .groupBy("event_type", "variant")
+        .agg(F.count("*").alias("n_conv"))
+    )
+    sizes = users.groupBy().agg(
+        F.sum(F.when(F.col("variant") == "A", 1).otherwise(0)).alias("n_a"),
+        F.sum(F.when(F.col("variant") == "B", 1).otherwise(0)).alias("n_b"),
+    )
+    pick = lambda v: F.coalesce(  # noqa: E731
+        F.max(F.when(F.col("variant") == v, F.col("n_conv"))), F.lit(0)
+    )
+    return (
+        per_type.groupBy("event_type")
+        .agg(pick("A").alias("conv_a"), pick("B").alias("conv_b"))
+        .crossJoin(F.broadcast(sizes))
+    )
+
+
+def _block_midranks(events: DataFrame) -> DataFrame:
+    """(user_id, event_type, cnt, mr2): the repeated-measures design of
+    the Friedman family -- users are blocks, event types treatments,
+    the response each user's count of the type -- as a DENSE grid
+    (missing combinations count 0), with ``mr2`` the doubled midrank
+    of ``cnt`` within its user.
+
+    Shape: per-(user, type) counts, dense-completed by a broadcast
+    cross of the type dimension (k rows), midranks via one user-keyed
+    window. Midranks live on the half-integer lattice, so
+    ``mr2 = 2 * rank + ties - 1`` is an exact integer and every rank
+    sum over it an exact bigint; no tie correction is applied, which
+    both engines agree on by construction."""
+    counts = events.groupBy("user_id", "event_type").agg(
+        F.count("*").alias("cnt")
+    )
+    users = events.select("user_id").distinct()
+    types = events.select("event_type").distinct()
+    dense = (
+        users.join(F.broadcast(types))
+        .join(counts, ["user_id", "event_type"], "left")
+        .select(
+            "user_id",
+            "event_type",
+            F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"),
+        )
+    )
+    wu = Window.partitionBy("user_id").orderBy("cnt")
+    wt = Window.partitionBy("user_id", "cnt")
+    return dense.withColumn(
+        "mr2",
+        F.lit(2) * F.rank().over(wu) + F.count("*").over(wt) - F.lit(1),
+    )
+
+
+def _daily_counts(events: DataFrame) -> DataFrame:
+    """(day, x=n_events, y=value-cent-sum) daily series -- the shared
+    substrate of the rank/trend statistics below. One partial+final
+    aggregation; the output is day-count-sized (bounded by calendar
+    span, not data volume)."""
+    return events.groupBy(
+        F.date_trunc("day", "ts").alias("day")
+    ).agg(
+        F.count("*").alias("x"),
+        F.sum(F.floor(F.col("value") * 100).cast("long")).alias("y"),
+    )
 
 
 def time_heatmap(events: DataFrame) -> DataFrame:
@@ -434,61 +631,19 @@ def time_resample_gapfill(events: DataFrame) -> DataFrame:
 
 
 def ab_test_ztest(events: DataFrame) -> DataFrame:
-    """Two-proportion z-test per event type: users split into A/B by
-    the deterministic user-id hash (the ``_hash_keep`` discipline —
-    assignment survives re-runs and engines), conversion = the user
-    emitted that event type at least 10 times; z from the pooled-variance normal
-    approximation, |z| >= 1.96 flagged. The readout query of every
-    experimentation pipeline.
+    """Two-proportion z-test per event type over the
+    ``_ab_conversions`` table (the ``_ab_arm`` user split; conversion =
+    the user emitted that event type at least 10 times): z from the
+    pooled-variance normal approximation, |z| >= 1.96 flagged. The
+    readout query of every experimentation pipeline.
 
-    Per-user compression first (distinct (user, type) + one hash per
-    user), then type-alphabet-sized contingency aggregation — nothing
-    after the first agg scales with the corpus. Degenerate pools
-    (p_pool in {0, 1}) carry no test and are dropped on both engines.
+    Everything after the kernel's per-user compression is
+    type-alphabet sized. Degenerate pools (p_pool in {0, 1}) carry no
+    test and are dropped on both engines.
 
     Emits (event_type, n_a, n_b, conv_a, conv_b, zscore, significant).
     """
-    variant = F.when(
-        F.substring(F.md5(F.concat_ws("|", F.lit("ab"), F.col("user_id").cast("string"))), 1, 1)
-        < F.lit("8"),
-        "A",
-    ).otherwise("B")
-    users = events.select("user_id", variant.alias("variant")).distinct()
-    # conversion = the user emitted the type >= 10 times (bare
-    # presence is degenerate on a dense fixture: every user touches
-    # every type and the pooled rate pins to 1)
-    conv = (
-        events.groupBy("user_id", "event_type")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 10)
-        .select("user_id", "event_type")
-    )
-    joined = users.join(conv, "user_id", "left")
-    per_type = (
-        joined.filter(F.col("event_type").isNotNull())
-        .groupBy("event_type", "variant")
-        .agg(F.count("*").alias("n_conv"))
-    )
-    # variant sizes come from the assignment table alone (1 broadcast
-    # row): a type whose conversions are all one-sided must still see
-    # BOTH denominators, and its zero-conversion cell is 0, not NULL —
-    # otherwise the strongest effects silently drop out
-    tot_wide = users.groupBy().agg(
-        F.sum(F.when(F.col("variant") == "A", 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("variant") == "B", 1).otherwise(0)).alias("n_b"),
-    )
-    wide = (
-        per_type.groupBy("event_type")
-        .agg(
-            F.coalesce(
-                F.max(F.when(F.col("variant") == "A", F.col("n_conv"))), F.lit(0)
-            ).alias("conv_a"),
-            F.coalesce(
-                F.max(F.when(F.col("variant") == "B", F.col("n_conv"))), F.lit(0)
-            ).alias("conv_b"),
-        )
-        .crossJoin(F.broadcast(tot_wide))
-    )
+    wide = _ab_conversions(events)
     pa = F.col("conv_a") / F.col("n_a")
     pb = F.col("conv_b") / F.col("n_b")
     pp = (F.col("conv_a") + F.col("conv_b")) / (F.col("n_a") + F.col("n_b"))
@@ -913,12 +1068,9 @@ def welch_ttest(events: DataFrame) -> DataFrame:
     (unequal variances assumed, the safe default; dof via
     Welch--Satterthwaite).
 
-    Execution: per-arm means first (alphabet x 2 rows, rounded to 6
-    to pin the centering constant cross-engine -- the
-    ``stats_moments`` discipline), broadcast back, then ONE grouped
-    pass of centered squares; t and the Welch dof are pure row-local
-    arithmetic on the (event_type)-sized result. Nothing after the
-    first aggregate scales with the corpus.
+    The per-arm (n, mean, centred square sum) table is
+    ``_ab_moments``; t and the Welch dof are pure row-local arithmetic
+    on its (event_type)-sized rows.
 
     Emits (event_type, n_a, n_b, mean_a, mean_b, t_stat, df,
     significant) with |t| >= 1.96 flagged (the large-sample normal
@@ -928,55 +1080,13 @@ def welch_ttest(events: DataFrame) -> DataFrame:
     (SURVEY.md §2A FIFO queue) over the WordCount substrate
     (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
     """
-    variant = F.when(
-        F.substring(
-            F.md5(
-                F.concat_ws("|", F.lit("ab"), F.col("user_id").cast("string"))
-            ),
-            1,
-            1,
-        )
-        < F.lit("8"),
-        "A",
-    ).otherwise("B")
-    base = events.select(
-        "event_type", variant.alias("variant"), "value"
-    )
-    mu = base.groupBy("event_type", "variant").agg(
-        F.round(F.avg("value"), 6).alias("mu")
-    )
-    d = F.col("value") - F.col("mu")
-    cell = (
-        base.join(F.broadcast(mu), ["event_type", "variant"])
-        .groupBy("event_type", "variant")
-        .agg(
-            F.count("*").alias("n"),
-            F.max("mu").alias("mu"),
-            F.sum(d * d).alias("css"),
-        )
-    )
-    pick = lambda v, c: F.max(F.when(F.col("variant") == v, F.col(c)))  # noqa: E731
-    wide = cell.groupBy("event_type").agg(
-        pick("A", "n").alias("n_a"),
-        pick("B", "n").alias("n_b"),
-        pick("A", "mu").alias("mean_a"),
-        pick("B", "mu").alias("mean_b"),
-        pick("A", "css").alias("css_a"),
-        pick("B", "css").alias("css_b"),
-    )
     va = F.col("css_a") / (F.col("n_a") - 1) / F.col("n_a")  # s_a^2 / n_a
     vb = F.col("css_b") / (F.col("n_b") - 1) / F.col("n_b")
     t = (F.col("mean_a") - F.col("mean_b")) / F.sqrt(va + vb)
     df = (va + vb) * (va + vb) / (
         va * va / (F.col("n_a") - 1) + vb * vb / (F.col("n_b") - 1)
     )
-    # zero pooled variance carries no test (and trips ANSI 0/0):
-    # degenerate cells drop on both engines, like ab_test's pp guard
-    return wide.filter(
-        (F.col("n_a") > 1)
-        & (F.col("n_b") > 1)
-        & (F.col("css_a") + F.col("css_b") > 0)
-    ).select(
+    return _ab_moments(events).select(
         "event_type",
         "n_a",
         "n_b",
@@ -990,23 +1100,18 @@ def welch_ttest(events: DataFrame) -> DataFrame:
 
 def mannwhitney_utest(events: DataFrame) -> DataFrame:
     """Mann-Whitney U rank-sum test per event type over the same
-    deterministic A/B user hash as ``ab_test_ztest``/``welch_ttest``
-    -- the NONPARAMETRIC mean-shift companion: rank-based, so a fat
-    tail or outlier burst cannot fake (or mask) an effect the way it
-    can with Welch's t.
+    ``_ab_arm`` user split as ``ab_test_ztest``/``welch_ttest`` -- the
+    NONPARAMETRIC mean-shift companion: rank-based, so a fat tail or
+    outlier burst cannot fake (or mask) an effect the way it can with
+    Welch's t.
 
-    Exactness: tied values take the average rank, which lives in
-    half-units -- so ranks ride DOUBLED as exact integers
-    (``rank2 = 2 * cum_before + cnt + 1``), the rank-sum and U
-    statistic stay exact bigints, and the single closing z division
-    runs on identical doubles (IEEE sqrt is correctly rounded).
-    Large-sample normal z without tie correction -- the declared
-    simple variant.
+    Exactness: ranks are ``_midrank2`` doubled midranks, so the
+    rank-sum and U statistic stay exact bigints. Large-sample normal z
+    without tie correction -- the declared simple variant.
 
-    Plan: one (type, value) group [combinable], a cumulative-count
-    window over the per-type VALUE alphabet (not the corpus), then an
-    alphabet-sized fold -- nothing after the first aggregate scales
-    with events.
+    Plan: ``_ab_value_counts``, a cumulative-count window over its
+    per-type VALUE alphabet (not the corpus), then an alphabet-sized
+    fold.
 
     Emits (event_type, n_a, n_b, u_stat, zscore, significant).
 
@@ -1014,39 +1119,13 @@ def mannwhitney_utest(events: DataFrame) -> DataFrame:
     (SURVEY.md §2A FIFO queue) over the WordCount substrate
     (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
     """
-    variant_a = (
-        F.substring(
-            F.md5(
-                F.concat_ws("|", F.lit("ab"), F.col("user_id").cast("string"))
-            ),
-            1,
-            1,
-        )
-        < F.lit("8")
-    )
-    # NULL metric values carry no rank information -- drop them BEFORE
-    # grouping. Also pins cross-engine rank order: Spark windows sort
-    # NULLS FIRST while the DuckDB oracle's ORDER BY is NULLS LAST, so
-    # a stray NULL would silently diverge every subsequent rank.
-    vg = (
-        events.filter(F.col("value").isNotNull())
-        .select("event_type", variant_a.alias("is_a"), "value")
-        .groupBy("event_type", "value")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.sum(F.col("is_a").cast("long")).alias("cnt_a"),
-        )
-    )
     w = (
         Window.partitionBy("event_type")
         .orderBy("value")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    ranked = vg.withColumn(
-        "rank2",
-        2 * F.coalesce(F.sum("cnt").over(w), F.lit(0))
-        + F.col("cnt")
-        + 1,
+    ranked = _ab_value_counts(events).withColumn(
+        "rank2", _midrank2(F.sum("cnt").over(w), "cnt")
     )
     agg = ranked.groupBy("event_type").agg(
         F.sum("cnt_a").alias("n_a"),
@@ -1178,7 +1257,8 @@ def fdr_bh(events: DataFrame, alpha: float = 0.1) -> DataFrame:
         8,
     )
     scored = z.select("event_type", "zscore", p.alias("p_approx"))
-    w_rank = Window.orderBy("p_approx", "event_type")
+    # NULLS LAST: the oracle's ORDER BY default; Spark's is NULLS FIRST
+    w_rank = Window.orderBy("p_approx", F.col("event_type").asc_nulls_last())
     w_all = Window.partitionBy()
     ranked = scored.select(
         "*",
@@ -1688,17 +1768,16 @@ def kruskal_wallis(events: DataFrame) -> DataFrame:
     metric's *distribution* differ across the type alphabet when
     normality can't be assumed?
 
-    Rank discipline (the mannwhitney contract): NULL values dropped
-    BEFORE grouping, the pooled rank table lives on the DISTINCT
-    value alphabet (one (value, type) count collapse first -- nothing
-    after the first aggregate scales with events), and tied ranks are
-    carried DOUBLED as exact integers (avg rank = cum_before +
-    (cnt+1)/2, so 2*avg is always integral). The per-group term
-    sum(R2_g^2 / n_g) is rounded to an integer micro-unit BEFORE the
+    Rank discipline: NULL values dropped BEFORE grouping, the pooled
+    rank table lives on the DISTINCT value alphabet (one (value, type)
+    count collapse first -- nothing after the first aggregate scales
+    with events), and ranks are ``_midrank2`` doubled midranks. Each
+    per-group term R2_g^2 / n_g is rounded to an integer BEFORE the
     k-term fold: every summand is exact, so the fold is
     order-insensitive on both engines. Tie correction applied from
-    exact sum(t^3 - t). The cut is chi2_{0.95, k-1}, DERIVED from
-    k_groups via the stats_levene table (Wilson-Hilferty beyond it).
+    exact sum(t^3 - t). The cut is chi2_{0.95, k-1} from this
+    function's own chi-square table for df 1-12 (Wilson-Hilferty
+    beyond it); ``levene_brownforsythe``'s table holds F values.
 
     Plan: one combinable (type, value) aggregate, a cumulative-count
     window over the pooled VALUE alphabet, one alphabet-sized
@@ -1721,11 +1800,7 @@ def kruskal_wallis(events: DataFrame) -> DataFrame:
     ranked = vtot.select(
         "value",
         "cnt_v",
-        (
-            2 * F.coalesce(F.sum("cnt_v").over(w), F.lit(0))
-            + F.col("cnt_v")
-            + 1
-        ).alias("rank2"),
+        _midrank2(F.sum("cnt_v").over(w), "cnt_v").alias("rank2"),
     )
     per_group = (
         vg.join(ranked.select("value", "rank2"), "value")
@@ -1960,9 +2035,8 @@ def spearman_corr(events: DataFrame) -> DataFrame:
     metric drifting monotonically at all?" robustly to outliers and
     nonlinearity).
 
-    Tie discipline (the mannwhitney/kruskal contract): value ranks
-    are average ranks carried DOUBLED as exact integers off one
-    (type, value) alphabet collapse joined back; time ranks are
+    Tie discipline: value ranks are ``_midrank2`` doubled midranks
+    off one (type, value) alphabet collapse joined back; time ranks are
     2 * row_number (timestamps are unique per the (ts, event_id)
     total order). The five per-type sums (n, sum u, sum u^2, sum uv,
     sum v^2-free closed forms where possible) are exact BIGINTs; the
@@ -1984,11 +2058,7 @@ def spearman_corr(events: DataFrame) -> DataFrame:
     ranked = vg.select(
         "event_type",
         "value",
-        (
-            2 * F.coalesce(F.sum("cnt").over(w_val), F.lit(0))
-            + F.col("cnt")
-            + 1
-        ).alias("u"),
+        _midrank2(F.sum("cnt").over(w_val), "cnt").alias("u"),
     )
     w_ts = Window.partitionBy("event_type").orderBy("ts", "event_id")
     rows = (
@@ -2155,60 +2225,21 @@ def zscore_cross_sectional(events: DataFrame) -> DataFrame:
 
 
 def cohens_d(events: DataFrame) -> DataFrame:
-    """Cohen's d effect size per event type over the deterministic
-    A/B user hash -- the magnitude readout the significance family
+    """Cohen's d effect size per event type over the ``_ab_arm``
+    user split -- the magnitude readout the significance family
     (``stats_ttest_welch``, ``ab_test_ztest``) deliberately omits: a
     large-n experiment can be "significant" at d = 0.01; decision
     memos need the standardized difference itself, plus Hedges' g
     (the small-sample bias correction).
 
-    Same engine-exact construction as the Welch test (per-arm means
-    rounded 6 pin the centering constants, ONE grouped pass of
-    centered squares): d = (mean_a - mean_b)/s_pooled with
+    Built on ``_ab_moments`` like the Welch test:
+    d = (mean_a - mean_b)/s_pooled with
     s_pooled = sqrt((css_a + css_b)/(n_a + n_b - 2)), g = d * (1 -
     3/(4(n_a+n_b) - 9)). The magnitude bucket cuts on the ROUNDED d
     so the label can never straddle engines.
 
     Emits (event_type, n_a, n_b, cohens_d, hedges_g, magnitude).
     """
-    variant = F.when(
-        F.substring(
-            F.md5(
-                F.concat_ws("|", F.lit("ab"), F.col("user_id").cast("string"))
-            ),
-            1,
-            1,
-        )
-        < F.lit("8"),
-        "A",
-    ).otherwise("B")
-    base = events.select("event_type", variant.alias("variant"), "value")
-    mu = base.groupBy("event_type", "variant").agg(
-        F.round(F.avg("value"), 6).alias("mu")
-    )
-    dv = F.col("value") - F.col("mu")
-    cell = (
-        base.join(F.broadcast(mu), ["event_type", "variant"])
-        .groupBy("event_type", "variant")
-        .agg(
-            F.count("*").alias("n"),
-            F.max("mu").alias("mu"),
-            F.sum(dv * dv).alias("css"),
-        )
-    )
-    pick = lambda v, c: F.max(F.when(F.col("variant") == v, F.col(c)))  # noqa: E731
-    wide = cell.groupBy("event_type").agg(
-        pick("A", "n").alias("n_a"),
-        pick("B", "n").alias("n_b"),
-        pick("A", "mu").alias("mean_a"),
-        pick("B", "mu").alias("mean_b"),
-        pick("A", "css").alias("css_a"),
-        pick("B", "css").alias("css_b"),
-    ).filter(
-        (F.col("n_a") > 1)
-        & (F.col("n_b") > 1)
-        & (F.col("css_a") + F.col("css_b") > 0)
-    )
     pooled = F.sqrt(
         (F.col("css_a") + F.col("css_b"))
         / (F.col("n_a") + F.col("n_b") - 2)
@@ -2229,7 +2260,7 @@ def cohens_d(events: DataFrame) -> DataFrame:
         .when(F.abs(d) < 0.8, "medium")
         .otherwise("large")
     )
-    return wide.select(
+    return _ab_moments(events).select(
         "event_type",
         "n_a",
         "n_b",
@@ -2440,19 +2471,6 @@ def cramers_v(events: DataFrame) -> DataFrame:
     )
 
 
-def _daily_counts(events: DataFrame) -> DataFrame:
-    """(day, x=n_events, y=value-cent-sum) daily series -- the shared
-    substrate of the rank/trend statistics below. One partial+final
-    aggregation; the output is day-count-sized (bounded by calendar
-    span, not data volume)."""
-    return events.groupBy(
-        F.date_trunc("day", "ts").alias("day")
-    ).agg(
-        F.count("*").alias("x"),
-        F.sum(F.floor(F.col("value") * 100).cast("long")).alias("y"),
-    )
-
-
 def kendall_tau_daily(events: DataFrame) -> DataFrame:
     """Kendall's tau-b rank correlation between daily event count and
     daily value volume -- the robust are-they-moving-together check
@@ -2601,8 +2619,7 @@ def wilcoxon_signed_rank(events: DataFrame) -> DataFrame:
 
     Per-user cent-sums for each half come from one keyed aggregation;
     zero differences drop (standard Wilcoxon practice); |d| ranks are
-    carried DOUBLED as exact integers so midrank ties stay integral
-    (the mannwhitney trick), and the normal-approximation z is one
+    ``_midrank2`` doubled midranks, and the normal-approximation z is one
     double expression off the exact integer (n, W+) pair. No tie
     correction in sigma (documented; ties in cent-sums are rare and
     the identical formula runs on both engines).
@@ -2636,11 +2653,7 @@ def wilcoxon_signed_rank(events: DataFrame) -> DataFrame:
         "ad",
         "cnt",
         "pos",
-        (
-            2 * F.coalesce(F.sum("cnt").over(w), F.lit(0))
-            + F.col("cnt")
-            + 1
-        ).alias("rank2"),
+        _midrank2(F.sum("cnt").over(w), "cnt").alias("rank2"),
     )
     agg = ranked.agg(
         F.sum("cnt").alias("n"),
@@ -3228,47 +3241,19 @@ def cochran_q(
 
 
 def friedman_ranks(events: DataFrame) -> DataFrame:
-    """Friedman rank test substrate: users are blocks, event types are
-    treatments, the response is each user's count of that type
-    (missing combinations count 0 via a dense user x type grid).
-    Within each user the k counts are midranked; the classic
-    statistic chi2_F = 12/(N k (k+1)) * sum_j R_j^2 - 3 N (k+1) is
-    computed from the EXACT doubled rank sums (midranks live on the
-    half-integer lattice, so 2*midrank = 2*rank + ties - 1 is an
-    integer; no tie-correction factor is applied, which both engines
-    agree on by construction).
+    """Friedman rank test over ``_block_midranks``' design (users are
+    blocks, event types treatments, the response each user's count of
+    the type): the classic statistic chi2_F = 12/(N k (k+1)) *
+    sum_j R_j^2 - 3 N (k+1) is computed from the EXACT doubled rank
+    sums of its within-user midranks.
 
-    Shape: per-(user, type) count, dense-completed by a broadcast
-    cross of the type dimension (k rows), midranks via one user-keyed
-    window, then a k-row rank-sum aggregation; the statistic is one
-    double off integer rank sums. Output is k+0 rows -- treatments
-    with their doubled rank sums and the shared statistic.
+    Shape: the kernel's grid, then a k-row rank-sum aggregation; the
+    statistic is one double off integer rank sums. Output is k rows --
+    treatments with their doubled rank sums and the shared statistic.
 
     Emits (event_type, rank_sum_x2, n_blocks, friedman_stat).
     """
-    counts = events.groupBy("user_id", "event_type").agg(
-        F.count("*").alias("cnt")
-    )
-    users = events.select("user_id").distinct()
-    types = events.select("event_type").distinct()
-    dense = (
-        users.join(F.broadcast(types))
-        .join(counts, ["user_id", "event_type"], "left")
-        .select(
-            "user_id",
-            "event_type",
-            F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"),
-        )
-    )
-    wu = Window.partitionBy("user_id").orderBy("cnt")
-    wt = Window.partitionBy("user_id", "cnt")
-    ranked = dense.select(
-        "user_id",
-        "event_type",
-        (
-            F.lit(2) * F.rank().over(wu) + F.count("*").over(wt) - F.lit(1)
-        ).alias("mr2"),
-    )
+    ranked = _block_midranks(events)
     sums = ranked.groupBy("event_type").agg(
         F.sum("mr2").cast("long").alias("rank_sum_x2"),
         F.count("*").cast("long").alias("n_blocks"),
@@ -3660,25 +3645,12 @@ def cronbach_alpha(events: DataFrame) -> DataFrame:
     alpha = k/(k-1) * (1 - sum_j V_j / V_total) with per-item and
     row-total population variances assembled at n^2 scale from exact
     integer sums (n*sum(x^2) - sum(x)^2) -- the common factor cancels
-    in the ratio, so alpha is ONE double off integers. Dense per-user
-    rows via the same k-row broadcast cross as stats_friedman.
+    in the ratio, so alpha is ONE double off integers. The per-user
+    counts are ``_block_midranks``' dense grid (its midranks unused).
 
     Emits ONE row (n_users, k, alpha).
     """
-    counts = events.groupBy("user_id", "event_type").agg(
-        F.count("*").alias("cnt")
-    )
-    users = events.select("user_id").distinct()
-    types = events.select("event_type").distinct()
-    dense = (
-        users.join(F.broadcast(types))
-        .join(counts, ["user_id", "event_type"], "left")
-        .select(
-            "user_id",
-            "event_type",
-            F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"),
-        )
-    )
+    dense = _block_midranks(events)
     per_item = dense.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum("cnt").alias("s"),
@@ -4317,7 +4289,7 @@ def orders_dow_profile(orders: DataFrame) -> DataFrame:
 
 def ansari_bradley(events: DataFrame) -> DataFrame:
     """Ansari-Bradley two-sample DISPERSION test per event type over
-    the deterministic md5 A/B user split shared with
+    the ``_ab_arm`` user split shared with
     ``ab_test_ztest``/``mannwhitney_utest`` -- the nonparametric
     scale-shift companion to their location tests: AB scores walk up
     from both ends of the pooled ranking (1, 2, ..., ceil(N/2), ...,
@@ -4332,30 +4304,11 @@ def ansari_bradley(events: DataFrame) -> DataFrame:
     js_divergence nano-nat discipline), so the cross-group sums are
     exact and the closing z expression runs on identical doubles.
 
-    Plan: one (type, value) combinable aggregate, a cumulative-count
-    window over the per-type VALUE alphabet, an alphabet-sized fold.
+    Plan: ``_ab_value_counts``, a cumulative-count window over its
+    per-type VALUE alphabet, an alphabet-sized fold.
 
     Emits (event_type, n_a, n_b, t_ab, zscore, significant).
     """
-    variant_a = (
-        F.substring(
-            F.md5(
-                F.concat_ws("|", F.lit("ab"), F.col("user_id").cast("string"))
-            ),
-            1,
-            1,
-        )
-        < F.lit("8")
-    )
-    vg = (
-        events.filter(F.col("value").isNotNull())
-        .select("event_type", variant_a.alias("is_a"), "value")
-        .groupBy("event_type", "value")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.sum(F.col("is_a").cast("long")).alias("cnt_a"),
-        )
-    )
     w = (
         Window.partitionBy("event_type")
         .orderBy("value")
@@ -4363,7 +4316,7 @@ def ansari_bradley(events: DataFrame) -> DataFrame:
     )
     wn = Window.partitionBy("event_type")
     run = (
-        vg.withColumn("lo", F.coalesce(F.sum("cnt").over(w), F.lit(0)) + 1)
+        _ab_value_counts(events).withColumn("lo", F.coalesce(F.sum("cnt").over(w), F.lit(0)) + 1)
         .withColumn("hi", F.col("lo") + F.col("cnt") - 1)
         .withColumn("n_tot", F.sum("cnt").over(wn))
     )
@@ -4446,7 +4399,7 @@ def ansari_bradley(events: DataFrame) -> DataFrame:
 
 def ks_two_sample(events: DataFrame) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov test per event type over the
-    deterministic md5 A/B user split -- the DISTRIBUTION-shift
+    ``_ab_arm`` user split -- the DISTRIBUTION-shift
     companion to Mann-Whitney's location test and Ansari-Bradley's
     scale test (a variant that changes shape without moving mean or
     spread only shows up here).
@@ -4456,38 +4409,19 @@ def ks_two_sample(events: DataFrame) -> DataFrame:
     counts at each distinct value), maxed as a bigint; D and the
     Kolmogorov z are one double expression each off that integer.
 
-    Plan: one (type, value) combinable aggregate, a cumulative-count
-    window over the per-type value alphabet, an alphabet-sized max
-    fold -- the mannwhitney plan shape.
+    Plan: ``_ab_value_counts``, a cumulative-count window over its
+    per-type value alphabet, an alphabet-sized max fold -- the
+    mannwhitney plan shape.
 
     Emits (event_type, n_a, n_b, d_stat, ks_z, significant)
     (significant at the alpha=0.05 Kolmogorov critical 1.358).
     """
-    variant_a = (
-        F.substring(
-            F.md5(
-                F.concat_ws("|", F.lit("ab"), F.col("user_id").cast("string"))
-            ),
-            1,
-            1,
-        )
-        < F.lit("8")
-    )
-    vg = (
-        events.filter(F.col("value").isNotNull())
-        .select("event_type", variant_a.alias("is_a"), "value")
-        .groupBy("event_type", "value")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.sum(F.col("is_a").cast("long")).alias("cnt_a"),
-        )
-    )
     w = (
         Window.partitionBy("event_type")
         .orderBy("value")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    cum = vg.select(
+    cum = _ab_value_counts(events).select(
         "event_type",
         "cnt",
         "cnt_a",
@@ -4532,8 +4466,8 @@ def page_trend(events: DataFrame) -> DataFrame:
     per-user type-count profile that Friedman's omnibus chi-square
     dilutes.
 
-    Exactness: the friedman dense-grid doubled midranks keep every
-    rank sum an exact bigint; L rides doubled (L2 = sum j * mr2_sum),
+    Exactness: ``_block_midranks``' doubled midranks keep every rank
+    sum an exact bigint; L rides doubled (L2 = sum j * mr2_sum),
     the treatment index j is the alphabetical row_number over the
     type alphabet, and the classical normal approximation (E[L] =
     N*k*(k+1)^2/4, Var[L] = N*k^2*(k+1)*(k^2-1)/144) is one double
@@ -4543,32 +4477,12 @@ def page_trend(events: DataFrame) -> DataFrame:
     rows each carrying the global statistic (the friedman output
     shape).
     """
-    counts = events.groupBy("user_id", "event_type").agg(
-        F.count("*").alias("cnt")
-    )
-    users = events.select("user_id").distinct()
-    types = events.select("event_type").distinct()
-    dense = (
-        users.crossJoin(F.broadcast(types))
-        .join(counts, ["user_id", "event_type"], "left")
-        .select(
-            "user_id", "event_type", F.coalesce("cnt", F.lit(0)).alias("cnt")
-        )
-    )
-    wr = Window.partitionBy("user_id").orderBy("cnt")
-    wt = Window.partitionBy("user_id", "cnt")
-    ranked = dense.select(
-        "user_id",
-        "event_type",
-        (
-            2 * F.rank().over(wr) + F.count("*").over(wt) - 1
-        ).alias("mr2"),
-    )
+    ranked = _block_midranks(events)
     sums = ranked.groupBy("event_type").agg(
         F.sum("mr2").cast("long").alias("rank_sum_x2"),
         F.count("*").cast("long").alias("n_blocks"),
     )
-    wj = Window.orderBy("event_type")
+    wj = Window.orderBy(F.col("event_type").asc_nulls_last())  # the oracle's order
     pos = sums.select(
         "event_type",
         "rank_sum_x2",
@@ -5067,14 +4981,12 @@ def mann_kendall_daily(events: DataFrame) -> DataFrame:
 
 
 def odds_ratio_ab(events: DataFrame) -> DataFrame:
-    """Odds ratio with a 95%% Wald CI per event type, over the same
-    deterministic md5 A/B user split and >=10-emissions conversion
-    rule as ``ab_test_ztest`` -- the effect-SIZE readout next to that
+    """Odds ratio with a 95%% Wald CI per event type, over the
+    ``_ab_conversions`` table ``ab_test_ztest`` tests -- the effect-SIZE readout next to that
     test's significance readout (an experiment dashboard reports
     both; the z-test cannot say how big).
 
-    The 2x2 cells (converted/not x A/B) are exact integers off the
-    per-user compression; OR = (a*d)/(b*c), ln(OR), and the Wald
+    The 2x2 cells (converted/not x A/B) are exact integers; OR = (a*d)/(b*c), ln(OR), and the Wald
     bounds exp(ln OR -/+ 1.96*se) are each one double expression in
     the same operation order on both engines. A zero cell has no
     finite OR and emits NULL bounds (both engines).
@@ -5082,53 +4994,12 @@ def odds_ratio_ab(events: DataFrame) -> DataFrame:
     Emits (event_type, conv_a, miss_a, conv_b, miss_b, odds_ratio,
     ci_low, ci_high).
     """
-    variant = F.when(
-        F.substring(
-            F.md5(
-                F.concat_ws("|", F.lit("ab"), F.col("user_id").cast("string"))
-            ),
-            1,
-            1,
-        )
-        < F.lit("8"),
-        "A",
-    ).otherwise("B")
-    users = events.select("user_id", variant.alias("variant")).distinct()
-    conv = (
-        events.groupBy("user_id", "event_type")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 10)
-        .select("user_id", "event_type")
-    )
-    per_type = (
-        users.join(conv, "user_id")
-        .groupBy("event_type", "variant")
-        .agg(F.count("*").alias("n_conv"))
-    )
-    tot = users.groupBy().agg(
-        F.sum(F.when(F.col("variant") == "A", 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("variant") == "B", 1).otherwise(0)).alias("n_b"),
-    )
-    wide = (
-        per_type.groupBy("event_type")
-        .agg(
-            F.coalesce(
-                F.max(F.when(F.col("variant") == "A", F.col("n_conv"))),
-                F.lit(0),
-            ).alias("a"),
-            F.coalesce(
-                F.max(F.when(F.col("variant") == "B", F.col("n_conv"))),
-                F.lit(0),
-            ).alias("c"),
-        )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "event_type",
-            "a",
-            (F.col("n_a") - F.col("a")).alias("b"),
-            "c",
-            (F.col("n_b") - F.col("c")).alias("d"),
-        )
+    wide = _ab_conversions(events).select(
+        "event_type",
+        F.col("conv_a").alias("a"),
+        (F.col("n_a") - F.col("conv_a")).alias("b"),
+        F.col("conv_b").alias("c"),
+        (F.col("n_b") - F.col("conv_b")).alias("d"),
     )
     ok = (
         (F.col("a") > 0)
@@ -5442,7 +5313,7 @@ def seasonality_strength_dow(events: DataFrame) -> DataFrame:
 
 
 def mood_median_test(events: DataFrame) -> DataFrame:
-    """Mood's median test between the md5 A/B user split: does either
+    """Mood's median test between the ``_ab_arm`` arms: does either
     arm sit above the pooled median more often than chance -- the
     blunt-but-assumption-free location test next to mannwhitney's
     rank test (median test survives arbitrary outliers and needs
@@ -5456,17 +5327,7 @@ def mood_median_test(events: DataFrame) -> DataFrame:
 
     Emits ONE row (a_above, a_below, b_above, b_below, chi2).
     """
-    variant = F.when(
-        F.substring(
-            F.md5(
-                F.concat_ws("|", F.lit("ab"), F.col("user_id").cast("string"))
-            ),
-            1,
-            1,
-        )
-        < F.lit("8"),
-        "A",
-    ).otherwise("B")
+    variant = F.when(_ab_arm(), "A").otherwise("B")
     med = events.agg(
         F.round(F.percentile("value", F.lit(0.5)), 4).alias("med")
     )
@@ -5528,8 +5389,8 @@ def mood_median_test(events: DataFrame) -> DataFrame:
 
 
 def quade_ranks(events: DataFrame) -> DataFrame:
-    """Quade rank test on the friedman substrate (users are blocks,
-    event types are treatments, the response is each user's count of
+    """Quade rank test over ``_block_midranks``' design (users are
+    blocks, event types treatments, the response each user's count of
     the type over a dense user x type grid) -- friedman's
     range-weighted upgrade: blocks whose counts SPREAD more carry
     more weight, so a handful of decisive users cannot be outvoted by
@@ -5537,8 +5398,8 @@ def quade_ranks(events: DataFrame) -> DataFrame:
     repeated-measures panel (report both; they disagree exactly when
     block scale carries signal).
 
-    Exactness: within-block midranks are DOUBLED integers (the house
-    midrank lattice); block weights are the DOUBLED midranks of each
+    Exactness: within-block midranks are the kernel's DOUBLED
+    integers; block weights are the DOUBLED midranks of each
     block's integer count range across blocks; the Quade scores
     S_ij = Q_i * (r_ij - (k+1)/2) live on the QUARTER lattice, so
     s4 = q2 * (mr2 - k - 1) is an exact integer per cell. The A and B
@@ -5550,30 +5411,8 @@ def quade_ranks(events: DataFrame) -> DataFrame:
     Emits (event_type, s4_sum, quade_stat) -- k rows, the per-type
     quarter-lattice score sums plus the shared statistic.
     """
-    counts = events.groupBy("user_id", "event_type").agg(
-        F.count("*").alias("cnt")
-    )
-    users = events.select("user_id").distinct()
-    types = events.select("event_type").distinct()
-    dense = (
-        users.join(F.broadcast(types))
-        .join(counts, ["user_id", "event_type"], "left")
-        .select(
-            "user_id",
-            "event_type",
-            F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"),
-        )
-    )
-    wu = Window.partitionBy("user_id").orderBy("cnt")
-    wt = Window.partitionBy("user_id", "cnt")
-    ranked = dense.select(
-        "user_id",
-        "event_type",
-        (
-            F.lit(2) * F.rank().over(wu) + F.count("*").over(wt) - F.lit(1)
-        ).alias("mr2"),
-    )
-    ranges = dense.groupBy("user_id").agg(
+    ranked = _block_midranks(events)
+    ranges = ranked.groupBy("user_id").agg(
         (F.max("cnt") - F.min("cnt")).alias("rng")
     )
     wr = Window.orderBy("rng")
@@ -5584,7 +5423,8 @@ def quade_ranks(events: DataFrame) -> DataFrame:
             F.lit(2) * F.rank().over(wr) + F.count("*").over(wrt) - F.lit(1)
         ).alias("q2"),
     )
-    k1 = types.count() + 1  # bounded: type-alphabet size
+    # bounded: type-alphabet size
+    k1 = events.select("event_type").distinct().count() + 1
     cells = ranked.join(weights, "user_id").select(
         "event_type",
         (F.col("q2") * (F.col("mr2") - F.lit(k1))).alias("s4"),
@@ -5990,54 +5830,28 @@ def weekend_lift(events: DataFrame) -> DataFrame:
 
 
 def cliff_delta(events: DataFrame) -> DataFrame:
-    """Cliff's delta per event type over the deterministic A/B user
-    hash (the ``mannwhitney_utest`` split) -- the EFFECT-SIZE
+    """Cliff's delta per event type over the ``_ab_arm`` user split
+    (the ``mannwhitney_utest`` split) -- the EFFECT-SIZE
     companion to the U test's significance verdict: delta =
     P(a > b) - P(a < b) in [-1, 1], readable without reference to
     sample size (|delta| < 0.147 is the conventional 'negligible'
     line). A test can be significant and negligible at once; this is
     the column that says which.
 
-    Exactness: greater/less pair counts come off the (type, value)
-    compression with ONE exclusive cumulative window over the
+    Exactness: greater/less pair counts come off
+    ``_ab_value_counts`` with ONE exclusive cumulative window over its
     per-type VALUE alphabet (gt = sum cntA(v) * cumB(<v); lt
     symmetric from the B-side totals) -- all exact bigints; delta is
-    one integer ratio at 1e-6 scale. NULL values drop first (no rank
-    information), exactly as the U test does.
+    one integer ratio at 1e-6 scale.
 
     Emits (event_type, n_a, n_b, gt_pairs, lt_pairs, cliff_delta).
     """
-    variant_a = (
-        F.substring(
-            F.md5(
-                F.concat_ws("|", F.lit("ab"), F.col("user_id").cast("string"))
-            ),
-            1,
-            1,
-        )
-        < F.lit("8")
-    )
-    vg = (
-        events.filter(F.col("value").isNotNull())
-        .select("event_type", variant_a.alias("is_a"), "value")
-        .groupBy("event_type", "value")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.sum(F.col("is_a").cast("long")).alias("cnt_a"),
-        )
-        .select(
-            "event_type",
-            "value",
-            "cnt_a",
-            (F.col("cnt") - F.col("cnt_a")).alias("cnt_b"),
-        )
-    )
     w = (
         Window.partitionBy("event_type")
         .orderBy("value")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    staged = vg.select(
+    staged = _ab_value_counts(events).select(
         "event_type",
         "cnt_a",
         "cnt_b",
@@ -6068,7 +5882,7 @@ def cliff_delta(events: DataFrame) -> DataFrame:
 
 def cvm_two_sample(events: DataFrame) -> DataFrame:
     """Two-sample Cramer-von Mises statistic per event type over the
-    same A/B split -- the WHOLE-CDF distance next to
+    ``_ab_value_counts`` alphabet of the ``_ab_arm`` split -- the WHOLE-CDF distance next to
     ``stats_ks_two_sample``'s single worst point: KS sees the largest
     gap, CvM integrates every gap, so a distribution that differs
     mildly everywhere (but sharply nowhere) still registers.
@@ -6083,32 +5897,13 @@ def cvm_two_sample(events: DataFrame) -> DataFrame:
 
     Emits (event_type, n_a, n_b, cvm_stat).
     """
-    variant_a = (
-        F.substring(
-            F.md5(
-                F.concat_ws("|", F.lit("ab"), F.col("user_id").cast("string"))
-            ),
-            1,
-            1,
-        )
-        < F.lit("8")
-    )
-    vg = (
-        events.filter(F.col("value").isNotNull())
-        .select("event_type", variant_a.alias("is_a"), "value")
-        .groupBy("event_type", "value")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.sum(F.col("is_a").cast("long")).alias("cnt_a"),
-        )
-    )
     w_in = (
         Window.partitionBy("event_type")
         .orderBy("value")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     w_all = Window.partitionBy("event_type")
-    staged = vg.select(
+    staged = _ab_value_counts(events).select(
         "event_type",
         "cnt",
         F.sum("cnt_a").over(w_in).alias("ca_in"),
@@ -6533,15 +6328,15 @@ def seasonality_index(orders: DataFrame) -> DataFrame:
 
 def brunner_munzel(events: DataFrame) -> DataFrame:
     """Brunner-Munzel two-sample test per event type over the shared
-    A/B hash split -- the rank test that drops Mann-Whitney's
+    ``_ab_arm`` user split -- the rank test that drops Mann-Whitney's
     equal-variance assumption (the nonparametric Behrens-Fisher
     problem): W estimates P(A < B) against 1/2 with each group's OWN
     rank variance, so a variant that changes spread as well as
     location no longer inflates the location verdict.
 
-    Exactness: both pooled and within-group midranks ride DOUBLED as
-    exact integers off the (type, value) compression (two cumulative
-    windows over the per-type VALUE alphabet); the per-value squared
+    Exactness: both pooled and within-group ranks are ``_midrank2``
+    doubled midranks off ``_ab_value_counts`` (three exclusive
+    cumulative sums over the per-type VALUE alphabet); the per-value squared
     deviation terms cnt * (r2p - r2g)^2 are exact bigints (bounded by
     4N^3 per type -- inside int64 for any per-type alphabet this
     engine's fixtures see; the 100 TB posture re-scales to unit
@@ -6552,57 +6347,19 @@ def brunner_munzel(events: DataFrame) -> DataFrame:
     Emits (event_type, n_a, n_b, p_hat, w_stat, significant).
     ``p_hat`` is the estimated P(A < B) + 0.5 * P(A = B).
     """
-    variant_a = (
-        F.substring(
-            F.md5(
-                F.concat_ws("|", F.lit("ab"), F.col("user_id").cast("string"))
-            ),
-            1,
-            1,
-        )
-        < F.lit("8")
-    )
-    vg = (
-        events.filter(F.col("value").isNotNull())
-        .select("event_type", variant_a.alias("is_a"), "value")
-        .groupBy("event_type", "value")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.sum(F.col("is_a").cast("long")).alias("cnt_a"),
-        )
-        .select(
-            "event_type",
-            "value",
-            "cnt",
-            "cnt_a",
-            (F.col("cnt") - F.col("cnt_a")).alias("cnt_b"),
-        )
-    )
     w = (
         Window.partitionBy("event_type")
         .orderBy("value")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    ranked = vg.select(
+    ranked = _ab_value_counts(events).select(
         "event_type",
         "cnt",
         "cnt_a",
         "cnt_b",
-        (
-            2 * F.coalesce(F.sum("cnt").over(w), F.lit(0))
-            + F.col("cnt")
-            + 1
-        ).alias("r2p"),
-        (
-            2 * F.coalesce(F.sum("cnt_a").over(w), F.lit(0))
-            + F.col("cnt_a")
-            + 1
-        ).alias("r2a"),
-        (
-            2 * F.coalesce(F.sum("cnt_b").over(w), F.lit(0))
-            + F.col("cnt_b")
-            + 1
-        ).alias("r2b"),
+        _midrank2(F.sum("cnt").over(w), "cnt").alias("r2p"),
+        _midrank2(F.sum("cnt_a").over(w), "cnt_a").alias("r2a"),
+        _midrank2(F.sum("cnt_b").over(w), "cnt_b").alias("r2b"),
     )
     agg = ranked.groupBy("event_type").agg(
         F.sum("cnt_a").alias("n_a"),

@@ -441,15 +441,25 @@ def _time_resample_gapfill(spark, sf):
     return analytics.time_resample_gapfill(_t(spark, sf, "events"))
 
 
+#: The md5 A/B user split (``operators.analytics._ab_arm``): TRUE for
+#: arm A. concat_ws skips NULL on both engines, so a NULL user_id is
+#: hashed as md5('ab') -> arm A on both engines; every A/B oracle
+#: spells the split through this one string.
+_AB_SPLIT = (
+    "substr(md5(concat_ws('|', 'ab', CAST(user_id AS VARCHAR))),"
+    " 1, 1) < '8'"
+)
+
+
 #: Shared two-proportion z-test CTE chain (hash A/B split -> per-type
 #: z): ab_test_ztest's oracle selects ztab directly; stats_fdr_bh's
 #: step-up builds on the SAME text, so the test definition (the
-#: conv >= 10 threshold, the 'ab|' split, the z formula) can never
+#: conv >= 10 threshold, the _AB_SPLIT split, the z formula) can never
 #: drift between them.
-_ZTEST_CTES = """
+_ZTEST_CTES = f"""
     users AS (
       SELECT DISTINCT user_id,
-             CASE WHEN substr(md5('ab|' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+             CASE WHEN {_AB_SPLIT}
                   THEN 'A' ELSE 'B' END AS variant
       FROM events
     ),
@@ -514,10 +524,10 @@ def _ab_test_ztest(spark, sf):
 
 @_register(
     "stats_ttest_welch",
-    """
+    f"""
     WITH base AS (
       SELECT event_type,
-             CASE WHEN substr(md5('ab|' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+             CASE WHEN {_AB_SPLIT}
                   THEN 'A' ELSE 'B' END AS variant,
              value
       FROM events
@@ -1001,11 +1011,10 @@ def _basket_lift_topk(spark, sf):
 
 @_register(
     "stats_mannwhitney",
-    """
+    f"""
     WITH base AS (
       SELECT event_type,
-             substr(md5('ab|' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
-               AS is_a,
+             {_AB_SPLIT} AS is_a,
              value
       FROM events
       WHERE value IS NOT NULL
@@ -1341,7 +1350,7 @@ def _events_zscore_cross_sectional(spark, sf):
     f"""
     WITH base AS (
       SELECT event_type,
-             CASE WHEN substr(md5('ab|' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+             CASE WHEN {_AB_SPLIT}
                   THEN 'A' ELSE 'B' END AS variant,
              value
       FROM events),
@@ -2901,11 +2910,10 @@ def _orders_dow_profile(spark, sf):
 
 @_register(
     "stats_ansari_bradley",
-    """
+    f"""
     WITH base AS (
       SELECT event_type,
-             substr(md5('ab|' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
-               AS is_a,
+             {_AB_SPLIT} AS is_a,
              value
       FROM events
       WHERE value IS NOT NULL),
@@ -3003,11 +3011,10 @@ def _stats_ansari_bradley(spark, sf):
 
 @_register(
     "stats_ks_two_sample",
-    """
+    f"""
     WITH base AS (
       SELECT event_type,
-             substr(md5('ab|' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
-               AS is_a,
+             {_AB_SPLIT} AS is_a,
              value
       FROM events
       WHERE value IS NOT NULL),
@@ -3469,11 +3476,11 @@ def _stats_mann_kendall(spark, sf):
 
 @_register(
     "stats_odds_ratio",
-    """
+    f"""
     WITH users AS (
       SELECT DISTINCT user_id,
-             CASE WHEN substr(md5('ab|' || CAST(user_id AS VARCHAR)), 1, 1)
-                       < '8' THEN 'A' ELSE 'B' END AS variant
+             CASE WHEN {_AB_SPLIT}
+                  THEN 'A' ELSE 'B' END AS variant
       FROM events),
     conv AS (
       SELECT user_id, event_type
@@ -3726,14 +3733,14 @@ def _stats_seasonality_strength(spark, sf):
       SELECT round(quantile_cont(value, 0.5), 4) AS med FROM {_EVTS}),
     cells AS (
       SELECT
-        sum(CASE WHEN substr(md5('ab|' || CAST(user_id AS VARCHAR)), 1, 1)
-                      < '8' AND value > med THEN 1 ELSE 0 END) AS a_above,
-        sum(CASE WHEN substr(md5('ab|' || CAST(user_id AS VARCHAR)), 1, 1)
-                      < '8' AND value < med THEN 1 ELSE 0 END) AS a_below,
-        sum(CASE WHEN substr(md5('ab|' || CAST(user_id AS VARCHAR)), 1, 1)
-                      >= '8' AND value > med THEN 1 ELSE 0 END) AS b_above,
-        sum(CASE WHEN substr(md5('ab|' || CAST(user_id AS VARCHAR)), 1, 1)
-                      >= '8' AND value < med THEN 1 ELSE 0 END) AS b_below
+        sum(CASE WHEN {_AB_SPLIT}
+                      AND value > med THEN 1 ELSE 0 END) AS a_above,
+        sum(CASE WHEN {_AB_SPLIT}
+                      AND value < med THEN 1 ELSE 0 END) AS a_below,
+        sum(CASE WHEN NOT ({_AB_SPLIT})
+                      AND value > med THEN 1 ELSE 0 END) AS b_above,
+        sum(CASE WHEN NOT ({_AB_SPLIT})
+                      AND value < med THEN 1 ELSE 0 END) AS b_below
       FROM {_EVTS}, med WHERE value <> med)
     SELECT CAST(a_above AS BIGINT) AS a_above,
            CAST(a_below AS BIGINT) AS a_below,
@@ -4087,12 +4094,6 @@ def _stats_acf_table(spark, sf):
 )
 def _events_weekend_lift(spark, sf):
     return analytics.weekend_lift(_t(spark, sf, "events"))
-
-
-_AB_SPLIT = (
-    "substr(md5(concat_ws('|', 'ab', CAST(user_id AS VARCHAR))),"
-    " 1, 1) < '8'"
-)
 
 
 @_register(

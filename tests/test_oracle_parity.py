@@ -2,8 +2,12 @@
 family, compared against DuckDB exactly as the driver does (full
 46-query sweeps live in tests/oracle_check.py, runnable standalone)."""
 
+import os
+
+import duckdb
 import pytest
 
+from java_mapreduce_framework_spark.sources.tables import TABLES
 from tests.oracle_check import compare
 
 FAMILIES = [
@@ -71,10 +75,104 @@ FAMILIES = [
     "bpe_encode",
     "ulm_train",
     "ulm_encode",
+    # the rank/A/B statistics built on operators/analytics.py's kernels
+    "ab_test_ztest",
+    "stats_ttest_welch",
+    "stats_cohens_d",
+    "stats_mannwhitney",
+    "stats_ansari_bradley",
+    "stats_ks_two_sample",
+    "stats_cliff_delta",
+    "stats_cvm_two_sample",
+    "stats_brunner_munzel",
+    "stats_odds_ratio",
+    "stats_mood_median",
+    "stats_lepage",
+    "stats_friedman",
+    "stats_page_trend",
+    "stats_quade",
+    "stats_kruskal_wallis",
+    "stats_spearman",
+    "stats_wilcoxon_signed_rank",
+]
+
+#: Every query that splits users with the md5 A/B hash.
+AB_SPLIT_QUERIES = [
+    "ab_test_ztest",
+    "stats_ttest_welch",
+    "stats_fdr_bh",
+    "stats_mannwhitney",
+    "stats_cohens_d",
+    "stats_ansari_bradley",
+    "stats_ks_two_sample",
+    "stats_odds_ratio",
+    "stats_mood_median",
+    "stats_lepage",
+    "stats_cliff_delta",
+    "stats_cvm_two_sample",
+    "stats_brunner_munzel",
+]
+
+#: The other rank statistics over the events table.
+RANK_QUERIES = [
+    "stats_friedman",
+    "stats_page_trend",
+    "stats_quade",
+    "stats_kruskal_wallis",
+    "stats_spearman",
+    "stats_wilcoxon_signed_rank",
 ]
 
 
 @pytest.mark.parametrize("name", FAMILIES)
 def test_oracle_parity(spark, sf_small, name):
     ok, msg = compare(name, spark, sf_small)
+    assert ok, msg
+
+
+def _with_null_events_column(tmp_path_factory, sf_dir, column, null_when):
+    """A copy of the fixture at ``sf_dir`` whose events ``column`` is
+    NULL where the SQL predicate ``null_when`` holds. The other tables
+    are links to the fixture's own files; only events.parquet is
+    rewritten."""
+    d = tmp_path_factory.mktemp(f"sf_null_{column}")
+    for t in TABLES:
+        if t != "events":
+            os.symlink(f"{sf_dir}/{t}.parquet", d / f"{t}.parquet")
+    duckdb.sql(
+        f"""COPY (SELECT * REPLACE (
+                    CASE WHEN {null_when} THEN NULL ELSE {column} END
+                    AS {column})
+                  FROM read_parquet('{sf_dir}/events.parquet'))
+            TO '{d}/events.parquet' (FORMAT parquet)"""
+    )
+    return str(d)
+
+
+@pytest.fixture(scope="module")
+def sf_null_user(tmp_path_factory, sf_small):
+    """user_id NULL on every 50th event (20 of 1,000 rows)."""
+    return _with_null_events_column(
+        tmp_path_factory, sf_small, "user_id", "event_id % 50 = 0"
+    )
+
+
+@pytest.fixture(scope="module")
+def sf_null_type(tmp_path_factory, sf_small):
+    """event_type NULL on every event of every 7th user (223 of 1,000
+    rows), so NULL is a type some users emit at least 10 times."""
+    return _with_null_events_column(
+        tmp_path_factory, sf_small, "event_type", "user_id % 7 = 0"
+    )
+
+
+@pytest.mark.parametrize("name", AB_SPLIT_QUERIES)
+def test_null_user_lands_in_the_same_arm_on_both_engines(spark, sf_null_user, name):
+    ok, msg = compare(name, spark, sf_null_user)
+    assert ok, msg
+
+
+@pytest.mark.parametrize("name", AB_SPLIT_QUERIES + RANK_QUERIES)
+def test_null_event_type_gives_the_same_rows_on_both_engines(spark, sf_null_type, name):
+    ok, msg = compare(name, spark, sf_null_type)
     assert ok, msg
