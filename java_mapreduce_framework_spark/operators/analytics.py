@@ -16,7 +16,8 @@ below the imports: ``_ab_arm`` (the md5 A/B user split),
 counts), ``_ab_moments`` (per-arm n, mean and centred square sum),
 ``_ab_conversions`` (the per-type >=10-emission conversion table),
 ``_block_midranks`` (the dense user x type count grid with doubled
-within-user midranks), ``_midrank2`` (the doubled-midrank expression)
+within-user midranks), ``_midrank2`` (the doubled-midrank expression
+over a running count), ``_rank_midrank2`` (the same over ``rank()``)
 and ``_daily_counts`` (the daily count / cent-sum series). Each
 kernel's docstring carries its exactness argument; callers point to it.
 
@@ -61,6 +62,17 @@ def _midrank2(before: Column, cnt: str) -> Column:
     closing statistic is one double expression on identical inputs on
     both engines (IEEE sqrt is correctly rounded)."""
     return 2 * F.coalesce(before, F.lit(0)) + F.col(cnt) + 1
+
+
+def _rank_midrank2(value: str, *within: str) -> Column:
+    """Doubled midrank of ``value`` among the rows that share
+    ``within`` (all rows when empty): ``2 * rank + ties - 1``, the
+    window form of ``_midrank2`` -- a run of ``ties`` equal values
+    after ``rank - 1`` smaller ones has midrank ``rank + (ties - 1) /
+    2``, an exact integer once doubled."""
+    order = Window.partitionBy(*within).orderBy(value)
+    ties = Window.partitionBy(*within, value)
+    return F.lit(2) * F.rank().over(order) + F.count("*").over(ties) - F.lit(1)
 
 
 def _ab_value_counts(events: DataFrame) -> DataFrame:
@@ -194,12 +206,7 @@ def _block_midranks(events: DataFrame) -> DataFrame:
             F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"),
         )
     )
-    wu = Window.partitionBy("user_id").orderBy("cnt")
-    wt = Window.partitionBy("user_id", "cnt")
-    return dense.withColumn(
-        "mr2",
-        F.lit(2) * F.rank().over(wu) + F.count("*").over(wt) - F.lit(1),
-    )
+    return dense.withColumn("mr2", _rank_midrank2("cnt", "user_id"))
 
 
 def _daily_counts(events: DataFrame) -> DataFrame:
@@ -5412,22 +5419,17 @@ def quade_ranks(events: DataFrame) -> DataFrame:
     quarter-lattice score sums plus the shared statistic.
     """
     ranked = _block_midranks(events)
+    # the grid is dense, so every user's row count is k (a NULL type
+    # is one type); reading it here keeps plan building job-free
     ranges = ranked.groupBy("user_id").agg(
-        (F.max("cnt") - F.min("cnt")).alias("rng")
+        (F.max("cnt") - F.min("cnt")).alias("rng"), F.count("*").alias("k")
     )
-    wr = Window.orderBy("rng")
-    wrt = Window.partitionBy("rng")
     weights = ranges.select(
-        "user_id",
-        (
-            F.lit(2) * F.rank().over(wr) + F.count("*").over(wrt) - F.lit(1)
-        ).alias("q2"),
+        "user_id", "k", _rank_midrank2("rng").alias("q2")
     )
-    # bounded: type-alphabet size
-    k1 = events.select("event_type").distinct().count() + 1
     cells = ranked.join(weights, "user_id").select(
         "event_type",
-        (F.col("q2") * (F.col("mr2") - F.lit(k1))).alias("s4"),
+        (F.col("q2") * (F.col("mr2") - F.col("k") - F.lit(1))).alias("s4"),
     )
     per_type = cells.groupBy("event_type").agg(
         F.sum("s4").cast("long").alias("s4_sum"),
@@ -5624,15 +5626,8 @@ def bartels_rank_test(events: DataFrame) -> DataFrame:
     daily = events.groupBy(
         F.date_trunc("day", "ts").alias("day")
     ).agg(F.count("*").alias("x"))
-    wr = Window.orderBy("x")
-    wt = Window.partitionBy("x")
     wo = Window.orderBy("day")
-    ranked = daily.select(
-        "day",
-        (
-            F.lit(2) * F.rank().over(wr) + F.count("*").over(wt) - F.lit(1)
-        ).alias("r2"),
-    )
+    ranked = daily.select("day", _rank_midrank2("x").alias("r2"))
     lagged = ranked.select(
         "r2", F.lag("r2").over(wo).alias("p2")
     )

@@ -113,29 +113,19 @@ def shingle_sizes(sh: DataFrame) -> DataFrame:
     return sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
 
 
-def ngram_jaccard_pairs(
-    documents: DataFrame, n: int = 3, threshold: float = 0.8, df_cap: int | None = None
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity pairs >= threshold.
+def _shingle_overlaps(documents: DataFrame, n: int, df_cap: int | None) -> DataFrame:
+    """(doc_b, doc_a, common, na, nb) for every doc pair sharing at
+    least one hashed n-gram shingle: ``common`` shared shingles, ``na``
+    and ``nb`` the two docs' shingle counts, doc_a < doc_b. The exact
+    pair operators (``ngram_jaccard_pairs``, ``containment_pairs``)
+    differ only in the score they take from it.
 
     Inverted-index join: docs sharing a shingle meet exactly once per
-    shared shingle; count(shared)/(|A|+|B|-shared) is exact Jaccard.
-    Quadratic in per-shingle document frequency -- at scale, pass
-    ``df_cap`` (see ``df_cap_shingles``) or use ``dedup_minhash``
-    below; with ``df_cap=None`` (the default, kept so the exactness
-    oracle stays exact) this operator is the baseline the sketches
-    are verified against. With a cap, Jaccard is computed exactly
-    over the capped shingle universe: sizes and intersections both
-    exclude the dropped stop-phrase shingles, so near-dup decisions
-    rest on the discriminative shingles -- the standard
-    contamination/near-dup posture.
-
-    Join mechanics: the index joins on the 8-byte shingle hash with a
-    shuffled-hash hint -- equality-only matching never benefits from
-    sort-merge's ordering, and skipping both sorts is ~2.5x on this
-    shape. High-frequency shingles are exactly AQE's skew-join case;
-    leave AQE on.
-    """
+    shared shingle, on the 8-byte shingle hash with a shuffled-hash
+    hint -- equality-only matching never benefits from sort-merge's
+    ordering, and skipping both sorts is ~2.5x on this shape. With
+    ``df_cap`` the sizes and the intersections both count only the
+    capped shingle universe (``df_cap_shingles``)."""
     # lazy-checkpoint the hashed shingle stream: three consumers (the
     # self-join's reused exchange + the sizes aggregate, plus df-cap
     # counting when enabled) otherwise each replay the tokenize +
@@ -153,10 +143,32 @@ def ngram_jaccard_pairs(
     )
     na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na"))
     nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb"))
+    return common.join(na, "doc_a").join(nb, "doc_b")
+
+
+def ngram_jaccard_pairs(
+    documents: DataFrame, n: int = 3, threshold: float = 0.8, df_cap: int | None = None
+) -> DataFrame:
+    """Exact n-gram Jaccard similarity pairs >= threshold.
+
+    Inverted-index join: docs sharing a shingle meet exactly once per
+    shared shingle; count(shared)/(|A|+|B|-shared) is exact Jaccard.
+    Quadratic in per-shingle document frequency -- at scale, pass
+    ``df_cap`` (see ``df_cap_shingles``) or use ``dedup_minhash``
+    below; with ``df_cap=None`` (the default, kept so the exactness
+    oracle stays exact) this operator is the baseline the sketches
+    are verified against. With a cap, Jaccard is computed exactly
+    over the capped shingle universe: sizes and intersections both
+    exclude the dropped stop-phrase shingles, so near-dup decisions
+    rest on the discriminative shingles -- the standard
+    contamination/near-dup posture.
+
+    Join mechanics are ``_shingle_overlaps``'. High-frequency
+    shingles are exactly AQE's skew-join case; leave AQE on.
+    """
     jac = F.col("common") * 1.0 / (F.col("na") + F.col("nb") - F.col("common"))
     return (
-        common.join(na, "doc_a")
-        .join(nb, "doc_b")
+        _shingle_overlaps(documents, n, df_cap)
         .filter(jac >= threshold)
         .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
     )
@@ -1303,26 +1315,11 @@ def containment_pairs(
     shuffled-hash join on the 8-byte shingle hash, per-shingle
     fan-out bounded by ``df_cap`` at corpus scale); only the
     normalization differs, so the two operators share every stage up
-    to the final score.
+    to the final score (``_shingle_overlaps``).
     """
-    # same lazy shingle checkpoint as ngram_jaccard_pairs (r12)
-    sh = shingles(documents, n, hashed=True).localCheckpoint(eager=False)
-    if df_cap is not None:
-        sh = df_cap_shingles(sh, df_cap)
-    sizes = shingle_sizes(sh)
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(b.hint("shuffle_hash"), "shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("common"))
-    )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb"))
     cont = F.col("common") * 1.0 / F.least(F.col("na"), F.col("nb"))
     return (
-        common.join(na, "doc_a")
-        .join(nb, "doc_b")
+        _shingle_overlaps(documents, n, df_cap)
         .filter(cont >= threshold)
         .select("doc_a", "doc_b", F.round(cont, 4).alias("containment"))
     )

@@ -16,6 +16,15 @@ Two kernel tiers:
   the Spark-side plumbing around them (schema, Arrow batching,
   1:N explosion) is real and oracle-tested either way.
 
+One row substrate: every operator's Python step is an ``emit``
+function run by ``_rows(df, in_cols, schema, emit)`` -- the
+reference's per-record ``map`` writing through one ``Context``.
+``emit(*values)`` gets one input row's ``in_cols`` values and yields
+zero, one or many output tuples in ``schema`` order; ``_rows`` owns
+the Arrow batch loop, the per-column lists, the pandas dtypes (derived
+once from the DDL) and the module's only ``mapInPandas``. An operator
+keeps its decode/compute step and its Spark-side closing expression.
+
 100 TB posture: payloads stay in executor-side Arrow batches; nothing
 returns to the driver; per-batch memory is bounded by
 ``spark.sql.execution.arrow.maxRecordsPerBatch``.
@@ -25,6 +34,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window
@@ -37,6 +47,102 @@ DECODE_SCHEMA = (
 )
 
 FRAME_SCHEMA = "doc_id long, frame_idx int, frame_bytes binary"
+
+#: Output schema of the three ``attach_*_payload`` encoders.
+_PAYLOAD_SCHEMA = "doc_id long, payload binary"
+
+#: pandas dtype of a ``_rows`` output column, by its DDL type.
+_PD_DTYPES = {
+    "long": "int64",
+    "bigint": "int64",
+    "int": "int32",
+    "double": "float64",
+    "string": object,
+    "binary": object,
+}
+
+
+def _rows(df: DataFrame, in_cols: tuple[str, ...], schema: str, emit) -> DataFrame:
+    """Run ``emit`` over every row of ``df``'s ``in_cols`` and return
+    its output rows as a DataFrame of the DDL ``schema``.
+
+    ``emit(*values)`` receives one row's ``in_cols`` values (payloads
+    as ``bytes``) and returns an iterable of tuples in ``schema``
+    order -- none to drop the row, one for a 1:1 map, many for a 1:N
+    explosion. Per Arrow batch the tuples fill one list per output
+    column, and each column is built with the pandas dtype its DDL
+    type names (``long``/``bigint`` -> int64, ``int`` -> int32,
+    ``double`` -> float64, ``string``/``binary`` -> object), so a None
+    in a double column crosses as NULL and an empty batch keeps its
+    types. Only ``in_cols`` reach the Python worker."""
+    fields = [f.split() for f in schema.split(",")]
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            cols = [[] for _ in fields]
+            for values in zip(*(pdf[c] for c in in_cols)):
+                for out in emit(*values):
+                    for col, v in zip(cols, out):
+                        col.append(v)
+            yield pd.DataFrame(
+                {n: pd.Series(c, dtype=_PD_DTYPES[t]) for (n, t), c in zip(fields, cols)}
+            )
+
+    return df.select(*in_cols).mapInPandas(kernel, schema=schema)
+
+
+def _text_bytes(text: str):
+    """The UTF-8 bytes of ``text`` as a uint8 array."""
+    return np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+
+
+def _luma(payload: bytes):
+    """Integer luminance ``r+g+b`` (0..765) of a BMP payload, decoded
+    by ``real_decode``: an int64 (h, w) array."""
+    return real_decode(bytes(payload)).astype(np.int64).sum(axis=2)
+
+
+def _pcm(payload: bytes):
+    """The int16 samples of a WAV payload, decoded by ``decode_wav``,
+    widened to int64 so squares and lag products cannot overflow."""
+    return decode_wav(bytes(payload))[1].astype(np.int64)
+
+
+def _bin_rows(doc_id, keys, bins: int):
+    """(doc_id, bin, count) for each occupied bin of the integer bin
+    ``keys`` -- the sparse histogram rows, in bin order."""
+    cnt = np.bincount(keys, minlength=bins)
+    return ((doc_id, int(i), int(cnt[i])) for i in np.nonzero(cnt)[0])
+
+
+def _vad_gate(payload: bytes, frame: int):
+    """(energies, active) of a WAV payload's whole ``frame``-sample
+    windows: int64 sums of squared samples, and the exact integer gate
+    ``e * 4 > max(e)``. None when the clip is shorter than one frame
+    (partial trailing frames drop)."""
+    s = _pcm(payload)
+    nf = len(s) // frame
+    if nf == 0:
+        return None
+    x = s[: nf * frame].reshape(nf, frame)
+    e = (x * x).sum(axis=1)
+    return e, e * 4 > e.max()
+
+
+def _perceptual_groups(images: DataFrame, name: str, bits) -> DataFrame:
+    """(``name``, keep_doc_id, n_copies): images grouped by the 64-char
+    '0'/'1' hash of the boolean array ``bits(luma)`` returns for each
+    decoded image -- one representative (min doc_id) and the copy
+    count per perceptual class. The group-by shuffles hashes, never
+    pixels."""
+
+    def emit(doc_id, payload):
+        yield doc_id, "".join("1" if b else "0" for b in bits(_luma(payload)))
+
+    hashed = _rows(images, ("doc_id", "payload"), f"doc_id long, {name} string", emit)
+    return hashed.groupBy(name).agg(
+        F.min("doc_id").alias("keep_doc_id"), F.count("*").alias("n_copies")
+    )
 
 
 def attach_payload(documents: DataFrame) -> DataFrame:
@@ -170,36 +276,16 @@ def decode_metadata(multimodal: DataFrame) -> DataFrame:
     statistics (sum / min / max / distinct count over the raw payload
     bytes, numpy-vectorized) so the correctness oracle verifies actual
     payload CONTENT, not just its length."""
-    import numpy as np
+    def emit(doc_id, payload, content_type):
+        x = np.frombuffer(payload, dtype=np.uint8)
+        stats = (
+            (int(x.sum(dtype=np.int64)), int(x.min()), int(x.max()), len(np.unique(x)))
+            if len(x)
+            else (0, 0, 0, 0)
+        )
+        yield (doc_id, content_type, *_fake_decode(payload), *stats)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [_fake_decode(p) for p in pdf["payload"]]
-            stats = []
-            for p in pdf["payload"]:
-                if len(p):
-                    x = np.frombuffer(p, dtype=np.uint8)
-                    stats.append(
-                        (int(x.sum(dtype=np.int64)), int(x.min()), int(x.max()),
-                         int(len(np.unique(x))))
-                    )
-                else:
-                    stats.append((0, 0, 0, 0))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "content_type": pdf["content_type"],
-                    "n_bytes": pd.Series([d[0] for d in decoded], dtype="int64"),
-                    "fake_width": pd.Series([d[1] for d in decoded], dtype="int64"),
-                    "fake_height": pd.Series([d[2] for d in decoded], dtype="int64"),
-                    "byte_sum": pd.Series([s[0] for s in stats], dtype="int64"),
-                    "byte_min": pd.Series([s[1] for s in stats], dtype="int32"),
-                    "byte_max": pd.Series([s[2] for s in stats], dtype="int32"),
-                    "n_distinct_bytes": pd.Series([s[3] for s in stats], dtype="int32"),
-                }
-            )
-
-    return multimodal.mapInPandas(kernel, schema=DECODE_SCHEMA)
+    return _rows(multimodal, ("doc_id", "payload", "content_type"), DECODE_SCHEMA, emit)
 
 
 def frame_sample(multimodal: DataFrame, max_frames: int = 4, frame_bytes: int = 32) -> DataFrame:
@@ -207,25 +293,13 @@ def frame_sample(multimodal: DataFrame, max_frames: int = 4, frame_bytes: int = 
     ``max_frames`` fixed-stride byte slices (stand-ins for decoded
     frames). Real frame decode would replace the slicing kernel."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, blobs = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n_frames = min(max_frames, max(1, len(payload) // frame_bytes))
-                stride = max(1, len(payload) // n_frames)
-                for i in range(n_frames):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    blobs.append(bytes(payload[i * stride : i * stride + frame_bytes]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame_bytes": blobs,
-                }
-            )
+    def emit(doc_id, payload):
+        n_frames = min(max_frames, max(1, len(payload) // frame_bytes))
+        stride = max(1, len(payload) // n_frames)
+        for i in range(n_frames):
+            yield doc_id, i, bytes(payload[i * stride : i * stride + frame_bytes])
 
-    return multimodal.mapInPandas(kernel, schema=FRAME_SCHEMA)
+    return _rows(multimodal, ("doc_id", "payload"), FRAME_SCHEMA, emit)
 
 
 RESIZE_SCHEMA = "doc_id long, out_width long, out_height long, resized binary"
@@ -246,26 +320,12 @@ def resize(multimodal: DataFrame, target_width: int = 64) -> DataFrame:
     exchange carries thumbnails, not originals.
     """
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, outs = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _, w, h = _fake_decode(payload)
-                scale = max(1, w // target_width)
-                ids.append(doc_id)
-                ws.append(max(1, w // scale))
-                hs.append(max(1, h // scale))
-                outs.append(bytes(payload[::scale]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "out_width": pd.Series(ws, dtype="int64"),
-                    "out_height": pd.Series(hs, dtype="int64"),
-                    "resized": outs,
-                }
-            )
+    def emit(doc_id, payload):
+        _, w, h = _fake_decode(payload)
+        scale = max(1, w // target_width)
+        yield doc_id, max(1, w // scale), max(1, h // scale), bytes(payload[::scale])
 
-    return multimodal.mapInPandas(kernel, schema=RESIZE_SCHEMA)
+    return _rows(multimodal, ("doc_id", "payload"), RESIZE_SCHEMA, emit)
 
 
 AUDIO_SCHEMA = (
@@ -286,31 +346,15 @@ def audio_features(multimodal: DataFrame, sample_rate: int = 16000) -> DataFrame
     duration is reported in milliseconds (n / (rate/1000)) because a
     power-of-two divisor is exact in float64, making the value
     engine-portable without rounding-mode ties."""
-    import numpy as np
-
     ms_divisor = sample_rate / 1000.0
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, counts, durs, rms, peak = [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                x = np.frombuffer(payload, dtype=np.uint8).astype(np.float64) - 128.0
-                ids.append(doc_id)
-                counts.append(len(x))
-                durs.append(len(x) / ms_divisor)
-                rms.append(round(float(np.sqrt(np.mean(x * x))) if len(x) else 0.0, 4))
-                peak.append(round(float(np.abs(x).max()) if len(x) else 0.0, 4))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_samples": pd.Series(counts, dtype="int64"),
-                    "duration_fake_ms": pd.Series(durs, dtype="float64"),
-                    "rms_fake": pd.Series(rms, dtype="float64"),
-                    "peak_fake": pd.Series(peak, dtype="float64"),
-                }
-            )
+    def emit(doc_id, payload):
+        x = np.frombuffer(payload, dtype=np.uint8).astype(np.float64) - 128.0
+        rms = round(float(np.sqrt(np.mean(x * x))) if len(x) else 0.0, 4)
+        peak = round(float(np.abs(x).max()) if len(x) else 0.0, 4)
+        yield doc_id, len(x), len(x) / ms_divisor, rms, peak
 
-    return multimodal.mapInPandas(kernel, schema=AUDIO_SCHEMA)
+    return _rows(multimodal, ("doc_id", "payload"), AUDIO_SCHEMA, emit)
 
 
 # ------------------------------------------------------------------
@@ -344,26 +388,13 @@ def attach_image_payload(documents: DataFrame) -> DataFrame:
     (w, h) geometry -- so the oracle can reconstruct every pixel from
     the text column while the payload itself is a spec-compliant BMP
     file that any decoder opens."""
-    import numpy as np
+    def emit(doc_id, text):
+        b = _text_bytes(text)
+        if len(b):
+            w, h = _image_geometry(len(b))
+            yield doc_id, encode_bmp(b[np.arange(w * h * 3) % len(b)].reshape(h, w, 3))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                if not len(b):
-                    continue
-                w, h = _image_geometry(len(b))
-                flat = b[np.arange(w * h * 3) % len(b)]
-                ids.append(doc_id)
-                blobs.append(encode_bmp(flat.reshape(h, w, 3)))
-            yield pd.DataFrame(
-                {"doc_id": pd.Series(ids, dtype="int64"), "payload": blobs}
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(
-        kernel, schema="doc_id long, payload binary"
-    )
+    return _rows(documents, ("doc_id", "text"), _PAYLOAD_SCHEMA, emit)
 
 
 def decode_image_meta(images: DataFrame) -> DataFrame:
@@ -371,65 +402,26 @@ def decode_image_meta(images: DataFrame) -> DataFrame:
     ``real_decode`` and emit geometry plus per-channel pixel sums and
     min/max -- stats over the DECODED pixel array, so a header-only
     shortcut or a byte-length fake cannot pass the oracle."""
-    import numpy as np
+    def emit(doc_id, payload):
+        px = real_decode(bytes(payload))
+        h, w, _ = px.shape
+        sums = px.reshape(-1, 3).sum(axis=0, dtype=np.int64)
+        yield (doc_id, len(payload), w, h, *sums, px.min(), px.max())
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "n_bytes", "width", "height",
-                                    "sum_r", "sum_g", "sum_b", "px_min", "px_max")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = real_decode(bytes(payload))
-                h, w, _ = px.shape
-                sums = px.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                rows["doc_id"].append(doc_id)
-                rows["n_bytes"].append(len(payload))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["sum_r"].append(int(sums[0]))
-                rows["sum_g"].append(int(sums[1]))
-                rows["sum_b"].append(int(sums[2]))
-                rows["px_min"].append(int(px.min()))
-                rows["px_max"].append(int(px.max()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "sum_r": pd.Series(rows["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(rows["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(rows["sum_b"], dtype="int64"),
-                    "px_min": pd.Series(rows["px_min"], dtype="int32"),
-                    "px_max": pd.Series(rows["px_max"], dtype="int32"),
-                }
-            )
-
-    return images.mapInPandas(kernel, schema=IMAGE_META_SCHEMA)
+    return _rows(images, ("doc_id", "payload"), IMAGE_META_SCHEMA, emit)
 
 
 def attach_audio_payload(documents: DataFrame, sample_rate: int = 16000) -> DataFrame:
     """Build a REAL RIFF/WAVE payload per document: 16-bit mono PCM
     where sample k = (text_byte_k - 128) * 256 -- deterministic,
     oracle-reconstructable, and a spec-compliant WAV file."""
-    import numpy as np
+    def emit(doc_id, text):
+        b = _text_bytes(text)
+        if len(b):
+            samples = (b.astype(np.int32) - 128) * 256
+            yield doc_id, encode_wav(samples.astype(np.int16), sample_rate)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                if not len(b):
-                    continue
-                samples = (b.astype(np.int32) - 128) * 256
-                ids.append(doc_id)
-                blobs.append(encode_wav(samples.astype(np.int16), sample_rate))
-            yield pd.DataFrame(
-                {"doc_id": pd.Series(ids, dtype="int64"), "payload": blobs}
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(
-        kernel, schema="doc_id long, payload binary"
-    )
+    return _rows(documents, ("doc_id", "text"), _PAYLOAD_SCHEMA, emit)
 
 
 def audio_features_wav(audio: DataFrame) -> DataFrame:
@@ -437,35 +429,14 @@ def audio_features_wav(audio: DataFrame) -> DataFrame:
     data chunk with ``decode_wav``, and emit per-clip features over
     the DECODED int16 samples (duration from the fmt chunk's true
     sample rate; RMS/peak in float64, rounded once)."""
-    import numpy as np
+    def emit(doc_id, payload):
+        rate, s = decode_wav(bytes(payload))
+        x = s.astype(np.float64)
+        rms = round(float(np.sqrt(np.mean(x * x))) if len(s) else 0.0, 4)
+        peak = float(np.abs(x).max()) if len(s) else 0.0
+        yield doc_id, len(payload), rate, len(s), len(s) / (rate / 1000.0), rms, peak
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "n_bytes", "sample_rate",
-                                    "n_samples", "duration_ms", "rms", "peak")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, s = decode_wav(bytes(payload))
-                x = s.astype(np.float64)
-                rows["doc_id"].append(doc_id)
-                rows["n_bytes"].append(len(payload))
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(len(s))
-                rows["duration_ms"].append(len(s) / (rate / 1000.0))
-                rows["rms"].append(round(float(np.sqrt(np.mean(x * x))) if len(s) else 0.0, 4))
-                rows["peak"].append(float(np.abs(x).max()) if len(s) else 0.0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                    "sample_rate": pd.Series(rows["sample_rate"], dtype="int32"),
-                    "n_samples": pd.Series(rows["n_samples"], dtype="int64"),
-                    "duration_ms": pd.Series(rows["duration_ms"], dtype="float64"),
-                    "rms": pd.Series(rows["rms"], dtype="float64"),
-                    "peak": pd.Series(rows["peak"], dtype="float64"),
-                }
-            )
-
-    return audio.mapInPandas(kernel, schema=AUDIO_WAV_SCHEMA)
+    return _rows(audio, ("doc_id", "payload"), AUDIO_WAV_SCHEMA, emit)
 
 
 #: Video container magic: 'JVF0' + <u32 n_frames> + per frame
@@ -519,30 +490,17 @@ def attach_video_payload(documents: DataFrame) -> DataFrame:
     ``_image_geometry(n + f)`` — every pixel of every frame
     reconstructs from the text column (the oracle's lever), while the
     payload is a genuine chunk-walked container of decodable BMPs."""
-    import numpy as np
+    def emit(doc_id, text):
+        b = _text_bytes(text)
+        if not len(b):
+            return
+        frames = []
+        for f in range(2 + (len(b) % 3)):
+            w, h = _image_geometry(len(b) + f)
+            frames.append(b[(np.arange(w * h * 3) + f) % len(b)].reshape(h, w, 3))
+        yield doc_id, encode_video(frames)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                if not len(b):
-                    continue
-                nf = 2 + (len(b) % 3)
-                frames = []
-                for f in range(nf):
-                    w, h = _image_geometry(len(b) + f)
-                    flat = b[(np.arange(w * h * 3) + f) % len(b)]
-                    frames.append(flat.reshape(h, w, 3))
-                ids.append(doc_id)
-                blobs.append(encode_video(frames))
-            yield pd.DataFrame(
-                {"doc_id": pd.Series(ids, dtype="int64"), "payload": blobs}
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(
-        kernel, schema="doc_id long, payload binary"
-    )
+    return _rows(documents, ("doc_id", "text"), _PAYLOAD_SCHEMA, emit)
 
 
 def decode_video_frames(videos: DataFrame) -> DataFrame:
@@ -554,43 +512,18 @@ def decode_video_frames(videos: DataFrame) -> DataFrame:
     100 TB: containers stay columnar-binary, the parse/decode kernel
     is row-local, and frame fan-out happens inside the executor pass
     (no shuffle until whatever aggregation consumes the frames)."""
-    import numpy as np
+    def emit(doc_id, payload):
+        for f, arr in enumerate(decode_video(bytes(payload))):
+            h, w, _ = arr.shape
+            n_bytes = 54 + ((3 * w + 3) // 4) * 4 * h
+            yield doc_id, f, w, h, n_bytes, int(arr.sum()), arr.min(), arr.max()
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "doc_id": [], "frame_idx": [], "width": [], "height": [],
-                "frame_bytes": [], "sum_px": [], "px_min": [], "px_max": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for f, arr in enumerate(decode_video(bytes(payload))):
-                    h, w, _ = arr.shape
-                    row_sz = ((3 * w + 3) // 4) * 4
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(f)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["frame_bytes"].append(54 + row_sz * h)
-                    rows["sum_px"].append(int(arr.sum()))
-                    rows["px_min"].append(int(arr.min()))
-                    rows["px_max"].append(int(arr.max()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "frame_idx": pd.Series(rows["frame_idx"], dtype="int32"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "frame_bytes": pd.Series(rows["frame_bytes"], dtype="int64"),
-                    "sum_px": pd.Series(rows["sum_px"], dtype="int64"),
-                    "px_min": pd.Series(rows["px_min"], dtype="int32"),
-                    "px_max": pd.Series(rows["px_max"], dtype="int32"),
-                }
-            )
-
-    return videos.mapInPandas(
-        kernel,
-        schema="doc_id long, frame_idx int, width int, height int, "
+    return _rows(
+        videos,
+        ("doc_id", "payload"),
+        "doc_id long, frame_idx int, width int, height int, "
         "frame_bytes long, sum_px long, px_min int, px_max int",
+        emit,
     )
 
 
@@ -614,34 +547,16 @@ def image_ahash(images: DataFrame) -> DataFrame:
 
     Emits (ahash, keep_doc_id, n_copies).
     """
-    import numpy as np
+    def bits(gray):
+        h, w = gray.shape
+        ys = (np.arange(h) * 8) // h
+        xs = (np.arange(w) * 8) // w
+        cell = (ys[:, None] * 8 + xs[None, :]).ravel()
+        s = np.bincount(cell, weights=gray.ravel(), minlength=64).astype(np.int64)
+        n = np.bincount(cell, minlength=64).astype(np.int64)
+        return s * (h * w) >= int(gray.sum()) * n
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = real_decode(bytes(payload))
-                h, w, _ = px.shape
-                gray = px.astype(np.int64).sum(axis=2)
-                ys = (np.arange(h) * 8) // h
-                xs = (np.arange(w) * 8) // w
-                cell = (ys[:, None] * 8 + xs[None, :]).ravel()
-                s = np.bincount(cell, weights=gray.ravel(), minlength=64).astype(
-                    np.int64
-                )
-                n = np.bincount(cell, minlength=64).astype(np.int64)
-                ts, tn = int(gray.sum()), h * w
-                bits = s * tn >= ts * n
-                ids.append(doc_id)
-                hashes.append("".join("1" if b else "0" for b in bits))
-            yield pd.DataFrame(
-                {"doc_id": pd.Series(ids, dtype="int64"), "ahash": hashes}
-            )
-
-    hashed = images.mapInPandas(kernel, schema="doc_id long, ahash string")
-    return hashed.groupBy("ahash").agg(
-        F.min("doc_id").alias("keep_doc_id"), F.count("*").alias("n_copies")
-    )
+    return _perceptual_groups(images, "ahash", bits)
 
 
 #: Output schema of image_patches (DDL form).
@@ -665,39 +580,17 @@ def image_patches(images: DataFrame, patch: int = 4) -> DataFrame:
     fixed-width integers. Integer sums (not float means) so the
     oracle comparison is exact.
     """
-    import numpy as np
+    def emit(doc_id, payload):
+        px = real_decode(bytes(payload))
+        h, w, _ = px.shape
+        gh, gw = h // patch, w // patch
+        crop = px[: gh * patch, : gw * patch].astype(np.int64)
+        sums = crop.reshape(gh, patch, gw, patch, 3).sum(axis=(1, 3))
+        for r in range(gh):
+            for c in range(gw):
+                yield (doc_id, r, c, *sums[r, c])
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, prs, pcs = [], [], []
-            srs, sgs, sbs = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = real_decode(bytes(payload))
-                h, w, _ = px.shape
-                gh, gw = h // patch, w // patch
-                if not gh or not gw:
-                    continue
-                crop = px[: gh * patch, : gw * patch].astype(np.int64)
-                sums = crop.reshape(gh, patch, gw, patch, 3).sum(axis=(1, 3))
-                ids.extend([doc_id] * (gh * gw))
-                prs.extend(np.repeat(np.arange(gh), gw))
-                pcs.extend(np.tile(np.arange(gw), gh))
-                flat = sums.reshape(-1, 3)
-                srs.extend(flat[:, 0])
-                sgs.extend(flat[:, 1])
-                sbs.extend(flat[:, 2])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "patch_row": pd.Series(prs, dtype="int32"),
-                    "patch_col": pd.Series(pcs, dtype="int32"),
-                    "sum_r": pd.Series(srs, dtype="int64"),
-                    "sum_g": pd.Series(sgs, dtype="int64"),
-                    "sum_b": pd.Series(sbs, dtype="int64"),
-                }
-            )
-
-    return images.mapInPandas(kernel, schema=PATCH_SUM_SCHEMA)
+    return _rows(images, ("doc_id", "payload"), PATCH_SUM_SCHEMA, emit)
 
 
 def image_histogram(images: DataFrame, bins: int = 16) -> DataFrame:
@@ -722,30 +615,12 @@ def image_histogram(images: DataFrame, bins: int = 16) -> DataFrame:
     (SURVEY.md §2A FIFO queue) over the WordCount substrate
     (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
     """
-    import numpy as np
-
     width = (3 * 255) // bins + 1  # 48 for 16 bins: 765 // 48 = 15
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, bn, npx = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = real_decode(bytes(payload))
-                gray = px.astype(np.int64).sum(axis=2).ravel()
-                cnt = np.bincount(gray // width, minlength=bins)
-                for i in np.nonzero(cnt)[0]:
-                    ids.append(doc_id)
-                    bn.append(int(i))
-                    npx.append(int(cnt[i]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "bin": pd.Series(bn, dtype="int32"),
-                    "n_px": pd.Series(npx, dtype="int64"),
-                }
-            )
+    def emit(doc_id, payload):
+        return _bin_rows(doc_id, _luma(payload).ravel() // width, bins)
 
-    return images.mapInPandas(kernel, schema="doc_id long, bin int, n_px long")
+    return _rows(images, ("doc_id", "payload"), "doc_id long, bin int, n_px long", emit)
 
 
 #: audio_spectrogram output schema (kept next to its sibling above).
@@ -777,38 +652,17 @@ def audio_spectrogram(
     (tests/test_multimodal.py), and ties break to the lowest bin.
 
     Rows-only by declared design (no FFT in the SQL oracle engine)."""
-    import numpy as np
-
     win = np.hanning(n_fft)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "total_energy",
-                                    "dominant_bin", "dominant_power")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _, s = decode_wav(bytes(payload))
-                x = s.astype(np.float64)
-                n_frames = max(0, (len(x) - n_fft) // hop + 1)
-                for fi in range(min(n_frames, max_frames)):
-                    frame = x[fi * hop: fi * hop + n_fft] * win
-                    spec = np.abs(np.fft.rfft(frame)) ** 2
-                    dom = int(np.argmax(spec))  # ties -> lowest bin
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(fi)
-                    rows["total_energy"].append(round(float(spec.sum()), 4))
-                    rows["dominant_bin"].append(dom)
-                    rows["dominant_power"].append(round(float(spec[dom]), 4))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "frame_idx": pd.Series(rows["frame_idx"], dtype="int32"),
-                    "total_energy": pd.Series(rows["total_energy"], dtype="float64"),
-                    "dominant_bin": pd.Series(rows["dominant_bin"], dtype="int32"),
-                    "dominant_power": pd.Series(rows["dominant_power"], dtype="float64"),
-                }
-            )
+    def emit(doc_id, payload):
+        x = _pcm(payload).astype(np.float64)
+        n_frames = max(0, (len(x) - n_fft) // hop + 1)
+        for fi in range(min(n_frames, max_frames)):
+            spec = np.abs(np.fft.rfft(x[fi * hop : fi * hop + n_fft] * win)) ** 2
+            dom = int(np.argmax(spec))  # ties -> lowest bin
+            yield doc_id, fi, round(float(spec.sum()), 4), dom, round(float(spec[dom]), 4)
 
-    return audio.mapInPandas(kernel, schema=AUDIO_SPEC_SCHEMA)
+    return _rows(audio, ("doc_id", "payload"), AUDIO_SPEC_SCHEMA, emit)
 
 
 #: Integer-scaled DCT-II basis for the pHash kernel: 2^14-scaled
@@ -861,36 +715,18 @@ def image_phash(images: DataFrame) -> DataFrame:
     (SURVEY.md §2A FIFO queue) over the WordCount substrate
     (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
     """
-    import numpy as np
-
     C = np.zeros((8, _DCT_N), dtype=np.int64)
     for u, x, c in dct_consts():
         C[u, x] = c
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = real_decode(bytes(payload))
-                h, w, _ = px.shape
-                gray = px.astype(np.int64).sum(axis=2)
-                ys = (np.arange(_DCT_N) * h) // _DCT_N
-                xs = (np.arange(_DCT_N) * w) // _DCT_N
-                g16 = gray[ys][:, xs]
-                d = C @ g16 @ C.T
-                ac = d.ravel()[1:]
-                med = np.sort(ac)[31]
-                bits = ac > med
-                ids.append(doc_id)
-                hashes.append("".join("1" if b else "0" for b in bits))
-            yield pd.DataFrame(
-                {"doc_id": pd.Series(ids, dtype="int64"), "phash": hashes}
-            )
+    def bits(gray):
+        h, w = gray.shape
+        ys = (np.arange(_DCT_N) * h) // _DCT_N
+        xs = (np.arange(_DCT_N) * w) // _DCT_N
+        ac = (C @ gray[ys][:, xs] @ C.T).ravel()[1:]
+        return ac > np.sort(ac)[31]
 
-    hashed = images.mapInPandas(kernel, schema="doc_id long, phash string")
-    return hashed.groupBy("phash").agg(
-        F.min("doc_id").alias("keep_doc_id"), F.count("*").alias("n_copies")
-    )
+    return _perceptual_groups(images, "phash", bits)
 
 
 def audio_vad(audio: DataFrame, frame: int = 32) -> DataFrame:
@@ -916,44 +752,28 @@ def audio_vad(audio: DataFrame, frame: int = 32) -> DataFrame:
     (SURVEY.md §2A FIFO queue) over the WordCount substrate
     (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
     """
-    import numpy as np
+    def emit(doc_id, payload):
+        gate = _vad_gate(payload, frame)
+        if gate is None:
+            return
+        active = gate[1]
+        runs, cur = [], 0
+        for a in active:
+            if a:
+                cur += 1
+            elif cur:
+                runs.append(cur)
+                cur = 0
+        if cur:
+            runs.append(cur)
+        yield doc_id, len(active), int(active.sum()), len(runs), max(runs) if runs else 0
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "n_frames", "n_active", "n_segments",
-                "longest_run",
-            )}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _, s = decode_wav(bytes(payload))
-                nf = len(s) // frame
-                if nf == 0:
-                    continue
-                x = s[: nf * frame].astype(np.int64).reshape(nf, frame)
-                e = (x * x).sum(axis=1)
-                active = e * 4 > e.max()
-                runs, cur = [], 0
-                for a in active:
-                    if a:
-                        cur += 1
-                    elif cur:
-                        runs.append(cur)
-                        cur = 0
-                if cur:
-                    runs.append(cur)
-                rows["doc_id"].append(doc_id)
-                rows["n_frames"].append(nf)
-                rows["n_active"].append(int(active.sum()))
-                rows["n_segments"].append(len(runs))
-                rows["longest_run"].append(max(runs) if runs else 0)
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in rows.items()}
-            )
-
-    return audio.mapInPandas(
-        kernel,
-        schema="doc_id long, n_frames long, n_active long, "
+    return _rows(
+        audio,
+        ("doc_id", "payload"),
+        "doc_id long, n_frames long, n_active long, "
         "n_segments long, longest_run long",
+        emit,
     )
 
 
@@ -980,8 +800,6 @@ def video_scene_diff(videos: DataFrame) -> DataFrame:
     (SURVEY.md §2A FIFO queue) over the WordCount substrate
     (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
     """
-    import numpy as np
-
     def g8(arr) -> "np.ndarray":
         h, w, _ = arr.shape
         gray = arr.astype(np.int64).sum(axis=2)
@@ -989,27 +807,13 @@ def video_scene_diff(videos: DataFrame) -> DataFrame:
         xs = (np.arange(8) * w) // 8
         return gray[ys][:, xs]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "frame_idx": [], "diff": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                grids = [g8(a) for a in decode_video(bytes(payload))]
-                for f in range(1, len(grids)):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(f)
-                    rows["diff"].append(
-                        int(np.abs(grids[f] - grids[f - 1]).sum())
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "frame_idx": pd.Series(rows["frame_idx"], dtype="int32"),
-                    "diff": pd.Series(rows["diff"], dtype="int64"),
-                }
-            )
+    def emit(doc_id, payload):
+        grids = [g8(a) for a in decode_video(bytes(payload))]
+        for f in range(1, len(grids)):
+            yield doc_id, f, int(np.abs(grids[f] - grids[f - 1]).sum())
 
-    diffs = videos.mapInPandas(
-        kernel, schema="doc_id long, frame_idx int, diff long"
+    diffs = _rows(
+        videos, ("doc_id", "payload"), "doc_id long, frame_idx int, diff long", emit
     )
     w = Window.partitionBy("doc_id")
     return diffs.select(
@@ -1045,47 +849,18 @@ def audio_snr(audio: DataFrame, frame: int = 32) -> DataFrame:
     (SURVEY.md §2A FIFO queue) over the WordCount substrate
     (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
     """
-    import numpy as np
+    def emit(doc_id, payload):
+        gate = _vad_gate(payload, frame)
+        if gate is not None:
+            e, on = gate
+            yield doc_id, int(on.sum()), int((~on).sum()), int(e[on].sum()), int(e[~on].sum())
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "n_active", "n_inactive",
-                "active_energy", "inactive_energy",
-            )}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _, s = decode_wav(bytes(payload))
-                nf = len(s) // frame
-                if nf == 0:
-                    continue
-                x = s[: nf * frame].astype(np.int64).reshape(nf, frame)
-                e = (x * x).sum(axis=1)
-                active = e * 4 > e.max()
-                rows["doc_id"].append(doc_id)
-                rows["n_active"].append(int(active.sum()))
-                rows["n_inactive"].append(int((~active).sum()))
-                rows["active_energy"].append(int(e[active].sum()))
-                rows["inactive_energy"].append(int(e[~active].sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "n_active": pd.Series(rows["n_active"], dtype="int64"),
-                    "n_inactive": pd.Series(
-                        rows["n_inactive"], dtype="int64"
-                    ),
-                    "active_energy": pd.Series(
-                        rows["active_energy"], dtype="int64"
-                    ),
-                    "inactive_energy": pd.Series(
-                        rows["inactive_energy"], dtype="int64"
-                    ),
-                }
-            )
-
-    stats = audio.mapInPandas(
-        kernel,
-        schema="doc_id long, n_active long, n_inactive long,"
+    stats = _rows(
+        audio,
+        ("doc_id", "payload"),
+        "doc_id long, n_active long, n_inactive long,"
         " active_energy long, inactive_energy long",
+        emit,
     )
     snr = F.when(
         (F.col("n_inactive") > 0) & (F.col("inactive_energy") > 0),
@@ -1154,35 +929,15 @@ def text_byte_histogram(documents: DataFrame, bins: int = 16) -> DataFrame:
     (SURVEY.md §2A FIFO queue) over the WordCount substrate
     (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
     """
-    import numpy as np
-
     width = (3 * 255) // bins + 1  # 48: matches image_histogram
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, bn, ntr = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                k = len(b) // 3
-                if not k:
-                    continue
-                tri = b[: 3 * k].astype(np.int64).reshape(k, 3).sum(axis=1)
-                cnt = np.bincount(tri // width, minlength=bins)
-                for i in np.nonzero(cnt)[0]:
-                    ids.append(doc_id)
-                    bn.append(int(i))
-                    ntr.append(int(cnt[i]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "bin": pd.Series(bn, dtype="int32"),
-                    "n_tri": pd.Series(ntr, dtype="int64"),
-                }
-            )
+    def emit(doc_id, text):
+        b = _text_bytes(text)
+        k = len(b) // 3
+        tri = b[: 3 * k].astype(np.int64).reshape(k, 3).sum(axis=1)
+        return _bin_rows(doc_id, tri // width, bins)
 
-    return documents.select("doc_id", "text").mapInPandas(
-        kernel, schema="doc_id long, bin int, n_tri long"
-    )
+    return _rows(documents, ("doc_id", "text"), "doc_id long, bin int, n_tri long", emit)
 
 
 def multimodal_text_align(
@@ -1344,43 +1099,24 @@ def image_sharpness(images: DataFrame) -> DataFrame:
     (SURVEY.md §2A FIFO queue) over the WordCount substrate
     (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
     """
-    import numpy as np
+    def emit(doc_id, payload):
+        lum = _luma(payload)  # h x w, 0..765
+        h, w = lum.shape
+        if h < 3 or w < 3:
+            yield doc_id, 0, None
+            return
+        lap = (
+            4 * lum[1:-1, 1:-1]
+            - lum[:-2, 1:-1]
+            - lum[2:, 1:-1]
+            - lum[1:-1, :-2]
+            - lum[1:-1, 2:]
+        )
+        n, s, ssq = lap.size, int(lap.sum()), int((lap * lap).sum())
+        yield doc_id, n, round((n * ssq - s * s) / (n * n), 4)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nint, sharp = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = real_decode(bytes(payload))
-                lum = px.astype(np.int64).sum(axis=2)  # h x w, 0..765
-                h, w = lum.shape
-                ids.append(doc_id)
-                if h < 3 or w < 3:
-                    nint.append(0)
-                    sharp.append(None)
-                    continue
-                lap = (
-                    4 * lum[1:-1, 1:-1]
-                    - lum[:-2, 1:-1]
-                    - lum[2:, 1:-1]
-                    - lum[1:-1, :-2]
-                    - lum[1:-1, 2:]
-                )
-                n = lap.size
-                s = int(lap.sum())
-                ssq = int((lap.astype(np.int64) ** 2).sum())
-                var = (n * ssq - s * s) / (n * n)
-                nint.append(n)
-                sharp.append(round(var, 4))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_interior": pd.Series(nint, dtype="int64"),
-                    "sharpness": pd.Series(sharp, dtype="float64"),
-                }
-            )
-
-    return images.mapInPandas(
-        kernel, schema="doc_id long, n_interior long, sharpness double"
+    return _rows(
+        images, ("doc_id", "payload"), "doc_id long, n_interior long, sharpness double", emit
     )
 
 
@@ -1406,31 +1142,12 @@ def audio_zcr(audio: DataFrame) -> DataFrame:
     (SURVEY.md §2A FIFO queue) over the WordCount substrate
     (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
     """
-    import numpy as np
+    def emit(doc_id, payload):
+        s = _pcm(payload)
+        yield doc_id, len(s), int(np.sum(s[1:] * s[:-1] < 0))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, nc = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _rate, s = decode_wav(bytes(payload))
-                s = s.astype(np.int64)
-                n = len(s)
-                ids.append(doc_id)
-                ns.append(n)
-                nc.append(
-                    int(np.sum(s[1:] * s[:-1] < 0)) if n >= 2 else 0
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                    "n_crossings": pd.Series(nc, dtype="int64"),
-                }
-            )
-
-    counts = audio.mapInPandas(
-        kernel,
-        schema="doc_id long, n_samples long, n_crossings long",
+    counts = _rows(
+        audio, ("doc_id", "payload"), "doc_id long, n_samples long, n_crossings long", emit
     )
     # the kernel emits INTEGERS only; the rate's rounding runs as a
     # Spark expression so it follows the engine's (not Python's
@@ -1528,29 +1245,12 @@ def image_dhash(images: DataFrame) -> DataFrame:
 
     Emits (dhash, keep_doc_id, n_copies).
     """
-    import numpy as np
+    def bits(gray):
+        h, w = gray.shape
+        sub = gray[np.ix_((np.arange(8) * h) // 8, (np.arange(9) * w) // 9)]
+        return (sub[:, :8] > sub[:, 1:]).ravel()
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = real_decode(bytes(payload))
-                h, w, _ = px.shape
-                gray = px.astype(np.int64).sum(axis=2)
-                rows = (np.arange(8) * h) // 8
-                cols = (np.arange(9) * w) // 9
-                sub = gray[np.ix_(rows, cols)]
-                bits = (sub[:, :8] > sub[:, 1:]).ravel()
-                ids.append(doc_id)
-                hashes.append("".join("1" if b else "0" for b in bits))
-            yield pd.DataFrame(
-                {"doc_id": pd.Series(ids, dtype="int64"), "dhash": hashes}
-            )
-
-    hashed = images.mapInPandas(kernel, schema="doc_id long, dhash string")
-    return hashed.groupBy("dhash").agg(
-        F.min("doc_id").alias("keep_doc_id"), F.count("*").alias("n_copies")
-    )
+    return _perceptual_groups(images, "dhash", bits)
 
 
 def audio_clipping(audio: DataFrame, threshold: int = 16384) -> DataFrame:
@@ -1573,30 +1273,15 @@ def audio_clipping(audio: DataFrame, threshold: int = 16384) -> DataFrame:
 
     Emits (doc_id, n_samples, n_clipped, peak_abs, clip_frac).
     """
-    import numpy as np
+    def emit(doc_id, payload):
+        a = np.abs(_pcm(payload))
+        yield doc_id, len(a), int(np.sum(a >= threshold)), int(a.max()) if len(a) else 0
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, nc, pk = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _rate, s = decode_wav(bytes(payload))
-                a = np.abs(s.astype(np.int64))
-                ids.append(doc_id)
-                ns.append(len(a))
-                nc.append(int(np.sum(a >= threshold)))
-                pk.append(int(a.max()) if len(a) else 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                    "n_clipped": pd.Series(nc, dtype="int64"),
-                    "peak_abs": pd.Series(pk, dtype="int64"),
-                }
-            )
-
-    counts = audio.mapInPandas(
-        kernel,
-        schema="doc_id long, n_samples long, n_clipped long, peak_abs long",
+    counts = _rows(
+        audio,
+        ("doc_id", "payload"),
+        "doc_id long, n_samples long, n_clipped long, peak_abs long",
+        emit,
     )
     return counts.select(
         "doc_id",
@@ -1625,41 +1310,19 @@ def audio_silence(audio: DataFrame, threshold: int = 8192) -> DataFrame:
 
     Emits (doc_id, n_samples, lead_silence, trail_silence, n_silent).
     """
-    import numpy as np
+    def emit(doc_id, payload):
+        a = np.abs(_pcm(payload))
+        n = len(a)
+        loud = np.flatnonzero(a >= threshold)
+        lead, trail = (int(loud[0]), int(n - 1 - loud[-1])) if len(loud) else (n, n)
+        yield doc_id, n, lead, trail, int(np.sum(a < threshold))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, ld, tr, sil = [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _rate, s = decode_wav(bytes(payload))
-                a = np.abs(s.astype(np.int64))
-                n = len(a)
-                loud = np.flatnonzero(a >= threshold)
-                ids.append(doc_id)
-                ns.append(n)
-                if len(loud):
-                    ld.append(int(loud[0]))
-                    tr.append(int(n - 1 - loud[-1]))
-                else:
-                    ld.append(n)
-                    tr.append(n)
-                sil.append(int(np.sum(a < threshold)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                    "lead_silence": pd.Series(ld, dtype="int64"),
-                    "trail_silence": pd.Series(tr, dtype="int64"),
-                    "n_silent": pd.Series(sil, dtype="int64"),
-                }
-            )
-
-    return audio.mapInPandas(
-        kernel,
-        schema=(
-            "doc_id long, n_samples long, lead_silence long,"
-            " trail_silence long, n_silent long"
-        ),
+    return _rows(
+        audio,
+        ("doc_id", "payload"),
+        "doc_id long, n_samples long, lead_silence long,"
+        " trail_silence long, n_silent long",
+        emit,
     )
 
 
@@ -1679,30 +1342,15 @@ def image_contrast(images: DataFrame) -> DataFrame:
 
     Emits (doc_id, n_px, lum_sum, rms_contrast).
     """
-    import numpy as np
+    def emit(doc_id, payload):
+        gray = _luma(payload)
+        yield doc_id, gray.size, int(gray.sum()), int((gray * gray).sum())
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, s1, s2 = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = real_decode(bytes(payload))
-                gray = px.astype(np.int64).sum(axis=2).ravel()
-                ids.append(doc_id)
-                ns.append(int(gray.size))
-                s1.append(int(gray.sum()))
-                s2.append(int((gray * gray).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_px": pd.Series(ns, dtype="int64"),
-                    "lum_sum": pd.Series(s1, dtype="int64"),
-                    "lum_sumsq": pd.Series(s2, dtype="int64"),
-                }
-            )
-
-    stats = images.mapInPandas(
-        kernel,
-        schema="doc_id long, n_px long, lum_sum long, lum_sumsq long",
+    stats = _rows(
+        images,
+        ("doc_id", "payload"),
+        "doc_id long, n_px long, lum_sum long, lum_sumsq long",
+        emit,
     )
     return stats.select(
         "doc_id",
@@ -1735,30 +1383,12 @@ def audio_dynamic_range(audio: DataFrame) -> DataFrame:
 
     Emits (doc_id, n_samples, peak, crest_db).
     """
-    import numpy as np
+    def emit(doc_id, payload):
+        s = _pcm(payload)
+        yield doc_id, s.size, int(np.abs(s).max()) if s.size else 0, int((s * s).sum())
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, pk, sq = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _rate, s = decode_wav(bytes(payload))
-                s = s.astype(np.int64)
-                ids.append(doc_id)
-                ns.append(int(s.size))
-                pk.append(int(np.abs(s).max()) if s.size else 0)
-                sq.append(int((s * s).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                    "peak": pd.Series(pk, dtype="int64"),
-                    "sumsq": pd.Series(sq, dtype="int64"),
-                }
-            )
-
-    stats = audio.mapInPandas(
-        kernel,
-        schema="doc_id long, n_samples long, peak long, sumsq long",
+    stats = _rows(
+        audio, ("doc_id", "payload"), "doc_id long, n_samples long, peak long, sumsq long", emit
     )
     return stats.select(
         "doc_id",
@@ -1794,34 +1424,17 @@ def image_quadrants(images: DataFrame) -> DataFrame:
 
     Emits (doc_id, q_tl, q_tr, q_bl, q_br, diag_balance).
     """
-    import numpy as np
+    def emit(doc_id, payload):
+        gray = _luma(payload)
+        hh, hw = gray.shape[0] // 2, gray.shape[1] // 2
+        quads = (gray[:hh, :hw], gray[:hh, hw:], gray[hh:, :hw], gray[hh:, hw:])
+        yield (doc_id, *(int(q.sum()) for q in quads))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, tl, tr, bl, br = [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = real_decode(bytes(payload))
-                gray = px.astype(np.int64).sum(axis=2)
-                h, w = gray.shape
-                hh, hw = h // 2, w // 2
-                ids.append(doc_id)
-                tl.append(int(gray[:hh, :hw].sum()))
-                tr.append(int(gray[:hh, hw:].sum()))
-                bl.append(int(gray[hh:, :hw].sum()))
-                br.append(int(gray[hh:, hw:].sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "q_tl": pd.Series(tl, dtype="int64"),
-                    "q_tr": pd.Series(tr, dtype="int64"),
-                    "q_bl": pd.Series(bl, dtype="int64"),
-                    "q_br": pd.Series(br, dtype="int64"),
-                }
-            )
-
-    stats = images.mapInPandas(
-        kernel,
-        schema="doc_id long, q_tl long, q_tr long, q_bl long, q_br long",
+    stats = _rows(
+        images,
+        ("doc_id", "payload"),
+        "doc_id long, q_tl long, q_tr long, q_bl long, q_br long",
+        emit,
     )
     denom = F.col("q_tr") + F.col("q_bl")
     return stats.select(
@@ -1854,35 +1467,15 @@ def audio_envelope(audio: DataFrame, n_segments: int = 4) -> DataFrame:
 
     Emits (doc_id, seg, n_in_seg, sumsq, rms).
     """
-    import numpy as np
+    def emit(doc_id, payload):
+        s = _pcm(payload)
+        n = s.size
+        for j in range(n_segments):
+            part = s[j * n // n_segments : (j + 1) * n // n_segments]
+            yield doc_id, j, part.size, int((part * part).sum())
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, seg, cnt, sq = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _rate, s = decode_wav(bytes(payload))
-                s = s.astype(np.int64)
-                n = s.size
-                for j in range(n_segments):
-                    lo = j * n // n_segments
-                    hi = (j + 1) * n // n_segments
-                    part = s[lo:hi]
-                    ids.append(doc_id)
-                    seg.append(j)
-                    cnt.append(int(part.size))
-                    sq.append(int((part * part).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "seg": pd.Series(seg, dtype="int32"),
-                    "n_in_seg": pd.Series(cnt, dtype="int64"),
-                    "sumsq": pd.Series(sq, dtype="int64"),
-                }
-            )
-
-    stats = audio.mapInPandas(
-        kernel,
-        schema="doc_id long, seg int, n_in_seg long, sumsq long",
+    stats = _rows(
+        audio, ("doc_id", "payload"), "doc_id long, seg int, n_in_seg long, sumsq long", emit
     )
     return stats.select(
         "doc_id",
@@ -1920,36 +1513,18 @@ def image_border_mean(images: DataFrame) -> DataFrame:
     Emits (doc_id, n_px, n_border, border_sum, interior_sum,
     border_ratio).
     """
-    import numpy as np
+    def emit(doc_id, payload):
+        gray = _luma(payload)
+        h, w = gray.shape
+        total = int(gray.sum())
+        interior = int(gray[1 : h - 1, 1 : w - 1].sum())
+        yield doc_id, h * w, h * w - (h - 2) * (w - 2), total - interior, total
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, nb, bs, ts = [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = real_decode(bytes(payload))
-                gray = px.astype(np.int64).sum(axis=2)
-                h, w = gray.shape
-                total = int(gray.sum())
-                interior = int(gray[1 : h - 1, 1 : w - 1].sum())
-                ids.append(doc_id)
-                ns.append(int(h * w))
-                nb.append(int(h * w - (h - 2) * (w - 2)))
-                bs.append(total - interior)
-                ts.append(total)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_px": pd.Series(ns, dtype="int64"),
-                    "n_border": pd.Series(nb, dtype="int64"),
-                    "border_sum": pd.Series(bs, dtype="int64"),
-                    "total_sum": pd.Series(ts, dtype="int64"),
-                }
-            )
-
-    stats = images.mapInPandas(
-        kernel,
-        schema="doc_id long, n_px long, n_border long, border_sum long,"
-        " total_sum long",
+    stats = _rows(
+        images,
+        ("doc_id", "payload"),
+        "doc_id long, n_px long, n_border long, border_sum long, total_sum long",
+        emit,
     )
     inter_sum = F.col("total_sum") - F.col("border_sum")
     n_inter = F.col("n_px") - F.col("n_border")
@@ -1985,37 +1560,20 @@ def image_colorfulness(images: DataFrame) -> DataFrame:
 
     Emits (doc_id, n_px, rg2_sum, yb2_sum, colorfulness).
     """
-    import numpy as np
+    def emit(doc_id, payload):
+        px = real_decode(bytes(payload)).astype(np.int64)
+        r, g, b = px[..., 0], px[..., 1], px[..., 2]
+        rg2 = (2 * r - 2 * g).ravel()
+        yb2 = (r + g - 2 * b).ravel()
+        sums = (rg2.sum(), (rg2 * rg2).sum(), yb2.sum(), (yb2 * yb2).sum())
+        yield (doc_id, rg2.size, *(int(v) for v in sums))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, s1, q1, s2, q2 = [], [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = real_decode(bytes(payload)).astype(np.int64)
-                r, g, b = px[..., 0], px[..., 1], px[..., 2]
-                rg2 = (2 * r - 2 * g).ravel()
-                yb2 = (r + g - 2 * b).ravel()
-                ids.append(doc_id)
-                ns.append(int(rg2.size))
-                s1.append(int(rg2.sum()))
-                q1.append(int((rg2 * rg2).sum()))
-                s2.append(int(yb2.sum()))
-                q2.append(int((yb2 * yb2).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_px": pd.Series(ns, dtype="int64"),
-                    "rg2_sum": pd.Series(s1, dtype="int64"),
-                    "rg2_sumsq": pd.Series(q1, dtype="int64"),
-                    "yb2_sum": pd.Series(s2, dtype="int64"),
-                    "yb2_sumsq": pd.Series(q2, dtype="int64"),
-                }
-            )
-
-    stats = images.mapInPandas(
-        kernel,
-        schema="doc_id long, n_px long, rg2_sum long, rg2_sumsq long,"
+    stats = _rows(
+        images,
+        ("doc_id", "payload"),
+        "doc_id long, n_px long, rg2_sum long, rg2_sumsq long,"
         " yb2_sum long, yb2_sumsq long",
+        emit,
     )
     n = F.col("n_px").cast("double")
     var_rg2 = (
@@ -2054,32 +1612,13 @@ def image_row_profile(images: DataFrame) -> DataFrame:
 
     Emits (doc_id, row, n_in_row, lum_sum, row_mean).
     """
-    import numpy as np
+    def emit(doc_id, payload):
+        gray = _luma(payload)
+        for row, lum_sum in enumerate(gray.sum(axis=1)):
+            yield doc_id, row, gray.shape[1], int(lum_sum)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rows, ws, sums = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = real_decode(bytes(payload))
-                gray = px.astype(np.int64).sum(axis=2)
-                h, w = gray.shape
-                rs = gray.sum(axis=1)
-                ids.extend([doc_id] * h)
-                rows.extend(range(h))
-                ws.extend([w] * h)
-                sums.extend(int(v) for v in rs)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "row": pd.Series(rows, dtype="int32"),
-                    "n_in_row": pd.Series(ws, dtype="int64"),
-                    "lum_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    stats = images.mapInPandas(
-        kernel,
-        schema="doc_id long, row int, n_in_row long, lum_sum long",
+    stats = _rows(
+        images, ("doc_id", "payload"), "doc_id long, row int, n_in_row long, lum_sum long", emit
     )
     return stats.select(
         "doc_id",
@@ -2115,45 +1654,21 @@ def audio_autocorr_pitch(
     Emits (doc_id, n_samples, best_lag, clarity) -- clarity =
     best mean product over mean energy, ~1 for a pure periodic clip.
     """
-    import numpy as np
+    def emit(doc_id, payload):
+        s = _pcm(payload)
+        n = int(s.size)
+        total, energy = int(s.sum()), int((s * s).sum())
+        for lag in lags:
+            if n > lag:
+                ac = int((s[:-lag] * s[lag:]).sum())
+                yield doc_id, n, lag, ac, int(s[: n - lag].sum()), int(s[lag:].sum()), total, energy
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, lg, ac, hd, tl, st, en = [], [], [], [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _rate, s = decode_wav(bytes(payload))
-                s = s.astype(np.int64)
-                n = int(s.size)
-                total = int(s.sum())
-                energy = int((s * s).sum())
-                for lag in lags:
-                    if n <= lag:
-                        continue
-                    ids.append(doc_id)
-                    ns.append(n)
-                    lg.append(lag)
-                    ac.append(int((s[:-lag] * s[lag:]).sum()))
-                    hd.append(int(s[: n - lag].sum()))
-                    tl.append(int(s[lag:].sum()))
-                    st.append(total)
-                    en.append(energy)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                    "lag": pd.Series(lg, dtype="int32"),
-                    "ac_raw": pd.Series(ac, dtype="int64"),
-                    "head_sum": pd.Series(hd, dtype="int64"),
-                    "tail_sum": pd.Series(tl, dtype="int64"),
-                    "s_total": pd.Series(st, dtype="int64"),
-                    "energy_raw": pd.Series(en, dtype="int64"),
-                }
-            )
-
-    rows = audio.mapInPandas(
-        kernel,
-        schema="doc_id long, n_samples long, lag int, ac_raw long,"
+    rows = _rows(
+        audio,
+        ("doc_id", "payload"),
+        "doc_id long, n_samples long, lag int, ac_raw long,"
         " head_sum long, tail_sum long, s_total long, energy_raw long",
+        emit,
     )
     n = F.col("n_samples")
     c = F.round(F.col("s_total").cast("double") / n).cast("long")
@@ -2217,42 +1732,25 @@ def image_edge_density(images: DataFrame, g2_threshold: int = 40000) -> DataFram
 
     Emits (doc_id, n_interior, n_edges, edge_density).
     """
-    import numpy as np
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ni, ne = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = real_decode(bytes(payload))
-                lum = px.astype(np.int64).sum(axis=2)
-                h, w = lum.shape
-                n_int = max(0, (h - 2) * (w - 2))
-                edges = 0
-                if n_int:
-                    gx = (
-                        lum[:-2, 2:] + 2 * lum[1:-1, 2:] + lum[2:, 2:]
-                        - lum[:-2, :-2] - 2 * lum[1:-1, :-2] - lum[2:, :-2]
-                    )
-                    gy = (
-                        lum[2:, :-2] + 2 * lum[2:, 1:-1] + lum[2:, 2:]
-                        - lum[:-2, :-2] - 2 * lum[:-2, 1:-1] - lum[:-2, 2:]
-                    )
-                    edges = int(
-                        (gx * gx + gy * gy >= g2_threshold).sum()
-                    )
-                ids.append(doc_id)
-                ni.append(n_int)
-                ne.append(edges)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_interior": pd.Series(ni, dtype="int64"),
-                    "n_edges": pd.Series(ne, dtype="int64"),
-                }
+    def emit(doc_id, payload):
+        lum = _luma(payload)
+        h, w = lum.shape
+        n_int = max(0, (h - 2) * (w - 2))
+        edges = 0
+        if n_int:
+            gx = (
+                lum[:-2, 2:] + 2 * lum[1:-1, 2:] + lum[2:, 2:]
+                - lum[:-2, :-2] - 2 * lum[1:-1, :-2] - lum[2:, :-2]
             )
+            gy = (
+                lum[2:, :-2] + 2 * lum[2:, 1:-1] + lum[2:, 2:]
+                - lum[:-2, :-2] - 2 * lum[:-2, 1:-1] - lum[:-2, 2:]
+            )
+            edges = int((gx * gx + gy * gy >= g2_threshold).sum())
+        yield doc_id, n_int, edges
 
-    stats = images.mapInPandas(
-        kernel, schema="doc_id long, n_interior long, n_edges long"
+    stats = _rows(
+        images, ("doc_id", "payload"), "doc_id long, n_interior long, n_edges long", emit
     )
     return stats.filter(F.col("n_interior") > 0).select(
         "doc_id",
@@ -2291,38 +1789,23 @@ def audio_tempo_autocorr(
 
     Emits (doc_id, n_frames, best_lag, r_best).
     """
-    import numpy as np
+    def emit(doc_id, payload):
+        q = (_pcm(payload) // 256) ** 2  # (byte-128)^2
+        n_fr = min(len(q) // frame, max_frames)
+        if n_fr < 4:
+            return
+        e = q[: n_fr * frame].reshape(n_fr, frame).sum(axis=1)
+        c = n_fr * e - e.sum()  # exact integer centering
+        best = None
+        for lag in range(1, n_fr - 1):
+            r = int((c[:-lag] * c[lag:]).sum())
+            if best is None or r > best[0]:
+                best = (r, lag)
+        yield doc_id, n_fr, best[1], best[0]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nf, bl, rb = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _, s = decode_wav(bytes(payload))
-                q = (s.astype(np.int64) // 256) ** 2  # (byte-128)^2
-                n_fr = min(len(q) // frame, max_frames)
-                if n_fr < 4:
-                    continue
-                e = q[: n_fr * frame].reshape(n_fr, frame).sum(axis=1)
-                c = n_fr * e - e.sum()  # exact integer centering
-                best = None
-                for lag in range(1, n_fr - 1):
-                    r = int((c[:-lag] * c[lag:]).sum())
-                    if best is None or r > best[0]:
-                        best = (r, lag)
-                ids.append(doc_id)
-                nf.append(n_fr)
-                bl.append(best[1])
-                rb.append(best[0])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_frames": pd.Series(nf, dtype="int64"),
-                    "best_lag": pd.Series(bl, dtype="int64"),
-                    "r_best": pd.Series(rb, dtype="int64"),
-                }
-            )
-
-    return audio.mapInPandas(
-        kernel,
-        schema="doc_id long, n_frames long, best_lag long, r_best long",
+    return _rows(
+        audio,
+        ("doc_id", "payload"),
+        "doc_id long, n_frames long, best_lag long, r_best long",
+        emit,
     )

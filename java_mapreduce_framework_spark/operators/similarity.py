@@ -588,30 +588,18 @@ def embedding_gram(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def embedding_pca_project(embeddings: DataFrame, k: int = 8) -> DataFrame:
-    """PCA projection of every embedding onto the top-k principal
-    components — dimensionality reduction as a training-data step.
+def _covariance_eigh(embeddings: DataFrame):
+    """(mean, eigvals, eigvecs) of the corpus embeddings' population
+    covariance, eigenvalues ascending (``numpy.linalg.eigh``).
 
     Distributed part: ONE ``mapInPandas`` pass accumulates the three
     sufficient statistics per task (the d x d Gram partial, the d-sum,
     the count), tagged into a single (i, j, partial) stream (j = -1
-    rows carry the sum, (-1, -1) the count); a grouped SUM folds them.
-    Driver part: the folded d x d covariance (a few KB, d model-sized
-    — the ONE sanctioned collect, same class as the IVF training
-    sample) is eigendecomposed with numpy; components broadcast back
-    and a second vectorized pass projects every row. No per-pair work,
-    no iteration, corpus scanned exactly twice.
-
-    Eigenvector sign/degenerate-subspace rotation is arbitrary across
-    BLAS builds, so this is a rows-only query by declared design;
-    the engine-local test pins orthonormality, explained-variance
-    ordering, and projection-vs-numpy equality.
-
-    Emits the LONG form ``(vec_id, dim, value)`` — one row per
-    (vector, component), scalar columns only, same contract as the
-    round-8 ``embedding_standardize`` fix: the driver canonicalizer
-    crashes on array-valued output columns (CORRECTNESS_r08).
-    """
+    rows carry the sum, (-1, -1) the count); a grouped SUM folds them,
+    so the shuffle carries d^2 + d + 1 rows per task however big the
+    corpus. Driver part: the folded d x d covariance (a few KB, d
+    model-sized -- the ONE sanctioned collect, same class as the IVF
+    training sample) is eigendecomposed with numpy."""
     import numpy as np
     import pandas as pd
 
@@ -666,30 +654,62 @@ def embedding_pca_project(embeddings: DataFrame, k: int = 8) -> DataFrame:
     mean /= n
     cov = gram / n - np.outer(mean, mean)
     eigvals, eigvecs = np.linalg.eigh(cov)
-    comps = eigvecs[:, ::-1][:, :k].copy()  # descending variance, d x k
+    return mean, eigvals, eigvecs
 
-    def project_kernel(batches):
+
+def _centered_project(embeddings: DataFrame, mean, m, out_col: str) -> DataFrame:
+    """Long form (vec_id, dim, ``out_col``) of ``round((x - mean) @ m,
+    6)`` for every embedding x: one row per (vector, column of ``m``),
+    scalar columns only. ``mean`` and ``m`` ride the closure to the
+    executors; one vectorized pass, no shuffle."""
+    import numpy as np
+    import pandas as pd
+
+    def kernel(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             X = np.stack(
                 [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
             )
-            P = np.round((X - mean) @ comps, 6)  # n x k
-            n, kk = P.shape
+            P = np.round((X - mean) @ m, 6)
+            n, k = P.shape
             yield pd.DataFrame(
                 {
-                    "vec_id": np.repeat(
-                        pdf["vec_id"].to_numpy(dtype="int64"), kk
-                    ),
-                    "dim": np.tile(np.arange(kk, dtype="int32"), n),
-                    "value": P.ravel(),
+                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(dtype="int64"), k),
+                    "dim": np.tile(np.arange(k, dtype="int32"), n),
+                    out_col: P.ravel(),
                 }
             )
 
     return embeddings.select("vec_id", "embedding").mapInPandas(
-        project_kernel, "vec_id long, dim int, value double"
+        kernel, f"vec_id long, dim int, {out_col} double"
     )
+
+
+def embedding_pca_project(embeddings: DataFrame, k: int = 8) -> DataFrame:
+    """PCA projection of every embedding onto the top-k principal
+    components — dimensionality reduction as a training-data step.
+
+    The covariance and its eigendecomposition come from
+    ``_covariance_eigh`` (one distributed statistics pass, one
+    model-sized collect); the top-k components ride back to the
+    executors in ``_centered_project``'s vectorized pass. No per-pair
+    work, no iteration, corpus scanned exactly twice.
+
+    Eigenvector sign/degenerate-subspace rotation is arbitrary across
+    BLAS builds, so this is a rows-only query by declared design;
+    the engine-local test pins orthonormality, explained-variance
+    ordering, and projection-vs-numpy equality.
+
+    Emits the LONG form ``(vec_id, dim, value)`` — one row per
+    (vector, component), scalar columns only, same contract as the
+    round-8 ``embedding_standardize`` fix: the driver canonicalizer
+    crashes on array-valued output columns (CORRECTNESS_r08).
+    """
+    mean, _, eigvecs = _covariance_eigh(embeddings)
+    comps = eigvecs[:, ::-1][:, :k].copy()  # descending variance, d x k
+    return _centered_project(embeddings, mean, comps, "value")
 
 
 def embedding_knn_graph(
@@ -1615,13 +1635,10 @@ def embedding_whiten(embeddings: DataFrame, eps: float = 1e-6) -> DataFrame:
     (rows-only; RECALL bound: covariance of the whitened output ==
     identity to fp tolerance).
 
-    Plan shape is ``embedding_pca_project``'s exactly: ONE
-    ``mapInPandas`` pass accumulates (Gram partial, sum, count) per
-    task -- the shuffle carries d^2 + d + 1 rows per task however big
-    the corpus; the folded covariance (model-sized, the one
-    sanctioned collect) is eigendecomposed on the driver; W and mu
-    broadcast back inside a second vectorized pass. Corpus scanned
-    exactly twice, no per-pair work.
+    Plan shape is ``embedding_pca_project``'s exactly: the same
+    ``_covariance_eigh`` statistics pass and driver eigendecomposition,
+    then W and mu ride ``_centered_project``'s vectorized pass. Corpus
+    scanned exactly twice, no per-pair work.
 
     Emits the LONG form (vec_id, dim, white_value rounded 6) --
     scalar columns only (the embedding_standardize driver-canon
@@ -1632,83 +1649,10 @@ def embedding_whiten(embeddings: DataFrame, eps: float = 1e-6) -> DataFrame:
     (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
     """
     import numpy as np
-    import pandas as pd
 
-    def stats_kernel(batches):
-        gram = None
-        vsum = None
-        n = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            g = X.T @ X
-            s = X.sum(axis=0)
-            gram = g if gram is None else gram + g
-            vsum = s if vsum is None else vsum + s
-            n += len(pdf)
-        if gram is not None:
-            d = gram.shape[0]
-            jj, ii = np.meshgrid(np.arange(d), np.arange(d))
-            yield pd.DataFrame(
-                {
-                    "i": np.concatenate(
-                        [ii.ravel(), np.arange(d), [-1]]
-                    ).astype("int32"),
-                    "j": np.concatenate(
-                        [jj.ravel(), -np.ones(d), [-1]]
-                    ).astype("int32"),
-                    "partial": np.concatenate([gram.ravel(), vsum, [float(n)]]),
-                }
-            )
-
-    folded = (
-        embeddings.select("embedding")
-        .mapInPandas(stats_kernel, "i int, j int, partial double")
-        .groupBy("i", "j")
-        .agg(F.sum("partial").alias("v"))
-        .collect()  # bounded: d^2 + d + 1 rows, model-sized by construction
-    )
-    d = max(r["i"] for r in folded) + 1
-    gram = np.zeros((d, d))
-    mean = np.zeros(d)
-    n = 0.0
-    for r in folded:
-        if r["i"] == -1:
-            n = r["v"]
-        elif r["j"] == -1:
-            mean[r["i"]] = r["v"]
-        else:
-            gram[r["i"], r["j"]] = r["v"]
-    mean /= n
-    cov = gram / n - np.outer(mean, mean)
-    eigvals, eigvecs = np.linalg.eigh(cov)
+    mean, eigvals, eigvecs = _covariance_eigh(embeddings)
     w = eigvecs @ np.diag(1.0 / np.sqrt(eigvals + eps)) @ eigvecs.T
-
-    def whiten_kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            Xw = np.round((X - mean) @ w, 6)
-            m = Xw.shape[0]
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(
-                        pdf["vec_id"].to_numpy().astype("int64"), d
-                    ),
-                    "dim": np.tile(np.arange(d, dtype="int32"), m),
-                    "white_value": Xw.ravel(),
-                }
-            )
-
-    return embeddings.select("vec_id", "embedding").mapInPandas(
-        whiten_kernel, "vec_id long, dim int, white_value double"
-    )
+    return _centered_project(embeddings, mean, w, "white_value")
 
 
 def embedding_dim_stats(embeddings: DataFrame) -> DataFrame:

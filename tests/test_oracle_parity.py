@@ -94,6 +94,38 @@ FAMILIES = [
     "stats_kruskal_wallis",
     "stats_spearman",
     "stats_wilcoxon_signed_rank",
+    # the rest of the oracled multimodal family (operators/multimodal.py's
+    # emit functions on the one _rows substrate)
+    "multimodal_frame_sample",
+    "multimodal_resize",
+    "multimodal_audio_features",
+    "multimodal_decode_bmp",
+    "multimodal_image_patches",
+    "multimodal_image_histogram",
+    "multimodal_text_align",
+    "multimodal_image_entropy",
+    "multimodal_audio_wav",
+    "multimodal_video_frames",
+    "multimodal_image_ahash",
+    "multimodal_image_phash",
+    "multimodal_video_scene_diff",
+    "multimodal_audio_vad",
+    "multimodal_audio_snr",
+    "multimodal_image_sharpness",
+    "multimodal_audio_zcr",
+    "multimodal_video_shots",
+    "multimodal_audio_clipping",
+    "multimodal_audio_silence",
+    "multimodal_image_contrast",
+    "multimodal_audio_dynamic_range",
+    "multimodal_image_quadrants",
+    "multimodal_audio_envelope",
+    "multimodal_image_border_mean",
+    "multimodal_image_colorfulness",
+    "multimodal_image_row_profile",
+    "multimodal_audio_autocorr_pitch",
+    "multimodal_image_edge_density",
+    "multimodal_audio_tempo",
 ]
 
 #: Every query that splits users with the md5 A/B hash.
@@ -176,3 +208,19 @@ def test_null_user_lands_in_the_same_arm_on_both_engines(spark, sf_null_user, na
 def test_null_event_type_gives_the_same_rows_on_both_engines(spark, sf_null_type, name):
     ok, msg = compare(name, spark, sf_null_type)
     assert ok, msg
+
+
+def test_building_stats_quade_launches_no_job(spark, sf_small):
+    """quade_ranks reads k from its dense user x type grid, so on a warm
+    session building the query launches no Spark job."""
+    from java_mapreduce_framework_spark.plans import registry
+
+    build = registry.registry()["stats_quade"].fn
+    build(spark, sf_small)  # warm the schema cache
+    sc = spark.sparkContext
+    sc.setJobGroup("stats_quade_build", "stats_quade_build")
+    try:
+        build(spark, sf_small)
+        assert sc.statusTracker().getJobIdsForGroup("stats_quade_build") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

@@ -1,6 +1,7 @@
 """Layout guard for the rank/A/B statistics in ``operators/analytics.py``:
-the md5 A/B split, the per-type value alphabet and the dense user x
-type midrank grid are each spelled once, in their kernel, and every
+the md5 A/B split, the per-type value alphabet, the dense user x
+type midrank grid and the rank-window doubled midrank are each spelled
+once, in their kernel, and every
 statistic built on them calls that kernel (AST only, no Spark)."""
 
 import ast
@@ -47,6 +48,9 @@ CALLS = [
     ("_ab_value_counts", "_ab_arm"),
     ("_ab_moments", "_ab_arm"),
     ("_ab_conversions", "_ab_arm"),
+    ("_block_midranks", "_rank_midrank2"),
+    ("quade_ranks", "_rank_midrank2"),
+    ("bartels_rank_test", "_rank_midrank2"),
 ]
 
 
@@ -92,6 +96,12 @@ def test_value_alphabet_with_arm_counts_only_in_ab_value_counts():
 
 def test_rank_within_user_only_in_block_midranks():
     def ranks_within_user(node):
+        if any(
+            "user_id" in _str_args(c)
+            for c in ast.walk(node)
+            if isinstance(c, ast.Call) and isinstance(c.func, ast.Name) and c.func.id == "_rank_midrank2"
+        ):
+            return True
         windows = {
             t.id: a.value
             for a in ast.walk(node)
@@ -120,3 +130,15 @@ def test_statistic_calls_its_kernel(fn, kernel):
         for c in ast.walk(node)
         if isinstance(c, ast.Call) and isinstance(c.func, ast.Name) and c.func.id == kernel
     ], f"{fn} does not call {kernel}"
+
+
+def test_rank_midrank_form_only_in_rank_midrank2():
+    """``2 * rank() + ties - 1`` is spelled once: every ``F.rank()`` of
+    the statistics module is inside ``_rank_midrank2``."""
+
+    def ranks(node):
+        return bool(_method_calls(node, "rank"))
+
+    assert [name for (module, name), node in FUNCS.items() if module == "analytics.py" and ranks(node)] == [
+        "_rank_midrank2"
+    ]
