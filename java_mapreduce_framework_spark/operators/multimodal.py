@@ -276,6 +276,7 @@ def decode_metadata(multimodal: DataFrame) -> DataFrame:
     statistics (sum / min / max / distinct count over the raw payload
     bytes, numpy-vectorized) so the correctness oracle verifies actual
     payload CONTENT, not just its length."""
+
     def emit(doc_id, payload, content_type):
         x = np.frombuffer(payload, dtype=np.uint8)
         stats = (
@@ -388,6 +389,7 @@ def attach_image_payload(documents: DataFrame) -> DataFrame:
     (w, h) geometry -- so the oracle can reconstruct every pixel from
     the text column while the payload itself is a spec-compliant BMP
     file that any decoder opens."""
+
     def emit(doc_id, text):
         b = _text_bytes(text)
         if len(b):
@@ -402,6 +404,7 @@ def decode_image_meta(images: DataFrame) -> DataFrame:
     ``real_decode`` and emit geometry plus per-channel pixel sums and
     min/max -- stats over the DECODED pixel array, so a header-only
     shortcut or a byte-length fake cannot pass the oracle."""
+
     def emit(doc_id, payload):
         px = real_decode(bytes(payload))
         h, w, _ = px.shape
@@ -415,6 +418,7 @@ def attach_audio_payload(documents: DataFrame, sample_rate: int = 16000) -> Data
     """Build a REAL RIFF/WAVE payload per document: 16-bit mono PCM
     where sample k = (text_byte_k - 128) * 256 -- deterministic,
     oracle-reconstructable, and a spec-compliant WAV file."""
+
     def emit(doc_id, text):
         b = _text_bytes(text)
         if len(b):
@@ -429,6 +433,7 @@ def audio_features_wav(audio: DataFrame) -> DataFrame:
     data chunk with ``decode_wav``, and emit per-clip features over
     the DECODED int16 samples (duration from the fmt chunk's true
     sample rate; RMS/peak in float64, rounded once)."""
+
     def emit(doc_id, payload):
         rate, s = decode_wav(bytes(payload))
         x = s.astype(np.float64)
@@ -490,6 +495,7 @@ def attach_video_payload(documents: DataFrame) -> DataFrame:
     ``_image_geometry(n + f)`` — every pixel of every frame
     reconstructs from the text column (the oracle's lever), while the
     payload is a genuine chunk-walked container of decodable BMPs."""
+
     def emit(doc_id, text):
         b = _text_bytes(text)
         if not len(b):
@@ -512,6 +518,7 @@ def decode_video_frames(videos: DataFrame) -> DataFrame:
     100 TB: containers stay columnar-binary, the parse/decode kernel
     is row-local, and frame fan-out happens inside the executor pass
     (no shuffle until whatever aggregation consumes the frames)."""
+
     def emit(doc_id, payload):
         for f, arr in enumerate(decode_video(bytes(payload))):
             h, w, _ = arr.shape
@@ -547,6 +554,7 @@ def image_ahash(images: DataFrame) -> DataFrame:
 
     Emits (ahash, keep_doc_id, n_copies).
     """
+
     def bits(gray):
         h, w = gray.shape
         ys = (np.arange(h) * 8) // h
@@ -580,6 +588,7 @@ def image_patches(images: DataFrame, patch: int = 4) -> DataFrame:
     fixed-width integers. Integer sums (not float means) so the
     oracle comparison is exact.
     """
+
     def emit(doc_id, payload):
         px = real_decode(bytes(payload))
         h, w, _ = px.shape
@@ -752,6 +761,7 @@ def audio_vad(audio: DataFrame, frame: int = 32) -> DataFrame:
     (SURVEY.md §2A FIFO queue) over the WordCount substrate
     (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
     """
+
     def emit(doc_id, payload):
         gate = _vad_gate(payload, frame)
         if gate is None:
@@ -800,6 +810,7 @@ def video_scene_diff(videos: DataFrame) -> DataFrame:
     (SURVEY.md §2A FIFO queue) over the WordCount substrate
     (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
     """
+
     def g8(arr) -> "np.ndarray":
         h, w, _ = arr.shape
         gray = arr.astype(np.int64).sum(axis=2)
@@ -849,6 +860,7 @@ def audio_snr(audio: DataFrame, frame: int = 32) -> DataFrame:
     (SURVEY.md §2A FIFO queue) over the WordCount substrate
     (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
     """
+
     def emit(doc_id, payload):
         gate = _vad_gate(payload, frame)
         if gate is not None:
@@ -1099,6 +1111,7 @@ def image_sharpness(images: DataFrame) -> DataFrame:
     (SURVEY.md §2A FIFO queue) over the WordCount substrate
     (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
     """
+
     def emit(doc_id, payload):
         lum = _luma(payload)  # h x w, 0..765
         h, w = lum.shape
@@ -1142,6 +1155,7 @@ def audio_zcr(audio: DataFrame) -> DataFrame:
     (SURVEY.md §2A FIFO queue) over the WordCount substrate
     (src/edu/upenn/cis455/mapreduce/job/WordCount.java:23-52).
     """
+
     def emit(doc_id, payload):
         s = _pcm(payload)
         yield doc_id, len(s), int(np.sum(s[1:] * s[:-1] < 0))
@@ -1245,6 +1259,7 @@ def image_dhash(images: DataFrame) -> DataFrame:
 
     Emits (dhash, keep_doc_id, n_copies).
     """
+
     def bits(gray):
         h, w = gray.shape
         sub = gray[np.ix_((np.arange(8) * h) // 8, (np.arange(9) * w) // 9)]
@@ -1273,6 +1288,7 @@ def audio_clipping(audio: DataFrame, threshold: int = 16384) -> DataFrame:
 
     Emits (doc_id, n_samples, n_clipped, peak_abs, clip_frac).
     """
+
     def emit(doc_id, payload):
         a = np.abs(_pcm(payload))
         yield doc_id, len(a), int(np.sum(a >= threshold)), int(a.max()) if len(a) else 0
@@ -1310,6 +1326,7 @@ def audio_silence(audio: DataFrame, threshold: int = 8192) -> DataFrame:
 
     Emits (doc_id, n_samples, lead_silence, trail_silence, n_silent).
     """
+
     def emit(doc_id, payload):
         a = np.abs(_pcm(payload))
         n = len(a)
@@ -1342,6 +1359,7 @@ def image_contrast(images: DataFrame) -> DataFrame:
 
     Emits (doc_id, n_px, lum_sum, rms_contrast).
     """
+
     def emit(doc_id, payload):
         gray = _luma(payload)
         yield doc_id, gray.size, int(gray.sum()), int((gray * gray).sum())
@@ -1383,6 +1401,7 @@ def audio_dynamic_range(audio: DataFrame) -> DataFrame:
 
     Emits (doc_id, n_samples, peak, crest_db).
     """
+
     def emit(doc_id, payload):
         s = _pcm(payload)
         yield doc_id, s.size, int(np.abs(s).max()) if s.size else 0, int((s * s).sum())
@@ -1424,6 +1443,7 @@ def image_quadrants(images: DataFrame) -> DataFrame:
 
     Emits (doc_id, q_tl, q_tr, q_bl, q_br, diag_balance).
     """
+
     def emit(doc_id, payload):
         gray = _luma(payload)
         hh, hw = gray.shape[0] // 2, gray.shape[1] // 2
@@ -1467,6 +1487,7 @@ def audio_envelope(audio: DataFrame, n_segments: int = 4) -> DataFrame:
 
     Emits (doc_id, seg, n_in_seg, sumsq, rms).
     """
+
     def emit(doc_id, payload):
         s = _pcm(payload)
         n = s.size
@@ -1513,6 +1534,7 @@ def image_border_mean(images: DataFrame) -> DataFrame:
     Emits (doc_id, n_px, n_border, border_sum, interior_sum,
     border_ratio).
     """
+
     def emit(doc_id, payload):
         gray = _luma(payload)
         h, w = gray.shape
@@ -1560,6 +1582,7 @@ def image_colorfulness(images: DataFrame) -> DataFrame:
 
     Emits (doc_id, n_px, rg2_sum, yb2_sum, colorfulness).
     """
+
     def emit(doc_id, payload):
         px = real_decode(bytes(payload)).astype(np.int64)
         r, g, b = px[..., 0], px[..., 1], px[..., 2]
@@ -1612,6 +1635,7 @@ def image_row_profile(images: DataFrame) -> DataFrame:
 
     Emits (doc_id, row, n_in_row, lum_sum, row_mean).
     """
+
     def emit(doc_id, payload):
         gray = _luma(payload)
         for row, lum_sum in enumerate(gray.sum(axis=1)):
@@ -1654,6 +1678,7 @@ def audio_autocorr_pitch(
     Emits (doc_id, n_samples, best_lag, clarity) -- clarity =
     best mean product over mean energy, ~1 for a pure periodic clip.
     """
+
     def emit(doc_id, payload):
         s = _pcm(payload)
         n = int(s.size)
@@ -1732,6 +1757,7 @@ def image_edge_density(images: DataFrame, g2_threshold: int = 40000) -> DataFram
 
     Emits (doc_id, n_interior, n_edges, edge_density).
     """
+
     def emit(doc_id, payload):
         lum = _luma(payload)
         h, w = lum.shape
@@ -1789,6 +1815,7 @@ def audio_tempo_autocorr(
 
     Emits (doc_id, n_frames, best_lag, r_best).
     """
+
     def emit(doc_id, payload):
         q = (_pcm(payload) // 256) ** 2  # (byte-128)^2
         n_fr = min(len(q) // frame, max_frames)

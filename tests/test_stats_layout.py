@@ -1,8 +1,8 @@
 """Layout guard for the rank/A/B statistics in ``operators/analytics.py``:
 the md5 A/B split, the per-type value alphabet, the dense user x
 type midrank grid and the rank-window doubled midrank are each spelled
-once, in their kernel, and every
-statistic built on them calls that kernel (AST only, no Spark)."""
+once, in their kernel, and every statistic built on them calls that
+kernel (AST only, no Spark)."""
 
 import ast
 import pathlib
