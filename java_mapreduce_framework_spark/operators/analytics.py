@@ -2624,8 +2624,10 @@ def wilcoxon_signed_rank(events: DataFrame) -> DataFrame:
     of the month vs second -- the paired nonparametric before/after
     test (the within-subjects sibling of ``stats_mannwhitney``).
 
-    Per-user cent-sums for each half come from one keyed aggregation;
-    zero differences drop (standard Wilcoxon practice); |d| ranks are
+    Per-user cent-sums for each half come from one keyed aggregation.
+    A value counts as ``round(value * 100)`` cents, so a two-decimal
+    value such as 8.79 (the double 8.7899...) is 879, not 878. Zero
+    differences drop (standard Wilcoxon practice); |d| ranks are
     ``_midrank2`` doubled midranks, and the normal-approximation z is one
     double expression off the exact integer (n, W+) pair. No tie
     correction in sigma (documented; ties in cent-sums are rare and
@@ -2637,13 +2639,13 @@ def wilcoxon_signed_rank(events: DataFrame) -> DataFrame:
         F.sum(
             F.when(
                 F.dayofmonth("ts") <= 15,
-                F.floor(F.col("value") * 100).cast("long"),
+                F.round(F.col("value") * 100).cast("long"),
             ).otherwise(F.lit(0))
         ).alias("a"),
         F.sum(
             F.when(
                 F.dayofmonth("ts") >= 16,
-                F.floor(F.col("value") * 100).cast("long"),
+                F.round(F.col("value") * 100).cast("long"),
             ).otherwise(F.lit(0))
         ).alias("b"),
     )

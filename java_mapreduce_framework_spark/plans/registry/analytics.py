@@ -1661,10 +1661,10 @@ def _stats_grubbs(spark, sf):
     WITH h AS (
       SELECT user_id,
              sum(CASE WHEN date_part('day', CAST(ts AS TIMESTAMP)) <= 15
-                      THEN CAST(floor(value * 100.0) AS BIGINT)
+                      THEN CAST(round(value * 100.0) AS BIGINT)
                       ELSE 0 END) AS a,
              sum(CASE WHEN date_part('day', CAST(ts AS TIMESTAMP)) >= 16
-                      THEN CAST(floor(value * 100.0) AS BIGINT)
+                      THEN CAST(round(value * 100.0) AS BIGINT)
                       ELSE 0 END) AS b
       FROM events GROUP BY user_id),
     d AS (SELECT b - a AS d FROM h WHERE b - a <> 0),

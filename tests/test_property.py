@@ -1144,12 +1144,10 @@ def test_wilcoxon_rank_conservation(diffs):
     def build(ds):
         rows = []
         for i, d in enumerate(ds):
-            # first-half baseline 10.00, second half 10.00 + d cents; the
-            # half-cent offset keeps floor(value * 100) at 1000 + d
-            # (10.0 - 1.21 alone is 8.7899..., which floors to 878)
+            # first-half baseline 10.00, second half 10.00 + d cents
             rows.append((2 * i, _ts(5 * 1440), i, "a", 10.0, "{}"))
             rows.append(
-                (2 * i + 1, _ts(20 * 1440), i, "a", (1000.5 + d) / 100.0, "{}")
+                (2 * i + 1, _ts(20 * 1440), i, "a", 10.0 + d / 100.0, "{}")
             )
         return spark.createDataFrame(
             rows,
