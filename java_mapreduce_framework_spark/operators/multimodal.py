@@ -21,7 +21,7 @@ function run by ``_rows(df, in_cols, schema, emit)`` -- the
 reference's per-record ``map`` writing through one ``Context``.
 ``emit(*values)`` gets one input row's ``in_cols`` values and yields
 zero, one or many output tuples in ``schema`` order; ``_rows`` owns
-the Arrow batch loop, the per-column lists, the pandas dtypes (derived
+the Arrow batch loop, the per-column transpose, the pandas dtypes (derived
 once from the DDL) and the module's only ``mapInPandas``. An operator
 keeps its decode/compute step and its Spark-side closing expression.
 
@@ -69,8 +69,10 @@ def _rows(df: DataFrame, in_cols: tuple[str, ...], schema: str, emit) -> DataFra
     ``emit(*values)`` receives one row's ``in_cols`` values (payloads
     as ``bytes``) and returns an iterable of tuples in ``schema``
     order -- none to drop the row, one for a 1:1 map, many for a 1:N
-    explosion. Per Arrow batch the tuples fill one list per output
-    column, and each column is built with the pandas dtype its DDL
+    explosion. Each input row's tuples are transposed (``zip(*rows)``)
+    onto one list per output column, so no tuple outlives its input
+    row (a batch-long list of tuples is rescanned by every cyclic
+    garbage collection while the batch fills). Each column is built with the pandas dtype its DDL
     type names (``long``/``bigint`` -> int64, ``int`` -> int32,
     ``double`` -> float64, ``string``/``binary`` -> object), so a None
     in a double column crosses as NULL and an empty batch keeps its
@@ -81,9 +83,8 @@ def _rows(df: DataFrame, in_cols: tuple[str, ...], schema: str, emit) -> DataFra
         for pdf in batches:
             cols = [[] for _ in fields]
             for values in zip(*(pdf[c] for c in in_cols)):
-                for out in emit(*values):
-                    for col, v in zip(cols, out):
-                        col.append(v)
+                for col, vals in zip(cols, zip(*emit(*values))):
+                    col.extend(vals)
             yield pd.DataFrame(
                 {n: pd.Series(c, dtype=_PD_DTYPES[t]) for (n, t), c in zip(fields, cols)}
             )
@@ -595,9 +596,8 @@ def image_patches(images: DataFrame, patch: int = 4) -> DataFrame:
         gh, gw = h // patch, w // patch
         crop = px[: gh * patch, : gw * patch].astype(np.int64)
         sums = crop.reshape(gh, patch, gw, patch, 3).sum(axis=(1, 3))
-        for r in range(gh):
-            for c in range(gw):
-                yield (doc_id, r, c, *sums[r, c])
+        for i, (r, g, b) in enumerate(sums.reshape(-1, 3).tolist()):
+            yield doc_id, i // gw, i % gw, r, g, b
 
     return _rows(images, ("doc_id", "payload"), PATCH_SUM_SCHEMA, emit)
 
@@ -1638,8 +1638,8 @@ def image_row_profile(images: DataFrame) -> DataFrame:
 
     def emit(doc_id, payload):
         gray = _luma(payload)
-        for row, lum_sum in enumerate(gray.sum(axis=1)):
-            yield doc_id, row, gray.shape[1], int(lum_sum)
+        for row, lum_sum in enumerate(gray.sum(axis=1).tolist()):
+            yield doc_id, row, gray.shape[1], lum_sum
 
     stats = _rows(
         images, ("doc_id", "payload"), "doc_id long, row int, n_in_row long, lum_sum long", emit
